@@ -1,0 +1,137 @@
+#!/usr/bin/env bash
+# Scale benchmarks of record on the GenSf lakes.
+#
+#   scripts/bench_scale.sh pair <base_lake> <lake> <profile> <out.json> [query…]
+#     Runs graft.Bench on both lakes (restricted to the queries, if given)
+#     and builds <out.json> with scripts/bench_sf1.py under <profile>:
+#       sf1     flat sf1 vs sf0.1                   10x ceiling
+#       skew    skewed sf1 vs flat sf1               3x ceiling
+#       sf10    flat sf10 vs sf1, sf10 query set    10x ceiling
+#       skew10  skewed sf10 vs flat sf10, skew set   3x ceiling
+#     The sf10 profiles default to the query sets below and a 24 GiB heap
+#     (one JVM standing in for a 10x cluster's aggregate memory).
+#     Exits nonzero on an unreviewed over-ceiling query or a vacuity
+#     failure; the artifact is still written first.
+#
+#   scripts/bench_scale.sh heap <lake> [heap…]
+#     Runs graft.tools.Profile over the ten heaviest flat-sf1 queries
+#     under each driver heap (default 2g 4g 8g): one JSON line per query
+#     with spill bytes and peak execution memory. Then hash-verifies the
+#     same queries against the DuckDB oracle at the first heap, so "it
+#     spilled" is also "it stayed correct".
+#
+# Run on a quiet machine, after scripts/verify_scale.sh ran green on the
+# same lakes. SPARK_GRAFT_CPUS sets the local cores (default: all).
+set -euo pipefail
+cd "$(dirname "$0")/.."
+
+# Scale-critical families, oracle-feasible at sf10. Excluded, each because
+# its CONTRACT is super-linear on a k=100 replica lake (measured to sf1 and
+# labeled in bench_sf1.py, not silently dropped):
+#   dedup_prefix_join   exact all-pairs Jaccard — true output ~C(100,2)
+#                       per near-dup family, 110x the sf1 answer
+#   dedup_lsh_eval      compares against exact all-pairs ground truth
+#   dedup_ngram_jaccard, dedup_containment, dedup_strip_spans
+#                       df-capped inverted index: posting lists scale with
+#                       the corpus in the worst case (LSH is the scale path)
+#   dedup_clusters_ngram
+#                       the closed ~31-word vocabulary makes cross-replica
+#                       shingle collisions corpus-wide at k=100; candidates
+#                       grow ~n² and an 8 GiB-heap run OOMs after 50 min.
+#                       The banded dedup_minhash_lsh family stays in the set
+#   sim_knn_graph       n^1.5 by contract (corpus-wide kNN build)
+#   *_sf10_probe        correctness instruments graded by verify_scale.sh;
+#                       they re-run q_item_recs / sim_knn_vote in full
+SF10_QUERIES=(
+  dedup_exact dedup_minhash_lsh dedup_incremental_minhash dedup_simhash
+  dedup_embedding_cosine f_levenshtein_dedup sim_bruteforce_topk
+  sim_ivf_topk sim_kmeans_train sim_knn_vote a_itemsets3 q_item_recs
+  q_attribution_linear g_walk_sample q_stream_replay
+  q_stream_restart_replay q_stream_neardup_replay q_stream_join_replay
+)
+# The skewed sf10 set drops q_stream_join_replay: its pair output is
+# quadratic on the hot user by contract (sf1skew: 62x pairs for 5x wall),
+# and keyed streaming state is one task per key — at k=100 the hot user's
+# ~50M pairs ran 42+ CPU-min in one stateful task. Its skew behavior stays
+# measured and oracled at sf1skew.
+SF10SKEW_QUERIES=()
+for q in "${SF10_QUERIES[@]}"; do
+  [ "$q" = q_stream_join_replay ] || SF10SKEW_QUERIES+=("$q")
+done
+if [ ${#SF10SKEW_QUERIES[@]} -ne $((${#SF10_QUERIES[@]} - 1)) ]; then
+  echo "bench_scale: q_stream_join_replay is not in SF10_QUERIES; reconcile the skew set" >&2
+  exit 1
+fi
+
+# the ten heaviest flat-sf1 queries by wall (BENCH_sf1_r12.json)
+HEAVY_SF1=(
+  dedup_prefix_join t_leakage_safe_split dedup_clusters_ngram
+  dedup_canonical_source dedup_soft_weights q_stream_neardup_replay
+  dedup_embedding_cosine dedup_lsh_eval dedup_ngram_jaccard dedup_containment
+)
+
+usage() { sed -n '2,24p' "$0" >&2; exit 2; }
+
+settle() { # wait up to 12 min for the 1-min load (<1.5) and 5-min load
+  # (<3.0) to decay: each leg ends at full tilt, and a leg launched on the
+  # previous one's tail read 2.3x a clean run while its 1-min load looked
+  # settled
+  local waited=0
+  while [ "$(awk '{print ($1 > 1.5 || $2 > 3.0)}' /proc/loadavg)" = "1" ] \
+      && [ $waited -lt 720 ]; do
+    sleep 15; waited=$((waited + 15))
+  done
+}
+
+bench() { # bench <lake> <out.json> [query…]
+  local lake=$1 out=$2; shift 2
+  settle
+  echo "=== bench $lake ${*:-(full)} [$(date -u +%H:%M:%S) load=$(cut -d' ' -f1 /proc/loadavg)] ==="
+  SPARK_GRAFT_SF_DIR=$lake SPARK_GRAFT_BENCH_OUT=$out \
+    sbt -batch "runMain graft.Bench $*" 2>&1 | grep -E '"metric"|\[bench\]' || true
+  test -s "$out"
+}
+
+tmp=$(mktemp -d)
+case "${1:-}" in
+  pair)
+    [ $# -ge 5 ] || usage
+    base=$2 lake=$3 profile=$4 out=$5
+    shift 5
+    queries=("$@")
+    case $profile in
+      sf1|skew) ;;
+      sf10|skew10)
+        if [ ${#queries[@]} -eq 0 ]; then
+          if [ "$profile" = sf10 ]; then queries=("${SF10_QUERIES[@]}")
+          else queries=("${SF10SKEW_QUERIES[@]}"); fi
+        fi
+        export SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-24g} ;;
+      *) usage ;;
+    esac
+    bench "$base" "$tmp/base.json" "${queries[@]}"
+    bench "$lake" "$tmp/lake.json" "${queries[@]}"
+    python3 scripts/bench_sf1.py "$tmp/base.json" "$tmp/lake.json" "$out" "$profile"
+    ;;
+  heap)
+    [ $# -ge 2 ] || usage
+    lake=$2
+    shift 2
+    heaps=("$@")
+    [ ${#heaps[@]} -gt 0 ] || heaps=(2g 4g 8g)
+    for heap in "${heaps[@]}"; do
+      echo "=== Profile $lake @ $heap [$(date -u +%H:%M:%S)] ==="
+      SPARK_DRIVER_MEM=$heap \
+        sbt -batch "runMain graft.tools.Profile $lake 1 ${HEAVY_SF1[*]}" 2>&1 \
+        | grep -E '\{"(query|total)"|OutOfMemoryError' | tee "$tmp/profile_$heap.log" || true
+      # no total line: the JVM died before the last query
+      grep -q '"total"' "$tmp/profile_$heap.log"
+    done
+    echo "=== hash-verify at ${heaps[0]} ==="
+    SPARK_DRIVER_MEM=${heaps[0]} \
+      sbt -batch "runMain graft.Verify $lake $tmp/verify ${HEAVY_SF1[*]}" \
+      > "$tmp/verify.log" 2>&1 || { tail -20 "$tmp/verify.log"; exit 1; }
+    python3 scripts/check.py "$lake" "$tmp/verify" "${HEAVY_SF1[@]}"
+    ;;
+  *) usage ;;
+esac

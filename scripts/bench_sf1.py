@@ -81,7 +81,7 @@ TRIAGE_SKEW = {
 
 # sf10 campaign (round 13): k=100 lakes, RESTRICTED to the scale-critical
 # families (the full-suite oracles are not all feasible at 60M rows —
-# exclusions documented in scripts/bench_r13.sh). Baseline for "sf10" is
+# exclusions documented in scripts/bench_scale.sh). Baseline for "sf10" is
 # a restricted sf1 run of the same query set; for "skew10" the flat sf10
 # run. Labels follow the same discipline: anything super-ceiling without
 # a reviewed label fails the artifact build.
@@ -94,7 +94,7 @@ TRIAGE_SF10 = {
     "dedup_embedding_cosine": "fixed",       # corpus-relative band ladder
                                              #   (r14)
     # dedup_clusters_ngram is EXCLUDED from the sf10 bench set entirely
-    # (bench_r14.sh header: ~n^2 shingle collisions on the closed vocab,
+    # (bench_scale.sh: ~n^2 shingle collisions on the closed vocab,
     # 8 GiB OOM at 50 min) — no label needed; listed here as a comment so
     # this map and the bench set stay reconciled.
 }
@@ -107,7 +107,7 @@ TRIAGE_SKEW10 = {
     "dedup_incremental_minhash": "output_bound",
     "q_stream_neardup_replay": "output_bound",
     # dedup_clusters_ngram and q_stream_join_replay are EXCLUDED from the
-    # skewed-sf10 bench set (bench_r14.sh: clusters_ngram as above;
+    # skewed-sf10 bench set (bench_scale.sh: clusters_ngram as above;
     # join_replay's hot-user pair set is ~50M rows through one stateful
     # task — measured 42+ CPU-min) — comments, not labels, so a renamed
     # query can't silently ride a stale entry.

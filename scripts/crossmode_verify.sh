@@ -18,7 +18,6 @@ for mode in parquet reliable; do
   out=/tmp/crossmode_$mode
   rm -rf "$out"
   echo "=== stage.mode=$mode ==="
-  SPARK_GRAFT_STAGE_MODE=$mode SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
-    sbt -batch "runMain graft.Verify $SF $out" >/dev/null 2>&1
+  SPARK_GRAFT_STAGE_MODE=$mode sbt -batch "runMain graft.Verify $SF $out" >/dev/null 2>&1
   python3 scripts/check.py "$SF" "$out" | tail -1
 done

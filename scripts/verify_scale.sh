@@ -23,7 +23,7 @@
 # graded through their *_sf10_probe partial oracles (full oracles are
 # DuckDB-fatal at sf10 — ARCHITECTURE playbook #4/#5), and the
 # by-contract super-linear ngram/prefix family stays excluded (reasons
-# in scripts/bench_r14.sh's header).
+# in scripts/bench_scale.sh).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 

@@ -6,11 +6,9 @@ import org.apache.spark.sql.functions._
 /** Materializes a larger scale factor from a driver-generated one by
   * k-fold structure-preserving replication (default k=10: sf0.1 → sf1).
   *
-  * The driver ships sf0.001/sf0.01/sf0.1 only (TESTDATA.md); every scale
-  * claim above sf0.1 otherwise rests on ScaleProbe's per-operator k=11
-  * replication. This main materializes a full coherent lake so the ENTIRE
-  * verify + bench suite can run at sf1 — measured evidence, not
-  * extrapolated.
+  * The test lakes come at sf0.001/sf0.01/sf0.1 only (TESTDATA.md). This main
+  * materializes a full coherent lake so the ENTIRE verify + bench suite
+  * can run at sf1 — measured evidence, not extrapolated.
   *
   * Replication mirrors the driver's own SF progression (observed
   * sf0.001→sf0.01→sf0.1):
@@ -93,17 +91,9 @@ object GenSf {
     val outDir = args(1)
     val k = if (args.length > 2) args(2).toInt else 10
     val skew = args.length > 3 && args(3) == "skew"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // write micros (not INT96) so DuckDB and Spark read identical instants
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Session.local()
+    // write micros (not INT96) so DuckDB and Spark read identical instants
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     generate(spark, srcDir, outDir, k, skew)
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,24 +9,11 @@ object Verify {
     // optional: query names after outDir restrict the run (local iteration)
     val only = args.drop(2).toSet
     def selected(name: String) = only.isEmpty || only.contains(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Non-ANSI: invalid casts → NULL (matches DuckDB TRY_CAST oracle
-      // semantics); divisions are still explicitly zero-guarded in queries.
-      .config("spark.sql.ansi.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS); read as long, normalized in
-      // graft.engine.Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // cross-mode correctness runs (scripts/crossmode_verify.sh) set the
-      // staging durability mode here; default matches Stage's default
-      .config(graft.engine.Stage.modeKey,
-        sys.env.getOrElse("SPARK_GRAFT_STAGE_MODE", "local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Session.local()
+    // cross-mode correctness runs (scripts/crossmode_verify.sh) set the
+    // staging durability mode here; default matches Stage's default
+    spark.conf.set(graft.engine.Stage.modeKey,
+      sys.env.getOrElse("SPARK_GRAFT_STAGE_MODE", "local"))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name)) {

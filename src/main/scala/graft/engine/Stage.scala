@@ -44,7 +44,7 @@ object Stage {
 
   // ids of persistent RDDs created by staging (mode=local leaves a
   // localCheckpoint block registered in sparkContext.getPersistentRDDs).
-  // Harness mains (Bench/Verify/ScaleProbe) unpersist exactly these
+  // Harness mains (Bench/Verify/Profile) unpersist exactly these
   // between queries instead of sweeping ALL persistent RDDs — a global
   // sweep would silently evict any intentionally long-lived cache and
   // re-inflate timings with no error.
@@ -170,7 +170,9 @@ object Stage {
   /** Leaf + project/filter/generate only — a relation already at rest
     * (parquet scan, staged blocks, local relation), possibly re-shaped
     * row-wise. Such plans are cheap to re-evaluate and safe to probe
-    * with `.rdd`. */
+    * with `.rdd`. Accepted gap: a `Union` is rejected even when every
+    * branch is a scan, so an under-split union of scans passes through
+    * [[spread]] unspread. */
   private def scanLike(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical._
     !df.queryExecution.analyzed.collectFirst {

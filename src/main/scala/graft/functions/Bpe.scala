@@ -70,9 +70,9 @@ object Bpe {
     * asc — deterministic) → driver-side [[learn]]. The collect is bounded
     * by maxWords, the same contract as collecting an ANN codebook:
     * corpus growth changes the COUNTS flowing into the top-k, never the
-    * number of rows collected (ScaleProbe `bpe_learn` pins this — the
-    * probe's cost tracks the distributed word-count scan while the
-    * driver step stays maxWords-sized at any k).
+    * number of rows collected (measured under k-fold replication: the
+    * cost tracks the distributed word-count scan while the driver step
+    * stays maxWords-sized at any k).
     *
     * FULLY-DISTRIBUTED ALTERNATIVE (when the vocabulary itself must not
     * be truncated): each merge round is expressible as one distributed

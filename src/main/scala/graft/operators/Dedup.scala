@@ -607,13 +607,14 @@ object Dedup {
     * in order — the "delete the duplicated substring itself, keep the
     * unique prose" dedup of the exact-substring line of work.
     *
-    * Shape: one posexplode staged once (span build + reassembly), a
-    * (window−1)-lead per-doc window for spans WITH their start position,
-    * one corpus-wide span-count aggregate, coverage = explode of `window`
-    * offsets per duplicated span occurrence (bounded: O(dup_spans ×
-    * window)), then an (id, pos) anti-join and a per-doc ordered
-    * reassembly. Counts and positions only — no pair enumeration, no
-    * posting caps needed. Returns every input doc:
+    * Shape: per-doc token arrays cached once; spans WITH their start
+    * position built in-row from the arrays (transform + posexplode, no
+    * shuffle, cached for their two consumers); one corpus-wide span-count
+    * hash aggregate whose ≥2 set joins back; coverage = explode of
+    * `window` offsets per duplicated span occurrence (bounded:
+    * O(dup_spans × window)); then an (id, pos) anti-join and a per-doc
+    * ordered reassembly. Counts and positions only — no pair
+    * enumeration, no posting caps needed. Returns every input doc:
     * (idCol, n_tokens, n_removed, clean_text). */
   def stripDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
       window: Int = 4): DataFrame = {

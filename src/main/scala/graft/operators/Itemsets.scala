@@ -33,7 +33,7 @@ object Itemsets {
   /** The shipped basket-rate denominator: a pattern must recur at the
     * ~1-in-75k basket rate to survive the relative prune. ONE constant —
     * the engine-side expressions AND the DuckDB oracle SQL in
-    * ScaleOps/ScaleProbe all derive from it via the helpers below, so
+    * ScaleOps all derive from it via the helpers below, so
     * tuning the rate cannot desynchronize a query from its oracle. */
   val DefaultBasketDenom = 75000L
 
@@ -55,12 +55,11 @@ object Itemsets {
     *
     * SCALE NOTE: an absolute threshold degenerates under "more baskets
     * over a fixed catalog" — every support inflates with the basket
-    * count, so a fixed cutoff eventually stops pruning (ScaleProbe
-    * measured exp ~1.3 at k=11 replication with minSupport=2, vs 0.40
-    * for the relative form). Production callers should use
+    * count, so a fixed cutoff eventually stops pruning (measured exp
+    * ~1.3 at k=11 replication with minSupport=2, vs 0.40 for the
+    * relative form). Production callers should use
     * [[frequentTriplesFrac]], which derives the threshold from the
-    * basket count in-plan; this form is kept for fixed-corpus analyses
-    * and as the probe's documented degeneration control. */
+    * basket count in-plan; this form is kept for fixed-corpus analyses. */
   def frequentTriples(baskets: DataFrame, basketCol: String, itemCol: String,
       minSupport: Long): DataFrame = {
     require(minSupport >= 1, s"minSupport: $minSupport")

@@ -530,8 +530,8 @@ object Aggregates {
       // limit(1): semantically a no-op (each threshold is exactly one
       // row) but it pins the Catalyst size ESTIMATE to one row — the
       // raw plan's estimate compounds through the edge computation's
-      // joins/windows into the GiB range, and with GraftExtensions
-      // installed the BroadcastGuard would (correctly, per its
+      // joins/windows into the GiB range, and the BroadcastGuard
+      // every Session.local session carries would (correctly, per its
       // contract) strip the broadcast hint and leave a cartesian
       val t90 = Binning.equalFrequencyEdges(cm, "monetary", 10, 50000.0)
         .filter(col("edge_idx") === 9).select(col("edge").as("t90")).limit(1)

@@ -1693,13 +1693,12 @@ object ScaleOps {
     //   thr = greatest(2, ceil(n_baskets / 75000))
     // (integer form (n + 74999) div 75000 — exact on both engines). At
     // the fixture SFs (≤150k baskets) thr = 2, so the oracle-pinned
-    // output is unchanged; under the probe's k=11 replication thr rises
-    // to 22 = 2k and the pair space is scale-invariant (exp 0.35,
-    // ScaleProbe item_recs_shipped). The denominator is the fixture's
-    // sf0.1 basket count / 2 — i.e. "a pair must recur at the ~1-in-75k
-    // basket rate", the co-occurrence analogue of A-priori's relative
-    // minimum support. The absolute form survives only in ScaleProbe
-    // (item_recs) as the documented degeneration control.
+    // output is unchanged; under a k=11 catalog-fixed replication thr
+    // rises to 22 = 2k and the pair space was measured scale-invariant
+    // (exp 0.35, vs 1.22 for the absolute form). The denominator is the
+    // fixture's sf0.1 basket count / 2 — i.e. "a pair must recur at the
+    // ~1-in-75k basket rate", the co-occurrence analogue of A-priori's
+    // relative minimum support.
     QueryDef.sql(
       "q_item_recs",
       s"""WITH ob AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -1826,12 +1825,11 @@ object ScaleOps {
     // greatest(2, ceil(n_baskets / 75000)), computed in-plan by
     // [[Itemsets.frequentTriplesFrac]] and mirrored in the oracle's nb
     // CTE. At the fixture SFs (≤150k baskets) it evaluates to 2, so the
-    // pinned output is unchanged at sf0.001/0.01/0.1; under the probe's
-    // k=11 catalog-fixed replication it rises to 22 = 2k, keeping the
-    // lattice scale-invariant (exp 0.40, ScaleProbe itemsets3_shipped) —
-    // the ABSOLUTE support-2 form admitted every triple there (output
-    // 0 → 1.6M rows, exp ~1.3) and survives only inside ScaleProbe as
-    // the degeneration control.
+    // pinned output is unchanged at sf0.001/0.01/0.1; under a k=11
+    // catalog-fixed replication it rises to 22 = 2k, and the lattice was
+    // measured scale-invariant (exp 0.40 vs ~1.3 at k=11 for the
+    // ABSOLUTE support-2 form, which admitted every triple there: output
+    // 0 → 1.6M rows).
     //
     // ORACLE NOTE (sf1 sweep): the pair step is AS MATERIALIZED so the
     // planner can't pick the b2–b3 edge first — that edge carries only
@@ -2517,7 +2515,7 @@ object ScaleOps {
     // (100× pairs); the convolution plan is one tiny shuffle + a
     // broadcast probe. The pair-emitting operator itself
     // ([[graft.operators.RangeJoin.intervalOverlap]]) stays covered by
-    // RangeJoinSpec and its ScaleProbe entry. The oracle runs DuckDB's
+    // RangeJoinSpec. The oracle runs DuckDB's
     // native inequality join over the same derived interval relations —
     // hash equality proves the convolution IS the overlap count.
     QueryDef.sql(

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -59,16 +59,7 @@ object StreamFloor {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Session.local()
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
@@ -85,11 +76,12 @@ object StreamFloor {
 
     def drive(f: DataFrame => Unit): Double = {
       val src = freshSrc()
+      val parts = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", 16)
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       try time(f(stream(src)))
       finally {
-        spark.conf.set("spark.sql.shuffle.partitions", cpus)
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
         spark.conf.set("spark.sql.adaptive.enabled", "true")
       }
     }

@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
 import org.apache.spark.sql.functions._
-import graft.expressions.GraftFunctions
 
 class BroadcastGuardSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -14,7 +13,6 @@ class BroadcastGuardSpec extends AnyFunSuite {
     df.queryExecution.optimizedPlan.collectFirst { case j: Join => j.hint }.get
 
   test("oversized broadcast hint is stripped; a genuinely small one survives") {
-    GraftFunctions.register(spark)
     val probe = spark.range(10).toDF("k2")
     spark.conf.set("spark.graft.broadcastGuard.maxBytes", "1000")
     try {
@@ -32,7 +30,6 @@ class BroadcastGuardSpec extends AnyFunSuite {
   }
 
   test("with the default 1 GiB cap, ordinary dimension broadcasts pass through") {
-    GraftFunctions.register(spark)
     val dim = spark.range(1000).toDF("k")
     val fact = spark.range(100000).toDF("k2")
     val h = joinHint(fact.join(broadcast(dim), col("k2") === col("k")))

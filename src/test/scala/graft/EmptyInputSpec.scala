@@ -223,7 +223,6 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(hil.columns.toSeq === Seq("x", "y", "d"))
     // jaro_winkler: NULL propagates, never throws
     import graft.expressions.GraftFunctions
-    GraftFunctions.register(spark)
     val jw = Seq((Some("abc"), None: Option[String]),
         (None: Option[String], Some("x")), (Some(""), Some("")))
       .toDF("a", "b")
@@ -267,7 +266,6 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(toks(3L) === ((1, 1)))
     // native kmv_sketch over an empty relation: no groups, no rows —
     // and over all-null hashes: empty sketch, not a crash
-    graft.expressions.GraftFunctions.register(spark)
     import graft.expressions.GraftFunctions.kmv_sketch
     val noRows = Seq.empty[(String, Long)].toDF("g", "h")
     assert(noRows.groupBy("g").agg(kmv_sketch(col("h"), 8)).count() === 0)

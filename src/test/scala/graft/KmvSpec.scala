@@ -113,7 +113,6 @@ class KmvSpec extends AnyFunSuite {
   }
 
   test("native kmv_sketch aggregate == relational sketch, any partitioning") {
-    graft.expressions.GraftFunctions.register(spark)
     import graft.expressions.GraftFunctions.kmv_sketch
     import graft.engine.Det
     // duplicated keys across 3 groups; duplicates must NOT affect the
@@ -136,7 +135,6 @@ class KmvSpec extends AnyFunSuite {
   }
 
   test("native kmv_sketch under-k group returns all distinct hashes") {
-    graft.expressions.GraftFunctions.register(spark)
     import graft.expressions.GraftFunctions.kmv_sketch
     import graft.engine.Det
     val df = Seq.tabulate(40)(i => ("g", s"k${i % 10}")).toDF("g", "key")

@@ -208,11 +208,10 @@ class PlanShapeSpec extends AnyFunSuite {
 
   /** One planning pass per query; both audits read these. */
   private lazy val plans: Seq[(String, SparkPlan)] = {
-    // audit under the PRODUCTION config: with GraftExtensions installed
-    // the BroadcastGuard participates in planning, so a query whose
-    // broadcast hint only survives on naive estimates fails HERE, not in
-    // a user's session (idempotent; caught a_revenue_concentration once)
-    graft.expressions.GraftFunctions.register(spark)
+    // audit under the PRODUCTION config: the test session comes from
+    // Session.local, so the BroadcastGuard participates in planning and a
+    // query whose broadcast hint only survives on naive estimates fails
+    // HERE, not in a user's session (caught a_revenue_concentration once)
     SparkEntry.allDefs.filterNot(q => skip(q.name))
       .map(q => q.name -> q.run(spark, sf).queryExecution.sparkPlan)
   }

@@ -10,7 +10,6 @@ class ScanAuditReport extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   ignore("report scan widths") {
-    graft.expressions.GraftFunctions.register(spark)
     val widths = scala.collection.mutable.Map.empty[(String, Int), List[String]]
     SparkEntry.allDefs.filterNot(_.name == "q_pipeline_run").foreach { q =>
       val plan = q.run(spark, sf).queryExecution.sparkPlan

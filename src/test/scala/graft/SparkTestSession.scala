@@ -5,15 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites (object => created once per JVM). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = graft.engine.Session.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
