@@ -10,7 +10,7 @@ object Verify {
     val only = args.drop(2).toSet
     def selected(name: String) = only.isEmpty || only.contains(name)
     val spark = graft.engine.Session.local()
-    // cross-mode correctness runs (scripts/crossmode_verify.sh) set the
+    // cross-mode correctness runs (scripts/verify_matrix.sh mode) set the
     // staging durability mode here; default matches Stage's default
     spark.conf.set(graft.engine.Stage.modeKey,
       sys.env.getOrElse("SPARK_GRAFT_STAGE_MODE", "local"))

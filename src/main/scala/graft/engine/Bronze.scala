@@ -20,11 +20,6 @@ object Bronze {
     df.toDF(cleaned.toIndexedSeq: _*)
   }
 
-  /** P1 rename via map (covid header canonicalization,
-    * load_bronze.py:338-346). */
-  def renameAll(df: DataFrame, mapping: Map[String, String]): DataFrame =
-    df.withColumnsRenamed(mapping)
-
   /** P4 blank→NULL across all string columns (load_bronze.py:348). */
   def blanksToNull(df: DataFrame): DataFrame = {
     val stringCols = df.schema.fields.collect {

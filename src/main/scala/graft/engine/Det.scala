@@ -68,12 +68,6 @@ object Det {
   def davgSql(e: String, scale: Int = 2): String =
     s"(${dsumSql(e, scale)} / COUNT($e))"
 
-  /** Zero-guarded ratio: `when(den != 0, num/den)` — ANSI-safe, and the
-    * `otherwise` default is chosen per call site (reference sometimes uses
-    * 0, sometimes NULL — SURVEY §7.4.5). */
-  def safeDiv(num: Column, den: Column, default: Column): Column =
-    when(den =!= 0, num / den).otherwise(default)
-
   /** Cross-engine-deterministic rounding of a double to `n` places.
     *
     * Spark's `round(double)` routes through BigDecimal.valueOf (shortest

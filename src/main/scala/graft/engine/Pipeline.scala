@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *   K3 truncate-then-load        → mode(Overwrite)
   *   K2 chunked append            → mode(Append) (per-partition task writes)
   *   K4 keyed upsert              → dynamic partition overwrite on the date
-  *                                  key (partitionOverwriteMode=dynamic):
+  *                                  key ([[Pipeline.overwritePartitions]]):
   *                                  rewrites only the partitions present in
   *                                  the incoming batch — the reference's
   *                                  DELETE WHERE date=…; INSERT, at scale
@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   */
 final class Pipeline(spark: SparkSession, lakeDir: String) {
 
-  private def path(layer: String, table: String) = s"$lakeDir/$layer/$table"
+  import Pipeline.overwritePartitions
 
-  spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+  private def path(layer: String, table: String) = s"$lakeDir/$layer/$table"
 
   def writeOverwrite(df: DataFrame, layer: String, table: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path(layer, table))
@@ -36,17 +36,10 @@ final class Pipeline(spark: SparkSession, lakeDir: String) {
   def writeAppend(df: DataFrame, layer: String, table: String): Unit =
     df.write.mode(SaveMode.Append).parquet(path(layer, table))
 
-  /** K4: rewrite only the date partitions present in `df`. Repartition by
-    * the partition column first — otherwise every task writes a sliver of
-    * every partition (tasks × partitions small files); this way each
-    * partition is one file per day at this scale, and at cluster scale the
-    * same move bounds file counts to partitions, not tasks × partitions. */
+  /** K4: rewrite only the date partitions present in `df`. */
   def upsertByDate(df: DataFrame, layer: String, table: String,
       dateCol: String): Unit =
-    df.repartition(col(dateCol))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(dateCol)
-      .parquet(path(layer, table))
+    overwritePartitions(df, path(layer, table), dateCol)
 
   /** Streaming-sink variant of K4: partitioned by (date, batch_id) so a
     * REPLAYED micro-batch dynamically overwrites exactly its own
@@ -55,11 +48,8 @@ final class Pipeline(spark: SparkSession, lakeDir: String) {
     * of clobbering each other. */
   def upsertBatch(df: DataFrame, layer: String, table: String,
       dateCol: String, batchId: Long): Unit =
-    df.withColumn("batch_id", lit(batchId))
-      .repartition(col(dateCol))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(dateCol, "batch_id")
-      .parquet(path(layer, table))
+    overwritePartitions(df.withColumn("batch_id", lit(batchId)),
+      path(layer, table), dateCol, "batch_id")
 
   def read(layer: String, table: String): DataFrame =
     spark.read.parquet(path(layer, table))
@@ -129,11 +119,10 @@ final class Pipeline(spark: SparkSession, lakeDir: String) {
     val emptied = affected.join(kept, Seq(partCol), "left_anti")
       .collect().map(_.get(0))
     val nAffected = affected.count()
-    // self-overwrite is safe here because repartition() forces a shuffle
-    // barrier: the source scan completes before any file is replaced
-    rewritten.repartition(col(partCol))
-      .write.mode(SaveMode.Overwrite).partitionBy(partCol)
-      .parquet(path(layer, table))
+    // self-overwrite is safe here because the sink's repartition() forces
+    // a shuffle barrier: the source scan completes before any file is
+    // replaced
+    overwritePartitions(rewritten, path(layer, table), partCol)
     affected.unpersist()
     val fs = new org.apache.hadoop.fs.Path(path(layer, table))
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -197,7 +186,8 @@ final class Pipeline(spark: SparkSession, lakeDir: String) {
       .assign(df, idCol, weightCol, nShards, heavyCutoff)
       .select(col("shard"), col(lineCol).as("value"))
       .repartition(col("shard"))
-      .write.mode(SaveMode.Overwrite).partitionBy("shard").text(dir)
+      .write.mode(SaveMode.Overwrite).options(Pipeline.dynamicOverwrite)
+      .partitionBy("shard").text(dir)
     dir
   }
 
@@ -420,5 +410,37 @@ final class Pipeline(spark: SparkSession, lakeDir: String) {
       Files.writeString(Paths.get(s"$lakeDir/run_metadata.json"), meta)
       counts
     } finally pool.shutdown()
+  }
+}
+
+object Pipeline {
+
+  /** Dynamic partition overwrite as a WRITER option: it rewrites only the
+    * partitions present in the written frame, and leaves the session's
+    * `partitionOverwriteMode` — and so every other write in it — as it
+    * was. */
+  private[engine] val dynamicOverwrite = Map("partitionOverwriteMode" -> "dynamic")
+
+  /** The engine's one partition-overwrite sink (K4): write `df` under
+    * `path` partitioned by `partCols`, replacing only the partitions the
+    * frame carries. Repartition by the partition columns first — otherwise
+    * every task writes a sliver of every partition (tasks × partitions
+    * small files); this way each partition is one file at this scale, and
+    * at cluster scale the same move bounds file counts to partitions, not
+    * tasks × partitions. A replayed micro-batch partitioned by its batch
+    * id therefore rewrites exactly its own files: the idempotent sink the
+    * streaming ingests and [[Pipeline.upsertBatch]] rely on. */
+  def overwritePartitions(df: DataFrame, path: String,
+      partCols: String*): Unit =
+    df.repartition(partCols.map(col): _*)
+      .write.mode(SaveMode.Overwrite).options(dynamicOverwrite)
+      .partitionBy(partCols: _*)
+      .parquet(path)
+
+  /** Whether `path` exists on its own filesystem (local here, HDFS or an
+    * object store on a cluster). */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 }

@@ -48,12 +48,6 @@ object TextFunctions {
 
   def stopwordCount(text: Column): Column = tokenHits(text, stopwordsEn)
 
-  def stopwordRatio(text: Column): Column = {
-    val words = size(tokens(text))
-    when(words > 0,
-      Det.roundN(stopwordCount(text).cast("double") / words, 4)).otherwise(0.0)
-  }
-
   def hasLinks(text: Column): Column = text.rlike("https?://")
 
   /** Sentence count: runs of terminal punctuation (`[.!?]+` so "?!" or
@@ -68,22 +62,6 @@ object TextFunctions {
     * and RE2 regex semantics identical. */
   def syllableCount(text: Column): Column =
     regexp_count(lower(text), lit("[aeiouy]+")).cast("long")
-
-  /** Document quality score (0-100): penalties for too-short docs, heavy
-    * punctuation, degenerate word lengths, and no stopwords (word-salad
-    * signal). Same additive-penalty shape as the reference's quality scores
-    * (transform_silver.py:319-336). */
-  def qualityScore(text: Column): Column = {
-    val words = size(tokens(text))
-    val punctRatio = punctCount(text).cast("double") /
-      greatest(length(text).cast("double"), lit(1.0))
-    val awl = avgWordLength(text)
-    greatest(lit(0), lit(100)
-      - when(words < 5, 40).otherwise(0)
-      - when(punctRatio > 0.2, 20).otherwise(0)
-      - when(awl < 3.0 || awl > 12.0, 20).otherwise(0)
-      - when(stopwordCount(text) === 0, 20).otherwise(0))
-  }
 
   /** Marker-word language ID. N-gram/stopword heuristic: count hits from
     * tiny per-language marker sets, pick the max with a fixed precedence

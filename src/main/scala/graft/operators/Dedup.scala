@@ -361,8 +361,8 @@ object Dedup {
     // side (the semi-join below), and every group has >= 1 batch member
     // by construction, so ONE aggregation over the union replaces the
     // former touched->corpus-counts->join chain — one fewer sequential
-    // broadcast job per probe (micro-batch cost is job-count-bound at
-    // ingest rates; StreamFloor).
+    // broadcast job per probe (micro-batch cost is job-count-bound:
+    // harness floor 0.97 s of 6.67 s at sf0.1, r16).
     //
     // Every relation derived from the BATCH side (touched keys, surviving
     // bucket keys, batch members) is explicitly broadcast: the batch's

@@ -1,12 +1,16 @@
 package graft.queries
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
 
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.DecimalType
 import graft.engine.{Det, Tables}
-import graft.streaming.{BloomIngest, NearDupIngest}
+import graft.streaming.{BloomIngest, EventStreams, NearDupIngest}
 
 /** Batch-driven, oracle-checked replays of the streaming ingest loops.
   *
@@ -49,8 +53,8 @@ object StreamingQueries {
     * The compute-bound ingest loops (Bloom/NearDup foreachBatch joins)
     * instead run at 16 — 8 measured SLOWER than 32 for them because the
     * bottleneck is shingle/probe compute parallelism, not state files. */
-  private def withReplayPartitions[T](s: org.apache.spark.sql.SparkSession,
-      n: Int = 4, aqe: Boolean = true)(f: => T): T = {
+  private def withReplayPartitions[T](s: SparkSession, n: Int,
+      aqe: Boolean)(f: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     val prevAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
     s.conf.set("spark.sql.shuffle.partitions", n)
@@ -61,9 +65,51 @@ object StreamingQueries {
     }
   }
 
+  /** One run of a replay's stream: the frames staged as its next
+    * micro-batches, and its shuffle-partition count. */
+  private final case class Run(frames: Seq[DataFrame], partitions: Int = 4)
+
+  /** The replay driver: every q_stream_* query is one call.
+    *
+    * Each run stages its frames as the next one-file batches of a single
+    * file source ([[stageBatchFrames]]), then starts `sink(stream,
+    * stateDir, outDir)` over the `maxFilesPerTrigger=1` stream under
+    * [[withReplayPartitions]] at the run's partition count, processes
+    * everything staged, and stops. All runs share one checkpoint, so a
+    * later run is a restart that resumes where the previous one stopped.
+    * Once the stream has stopped, the source, staging, checkpoint and
+    * state directories are deleted. The output directory stays, because
+    * the frame a query returns reads it lazily; its path is returned. */
+  private def replay(s: SparkSession, runs: Seq[Run], aqe: Boolean = true)(
+      sink: (DataFrame, String, String) => DataStreamWriter[Row]): String = {
+    val made = scala.collection.mutable.Buffer.empty[Path]
+    def tmp(prefix: String): Path = {
+      val p = Files.createTempDirectory(prefix)
+      made += p
+      p
+    }
+    val out = Files.createTempDirectory("replay-out").toString
+    try {
+      val src = tmp("replay-src")
+      val state = tmp("replay-state").toString
+      val ck = tmp("replay-ck").toString
+      val stream = s.readStream.schema(runs.head.frames.head.schema)
+        .option("maxFilesPerTrigger", 1).parquet(src.toString)
+      runs.foldLeft(0) { (staged, run) =>
+        stageBatchFrames(run.frames, src, staged, tmp)
+        withReplayPartitions(s, run.partitions, aqe) {
+          EventStreams.drain(
+            sink(stream, state, out).option("checkpointLocation", ck))
+        }
+        staged + run.frames.size
+      }
+      out
+    } finally made.foreach(p => FileUtils.deleteDirectory(p.toFile))
+  }
+
   /** Write each batch frame as a single deterministically-named and
     * -timestamped parquet file so the file source's mtime ordering is the
-    * batch order by construction.
+    * batch order by construction; `offset` batches are already staged.
     *
     * All batches are staged in ONE Spark job: the frames union under a
     * batch tag, a repartition on the tag gives each batch exactly one
@@ -71,47 +117,104 @@ object StreamingQueries {
     * batch (the tag column is stored in the path, not the file, so the
     * staged schema stays the frame schema). The previous per-frame
     * coalesce(1) writes were n separate jobs of harness overhead per
-    * replay. */
-  private def stageBatchFrames(frames: Seq[org.apache.spark.sql.DataFrame],
-      srcDir: Path, offset: Int = 0): Unit = {
-    val tmp = Files.createTempDirectory("replay-stage")
+    * replay. Scratch directories come from `tmp`. */
+  private def stageBatchFrames(frames: Seq[DataFrame], srcDir: Path,
+      offset: Int, tmp: String => Path): Unit = if (frames.nonEmpty) {
+    def firstPart(dir: Path): Path = Files.list(dir)
+      .filter(_.getFileName.toString.startsWith("part-"))
+      .findFirst().get()
+    val stage = tmp("replay-stage")
     frames.zipWithIndex
       .map { case (f, i) => f.withColumn("__b", lit(i)) }
       .reduce(_ unionByName _)
       .repartition(col("__b"))
-      .write.mode("overwrite").partitionBy("__b").parquet(tmp.toString)
+      .write.mode("overwrite").partitionBy("__b").parquet(stage.toString)
     frames.indices.foreach { i0 =>
       val i = i0 + offset
-      val dir = tmp.resolve(s"__b=$i0")
+      val dir = stage.resolve(s"__b=$i0")
       val dst = srcDir.resolve(f"batch-$i%02d.parquet")
-      if (Files.isDirectory(dir)) {
-        val part = Files.list(dir)
-          .filter(_.getFileName.toString.startsWith("part-"))
-          .findFirst().get()
-        Files.copy(part, dst)
-      } else {
+      if (Files.isDirectory(dir)) Files.copy(firstPart(dir), dst)
+      else {
         // an EMPTY batch frame writes no partition dir — stage it the
         // one-frame way so the micro-batch still exists (and still
         // advances watermarks) instead of crashing the replay
-        val single = Files.createTempDirectory(s"replay-b$i")
+        val single = tmp(s"replay-b$i")
         frames(i0).coalesce(1).write.mode("overwrite")
           .parquet(single.toString)
-        val part = Files.list(single)
-          .filter(_.getFileName.toString.startsWith("part-"))
-          .findFirst().get()
-        Files.copy(part, dst)
+        Files.copy(firstPart(single), dst)
       }
       Files.setLastModifiedTime(dst,
         FileTime.fromMillis(1000000000000L + i * 60000L))
     }
   }
 
-  private def stageBatches(docs: org.apache.spark.sql.DataFrame,
-      srcDir: Path, nBatches: Int = NumBatches): Unit =
-    stageBatchFrames(
-      (0 until nBatches).map(i =>
-        docs.filter(pmod(col("doc_id"), lit(nBatches)) === i)),
-      srcDir)
+  /** The documents table cut into `n` batches by doc_id mod n. */
+  private def docBatches(docs: DataFrame, n: Int): Seq[DataFrame] =
+    (0 until n).map(i => docs.filter(pmod(col("doc_id"), lit(n)) === i))
+
+  private val D1 = lit("2024-01-11").cast("timestamp")
+  private val D2 = lit("2024-01-21").cast("timestamp")
+
+  /** The events cut into three time-ordered 10-day micro-batches. */
+  private def tenDayBatches(ev: DataFrame): Seq[DataFrame] = Seq(
+    ev.filter(col("ts") < D1),
+    ev.filter(col("ts") >= D1 && col("ts") < D2),
+    ev.filter(col("ts") >= D2))
+
+  /** Append each micro-batch under `out`, tagged with its batch id when
+    * `tag` is set. */
+  private def appendBatches(df: DataFrame, mode: String, out: String,
+      tag: Boolean = true): DataStreamWriter[Row] =
+    df.writeStream.outputMode(mode).foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
+        (if (tag) batch.withColumn("batch_id", lit(batchId)) else batch)
+          .write.mode("append").parquet(out)
+    }
+
+  /** The late-data window replays: the 1h-window, 1-day-watermark
+    * aggregate of [[EventStreams.windowedAgg]], in append mode into a
+    * parquet sink, over four micro-batches. The three 10-day blocks come
+    * without the stragglers (event_id % `stragglerMod` = 0, ts < Jan 9);
+    * the stragglers arrive with the last block, long after their windows
+    * were emitted, and Spark must drop them. The FIRST flush sentinel
+    * rides inside that last data batch: the late-input filter for that
+    * batch runs on the previous batch's watermark (straggler drops
+    * unchanged), while its 2024-03-01 event time advances the watermark
+    * past January for the final, sentinel-only batch — one sentinel-only
+    * micro-batch instead of two, same end state (each extra micro-batch
+    * is a round of state IO + scheduling; r9/r12 shave discipline).
+    * `runs` cuts the four batches into the driver's runs. */
+  private def lateWindowReplay(s: SparkSession, d: String,
+      stragglerMod: Int)(runs: Seq[DataFrame] => Seq[Run]): DataFrame = {
+    val ev = Tables.events(s, d)
+      .select(col("event_id"), col("ts"), col("user_id"),
+        col("event_type"), col("value").cast(DecimalType(18, 6))
+          .as("value"))
+    val straggler = pmod(col("event_id"), lit(stragglerMod)) === 0 &&
+      col("ts") < lit("2024-01-09").cast("timestamp")
+    def sentinel(ts: String) = s.range(1).select(
+      lit(-1L).as("event_id"), lit(ts).cast("timestamp").as("ts"),
+      lit(-1L).as("user_id"), lit("flush").as("event_type"),
+      lit(null).cast(DecimalType(18, 6)).as("value"))
+    val batches = Seq(
+      ev.filter(col("ts") < D1 && !straggler),
+      ev.filter(col("ts") >= D1 && col("ts") < D2),
+      ev.filter(col("ts") >= D2 || straggler)
+        .unionByName(sentinel("2024-03-01 00:00:00")),
+      sentinel("2024-03-02 00:00:00"))
+    val out = replay(s, runs(batches)) { (stream, _, out) =>
+      EventStreams
+        .windowedAgg(stream, windowLen = "1 hour", watermark = "1 day")
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", out)
+    }
+    s.read.parquet(out)
+      .filter(col("event_type") =!= "flush")
+      .select(col("window_start"), col("window_end"), col("event_type"),
+        col("n_events"), col("total_value").cast("double")
+          .as("total_value"))
+      .orderBy("window_start", "event_type")
+  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -158,21 +261,16 @@ object StreamingQueries {
          |JOIN fb ON fb.ch = h.ch
          |ORDER BY h.doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val srcDir = Files.createTempDirectory("replay-src")
-      val stateDir = Files.createTempDirectory("replay-state").toString
-      val outDir = Files.createTempDirectory("replay-out").toString
-      stageBatches(docs, srcDir)
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
-      // 16, not the stateful replays' 8: the Bloom/NearDup ingest loops
+      // 16, not the stateful replays' 4: the Bloom/NearDup ingest loops
       // are compute-bound foreachBatch joins (shingle/probe relations),
       // not state-store-bound — 8 measured SLOWER than 16/32 here, and
       // 16 edged out 32 (less scheduler overhead, same parallelism at
       // this batch volume)
-      withReplayPartitions(s, 16, aqe = false) {
-        BloomIngest.start(stream, "doc_id", "text", stateDir, outDir)
+      val out = replay(s, Seq(Run(docBatches(docs, NumBatches), 16)),
+          aqe = false) { (stream, state, out) =>
+        BloomIngest.writer(stream, "doc_id", "text", state, out)
       }
-      s.read.parquet(outDir)
+      s.read.parquet(out)
         .select(col("doc_id"), col("batch_id").cast("long").as("batch_id"),
           col("maybe_present"), col("batch_canonical"), col("is_new"))
         .orderBy("doc_id")
@@ -195,18 +293,13 @@ object StreamingQueries {
          |FROM mh_pairs WHERE jaccard >= 0.8
          |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val srcDir = Files.createTempDirectory("neardup-replay-src")
-      val idxDir = Files.createTempDirectory("neardup-replay-idx").toString
-      val pairsDir = Files.createTempDirectory("neardup-replay-out").toString
-      stageBatches(docs, srcDir, nBatches = 2)
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
-      // 16, not 8 — compute-bound ingest loop, see q_stream_replay
-      withReplayPartitions(s, 16, aqe = false) {
-        NearDupIngest.start(stream, "doc_id", "text", idxDir, pairsDir,
-          threshold = 0.8)
+      // 16, not 4 — compute-bound ingest loop, see q_stream_replay
+      val out = replay(s, Seq(Run(docBatches(docs, 2), 16)), aqe = false) {
+        (stream, index, out) =>
+          NearDupIngest.writer(stream, "doc_id", "text", index, out,
+            threshold = 0.8)
       }
-      s.read.parquet(pairsDir)
+      s.read.parquet(out)
         .select(col("id_a"), col("id_b"), col("jaccard"),
           col("batch_id").cast("long").as("reported_batch"))
         .orderBy("id_a", "id_b")
@@ -214,7 +307,7 @@ object StreamingQueries {
 
     // End state of the WATERMARKED tumbling-window aggregate under late
     // data — the EventStreams.windowedAgg path driven for real (append
-    // mode, parquet sink) over 5 deterministic micro-batches: three
+    // mode, parquet sink) over 4 deterministic micro-batches: three
     // 10-day time blocks of the events table, with an h-selected straggler
     // slice (event_id % 17 = 0 from the first 8 days) arriving in block
     // 2 — by then the 1-day watermark sits ~10 days past their windows,
@@ -244,60 +337,14 @@ object StreamingQueries {
          |FROM e WHERE NOT is_straggler
          |GROUP BY 1, 2, 3
          |ORDER BY window_start, event_type""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.types.DecimalType
-      val ev = Tables.events(s, d)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value").cast(DecimalType(18, 6))
-            .as("value"))
-      val d1 = lit("2024-01-11").cast("timestamp")
-      val d2 = lit("2024-01-21").cast("timestamp")
-      val straggler = pmod(col("event_id"), lit(17)) === 0 &&
-        col("ts") < lit("2024-01-09").cast("timestamp")
-      def sentinel(ts: String) = s.range(1).select(
-        lit(-1L).as("event_id"), lit(ts).cast("timestamp").as("ts"),
-        lit(-1L).as("user_id"), lit("flush").as("event_type"),
-        lit(null).cast(DecimalType(18, 6)).as("value"))
-      val srcDir = Files.createTempDirectory("window-replay-src")
-      // the FIRST flush sentinel rides inside the last data batch: the
-      // late-input filter for that batch runs on batch 1's watermark
-      // (straggler drops unchanged), while its 2024-03-01 event time
-      // advances the watermark past January for the final batch — one
-      // sentinel-only micro-batch instead of two, same end state (each
-      // extra micro-batch is a round of state IO + scheduling; r9/r12
-      // shave discipline)
-      stageBatchFrames(Seq(
-        ev.filter(col("ts") < d1 && !straggler),
-        ev.filter(col("ts") >= d1 && col("ts") < d2),
-        ev.filter(col("ts") >= d2 || straggler)
-          .unionByName(sentinel("2024-03-01 00:00:00")),
-        sentinel("2024-03-02 00:00:00")), srcDir)
-      val outDir = Files.createTempDirectory("window-replay-out").toString
-      val ckDir = Files.createTempDirectory("window-replay-ck").toString
-      val stream = s.readStream
-        .schema(ev.filter(col("ts") < d1).schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
-      withReplayPartitions(s) {
-        val q = graft.streaming.EventStreams
-          .windowedAgg(stream, windowLen = "1 hour", watermark = "1 day")
-          .writeStream.outputMode("append").format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckDir)
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.read.parquet(outDir)
-        .filter(col("event_type") =!= "flush")
-        .select(col("window_start"), col("window_end"), col("event_type"),
-          col("n_events"), col("total_value").cast("double")
-            .as("total_value"))
-        .orderBy("window_start", "event_type")
+      lateWindowReplay(s, d, 17)(batches => Seq(Run(batches)))
     },
 
     // Exactly-once across a RESTART — the recovery axis the other five
     // replays never exercise. Phase 1 ingests two micro-batches of the
     // 1h-window aggregate and STOPS with open January windows still in
     // the state store; a brand-new query instance resumes from the SAME
-    // checkpoint over three more batches (the remaining data + late
+    // checkpoint over two more batches (the remaining data + late
     // stragglers + a watermark flush), and a third instance restarts once
     // more with nothing left to read. One hash check pins four recovery
     // contracts at once:
@@ -333,54 +380,13 @@ object StreamingQueries {
          |FROM e WHERE NOT is_straggler
          |GROUP BY 1, 2, 3
          |ORDER BY window_start, event_type""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.types.DecimalType
-      val ev = Tables.events(s, d)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value").cast(DecimalType(18, 6))
-            .as("value"))
-      val d1 = lit("2024-01-11").cast("timestamp")
-      val d2 = lit("2024-01-21").cast("timestamp")
-      val straggler = pmod(col("event_id"), lit(13)) === 0 &&
-        col("ts") < lit("2024-01-09").cast("timestamp")
-      def sentinel(ts: String) = s.range(1).select(
-        lit(-1L).as("event_id"), lit(ts).cast("timestamp").as("ts"),
-        lit(-1L).as("user_id"), lit("flush").as("event_type"),
-        lit(null).cast(DecimalType(18, 6)).as("value"))
-      val srcDir = Files.createTempDirectory("restart-replay-src")
-      val outDir = Files.createTempDirectory("restart-replay-out").toString
-      val ckDir = Files.createTempDirectory("restart-replay-ck").toString
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
-      def runOnce(): Unit = {
-        val q = graft.streaming.EventStreams
-          .windowedAgg(stream, windowLen = "1 hour", watermark = "1 day")
-          .writeStream.outputMode("append").format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckDir)
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      // phase 1: two batches, stop with open windows + watermark ~Jan 20
-      stageBatchFrames(Seq(
-        ev.filter(col("ts") < d1 && !straggler),
-        ev.filter(col("ts") >= d1 && col("ts") < d2)), srcDir)
-      withReplayPartitions(s, 4) { runOnce() }
-      // phase 2: a NEW query instance resumes from the checkpoint; the
+      // phase 1: two batches, stop with open windows + watermark ~Jan 20;
+      // phase 2: a NEW query instance resumes from the checkpoint, the
       // stragglers only exist from here on, and the session now asks for
-      // 8 shuffle partitions — the checkpoint's pinned 4 must win
-      stageBatchFrames(Seq(
-        ev.filter(col("ts") >= d2 || straggler)
-          .unionByName(sentinel("2024-03-01 00:00:00")),
-        sentinel("2024-03-02 00:00:00")), srcDir, offset = 2)
-      withReplayPartitions(s, 8) { runOnce() }
+      // 8 shuffle partitions — the checkpoint's pinned 4 must win;
       // phase 3: idle restart — nothing new to read, nothing new emitted
-      withReplayPartitions(s, 8) { runOnce() }
-      s.read.parquet(outDir)
-        .filter(col("event_type") =!= "flush")
-        .select(col("window_start"), col("window_end"), col("event_type"),
-          col("n_events"), col("total_value").cast("double")
-            .as("total_value"))
-        .orderBy("window_start", "event_type")
+      lateWindowReplay(s, d, 13)(batches => Seq(Run(batches.take(2), 4),
+        Run(batches.drop(2), 8), Run(Nil, 8)))
     },
 
     // End state of the flatMapGroupsWithState SESSIONIZER (Update mode via
@@ -421,33 +427,12 @@ object StreamingQueries {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), coalesce(col("value"), lit(0.0)).as("value"))
-      val d1 = lit("2024-01-11").cast("timestamp")
-      val d2 = lit("2024-01-21").cast("timestamp")
-      val srcDir = Files.createTempDirectory("session-replay-src")
-      stageBatchFrames(Seq(
-        ev.filter(col("ts") < d1),
-        ev.filter(col("ts") >= d1 && col("ts") < d2),
-        ev.filter(col("ts") >= d2)), srcDir)
-      val outDir = Files.createTempDirectory("session-replay-out").toString
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
-        .as[graft.streaming.EventStreams.Event]
-      withReplayPartitions(s) {
-        val q = graft.streaming.EventStreams
-          .sessionize(s, stream, gapMs = 30 * 60 * 1000L,
-            watermark = "10 minutes")
-          .toDF()
-          .writeStream.outputMode("update")
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-              batchId: Long) =>
-            batch.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(outDir)
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+      val out = replay(s, Seq(Run(tenDayBatches(ev)))) { (stream, _, out) =>
+        appendBatches(EventStreams.sessionize(s,
+            stream.as[EventStreams.Event], gapMs = 30 * 60 * 1000L,
+            watermark = "10 minutes").toDF(), "update", out)
       }
-      val updates = s.read.parquet(outDir)
+      val updates = s.read.parquet(out)
       val wLast = Window.partitionBy("user_id", "session_start")
         .orderBy(desc("batch_id"))
       updates
@@ -491,31 +476,13 @@ object StreamingQueries {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
           coalesce(col("value"), lit(0.0)).as("value"))
-      val d1 = lit("2024-01-11").cast("timestamp")
-      val d2 = lit("2024-01-21").cast("timestamp")
-      val srcDir = Files.createTempDirectory("enrich-replay-src")
-      stageBatchFrames(Seq(
-        ev.filter(col("ts") < d1),
-        ev.filter(col("ts") >= d1 && col("ts") < d2),
-        ev.filter(col("ts") >= d2)), srcDir)
-      val outDir = Files.createTempDirectory("enrich-replay-out").toString
       val dim = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment"))
-      val enriched = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
-        .join(broadcast(dim), col("c_custkey") === col("user_id") + 1)
-      withReplayPartitions(s) {
-        val q = enriched.writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-              batchId: Long) =>
-            batch.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(outDir)
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+      val out = replay(s, Seq(Run(tenDayBatches(ev)))) { (stream, _, out) =>
+        appendBatches(stream.join(broadcast(dim),
+          col("c_custkey") === col("user_id") + 1), "append", out)
       }
-      s.read.parquet(outDir)
+      s.read.parquet(out)
         .groupBy(col("batch_id"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n_events"),
           Det.roundN(Det.dsum(col("value"), 6).cast("double"), 6)
@@ -555,37 +522,19 @@ object StreamingQueries {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"))
-      val d1 = lit("2024-01-11").cast("timestamp")
-      val d2 = lit("2024-01-21").cast("timestamp")
-      val srcDir = Files.createTempDirectory("join-replay-src")
-      stageBatchFrames(Seq(
-        ev.filter(col("ts") < d1),
-        ev.filter(col("ts") >= d1 && col("ts") < d2),
-        ev.filter(col("ts") >= d2)), srcDir)
-      val outDir = Files.createTempDirectory("join-replay-out").toString
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
-      val clicks = stream.filter(col("event_type") === "click")
-        .select(col("user_id").as("l_user"), col("ts").as("l_ts"))
-      val purchases = stream.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("r_user"), col("ts").as("r_ts"))
       // stream-stream join state cost is per (partition × side × store
       // kind × batch), not per row (4 state stores per partition per
       // batch) — see withReplayPartitions.
-      withReplayPartitions(s) {
-        val q = graft.streaming.EventStreams
-          .intervalJoin(clicks, purchases, "l_user", "r_user",
-            "l_ts", "r_ts", maxDelay = "6 hours", watermark = "2 hours")
-          .writeStream.outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-              batchId: Long) =>
-            batch.write.mode("append").parquet(outDir)
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+      val out = replay(s, Seq(Run(tenDayBatches(ev)))) { (stream, _, out) =>
+        val clicks = stream.filter(col("event_type") === "click")
+          .select(col("user_id").as("l_user"), col("ts").as("l_ts"))
+        val purchases = stream.filter(col("event_type") === "purchase")
+          .select(col("user_id").as("r_user"), col("ts").as("r_ts"))
+        appendBatches(EventStreams.intervalJoin(clicks, purchases, "l_user",
+            "r_user", "l_ts", "r_ts", maxDelay = "6 hours",
+            watermark = "2 hours"), "append", out, tag = false)
       }
-      s.read.parquet(outDir)
+      s.read.parquet(out)
         .select(col("l_user").as("user_id"),
           (unix_micros(col("r_ts")) - unix_micros(col("l_ts")))
             .as("lag_us"))

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import graft.operators.{Bloom, Dedup}
+import graft.engine.Pipeline
 import graft.engine.Stage.syntax._
 
 /** Streaming exact-dedup ingest with a Bloom pre-filter — the
@@ -23,20 +24,16 @@ import graft.engine.Stage.syntax._
   * EARLIER batches (`batch_id < current`; id-based self-exclusion would
   * not suffice — a later batch can hold the same CONTENT under another
   * id, which a replayed early batch must still report as new). Replayed
-  * batches therefore reproduce identical rows; state writes use dynamic
-  * partition overwrite on batch_id, so restarts stay exactly-once.
+  * batches therefore reproduce identical rows; state writes go through
+  * [[Pipeline.overwritePartitions]] on batch_id, so restarts stay
+  * exactly-once.
   */
 object BloomIngest {
-
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
 
   /** Merge every appended batch's words into the current filter —
     * Bloom OR-composability as a groupBy. */
   def loadWords(spark: SparkSession, dir: String): DataFrame =
-    if (exists(spark, s"$dir/words"))
+    if (Pipeline.exists(spark, s"$dir/words"))
       spark.read.parquet(s"$dir/words")
         .groupBy("word_idx").agg(expr("bit_or(bits)").as("bits"))
     else spark.range(0).select(col("id").as("word_idx"), col("id").as("bits"))
@@ -44,23 +41,31 @@ object BloomIngest {
   /** The at-rest content-hash state WITH its batch_id column — callers
     * slice the temporal prefix they may legally see. */
   def loadHashes(spark: SparkSession, dir: String, idCol: String): DataFrame =
-    if (exists(spark, s"$dir/hashes"))
+    if (Pipeline.exists(spark, s"$dir/hashes"))
       spark.read.parquet(s"$dir/hashes")
     else spark.range(0).select(col("id").as(idCol),
       lit("").as("content_hash"), col("id").as("batch_id")).limit(0)
 
   /** Run the ingest loop until the source drains (processAllAvailable —
-    * in production attach a checkpointLocation and leave it running).
-    * Output rows land under `outDir`: (idCol, content_hash,
+    * in production attach a checkpointLocation to [[writer]] and leave it
+    * running). Output rows land under `outDir`: (idCol, content_hash,
     * maybe_present, batch_canonical, is_new). */
   def start(docs: DataFrame, idCol: String, textCol: String,
       stateDir: String, outDir: String, mBits: Long = 65536L,
-      k: Int = 5): Unit = {
-    docs.sparkSession.conf.set(
-      "spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val q = docs.writeStream.outputMode(OutputMode.Append)
+      k: Int = 5): Unit =
+    EventStreams.drain(writer(docs, idCol, textCol, stateDir, outDir,
+      mBits, k))
+
+  /** The ingest loop as an unstarted stream writer (see [[start]]). */
+  def writer(docs: DataFrame, idCol: String, textCol: String,
+      stateDir: String, outDir: String, mBits: Long = 65536L,
+      k: Int = 5): DataStreamWriter[Row] =
+    docs.writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
+        def write(df: DataFrame, path: String): Unit =
+          Pipeline.overwritePartitions(df.withColumn("batch_id",
+            lit(batchId)), path, "batch_id")
         val w = Window.partitionBy("content_hash").orderBy(idCol)
         val b = batch.select(col(idCol),
             sha2(Dedup.normalize(col(textCol)), 256).as("content_hash"))
@@ -87,23 +92,11 @@ object BloomIngest {
         // captured listing still references on replay). The two state
         // appends read only the staged batch and write distinct dirs —
         // concurrent jobs, max(write) wall instead of sum.
-        write(out, batchId, outDir)
+        write(out, outDir)
         NearDupIngest.parWrites(Seq(
-          () => write(Bloom.build(b, "content_hash", mBits, k), batchId,
+          () => write(Bloom.build(b, "content_hash", mBits, k),
             s"$stateDir/words"),
-          () => write(b.select(col(idCol), col("content_hash")), batchId,
+          () => write(b.select(col(idCol), col("content_hash")),
             s"$stateDir/hashes")))
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
-
-  /** Same file-count discipline as Pipeline.upsertByDate: repartition by
-    * the partition column so each batch partition lands as one file, not
-    * tasks x partitions slivers (see NearDupIngest.write). */
-  private def write(df: DataFrame, batchId: Long, path: String): Unit =
-    df.withColumn("batch_id", lit(batchId))
-      .repartition(col("batch_id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("batch_id").parquet(path)
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
 
 /** Structured Streaming extension (SURVEY §2.10: the reference is
@@ -168,25 +168,24 @@ object EventStreams {
     * sibling partitions. Synchronous test drain via processAllAvailable;
     * in production attach a checkpointLocation and drop the stop(). */
   def toLake(df: DataFrame, pipeline: graft.engine.Pipeline, layer: String,
-      table: String, dateCol: String): Unit = {
-    val q = df.writeStream
+      table: String, dateCol: String): Unit =
+    drain(df.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         pipeline.upsertBatch(batch, layer, table, dateCol, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+      })
 
   /** Streaming sink contract for tests/demos: memory table, processed
     * synchronously. Returns the query name to select from. */
   def runToMemory(df: DataFrame, name: String,
-      mode: OutputMode = OutputMode.Complete()): Unit = {
-    val q = df.writeStream.outputMode(mode).format("memory")
-      .queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
+      mode: OutputMode = OutputMode.Complete()): Unit =
+    drain(df.writeStream.outputMode(mode).format("memory").queryName(name))
+
+  /** Start `w`, process everything its source holds, then stop it — also
+    * when processing fails, so no query outlives its caller. */
+  def drain(w: DataStreamWriter[Row]): Unit = {
+    val q = w.start()
+    try q.processAllAvailable() finally q.stop()
   }
 
   /** Sessionization via Spark's NATIVE session_window aggregate — the

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import graft.engine.Pipeline
 import graft.operators.Dedup
 import graft.operators.Dedup.MinhashLshIndex
 
@@ -21,10 +22,12 @@ import graft.operators.Dedup.MinhashLshIndex
   * double its size rows and corrupt the Jaccard join. That same
   * self-exclusion is what makes checkpoint-restart replay exact.
   *
-  * All writes go through dynamic partition overwrite on batch_id — a
+  * All writes go through [[Pipeline.overwritePartitions]] on batch_id — a
   * replayed micro-batch rewrites exactly its own partitions with the same
-  * rows (same contract as the Pipeline lake sink), so checkpoint-restart
-  * stays exactly-once at the index level too.
+  * rows (the lake sink's K4 contract), so checkpoint-restart stays
+  * exactly-once at the index level too. One file per batch partition: at
+  * ingest rates the index store's file count tracks batches, and every
+  * later loadIndex reads fewer footers.
   */
 object NearDupIngest {
 
@@ -36,12 +39,10 @@ object NearDupIngest {
       shingleSize: Int): MinhashLshIndex = {
     val empty = Dedup.minhashIndex(like.limit(0), idCol, textCol,
       numHashes, bands, shingleSize)
-    def load(name: String, fallback: DataFrame): DataFrame = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) spark.read.parquet(p.toString).drop("batch_id")
+    def load(name: String, fallback: DataFrame): DataFrame =
+      if (Pipeline.exists(spark, s"$dir/$name"))
+        spark.read.parquet(s"$dir/$name").drop("batch_id")
       else fallback
-    }
     MinhashLshIndex(load("buckets", empty.buckets),
       load("shingles", empty.shingles), load("sizes", empty.sizes),
       numHashes, bands, shingleSize)
@@ -49,25 +50,36 @@ object NearDupIngest {
 
   /** Run the ingest loop over a streaming `docs` relation until the
     * source drains (processAllAvailable — in production attach a
-    * checkpointLocation and leave the query running). Pairs land under
-    * `pairsDir`, the index under `indexDir/{buckets,shingles,sizes}`. */
+    * checkpointLocation to [[writer]] and leave the query running). Pairs
+    * land under `pairsDir`, the index under
+    * `indexDir/{buckets,shingles,sizes}`. */
   def start(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, pairsDir: String, threshold: Double = 0.8,
       numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3,
-      maxBucket: Int = 64): Unit = {
-    // replay idempotency depends on overwriting ONLY the replayed batch's
-    // partitions (same setting the Pipeline lake sink runs under)
-    docs.sparkSession.conf.set(
-      "spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val q = docs.writeStream.outputMode(OutputMode.Append)
+      maxBucket: Int = 64): Unit =
+    EventStreams.drain(writer(docs, idCol, textCol, indexDir, pairsDir,
+      threshold, numHashes, bands, shingleSize, maxBucket))
+
+  /** The ingest loop as an unstarted stream writer (see [[start]]). */
+  def writer(docs: DataFrame, idCol: String, textCol: String,
+      indexDir: String, pairsDir: String, threshold: Double = 0.8,
+      numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3,
+      maxBucket: Int = 64): DataStreamWriter[Row] =
+    docs.writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
+        // replay idempotency depends on overwriting ONLY the replayed
+        // batch's partitions
+        def write(df: DataFrame, path: String): Unit =
+          Pipeline.overwritePartitions(df.withColumn("batch_id",
+            lit(batchId)), path, "batch_id")
         // NOT staged: the batch is a file-source parquet slice, and the
         // only consumers that re-scan it are the (already-staged) shingle
         // explode inside minhashIndex and the tiny id projection below —
         // two scans of one small file cost less than the eager
         // localCheckpoint job staging would add per micro-batch
-        // (StreamFloor: harness floor is job-count-bound at replay scale)
+        // (micro-batch cost is job-count-bound: harness floor 0.97 s of
+        // 6.67 s at sf0.1, r16)
         val b = batch
         // THE STORE IS THE STAGE: the batch's index relations are written
         // to the store FIRST and the probe reads them back — one write
@@ -81,13 +93,13 @@ object NearDupIngest {
         // the three appends are independent reads of the (already
         // materialized) staged shingle relation — submit them as
         // CONCURRENT Spark jobs so the batch pays max(write) wall, not
-        // sum(write): the replay's micro-batch cost is job-count-bound
-        // (StreamFloor), and on a cluster concurrent small writes are
-        // the standard foreachBatch shape
+        // sum(write): micro-batch cost is job-count-bound (harness floor
+        // 0.97 s of 6.67 s at sf0.1, r16), and on a cluster concurrent
+        // small writes are the standard foreachBatch shape
         parWrites(Seq(
-          () => write(mine0.buckets, batchId, s"$indexDir/buckets"),
-          () => write(mine0.shingles, batchId, s"$indexDir/shingles"),
-          () => write(mine0.sizes, batchId, s"$indexDir/sizes")))
+          () => write(mine0.buckets, s"$indexDir/buckets"),
+          () => write(mine0.shingles, s"$indexDir/shingles"),
+          () => write(mine0.sizes, s"$indexDir/sizes")))
         // the index is loaded AFTER the append so the captured file
         // listing is current — a replayed batch's dynamic partition
         // overwrite would otherwise delete files a pre-append listing
@@ -112,23 +124,8 @@ object NearDupIngest {
         val mine = MinhashLshIndex(mineBack("buckets"), mineBack("shingles"),
           mineBack("sizes"), numHashes, bands, shingleSize)
         val pairs = Dedup.minhashProbeIndexed(mine, idx, threshold, maxBucket)
-        write(pairs, batchId, pairsDir)
+        write(pairs, pairsDir)
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
-
-  /** Same file-count discipline as Pipeline.upsertByDate: repartition by
-    * the partition column so each batch partition lands as one file, not
-    * tasks × partitions slivers — at ingest rates the index store's file
-    * count tracks batches, and every later loadIndex reads fewer
-    * footers. (8 writes per 2-batch replay also shed ~15 write tasks
-    * each at fixture scale.) */
-  private def write(df: DataFrame, batchId: Long, path: String): Unit =
-    df.withColumn("batch_id", lit(batchId))
-      .repartition(col("batch_id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("batch_id").parquet(path)
 
   /** Run independent write jobs concurrently and propagate the first
     * failure. Spark's scheduler multiplexes concurrent jobs across the
