@@ -3,11 +3,6 @@
 # value of one axis, and require "N pass, 0 fail" at every value. check.py's
 # pass == the driver's hash compare would pass.
 #
-#   mode  staging durability mode (Stage.materialize: parquet round-trip and
-#         reliable RDD checkpoint, vs the default localCheckpoint). StageSpec
-#         proves the staging seam mode-equal at unit level; this proves it
-#         end to end — no query depends on localCheckpoint semantics
-#         (partition-id stability, in-memory row identity).
 #   sf    data volume. The driver's gate runs only sf0.01 while the bench
 #         runs sf0.1, so a cap- or threshold-carrying operator (LSH bucket
 #         caps, posting-list caps, IVF probe counts, histogram bin edges)
@@ -20,22 +15,20 @@
 #         perturbs partial-aggregate grouping, merge-tree shape and row
 #         arrival order at every exchange.
 #
-# Usage: scripts/verify_matrix.sh mode|sf|cpus [value ...]
-#   defaults: mode: parquet reliable; sf: sf0.001 sf0.1; cpus: 5 13
+# Usage: scripts/verify_matrix.sh sf|cpus [value ...]
+#   defaults: sf: sf0.001 sf0.1; cpus: 5 13
 #   sf values are names under /root/testdata or paths (e.g. a generated
-#   testdata/sf1). The mode and cpus axes run at $SPARK_GRAFT_SF (default
-#   sf0.01, the driver's gated SF); every axis passes SPARK_GRAFT_CPUS
-#   through unless it sets it.
+#   testdata/sf1). The cpus axis runs at $SPARK_GRAFT_SF (default sf0.01,
+#   the driver's gated SF); the sf axis passes SPARK_GRAFT_CPUS through.
 # Every value runs and prints its FAIL lines plus the summary; the exit
 # status is nonzero if any value failed.
 set -uo pipefail
 cd "$(dirname "$0")/.."
 axis=${1:-}
 case "$axis" in
-  mode) defaults=(parquet reliable) ;;
   sf) defaults=(sf0.001 sf0.1) ;;
   cpus) defaults=(5 13) ;;
-  *) echo "usage: $0 mode|sf|cpus [value ...]" >&2; exit 2 ;;
+  *) echo "usage: $0 sf|cpus [value ...]" >&2; exit 2 ;;
 esac
 shift
 values=("$@")
@@ -46,7 +39,6 @@ for v in "${values[@]}"; do
   dir=$(sfdir "${SPARK_GRAFT_SF:-sf0.01}")
   vars=()
   case "$axis" in
-    mode) vars=("SPARK_GRAFT_STAGE_MODE=$v") ;;
     sf) dir=$(sfdir "$v") ;;
     cpus) vars=("SPARK_GRAFT_CPUS=$v") ;;
   esac

@@ -37,58 +37,6 @@ object Bench {
       case c             => c.toString
     } + "\""
 
-  /** The PREVIOUS round's per-query timings + total, read from the
-    * existing complete artifact (bench_out.json, committed each round)
-    * before this run overwrites it — embedded into the new artifact so
-    * the round-over-round delta is self-contained (the driver's
-    * BENCH_r{N}.json keeps only a truncated stdout tail, from which the
-    * judge otherwise reconstructs deltas). Goes into the FILE artifact
-    * only, not the stdout line: doubling the line would push the current
-    * queries out of the driver's bounded tail. A 20-line hand parse of
-    * the flat `"name":seconds` pairs keeps the zero-dependency build;
-    * absent/unparseable → omitted. */
-  private def prevRound(outFile: String): Option[String] = {
-    // parse the {"total":…,"queries":{flat pairs}} shape starting at
-    // `from` within `txt` ("name":number pairs — names [a-z0-9_] by
-    // contract)
-    def parseFrom(txt: String, from: Int): Option[String] = {
-      val total = "\"value\":([0-9.eE+-]+)".r
-        .findFirstMatchIn(txt.substring(from))
-        .orElse("\"total\":([0-9.eE+-]+)".r
-          .findFirstMatchIn(txt.substring(from)))
-        .map(_.group(1)).getOrElse("null")
-      val qStart = txt.indexOf("\"queries\":{", from)
-      if (qStart < 0) None
-      else {
-        val body = txt.substring(qStart + "\"queries\":{".length)
-        val end = body.indexOf('}')
-        if (end < 0) None
-        else {
-          val pairs = "\"([A-Za-z0-9_]+)\":([0-9.eE+-]+)".r
-            .findAllMatchIn(body.substring(0, end))
-            .map(m => s""""${m.group(1)}":${m.group(2)}""")
-            .mkString("{", ",", "}")
-          Some(s"""{"total":$total,"queries":$pairs}""")
-        }
-      }
-    }
-    try {
-      val p = java.nio.file.Paths.get(outFile)
-      if (!java.nio.file.Files.exists(p)) None
-      else {
-        val txt = java.nio.file.Files.readString(p)
-        if (!txt.contains("\"partial\":true")) parseFrom(txt, 0)
-        else {
-          // a name-restricted (local iteration) run is not a round
-          // artifact — but it still CARRIES the last full round under
-          // its own prev_round, so the chain survives a clobber
-          val pr = txt.indexOf("\"prev_round\":{")
-          if (pr < 0) None else parseFrom(txt, pr)
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
   /** Load average from /proc/loadavg (-1 if unreadable): field 0 = 1-min,
     * field 1 = 5-min. The 5-min figure is recorded alongside the 1-min
     * because a just-settled machine can read 1-min ≈ 2 while 5-min ≈ 8 —
@@ -195,16 +143,14 @@ object Bench {
     // (warmup/FS-cache effects always land on the same early queries)
     // optional: query names as args restrict the run (local iteration);
     // the driver passes none, so the full declaration-order suite runs
-    val only = args.toSet
-    val defs = SparkEntry.allDefs.map(q => (q.name, q.run))
-      .filter { case (n, _) => only.isEmpty || only.contains(n) }
+    val defs = SparkEntry.select(args.toSet).map(q => (q.name, q.run))
     var cleanupCount = 0
     def cleanup(): Unit = {
       // drop any staging relations an operator persisted, so cached data
       // from earlier queries can't pressure later ones — cleanup cost is
       // deliberately OUTSIDE the timed region. clearCache() owns the SQL
-      // cache manager's entries; localCheckpoint blocks (Stage.materialize
-      // mode=local) are persistent RDDs the ContextCleaner frees only
+      // cache manager's entries; localCheckpoint blocks (Stage.materialize)
+      // are persistent RDDs the ContextCleaner frees only
       // after a driver GC notices the reference drop — with 145 staged
       // queries in one session that lag let blocks pile into the storage
       // fraction and progressively slow the whole suite (r6 bench: 2x
@@ -350,16 +296,13 @@ object Bench {
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"rows":$rowsJson,"sf":"$sfDir"$envJson$errJson}"""
     println(line)
     // the stdout line can be lost to log truncation (the driver keeps a
-    // bounded tail); the file is the complete round-comparable artifact,
-    // and additionally carries the prior round's numbers (read before
-    // overwrite) so the delta travels with the artifact
+    // bounded tail); the file is the complete round-comparable artifact
+    // (scripts/bench_compare.py diffs two of them)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "bench_out.json")
     val partialJson =
-      if (only.nonEmpty) s""","partial":true""" else ""
-    val prevJson = prevRound(outFile)
-      .map(p => s""","prev_round":$p""").getOrElse("")
-    val fileLine = line.stripSuffix("}") + partialJson + prevJson + "}"
+      if (args.nonEmpty) s""","partial":true""" else ""
+    val fileLine = line.stripSuffix("}") + partialJson + "}"
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
       fileLine + "\n")
     catch { case e: Throwable =>

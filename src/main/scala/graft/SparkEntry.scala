@@ -27,6 +27,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
+  /** The queries a harness main runs: every query when `names` is empty,
+    * else the named ones; both in declaration order. An unknown name
+    * throws, so a typo cannot run (and report) zero queries. */
+  def select(names: Set[String]): Seq[QueryDef] = {
+    val unknown = names -- allDefs.map(_.name)
+    require(unknown.isEmpty,
+      s"unknown queries: ${unknown.toSeq.sorted.mkString(" ")}")
+    allDefs.filter(q => names.isEmpty || names(q.name))
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allDefs.map(q => q.name -> q.run).toMap

@@ -7,28 +7,21 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     // optional: query names after outDir restrict the run (local iteration)
-    val only = args.drop(2).toSet
-    def selected(name: String) = only.isEmpty || only.contains(name)
+    val defs = SparkEntry.select(args.drop(2).toSet)
     val spark = graft.engine.Session.local()
-    // cross-mode correctness runs (scripts/verify_matrix.sh mode) set the
-    // staging durability mode here; default matches Stage's default
-    spark.conf.set(graft.engine.Stage.modeKey,
-      sys.env.getOrElse("SPARK_GRAFT_STAGE_MODE", "local"))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (selected(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        spark.catalog.clearCache()
-        // also free localCheckpoint blocks (see Bench.scala: the SQL cache
-        // manager doesn't own them, and ContextCleaner lag lets them pile
-        // into the storage fraction across 145 queries). Scoped to the
-        // ids Stage registered, not all persistent RDDs.
-        graft.engine.Stage.releaseStaged(spark)
+    defs.foreach { q =>
+      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
+      spark.catalog.clearCache()
+      // also free localCheckpoint blocks (see Bench.scala: the SQL cache
+      // manager doesn't own them, and ContextCleaner lag lets them pile
+      // into the storage fraction across 145 queries). Scoped to the
+      // ids Stage registered, not all persistent RDDs.
+      graft.engine.Stage.releaseStaged(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,6 +1,5 @@
 package graft.engine
 
-import java.util.UUID
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -10,40 +9,30 @@ import org.apache.spark.storage.StorageLevel
   * (ngram pair sets, minhash signatures) don't recompute or grow an
   * unbounded plan.
   *
-  * HOW to materialize is a durability/cost trade the caller should not
-  * hard-code — it differs between a local run and a 1000-executor
-  * cluster — so it's config-keyed on `spark.graft.stage.mode`:
+  * There is one materialization: `localCheckpoint`, executor blocks at
+  * MEMORY_AND_DISK. The blocks are not recomputable, so losing an
+  * executor mid-job fails the query; on the `local[N]` master every
+  * session uses, the executor is the driver JVM, so no other
+  * materialization would outlive that failure either. Harness mains
+  * release the blocks between queries ([[releaseStaged]]); elsewhere the
+  * ContextCleaner frees them once the staged frame is unreachable.
   *
-  *   - `local` (default): `localCheckpoint` — executor-memory blocks
-  *     (MEMORY_AND_DISK), fastest, but blocks are NON-RECOMPUTABLE: an
-  *     executor loss mid-job kills the query. Right for local[] and for
-  *     short jobs where re-running on failure is acceptable.
-  *   - `reliable`: RDD `checkpoint` to the fault-tolerant checkpoint dir
-  *     (`spark.graft.stage.dir`, or the session's checkpoint dir) —
-  *     survives executor loss; the multi-hour-dedup-on-a-cluster mode.
-  *   - `parquet`: write/read a parquet round-trip under
-  *     `spark.graft.stage.dir` — also fault-tolerant, and unlike RDD
-  *     checkpoints the restaged read gets column pruning + a fresh
-  *     size estimate (AQE can re-plan downstream joins), at the cost of
-  *     encode/decode. Best when the staged relation is wide but consumers
-  *     are narrow.
-  *   - `none`: no-op — recompute instead of staging. For the cases where
-  *     recomputation is measured cheaper than materialization (see
-  *     duplicateSpans' probe in ARCHITECTURE.md) or for plan debugging.
-  *     NOTE: iterative callers (pointer-doubling closure, PQ training)
-  *     still need a real lineage cut to avoid exponential plans, so they
-  *     use [[materializeAlways]], which treats `none` as `local`.
-  *
-  * All modes are semantically identical (StageSpec proves equal results);
-  * only durability and cost differ.
+  * `spark.graft.stage.mode` takes two values:
+  *   - `local` (default): materialize as above.
+  *   - `none`: [[materialize]] returns its input, so a plan audit sees
+  *     the full lineage behind every staging boundary. Iterative callers
+  *     (pointer-doubling closure, PQ training) still need a real lineage
+  *     cut to avoid exponential plans, so they use [[materializeAlways]],
+  *     which treats `none` as `local`.
+  * Any other value fails the next staging call. StageSpec proves both
+  * values give equal results.
   */
 object Stage {
 
   val modeKey = "spark.graft.stage.mode"
-  val dirKey = "spark.graft.stage.dir"
 
-  // ids of persistent RDDs created by staging (mode=local leaves a
-  // localCheckpoint block registered in sparkContext.getPersistentRDDs).
+  // ids of persistent RDDs created by staging (a localCheckpoint leaves
+  // its blocks registered in sparkContext.getPersistentRDDs).
   // Harness mains (Bench/Verify/Profile) unpersist exactly these
   // between queries instead of sweeping ALL persistent RDDs — a global
   // sweep would silently evict any intentionally long-lived cache and
@@ -79,46 +68,31 @@ object Stage {
     out
   }
 
-  private def stageDir(df: DataFrame): String = {
-    val spark = df.sparkSession
-    spark.conf.getOption(dirKey).getOrElse {
-      val d = java.nio.file.Files.createTempDirectory("graft-stage").toString
-      spark.conf.set(dirKey, d)
-      d
-    }
-  }
-
-  /** Materialize `df` per the configured mode; `none` → return as-is. */
-  def materialize(df: DataFrame): DataFrame =
+  /** True when `spark.graft.stage.mode` is `none`; rejects any value
+    * other than `local` or `none`. */
+  private def skipping(df: DataFrame): Boolean =
     df.sparkSession.conf.getOption(modeKey).getOrElse("local") match {
-      case "none" => df
-      case mode   => force(df, mode)
+      case "local" => false
+      case "none"  => true
+      case other =>
+        throw new IllegalArgumentException(
+          s"$modeKey=$other (expected local | none)")
     }
+
+  /** Materialize `df` unless the mode is `none`. */
+  def materialize(df: DataFrame): DataFrame =
+    if (skipping(df)) df else force(df)
 
   /** Like [[materialize]] but never a no-op — iterative algorithms call
     * this: without a genuine lineage cut each round's plan would embed
     * the previous round's, going exponential. */
-  def materializeAlways(df: DataFrame): DataFrame =
-    df.sparkSession.conf.getOption(modeKey).getOrElse("local") match {
-      case "none" => force(df, "local")
-      case mode   => force(df, mode)
-    }
-
-  private def force(df: DataFrame, mode: String): DataFrame = mode match {
-    case "local" =>
-      tracked(df)(df.localCheckpoint())
-    case "reliable" =>
-      val sc = df.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(stageDir(df))
-      df.checkpoint()
-    case "parquet" =>
-      val path = s"${stageDir(df)}/${UUID.randomUUID()}"
-      df.write.parquet(path)
-      df.sparkSession.read.parquet(path)
-    case other =>
-      throw new IllegalArgumentException(
-        s"$modeKey=$other (expected local | reliable | parquet | none)")
+  def materializeAlways(df: DataFrame): DataFrame = {
+    skipping(df) // validates the mode: a stale value fails here too
+    force(df)
   }
+
+  private def force(df: DataFrame): DataFrame =
+    tracked(df)(df.localCheckpoint())
 
   /** Persist-based staging for a frame that is consumed a bounded number
     * of times within one job and can safely be recomputed on block loss —

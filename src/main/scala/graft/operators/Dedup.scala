@@ -66,9 +66,7 @@ object Dedup {
     * it is computed exactly once, its lineage is truncated, and AQE has
     * already sized its partitions to the real (post-explode) row count.
     * Blocks are released by the ContextCleaner when the result goes out
-    * of scope, so library callers don't leak executor cache. On a
-    * multi-executor cluster the equivalent staging is a reliable
-    * checkpoint / parquet stage between phases. */
+    * of scope, so library callers don't leak executor cache. */
   private[operators] def explodedShingles(df: DataFrame, idCol: String,
       textCol: String, shingleSize: Int): DataFrame =
     explodedShingles(df, idCol, textCol, shingleSize, withHashes = true)
@@ -467,9 +465,9 @@ object Dedup {
     * N-times-nested join tree — and lets AQE size shuffle partitions to
     * the real (post-LSH) edge count rather than the input's. ONE
     * materializing job per round — the convergence count rides the same
-    * job via an accumulator instead of a second scan. On a multi-executor cluster
-    * set spark.graft.stage.mode=reliable|parquet (graft.engine.Stage)
-    * for fault-tolerant staging.
+    * job via an accumulator instead of a second scan. Each round's staged
+    * blocks are released by the ContextCleaner once the next round no
+    * longer references them.
     *
     * Returns (id, cluster_id) for every id appearing in `pairs`. Logs a
     * warning if maxIter rounds were not enough to converge (with doubling

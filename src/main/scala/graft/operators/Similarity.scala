@@ -462,8 +462,7 @@ object Similarity {
     // staged once via Stage.materialize: computed exactly once, lineage
     // truncated, partitions AQE-sized, and blocks are released by the
     // ContextCleaner when the result goes out of scope (no cache leak into
-    // library callers). Cluster equivalent: a reliable checkpoint/parquet
-    // stage between pipeline phases.
+    // library callers).
     val dims = Stage.spread(
         vectors.select(col(idCol).as("id"), col(embCol).as("__emb")),
         col("id"))

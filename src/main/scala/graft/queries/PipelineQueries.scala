@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.engine.{Det, GoldEngagement, Pipeline, SilverPosts, SilverUsers, Tables}
+import graft.engine.{Det, GoldEngagement, Pipeline, Scratch, SilverPosts, SilverUsers, Tables}
 import graft.sources.Sources
 
 /** Queries exposing the medallion modules (Bronze/Silver/Gold/Pipeline)
@@ -34,8 +34,7 @@ object PipelineQueries {
     def runOnce(s: org.apache.spark.sql.SparkSession,
         sfDir: String): (String, Map[String, Long]) =
       lakes.getOrElseUpdate(sfDir, {
-        val lake = java.nio.file.Files
-          .createTempDirectory("graft-lake").toString
+        val lake = Scratch.dir("graft-lake")
         (lake, new Pipeline(s, lake).run(sfDir))
       })
   }
@@ -192,19 +191,22 @@ object PipelineQueries {
          |  (SELECT CAST(SUM(id) AS BIGINT) FROM u)
          |ORDER BY route""".stripMargin) { (s, d) =>
       import s.implicits._
+      // the source files live only until land has copied them
       val src = java.nio.file.Files.createTempDirectory("graft-src")
-      java.nio.file.Files.writeString(src.resolve("users_1.json"),
-        """[{"id": 1, "name": "Ann", "email": "a@b.co",
-          |  "address": {"city": "X", "geo": {"lat": "1.5", "lng": "2"}}},
-          | {"id": 2, "name": "Bob", "email": null,
-          |  "address": {"city": "Y", "geo": {"lat": null, "lng": "q"}}}]""".stripMargin)
-      java.nio.file.Files.writeString(src.resolve("covid_1.csv"),
-        "Date,Country/Region,Province/State,Confirmed,Deaths\n" +
-          "2020-01-01,US,,10,0\n2020-01-02,US,,15,1\n2020-01-01,FR,,3,0\n")
-      Sources.land(src.resolve("users_1.json").toUri.toString,
-        routingLandingDir, "users_1.json")
-      Sources.land(src.resolve("covid_1.csv").toUri.toString,
-        routingLandingDir, "covid_1.csv")
+      try {
+        java.nio.file.Files.writeString(src.resolve("users_1.json"),
+          """[{"id": 1, "name": "Ann", "email": "a@b.co",
+            |  "address": {"city": "X", "geo": {"lat": "1.5", "lng": "2"}}},
+            | {"id": 2, "name": "Bob", "email": null,
+            |  "address": {"city": "Y", "geo": {"lat": null, "lng": "q"}}}]""".stripMargin)
+        java.nio.file.Files.writeString(src.resolve("covid_1.csv"),
+          "Date,Country/Region,Province/State,Confirmed,Deaths\n" +
+            "2020-01-01,US,,10,0\n2020-01-02,US,,15,1\n2020-01-01,FR,,3,0\n")
+        Sources.land(src.resolve("users_1.json").toUri.toString,
+          routingLandingDir, "users_1.json")
+        Sources.land(src.resolve("covid_1.csv").toUri.toString,
+          routingLandingDir, "covid_1.csv")
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(src.toFile)
       val routed = Sources.route(routingLandingDir, Seq(
         "users" -> (ps => Sources.jsonAll(s, ps)),
         "covid" -> (ps => Sources.csvAll(s, ps)),
@@ -234,7 +236,7 @@ object PipelineQueries {
          |  ${Det.dsumSql("o_totalprice")} AS revenue
          |FROM orders JOIN customer ON o_custkey = c_custkey
          |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin) { (s, d) =>
-      val lake = java.nio.file.Files.createTempDirectory("graft-bucketed-lake").toString
+      val lake = Scratch.dir("graft-bucketed-lake")
       val p = new Pipeline(s, lake)
       p.writeBucketed(
         Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice"),
@@ -265,8 +267,7 @@ object PipelineQueries {
       s"""SELECT event_id, user_id FROM events
          |WHERE user_id % 37 <> 0
          |ORDER BY event_id""".stripMargin) { (s, d) =>
-      val lake = java.nio.file.Files
-        .createTempDirectory("graft-delete-lake").toString
+      val lake = Scratch.dir("graft-delete-lake")
       val p = new Pipeline(s, lake)
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"),
@@ -298,8 +299,7 @@ object PipelineQueries {
          |SELECT event_id, user_id, value FROM ev
          |WHERE d > DATE '2024-01-20'
          |ORDER BY event_id""".stripMargin) { (s, d) =>
-      val lake = java.nio.file.Files
-        .createTempDirectory("graft-cdc-lake").toString
+      val lake = Scratch.dir("graft-cdc-lake")
       val p = new Pipeline(s, lake)
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("value"),

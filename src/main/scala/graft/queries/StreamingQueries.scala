@@ -9,7 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.DecimalType
-import graft.engine.{Det, Tables}
+import graft.engine.{Det, Scratch, Tables}
 import graft.streaming.{BloomIngest, EventStreams, NearDupIngest}
 
 /** Batch-driven, oracle-checked replays of the streaming ingest loops.
@@ -78,8 +78,9 @@ object StreamingQueries {
     * everything staged, and stops. All runs share one checkpoint, so a
     * later run is a restart that resumes where the previous one stopped.
     * Once the stream has stopped, the source, staging, checkpoint and
-    * state directories are deleted. The output directory stays, because
-    * the frame a query returns reads it lazily; its path is returned. */
+    * state directories are deleted. The output directory stays until the
+    * JVM exits ([[Scratch]]), because the frame a query returns reads it
+    * lazily; its path is returned. */
   private def replay(s: SparkSession, runs: Seq[Run], aqe: Boolean = true)(
       sink: (DataFrame, String, String) => DataStreamWriter[Row]): String = {
     val made = scala.collection.mutable.Buffer.empty[Path]
@@ -88,7 +89,7 @@ object StreamingQueries {
       made += p
       p
     }
-    val out = Files.createTempDirectory("replay-out").toString
+    val out = Scratch.dir("replay-out")
     try {
       val src = tmp("replay-src")
       val state = tmp("replay-state").toString

@@ -98,11 +98,7 @@ object Profile {
     val sfDir = args(0)
     val reps = args(1).toInt
     require(reps >= 1, "reps must be at least 1")
-    val only = args.drop(2).toSet
-    val defs = SparkEntry.allDefs.map(q => q.name -> q.run)
-    val unknown = only -- defs.map(_._1)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(" ")}")
-    val selected = defs.filter { case (n, _) => only.isEmpty || only(n) }
+    val selected = SparkEntry.select(args.drop(2).toSet)
     val plan = sys.env.get("PROFILE_PLAN").contains("1")
 
     val spark = Session.local()
@@ -112,13 +108,14 @@ object Profile {
     var memSpilled, diskSpilled = 0L
     val failed = mutable.Set.empty[String]
 
-    selected.foreach { case (name, fn) =>
+    selected.foreach { q =>
+      val name = q.name
       val lines = (1 to reps).map { rep =>
         listener.drain(spark)
         sc.setLocalProperty(TagKey, "query")
         val t0 = System.nanoTime()
         val line = try {
-          val df = fn(spark, sfDir)
+          val df = q.run(spark, sfDir)
           val t1 = System.nanoTime()
           if (plan && rep == 1)
             println(s"==== $name ====\n" +

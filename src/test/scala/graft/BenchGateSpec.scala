@@ -31,4 +31,16 @@ class BenchGateSpec extends AnyFunSuite {
   test("a quiet clean pass is not contaminated") {
     assert(!Bench.passContaminated(1.0, loadAtStart = 0.0, cpus = 32))
   }
+
+  test("harness query selection: all in declaration order, or named, or a typo error") {
+    assert(SparkEntry.select(Set.empty) === SparkEntry.allDefs)
+    val some = Set("q1_pricing_summary", "q_cdc_apply")
+    assert(SparkEntry.select(some).map(_.name) ===
+      SparkEntry.allDefs.map(_.name).filter(some))
+    // a typo must fail, not run zero queries and report a total of 0
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Set("q1_pricing_summary", "q_typo")))
+    assert(e.getMessage.contains("q_typo"))
+    assert(!e.getMessage.contains("q1_pricing_summary"))
+  }
 }

@@ -9,7 +9,8 @@ import graft.engine.Pipeline
 import graft.streaming.{BloomIngest, NearDupIngest}
 
 /** The engine's writes change nothing beyond what they write: no session
-  * setting, and no scratch directory left behind by a stream replay. */
+  * setting, and no scratch directory left behind by a stream replay or
+  * by source routing. */
 class SideEffectSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
   private val modeKey = "spark.sql.sources.partitionOverwriteMode"
@@ -70,5 +71,19 @@ class SideEffectSpec extends AnyFunSuite {
     assert(outputs.size === 2, s"one output directory per replay: $outputs")
     val left = replayDirs() -- before
     assert(left === outputs, s"left behind: ${left -- outputs}")
+  }
+
+  test("source routing deletes its source files once they are landed") {
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def srcDirs(): Set[String] = {
+      val ls = Files.list(tmp)
+      try ls.iterator.asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft-src")).toSet
+      finally ls.close()
+    }
+    val before = srcDirs()
+    val df = SparkEntry.queries("s3_source_routing")(SparkTestSession.spark, sf)
+    assert(df.count() === 2)
+    assert(srcDirs() -- before === Set.empty[String])
   }
 }
