@@ -9,11 +9,9 @@ import org.apache.spark.sql.functions._
   * [[TextFunctions.tokens]]).
   *
   * Scale shape, mirroring how production tokenizer training actually
-  * splits: LEARNING runs on the word-frequency table — a distributed
-  * explode → hash-aggregate reduces the corpus to distinct words with
-  * counts, the top `maxWords` of which (a bounded, codebook-sized
-  * relation, like an IVF centroid set) are collected and merged
-  * driver-side with the classic pair-count loop. ENCODING streams the
+  * splits: LEARNING runs on the word-frequency table — [[learn]] is the
+  * classic pair-count loop over a driver-side table, [[learnDistributed]]
+  * the same loop with the table kept on the cluster. ENCODING streams the
   * corpus through a mapPartitions seam: the merge-rank map is built once
   * per partition, rows are tokenized with the greedy lowest-rank-first
   * merge loop — no per-row UDF re-initialization, no driver involvement.
@@ -66,44 +64,10 @@ object Bpe {
     merges.result()
   }
 
-  /** Distributed word counts → bounded top-`maxWords` (count desc, word
-    * asc — deterministic) → driver-side [[learn]]. The collect is bounded
-    * by maxWords, the same contract as collecting an ANN codebook:
-    * corpus growth changes the COUNTS flowing into the top-k, never the
-    * number of rows collected (measured under k-fold replication: the
-    * cost tracks the distributed word-count scan while the driver step
-    * stays maxWords-sized at any k).
-    *
-    * FULLY-DISTRIBUTED ALTERNATIVE (when the vocabulary itself must not
-    * be truncated): each merge round is expressible as one distributed
-    * aggregate — explode each word's current symbol sequence into
-    * adjacent pairs, weight by word count, `groupBy(pair).agg(sum)` +
-    * argmax for the round's winner (a 1-row result), then rewrite the
-    * symbol sequences with the chosen merge and repeat numMerges times.
-    * That is numMerges shuffles over the (bounded-cardinality) word
-    * relation instead of one bounded collect — the right trade only when
-    * maxWords-truncation measurably hurts tokenizer quality, which is
-    * why the codebook-collect form ships as the default. */
-  def learnFromCorpus(df: DataFrame, textCol: String, numMerges: Int,
-      maxWords: Int): Seq[(String, String)] = {
-    val top = df
-      .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy("w").agg(count(lit(1)).as("c"))
-      .orderBy(desc("c"), asc("w"))
-      .limit(maxWords)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-      .toSeq
-    learn(top, numMerges)
-  }
-
-  /** FULLY-DISTRIBUTED learn: the scaladoc alternative of
-    * [[learnFromCorpus]], implemented for real — no vocabulary
-    * truncation, no corpus-sized driver state. The word-frequency
-    * relation (distinct words — bounded sublinearly by the corpus'
-    * vocabulary, not its size) stays ON THE CLUSTER for the whole loop;
-    * each of the `numMerges` rounds is:
+  /** FULLY-DISTRIBUTED learn: no vocabulary truncation, no corpus-sized
+    * driver state. The word-frequency relation (distinct words — bounded
+    * sublinearly by the corpus' vocabulary, not its size) stays ON THE
+    * CLUSTER for the whole loop; each of the `numMerges` rounds is:
     *
     *   1. one distributed aggregate: adjacent symbol pairs exploded from
     *      every word, weighted by word count, `groupBy(pair).sum` —
@@ -119,8 +83,8 @@ object Bpe {
     *
     * At 100 TB the corpus is touched exactly once (the initial word
     * count); the loop's cost is numMerges shuffles over the vocabulary
-    * relation. Same corpus → same merges as [[learn]]/[[learnFromCorpus]]
-    * with an untruncated vocabulary (BpeSpec pins the equivalence; the
+    * relation. Same corpus → same merges as [[learn]] over the corpus'
+    * untruncated word counts (BpeSpec pins the equivalence; the
     * t_bpe_learn_distributed oracle replays the full loop in DuckDB). */
   def learnDistributed(df: DataFrame, textCol: String,
       numMerges: Int): Seq[(String, String)] = {
@@ -304,35 +268,6 @@ object Bpe {
     * init — deterministic (count-desc, lexicographic tie-break), so the
     * same table on every JVM, every run, every cluster size. */
   val pinnedMerges: Seq[(String, String)] = learn(seedVocab, 48)
-
-  private val distLearned =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, Seq[(String, String)]]()
-
-  /** The pinned codebook derived CLUSTER-SIDE: [[learnDistributed]] over
-    * the seed corpus reconstructed from [[seedVocab]] (each word repeated
-    * its snapshot count — the exact word-frequency relation the driver
-    * loop learns from), so the shipped tokenizer chain (t_bpe_tokenize /
-    * t_bpe_chunking / t_bpe_fertility) is distributed END-TO-END: learn
-    * on the cluster, encode through the mapPartitions seam. The driver
-    * loop stays as the equivalence CONTROL — the require below fails the
-    * query loudly if the two learns ever diverge, which is why the
-    * queries' oracle SQL can keep interpolating [[pinnedMerges]]
-    * statically (identical by construction, so hashes cannot move).
-    * Learned once per session and memoized: one ~48-round learn over the
-    * 31-word seed relation amortizes across every tokenizer query. */
-  def pinnedMergesDistributed(spark: SparkSession): Seq[(String, String)] =
-    distLearned.computeIfAbsent(spark, { s: SparkSession =>
-      import s.implicits._
-      val corpus = seedVocab.toDF("w", "c")
-        .select(concat_ws(" ",
-          transform(sequence(lit(1), col("c").cast("int")),
-            _ => col("w"))).as("text"))
-      val m = learnDistributed(corpus, "text", numMerges = pinnedMerges.size)
-      require(m == pinnedMerges,
-        s"distributed learn diverged from the driver-loop codebook: " +
-          s"got ${m.take(3)}…, expected ${pinnedMerges.take(3)}…")
-      m
-    })
 
   /** DuckDB replay of [[encodeWord]] under [[pinnedMerges]], as a scalar
     * SQL expression over `wordExpr` returning the token LIST.

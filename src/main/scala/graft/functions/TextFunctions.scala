@@ -115,19 +115,7 @@ object TextFunctions {
     tok.groupBy(col(idCol)).agg(aggCols.head, aggCols.tail: _*)
   }
 
-  /** Corpus vocabulary by document frequency: distinct (doc, term) pairs →
-    * per-term df, banded to [minDf, maxDf] (drop hapaxes and boilerplate —
-    * the min_df/max_df vectorizer contract), top maxTerms by (df desc,
-    * term asc). One explode + two hash aggregates + a TakeOrdered — no
-    * unpartitioned windows, no driver-side vocabulary. */
-  def vocabulary(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, minDf: Long, maxDf: Long,
-      maxTerms: Int): org.apache.spark.sql.DataFrame =
-    vocabularyImpl(df, idCol, textCol, minDf, maxTerms,
-      pairs => pairs.sparkSession.range(1)
-        .select(lit(maxDf).as("__maxdf")))
-
-  /** Relative max_df for [[vocabularyFrac]]: ceil(0.75·n_docs) — the
+  /** Relative max_df for [[vocabulary]]: ceil(0.75·n_docs) — the
     * sklearn float-max_df form (a term in more than three quarters of
     * documents is boilerplate at any corpus size). Expressed as exact
     * integer arithmetic so engine and oracle can't disagree on a
@@ -140,35 +128,34 @@ object TextFunctions {
   def vocabMaxDfOracleSql(nDocsExpr: String): String =
     s"(($nDocsExpr) * $VocabMaxDfNum + ${VocabMaxDfDen - 1}) // $VocabMaxDfDen"
 
-  /** [[vocabulary]] with max_df RELATIVE to the corpus size (sklearn's
-    * float max_df, the vectorizer norm): a fixed absolute ceiling
-    * rejects every common term once corpus df scales past it — the
-    * absolute band [3, 200] matched NOTHING from sf0.1 up — while a
+  /** Corpus vocabulary by document frequency: distinct (doc, term) pairs →
+    * per-term df, banded to [minDf, max_df] (drop hapaxes and boilerplate —
+    * the min_df/max_df vectorizer contract), top maxTerms by (df desc,
+    * term asc). One explode + two hash aggregates + a TakeOrdered — no
+    * unpartitioned windows, no driver-side vocabulary.
+    *
+    * max_df is RELATIVE to the corpus size ([[vocabMaxDfExprSql]],
+    * sklearn's float max_df, the vectorizer norm): a fixed absolute
+    * ceiling rejects every common term once corpus df scales past it —
+    * the absolute band [3, 200] matched NOTHING from sf0.1 up — while a
     * proportional ceiling keeps "boilerplate" meaning "appears in more
     * than a fixed SHARE of documents" at every scale. min_df stays
     * absolute (its job is dropping hapaxes/noise, a per-term evidence
     * floor, sklearn's int form). The ceiling is computed in-plan as a
     * 1-row broadcast — same discipline as
     * [[graft.operators.Itemsets.thresholdExprSql]]. */
-  def vocabularyFrac(df: org.apache.spark.sql.DataFrame, idCol: String,
+  def vocabulary(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, minDf: Long, maxTerms: Int)
-      : org.apache.spark.sql.DataFrame =
-    vocabularyImpl(df, idCol, textCol, minDf, maxTerms,
-      pairs => pairs.agg(
-        expr(vocabMaxDfExprSql(s"count(DISTINCT `$idCol`)"))
-          .cast("long").as("__maxdf")))
-
-  private def vocabularyImpl(df: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String, minDf: Long, maxTerms: Int,
-      mkMaxDf: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val pairs = df
       .select(col(idCol), explode(tokens(col(textCol))).as("term"))
       .distinct()
+    val maxDf = pairs.agg(
+      expr(vocabMaxDfExprSql(s"count(DISTINCT `$idCol`)"))
+        .cast("long").as("__maxdf"))
     pairs
       .groupBy("term").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(mkMaxDf(pairs)))
+      .crossJoin(broadcast(maxDf))
       .filter(col("df").between(lit(minDf), col("__maxdf")))
       .select("term", "df")
       .orderBy(desc("df"), asc("term"))
@@ -273,7 +260,7 @@ object TextFunctions {
       textCol: String): org.apache.spark.sql.DataFrame = {
     // staged once: tok feeds the bigram window, the unigram counts, and
     // the vocab size; bi feeds the bigram counts AND the scoring join —
-    // unstaged, the documents scan ran five times (PlanAudit rescan check)
+    // unstaged, the documents scan ran five times (plan rescan check)
     val tok = df.select(col(idCol),
         posexplode(tokens(col(textCol))).as(Seq("pos", "w")))
       .staged

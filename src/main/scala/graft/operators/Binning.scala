@@ -44,7 +44,7 @@ object Binning {
     require(k >= 2, s"k must be >= 2: $k")
     require(bucketWidth > 0, s"bucketWidth must be positive: $bucketWidth")
     // staged: three consumers (count, histogram, in-bucket rank) —
-    // unstaged each re-scanned the source relation (PlanAudit's rescan
+    // unstaged each re-scanned the source relation (the plan rescan
     // rule flagged ×5 source reads through callers); the staged form is
     // one narrow-column materialization
     val v = df.select(col(valCol).as("__v")).filter(col("__v").isNotNull)

@@ -41,22 +41,6 @@ object CountMin {
         position(k, j, width)): _*)).as(Seq("row_id", "col_id")))
   }
 
-  /** A sketch relation paired with the shape it was built at. Prefer this
-    * over the raw (DataFrame, width, depth) triple: [[estimate]] on a
-    * [[Sketch]] cannot probe different cell positions than the build
-    * wrote, which with the raw API silently returns garbage (typically
-    * 0s) when the shapes disagree. */
-  final case class Sketch(cells: DataFrame, width: Int, depth: Int)
-
-  /** [[build]] + shape, as a [[Sketch]]. */
-  def buildSketch(df: DataFrame, keyCol: String, width: Int = 1024,
-      depth: Int = 4): Sketch =
-    Sketch(build(df, keyCol, width, depth), width, depth)
-
-  /** Shape-safe [[estimate]]: probes at exactly the build's positions. */
-  def estimate(keys: DataFrame, sketch: Sketch, keyCol: String): DataFrame =
-    estimate(keys, sketch.cells, keyCol, sketch.width, sketch.depth)
-
   /** Build the sketch from a key column (one row per occurrence):
     * (row_id, col_id, cnt), ≤ d·w rows. */
   def build(df: DataFrame, keyCol: String, width: Int = 1024,
@@ -72,8 +56,7 @@ object CountMin {
     * (keyCol, est_count) = min over the d probed cells. Missing cells
     * read as 0 (left join — the key was never counted). `width`/`depth`
     * MUST equal the values the sketch was built with — different values
-    * probe positions the build never wrote and silently under-read; use
-    * the [[Sketch]] overload to make that mismatch unrepresentable. */
+    * probe positions the build never wrote and silently under-read. */
   def estimate(keys: DataFrame, sketch: DataFrame, keyCol: String,
       width: Int = 1024, depth: Int = 4): DataFrame =
     cells(keys.select(keyCol).distinct(), keyCol, width, depth)

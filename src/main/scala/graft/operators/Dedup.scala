@@ -673,7 +673,7 @@ object Dedup {
 
   /** Relative posting-list cap for the inverted-index similarity ops:
     * `greatest(base, ceil(n_docs·base/per))` — 32 postings per 5,000 docs
-    * at the anchor, so the cap GROWS with the corpus. The absolute form
+    * at the anchor, so the cap GROWS with the corpus. A fixed cap
     * degenerates under corpus growth over a bounded shingle namespace:
     * discriminative shingles' document frequency scales with the corpus
     * (boilerplate and topical phrasing recur corpus-wide), so a fixed cap
@@ -693,15 +693,9 @@ object Dedup {
       per: Long = PostingCapPerDocs): String =
     s"GREATEST($base, ($nDocsExpr * $base + ${per - 1}) // $per)"
 
-  /** Posting-cap strategy for the inverted-index ops: a literal stays a
-    * plain pushable filter (no join in the plan at all); the relative form
-    * is a corpus-count aggregate broadcast into the filter as a 1-row
-    * relation so the cap is decided in-plan, never on the driver. */
-  private sealed trait Cap
-  private case class LiteralCap(maxPosting: Int) extends Cap
-  private case object RelativeCap extends Cap
-
-  /** Postings banded to [2, cap] under the given [[Cap]] strategy.
+  /** Postings banded to [2, cap], the cap [[postingCapExprSql]] over the
+    * corpus size: a `count(1)` aggregate broadcast into the filter as a
+    * 1-row relation, so the cap is decided in-plan, never on the driver.
     *
     * Shape: hash-aggregate the per-shingle document frequency and join the
     * surviving shingles back, NOT a count() window — the window form costs
@@ -712,56 +706,41 @@ object Dedup {
     * same shingle partitioning, and the map side of the postings exchange
     * is reused across the two consumers.
     *
-    * `docs` is the operator's SOURCE relation; the relative cap's corpus
-    * count is `count(1)` over it — value-identical to the oracle's
-    * COUNT(DISTINCT id) over the shingle CTE (ids are unique per source
-    * row and every doc emits ≥ 1 shingle row, including the short-doc
-    * whole-text fallback) but plan-cheap: a column-less parquet count
-    * instead of a two-phase count-distinct exchange over the full
-    * exploded relation. */
-  private def usefulPostings(exploded: DataFrame, cap: Cap,
+    * `docs` is the operator's SOURCE relation; the corpus count is
+    * `count(1)` over it — value-identical to the oracle's
+    * COUNT(DISTINCT id) over the shingle CTE only while ids are unique
+    * per source row (every doc emits ≥ 1 shingle row, including the
+    * short-doc whole-text fallback) — but plan-cheap: a column-less
+    * parquet count instead of a two-phase count-distinct exchange over
+    * the full exploded relation. */
+  private def usefulPostings(exploded: DataFrame,
       docs: DataFrame): DataFrame = {
     // project before the exchange (guide §2.3): minhash callers'
     // __h1/__h2 are dead weight here
-    val counts = exploded.select("shingle")
+    val ok = exploded.select("shingle")
       .groupBy("shingle").agg(count(lit(1)).as("__pn"))
-    val ok = (cap match {
-      case LiteralCap(m) =>
-        counts.filter(col("__pn").between(lit(2L), lit(m.toLong)))
-      case RelativeCap =>
-        counts
-          .crossJoin(broadcast(docs
-            .agg(expr(postingCapExprSql("count(1)"))
-              .cast("long").as("__cap"))))
-          .filter(col("__pn").between(lit(2L), col("__cap")))
-    }).select("shingle")
+      .crossJoin(broadcast(docs
+        .agg(expr(postingCapExprSql("count(1)")).cast("long").as("__cap"))))
+      .filter(col("__pn").between(lit(2L), col("__cap")))
+      .select("shingle")
     exploded.select("id", "shingle").join(ok, Seq("shingle"))
   }
 
   /** N-gram Jaccard via inverted-index blocking: prune shingles to useful
-    * postings (2..maxPosting docs), self-join the postings to count
+    * postings (2..cap docs, the cap derived from the corpus size in-plan
+    * by [[postingCapExprSql]]), self-join the postings to count
     * co-occurrences — |A∩B| directly, no arrays — then Jaccard from
-    * counts. Fixed-cap form for fixed-corpus analyses and as the scale
-    * probes' degeneration control; production callers use
-    * [[ngramJaccardDupsFrac]]. */
+    * counts.
+    *
+    * Precondition: `idCol` is unique per row. The cap's corpus count is
+    * `count(1)` over `df`; with repeated ids it exceeds the oracle's
+    * COUNT(DISTINCT id) and the cap admits longer postings. */
   def ngramJaccardDups(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, shingleSize: Int = 3,
-      maxPosting: Int = 32): DataFrame =
-    ngramJaccard(df, idCol, textCol, threshold, shingleSize,
-      LiteralCap(maxPosting))
-
-  /** [[ngramJaccardDups]] with the posting cap derived from the corpus
-    * size in-plan ([[postingCapExprSql]]) — the scale-correct default. */
-  def ngramJaccardDupsFrac(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, shingleSize: Int = 3): DataFrame =
-    ngramJaccard(df, idCol, textCol, threshold, shingleSize, RelativeCap)
-
-  private def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, shingleSize: Int, cap: Cap): DataFrame = {
+      threshold: Double = 0.8, shingleSize: Int = 3): DataFrame = {
     val exploded = explodedShingles(df, idCol, textCol, shingleSize,
       withHashes = false)
     val sizes = exploded.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val useful = usefulPostings(exploded, cap, df)
+    val useful = usefulPostings(exploded, df)
     val inter = useful.withColumnsRenamed(Map("id" -> "id_a"))
       .join(useful.withColumnsRenamed(Map("id" -> "id_b")), Seq("shingle"))
       .filter(col("id_a") < col("id_b"))
@@ -775,11 +754,11 @@ object Dedup {
     * family: order each doc's shingles by global rarity, and only the
     * first `|set| - ceil(t·|set|) + 1` tokens of each doc generate
     * candidates). Complements [[ngramJaccardDups]]: the inverted-index
-    * pass caps posting lists at `maxPosting` (a skew guard that can DROP
-    * true pairs whose only shared shingles are boilerplate), while this
-    * join is provably complete — if J(a,b) ≥ t then |A∩B| ≥ t·max(|A|,|B|),
-    * so prefixes of the stated length must share a token, and every true
-    * pair survives candidate generation. Exactness with NO posting cap is
+    * pass caps posting lists at [[postingCapExprSql]] (a skew guard that
+    * can DROP true pairs whose only shared shingles are boilerplate),
+    * while this join is provably complete — if J(a,b) ≥ t then
+    * |A∩B| ≥ t·max(|A|,|B|), so prefixes of the stated length must share
+    * a token, and every true pair survives candidate generation. Exactness with NO posting cap is
     * affordable because prefixes hold each doc's RAREST shingles: a
     * shingle's candidate-join fan-out is its prefix-posting count, and
     * frequent (boilerplate) shingles sit at the tail of the order where
@@ -846,30 +825,23 @@ object Dedup {
     * duplication shape crawl corpora are full of.
     *
     * Same inverted-index shape as [[ngramJaccardDups]] (posting lists
-    * capped at `maxPosting`, co-occurrence counted on the exploded
-    * relation, never array intersections); each undirected candidate
-    * pair then emits up to two DIRECTED rows (sub → super per side) from
-    * the single intersection count, so the asymmetry costs one explode,
-    * not a second join. Returns (id_sub, id_sup, containment) where
-    * id_sub's shingle set is ≥ `threshold`-contained in id_sup's. */
+    * capped in-plan at [[postingCapExprSql]] of the corpus size,
+    * co-occurrence counted on the exploded relation, never array
+    * intersections); each undirected candidate pair then emits up to two
+    * DIRECTED rows (sub → super per side) from the single intersection
+    * count, so the asymmetry costs one explode, not a second join.
+    * Returns (id_sub, id_sup, containment) where id_sub's shingle set is
+    * ≥ `threshold`-contained in id_sup's.
+    *
+    * Precondition: `idCol` is unique per row, as for
+    * [[ngramJaccardDups]]: the cap's corpus count is `count(1)` over
+    * `df`. */
   def containmentDups(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.9, shingleSize: Int = 3,
-      maxPosting: Int = 32): DataFrame =
-    containment(df, idCol, textCol, threshold, shingleSize,
-      LiteralCap(maxPosting))
-
-  /** [[containmentDups]] with the posting cap derived from the corpus
-    * size in-plan ([[postingCapExprSql]]) — the scale-correct default. */
-  def containmentDupsFrac(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.9, shingleSize: Int = 3): DataFrame =
-    containment(df, idCol, textCol, threshold, shingleSize, RelativeCap)
-
-  private def containment(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, shingleSize: Int, cap: Cap): DataFrame = {
+      threshold: Double = 0.9, shingleSize: Int = 3): DataFrame = {
     val exploded = explodedShingles(df, idCol, textCol, shingleSize,
       withHashes = false)
     val sizes = exploded.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val useful = usefulPostings(exploded, cap, df)
+    val useful = usefulPostings(exploded, df)
     val inter = useful.withColumnsRenamed(Map("id" -> "id_a"))
       .join(useful.withColumnsRenamed(Map("id" -> "id_b")), Seq("shingle"))
       .filter(col("id_a") < col("id_b"))

@@ -50,53 +50,29 @@ object Itemsets {
       denom: Long = DefaultBasketDenom, floor: Long = 2L): String =
     s"GREATEST($floor, ($countExpr + ${denom - 1}) // $denom)"
 
-  /** Frequent triples with ABSOLUTE support >= minSupport.
-    * Returns (p1, p2, p3, support), p1 < p2 < p3, support-ranked.
-    *
-    * SCALE NOTE: an absolute threshold degenerates under "more baskets
-    * over a fixed catalog" — every support inflates with the basket
-    * count, so a fixed cutoff eventually stops pruning (measured exp
-    * ~1.3 at k=11 replication with minSupport=2, vs 0.40 for the
-    * relative form). Production callers should use
-    * [[frequentTriplesFrac]], which derives the threshold from the
-    * basket count in-plan; this form is kept for fixed-corpus analyses. */
-  def frequentTriples(baskets: DataFrame, basketCol: String, itemCol: String,
-      minSupport: Long): DataFrame = {
-    require(minSupport >= 1, s"minSupport: $minSupport")
-    // a literal 1-row relation, NOT an aggregate over the baskets: the
-    // absolute form's threshold needs no basket scan, and a literal can
-    // never be NULL on empty input
-    mine(baskets, basketCol, itemCol, _ =>
-      baskets.sparkSession.range(1).select(lit(minSupport).as("__thr")))
-  }
-
   /** Frequent triples with RELATIVE minimum support — the A-priori norm:
     * threshold = greatest(floorSupport, ceil(n_baskets / basketDenom)),
     * computed IN-PLAN from the basket relation (a 1-row broadcast, never
     * a driver round-trip) so the cutoff scales with the corpus. The
     * integer form `(n + d - 1) div d` is exact on every engine, which
-    * lets a SQL oracle recompute the identical threshold. */
-  def frequentTriplesFrac(baskets: DataFrame, basketCol: String,
+    * lets a SQL oracle recompute the identical threshold. A fixed
+    * absolute support `m` is `floorSupport = m` over fewer than
+    * `basketDenom` baskets. Returns (p1, p2, p3, support), p1 < p2 < p3,
+    * support-ranked.
+    *
+    * Shared lattice: the threshold relation is staged and broadcast as
+    * one row into every prune site, so item, pair, and triple pruning
+    * all apply the same cutoff — A-priori monotonicity then guarantees
+    * the final triples match a single end filter. */
+  def frequentTriples(baskets: DataFrame, basketCol: String,
       itemCol: String, basketDenom: Long = DefaultBasketDenom,
       floorSupport: Long = 2L): DataFrame = {
     require(basketDenom >= 1, s"basketDenom: $basketDenom")
     require(floorSupport >= 1, s"floorSupport: $floorSupport")
-    mine(baskets, basketCol, itemCol, b =>
-      b.agg(expr(thresholdExprSql("count(DISTINCT bk)", basketDenom,
-        floorSupport)).as("__thr")).staged)
-  }
-
-  /** Shared lattice: `mkThr` builds the 1-row threshold relation from the
-    * distinct (bk, it) relation (a literal for the absolute form, a
-    * staged basket-count aggregate for the relative form). Broadcast as
-    * one row into every prune site, so item, pair, and triple pruning
-    * all apply the same cutoff — A-priori monotonicity then guarantees
-    * the final triples match a single end filter. */
-  private def mine(baskets: DataFrame, basketCol: String, itemCol: String,
-      mkThr: DataFrame => DataFrame): DataFrame = {
     val b = baskets.select(col(basketCol).as("bk"), col(itemCol).as("it"))
       .distinct().staged
-    val thr = mkThr(b)
+    val thr = b.agg(expr(thresholdExprSql("count(DISTINCT bk)", basketDenom,
+      floorSupport)).as("__thr")).staged
     val freqItems = b.groupBy("it").agg(count(lit(1)).as("__n"))
       .crossJoin(broadcast(thr))
       .filter(col("__n") >= col("__thr")).select("it")

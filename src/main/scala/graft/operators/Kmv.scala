@@ -145,24 +145,10 @@ object Kmv {
         col("__nb").as("sampled_keys"))
   }
 
-  /** A sketch relation paired with the k it was built at. Prefer this over
-    * passing (DataFrame, k) separately: [[estimate]] with a LARGER k than
-    * the build's sees __n < k and silently reports the sketch size as an
-    * "exact" distinct count; the typed pair makes that unrepresentable. */
-  final case class Sketch(rel: DataFrame, k: Int)
-
-  /** [[sketch]] + its k, as a typed [[Sketch]]. */
-  def sketchK(df: DataFrame, grpCol: String, keyCol: String, k: Int): Sketch =
-    Sketch(sketch(df, grpCol, keyCol, k), k)
-
-  /** k-safe [[estimate]]: always estimates at the build's k. */
-  def estimate(sk: Sketch, grpCol: String): DataFrame =
-    estimate(sk.rel, grpCol, sk.k)
-
   /** (grpCol, est_distinct): exact when the group holds fewer than k
     * distinct keys, else (k−1)·2^56/h_k. `k` MUST be the k the sketch was
     * built with — a larger k makes every group read as "exact" at its
-    * sketch size; use the [[Sketch]] overload to pin the coupling. */
+    * sketch size. */
   def estimate(sk: DataFrame, grpCol: String, k: Int): DataFrame =
     sk.groupBy(grpCol)
       .agg(count(lit(1)).as("__n"), max(col("h")).as("__hk"))

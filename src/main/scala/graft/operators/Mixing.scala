@@ -9,7 +9,7 @@ import graft.engine.Stage.syntax._
   * temperature-scaled sampling weights a multi-source training run uses —
   * raw share^alpha renormalized (alpha = 1/T; alpha < 1 upweights
   * low-resource sources, alpha = 1 is proportional sampling). The output
-  * feeds [[Sampling.sampleByStratum]]: mix_weight / share is each source's
+  * feeds [[Sampling.sampleByRates]]: mix_weight / share is each source's
   * relative keep-rate.
   *
   * One groupBy(source) aggregate + a broadcast of the 1-row global total —

@@ -76,33 +76,18 @@ object Sampling {
       .foldLeft(lit(0))(_ + _)
   }
 
-  /** Per-stratum fractions (the reference for df.stat.sampleBy, made
-    * deterministic): `fractions` maps stratum value → keep fraction;
-    * strata not listed are dropped. */
-  def sampleByStratum(df: DataFrame, strataCol: String, keyCol: String,
-      fractions: Map[String, Double], salt: Int = 0): DataFrame = {
-    // per-stratum thresholds resolved with the same rounding as sample():
-    // a raw double product (0.1*10000 = 1000.0000000000001) would admit one
-    // extra bucket and disagree with sample() for the same fraction
-    val frac = fractions.foldLeft(lit(Long.MinValue)) { case (acc, (k, f)) =>
-      when(col(strataCol) === k, lit((f * Buckets).round)).otherwise(acc)
-    }
-    df.filter(bucket(col(keyCol), salt) < frac)
-  }
-
-  /** [[sampleByStratum]] with the fractions as a RELATION instead of a
-    * driver-side map — the shape that composes with plan-side rate
-    * derivation ([[Mixing.temperatureWeights]] → keep-rates) without a
-    * collect, and scales to unbounded strata. `rates` is
-    * (strataCol, rate ∈ [0,1]), dimension-sized, broadcast; strata absent
-    * from it are dropped (inner join — same contract as the map variant).
-    * Thresholds round exactly like sample()/sampleByStratum, so for equal
-    * fractions all three select IDENTICAL rows (SamplingSpec proves the
-    * map ≡ relation equivalence). */
+  /** Per-stratum sampling (the reference for df.stat.sampleBy, made
+    * deterministic), with the fractions as a RELATION — the shape that
+    * composes with plan-side rate derivation
+    * ([[Mixing.temperatureWeights]] → keep-rates) without a collect, and
+    * scales to unbounded strata. `rates` is (strataCol, rate ∈ [0,1]),
+    * dimension-sized, broadcast; strata absent from it are dropped (inner
+    * join). Thresholds round exactly like [[sample]], so for equal
+    * fractions both select IDENTICAL rows (SamplingSpec proves it). */
   def sampleByRates(df: DataFrame, strataCol: String, keyCol: String,
       rates: DataFrame, salt: Int = 0): DataFrame = {
     // floor(x + 0.5), not round(): identical to Scala's Double.round used
-    // by the map variants, and exactly mirrorable in oracle SQL (Spark's
+    // by sample(), and exactly mirrorable in oracle SQL (Spark's
     // round() routes through BigDecimal shortest-repr HALF_UP, which other
     // engines don't reproduce)
     val threshold = floor(col("rate") * Buckets + 0.5).cast("long")

@@ -41,6 +41,12 @@ object Similarity {
     val d = norm(a) * norm(b)
     when(d > 0, dot(a, b) / d).otherwise(0.0)
   }
+  /** DuckDB-dialect mirror of [[cosine]] over two DOUBLE[] list
+    * expressions, zero-guarded the same way. */
+  def cosineOracleSql(a: String, b: String): String =
+    s"CASE WHEN sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)) > 0" +
+      s" THEN list_dot_product($a,$b) / (sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)))" +
+      s" ELSE 0.0 END"
 
   /** Exact top-k by cosine against one query vector (given as a 1-row
     * DataFrame with float-array column `q_emb`, broadcast). The per-row

@@ -22,10 +22,7 @@ object AlignmentOps {
   private val roundN = Det.roundNSql _
   private def r12s(e: String) = Det.roundNSql(e, 12)
 
-  private def cosSql(a: String, b: String) =
-    s"CASE WHEN sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)) > 0" +
-      s" THEN list_dot_product($a,$b) / (sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)))" +
-      s" ELSE 0.0 END"
+  private val cosSql = Similarity.cosineOracleSql _
 
   /** The qualityFeatures additive score as DuckDB CTEs (f → g → q), with
     * source/lang carried through — shared by the preference-pair and

@@ -17,10 +17,7 @@ object AnalysisOps {
   private val roundN = Det.roundNSql _
   private def r12s(e: String) = Det.roundNSql(e, 12)
 
-  private def cosSql(a: String, b: String) =
-    s"CASE WHEN sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)) > 0" +
-      s" THEN list_dot_product($a,$b) / (sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)))" +
-      s" ELSE 0.0 END"
+  private val cosSql = Similarity.cosineOracleSql _
 
   /** 4 unrolled value-iteration steps for purchase absorption, each a
     * join of the 5x5 transition relation with the previous vector —

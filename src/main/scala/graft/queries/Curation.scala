@@ -282,7 +282,7 @@ object Curation {
          |d AS (SELECT term, COUNT(*) AS df FROM t GROUP BY term)
          |SELECT term, df FROM d, md WHERE df BETWEEN 3 AND md.maxdf
          |ORDER BY df DESC, term LIMIT 100""".stripMargin) { (s, d) =>
-      TextFunctions.vocabularyFrac(Tables.documents(s, d), "doc_id", "text",
+      TextFunctions.vocabulary(Tables.documents(s, d), "doc_id", "text",
         minDf = 3, maxTerms = 100)
     },
 

@@ -433,7 +433,7 @@ object EvalOps {
         Tables.documents(s, d).select("doc_id", "text"), "doc_id", "text")
       // staged: consumed by tot + three split aggregates — unstaged,
       // each consumer re-ran the documents⋈tokenFeatures subtree (10
-      // documents scans in the plan; PlanAudit's rescan rule)
+      // documents scans in the plan; the plan rescan check)
       val f = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .join(feats.select(col("doc_id"), col("hits_en").as("sh")),
@@ -552,10 +552,6 @@ object EvalOps {
     // batch (the exact baseline), windows partitioned per query.
     QueryDef.sql(
       "sim_dim_truncation_recall", {
-        def cos(a: String, b: String) =
-          s"CASE WHEN sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)) > 0" +
-            s" THEN list_dot_product($a,$b) / (sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)))" +
-            s" ELSE 0.0 END"
         s"""WITH e AS (
            |  SELECT vec_id, embedding::DOUBLE[] AS emb,
            |    (embedding::DOUBLE[])[1:16] AS emb16
@@ -566,14 +562,14 @@ object EvalOps {
            |  SELECT query_id, vec_id FROM (
            |    SELECT q.query_id, e.vec_id,
            |      row_number() OVER (PARTITION BY q.query_id
-           |        ORDER BY ${roundN(cos("e.emb", "q.qe"), 6)} DESC, e.vec_id) AS rk
+           |        ORDER BY ${roundN(graft.operators.Similarity.cosineOracleSql("e.emb", "q.qe"), 6)} DESC, e.vec_id) AS rk
            |    FROM e CROSS JOIN qs q WHERE e.vec_id <> q.query_id)
            |  WHERE rk <= 10),
            |trunc_rank AS (
            |  SELECT query_id, vec_id FROM (
            |    SELECT q.query_id, e.vec_id,
            |      row_number() OVER (PARTITION BY q.query_id
-           |        ORDER BY ${roundN(cos("e.emb16", "q.qe16"), 6)} DESC, e.vec_id) AS rk
+           |        ORDER BY ${roundN(graft.operators.Similarity.cosineOracleSql("e.emb16", "q.qe16"), 6)} DESC, e.vec_id) AS rk
            |    FROM e CROSS JOIN qs q WHERE e.vec_id <> q.query_id)
            |  WHERE rk <= 10)
            |SELECT f.query_id,

@@ -16,12 +16,7 @@ object Extensions {
 
   private val roundN = Det.roundNSql _
 
-  /** DuckDB cosine over DOUBLE[] lists — zero-guarded like the Spark
-    * CosineSim expression. */
-  private def cosSql(a: String, b: String) =
-    s"CASE WHEN sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)) > 0" +
-      s" THEN list_dot_product($a,$b) / (sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)))" +
-      s" ELSE 0.0 END"
+  private val cosSql = Similarity.cosineOracleSql _
 
   /** Squared L2 between two DOUBLE[] lists, in the exact expression order
     * the Spark PQ encoder computes it. */
@@ -92,7 +87,7 @@ object Extensions {
     * `clusters(id, cluster_id)`. Three queries build on this chain
     * (closure itself, canonical-source selection, soft weights), so the
     * CTE is defined once — the SQL stays in lockstep with
-    * [[graft.operators.Dedup.ngramJaccardDupsFrac]] +
+    * [[graft.operators.Dedup.ngramJaccardDups]] +
     * [[graft.operators.Dedup.connectedComponents]]. `pairs` is
     * AS MATERIALIZED: inlined into the recursive walk, DuckDB re-ran the
     * whole shingle→postings→pair pipeline on every closure iteration
@@ -507,17 +502,15 @@ object Extensions {
     },
 
     // Real merge-table BPE (not the regex proxy in t_token_count),
-    // oracle-hash-checked: the codebook is pinned to a frozen corpus
-    // word-frequency snapshot and LEARNED CLUSTER-SIDE at query time
-    // (Bpe.pinnedMergesDistributed — the fully-distributed learn over
-    // the reconstructed seed corpus, memoized per session; the driver
-    // loop is the runtime equivalence CONTROL, so the statically
-    // interpolated oracle codebook is identical by construction). The
+    // oracle-hash-checked: the codebook is Bpe.pinnedMerges, learned
+    // once per JVM from a frozen corpus word-frequency snapshot — the
+    // same table the oracle interpolates. Cluster-side learning is
+    // t_bpe_learn_distributed's subject, not this query's. The
     // oracle replays merge application in DuckDB via Bpe.encodeSqlDuck
     // (rank-ordered single-pass replaces over separator-wrapped symbols
     // ≡ the greedy lowest-rank-first encode loop — see the scaladoc
-    // proof). Encoding streams through the mapPartitions seam, so the
-    // shipped tokenizer chain is distributed end-to-end.
+    // proof). Encoding streams through the mapPartitions seam, so no
+    // corpus row reaches the driver.
     QueryDef.sql(
       "t_bpe_tokenize",
       s"""WITH w AS (
@@ -536,7 +529,7 @@ object Extensions {
          |FROM t ORDER BY doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       graft.functions.Bpe.tokenize(s, docs, "doc_id", "text",
-          graft.functions.Bpe.pinnedMergesDistributed(s)).toDF()
+          graft.functions.Bpe.pinnedMerges).toDF()
         .select(col("id").as("doc_id"), col("n_words").cast("long"),
           col("n_bpe_tokens").cast("long"),
           concat_ws(" ", slice(col("tokens"), 1, 8)).as("first_tokens"))
@@ -571,7 +564,7 @@ object Extensions {
          |FROM c GROUP BY 1 ORDER BY doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       val toks = graft.functions.Bpe.tokenize(s, docs, "doc_id", "text",
-        graft.functions.Bpe.pinnedMergesDistributed(s)).toDF().select(col("id"), col("tokens"))
+        graft.functions.Bpe.pinnedMerges).toDF().select(col("id"), col("tokens"))
       graft.operators.Chunking.byArray(toks, "id", "tokens",
           chunk = 32, overlap = 8)
         .groupBy(col("id").as("doc_id"))
@@ -612,7 +605,7 @@ object Extensions {
          |FROM pd GROUP BY 1 ORDER BY lang""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       val toks = graft.functions.Bpe.tokenize(s, docs, "doc_id", "text",
-          graft.functions.Bpe.pinnedMergesDistributed(s)).toDF()
+          graft.functions.Bpe.pinnedMerges).toDF()
         .select(col("id").as("doc_id"), col("n_words"),
           col("n_bpe_tokens").as("n_toks"),
           aggregate(col("tokens"), lit(0L),
@@ -1186,7 +1179,7 @@ object Extensions {
          |  FROM inter JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b)
          |SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.8
          |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
-      Dedup.ngramJaccardDupsFrac(Tables.documents(s, d), "doc_id", "text",
+      Dedup.ngramJaccardDups(Tables.documents(s, d), "doc_id", "text",
           threshold = 0.8)
         .orderBy("id_a", "id_b")
     },
@@ -1226,7 +1219,7 @@ object Extensions {
          |SELECT id_sub, id_sup, containment FROM dirs
          |WHERE containment >= 0.9
          |ORDER BY id_sub, id_sup""".stripMargin) { (s, d) =>
-      Dedup.containmentDupsFrac(Tables.documents(s, d), "doc_id", "text",
+      Dedup.containmentDups(Tables.documents(s, d), "doc_id", "text",
           threshold = 0.9)
         .orderBy("id_sub", "id_sup")
     },
@@ -1358,7 +1351,7 @@ object Extensions {
       s"""$ngramClusterCte
          |SELECT id, cluster_id, id = cluster_id AS is_canonical
          |FROM clusters ORDER BY cluster_id, id""".stripMargin) { (s, d) =>
-      val pairs = Dedup.ngramJaccardDupsFrac(Tables.documents(s, d),
+      val pairs = Dedup.ngramJaccardDups(Tables.documents(s, d),
         "doc_id", "text", threshold = 0.8)
       Dedup.connectedComponents(pairs)
         .withColumn("is_canonical", col("id") === col("cluster_id"))
@@ -1384,7 +1377,7 @@ object Extensions {
          |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       val clusters = Dedup.connectedComponents(
-        Dedup.ngramJaccardDupsFrac(docs, "doc_id", "text", threshold = 0.8))
+        Dedup.ngramJaccardDups(docs, "doc_id", "text", threshold = 0.8))
       Dedup.duplicationWeights(clusters, docs, idCol = "doc_id")
         .orderBy("doc_id")
     },
@@ -1412,7 +1405,7 @@ object Extensions {
          |ORDER BY cluster_id, id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       val clusters = Dedup.connectedComponents(
-        Dedup.ngramJaccardDupsFrac(docs, "doc_id", "text", threshold = 0.8))
+        Dedup.ngramJaccardDups(docs, "doc_id", "text", threshold = 0.8))
       val priorities = docs.select(col("source")).distinct()
         .withColumn("priority",
           regexp_extract(col("source"), "src(\\d+)", 1).cast("long"))
@@ -1444,7 +1437,7 @@ object Extensions {
          |GROUP BY 1 ORDER BY split_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       val clusters = Dedup.connectedComponents(
-          Dedup.ngramJaccardDupsFrac(docs, "doc_id", "text", threshold = 0.8))
+          Dedup.ngramJaccardDups(docs, "doc_id", "text", threshold = 0.8))
         .staged
       Dedup.leakageSafeSplit(clusters, docs, "doc_id", Seq(0.8, 0.2))
         .zipWithIndex.map { case (df, i) =>
@@ -2265,8 +2258,8 @@ object Extensions {
     // 80/10/10 train/val/test split summary: disjoint contiguous bucket
     // ranges over the key hash, oracle-recomputed per doc. Single-scan
     // form (Sampling.partIndex), not one filtered scan per part — the
-    // k-scans shape PlanAudit flagged; split() itself remains the right
-    // API when each part is materialized separately.
+    // k-scans shape the plan rescan check flagged; split() itself
+    // remains the right API when each part is materialized separately.
     QueryDef.sql(
       "t_train_test_split",
       s"""WITH b AS (SELECT ${Sampling.bucketSql("doc_id")} AS bk FROM documents)

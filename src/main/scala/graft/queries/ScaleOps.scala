@@ -1820,10 +1820,10 @@ object ScaleOps {
     // cubic 3-way basket self-join the operator exists to avoid — the
     // hash match proves the pruning lattice loses nothing.
     //
-    // SCALE NOTE (round-8/9 probes): minSupport is RELATIVE (a basket
+    // SCALE NOTE (round-8/9 probes): support is RELATIVE (a basket
     // fraction — the A-priori norm): the shipped threshold is
     // greatest(2, ceil(n_baskets / 75000)), computed in-plan by
-    // [[Itemsets.frequentTriplesFrac]] and mirrored in the oracle's nb
+    // [[Itemsets.frequentTriples]] and mirrored in the oracle's nb
     // CTE. At the fixture SFs (≤150k baskets) it evaluates to 2, so the
     // pinned output is unchanged at sf0.001/0.01/0.1; under a k=11
     // catalog-fixed replication it rises to 22 = 2k, and the lattice was
@@ -1857,7 +1857,7 @@ object ScaleOps {
          |  GROUP BY 1, 2, 3)
          |SELECT p1, p2, p3, support FROM t, nb WHERE support >= thr
          |ORDER BY support DESC, p1, p2, p3""".stripMargin) { (s, d) =>
-      graft.operators.Itemsets.frequentTriplesFrac(
+      graft.operators.Itemsets.frequentTriples(
         Tables.lineitem(s, d), "l_orderkey", "l_partkey")
     },
 

@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.SparkEntry
-import graft.engine.{Session, Stage}
+import graft.Verify.jsonStr
+import graft.engine.{Session, Stage, Tables}
 
 /** Dev profiler: runs queries `reps` times each in one warm session and
   * breaks each down by layer. Per rep it prints the wall and the row
@@ -20,7 +21,11 @@ import graft.engine.{Session, Stage}
   *     action's `QueryExecution.tracker` phases;
   *   - `jobs`, `stages`, `tasks`, `executor_run_ms`, shuffle read/write,
   *     memory/disk spill and peak execution memory: task metrics of the
-  *     jobs the rep ran, from one `SparkListener`.
+  *     jobs the rep ran, from one `SparkListener`;
+  *   - `rescans`: each base table the counting action's physical plan
+  *     reads three times or more, with its scan count. Self-joins read a
+  *     table twice; three or more reads usually mean a shared subtree
+  *     that should be staged (`graft.engine.Stage`).
   *
   * A final `total` line carries the heap and the summed spill, so a run
   * under `SPARK_DRIVER_MEM=2g` is the constrained-memory spill table.
@@ -90,6 +95,12 @@ object Profile {
     }
   }
 
+  /** `{table:n}` for every base table `plan` scans at least 3 times. */
+  private def rescans(plan: String): String =
+    Tables.names.map(t => t -> s"$t.parquet".r.findAllIn(plan).length)
+      .filter(_._2 >= 3)
+      .map { case (t, n) => s"${jsonStr(t)}:$n" }.mkString("{", ",", "}")
+
   private val Fields = Seq("jobs", "stages", "tasks", "executor_run_ms",
     "shuffle_read_bytes", "shuffle_write_bytes", "memory_spilled_bytes",
     "disk_spilled_bytes", "peak_exec_bytes")
@@ -133,14 +144,16 @@ object Profile {
               s""""build_ms":${(t1 - t0) / 1000000}""") ++
             Seq("analysis", "optimization", "planning").map(p =>
               s""""${p}_ms":${phases.get(p).map(_.durationMs).getOrElse(0L)}""") ++
-            Fields.map(k => s""""$k":${m(k)}""")).mkString(",")
+            Fields.map(k => s""""$k":${m(k)}""") :+
+            s""""rescans":${rescans(counted.queryExecution.sparkPlan.toString)}""")
+            .mkString(",")
         } catch { case e: Throwable =>
           sc.setLocalProperty(TagKey, null)
           failed += name
           val msg = Option(e.getMessage).getOrElse("").take(200)
-            .map(c => if (c == '"' || c == '\\' || c < ' ') ' ' else c)
           println(s"[profile] $name rep $rep FAILED: $msg")
-          s""""query":"$name","rep":$rep,"error":"${e.getClass.getSimpleName}: $msg""""
+          s""""query":"$name","rep":$rep,"error":""" +
+            jsonStr(s"${e.getClass.getSimpleName}: $msg")
         }
         spark.catalog.clearCache()
         Stage.releaseStaged(spark)

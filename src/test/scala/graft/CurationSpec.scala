@@ -104,13 +104,14 @@ class CurationSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
     assert(top(1L) === "zebra")
     assert(top(2L) === "quasar")
+    // 3 docs: max_df = ceil(0.75·3) = 3
     val vocab = TextFunctions.vocabulary(docs, "doc_id", "text",
-      minDf = 2, maxDf = 3, maxTerms = 10)
+      minDf = 2, maxTerms = 10)
       .collect().map(_.getString(0)).toSet
     assert(vocab === Set("common", "words", "plus"), s"got $vocab")
   }
 
-  test("vocabularyFrac: max_df = ceil(0.75·n_docs), in-plan") {
+  test("vocabulary: max_df = ceil(0.75·n_docs), in-plan") {
     // 4 docs → max_df = 3: 'everywhere' (df 4) is boilerplate, banded
     // terms with df in [2, 3] survive, hapaxes fail min_df
     val docs = Seq(
@@ -119,7 +120,7 @@ class CurationSpec extends AnyFunSuite {
       (3L, "everywhere shared other"),
       (4L, "everywhere solo"))
       .toDF("doc_id", "text")
-    val got = TextFunctions.vocabularyFrac(docs, "doc_id", "text",
+    val got = TextFunctions.vocabulary(docs, "doc_id", "text",
         minDf = 2, maxTerms = 10)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got === Map("shared" -> 3L, "other" -> 2L), s"got $got")

@@ -68,23 +68,8 @@ class DedupSpec extends AnyFunSuite {
     assert(!got.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
-  test("relative posting cap: identical to the absolute form below the " +
-      "anchor; formula grows ceil-linearly above it") {
-    // below the 5,000-doc anchor the cap floors at 32 — Frac ≡ absolute
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("id_a", "id_b", "jaccard")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    assert(
-      rows(Dedup.ngramJaccardDupsFrac(docs, "doc_id", "text", 0.5)) ===
-      rows(Dedup.ngramJaccardDups(docs, "doc_id", "text", 0.5)))
-    assert(
-      rows(Dedup.containmentDupsFrac(docs, "doc_id", "text", 0.5)
-        .withColumnsRenamed(Map("id_sub" -> "id_a", "id_sup" -> "id_b",
-          "containment" -> "jaccard"))) ===
-      rows(Dedup.containmentDups(docs, "doc_id", "text", 0.5)
-        .withColumnsRenamed(Map("id_sub" -> "id_a", "id_sup" -> "id_b",
-          "containment" -> "jaccard"))))
+  test("relative posting cap: floors at 32 below the anchor, grows " +
+      "ceil-linearly above") {
     // the in-plan expression at the anchor points (engine dialect)
     val cap = (n: Long) => spark.sql(
       s"SELECT ${Dedup.postingCapExprSql(n.toString)} AS c")
@@ -97,11 +82,11 @@ class DedupSpec extends AnyFunSuite {
 
   test("relative posting cap admits corpus-frequency-scaled postings " +
       "that the absolute cap rejects") {
-    // 40 shared-shingle docs: posting length 40 > 32 — the absolute cap
-    // drops the shingles entirely (zero pairs); the relative cap at a
-    // simulated larger corpus still can't (floor 32 at 40 docs), so
-    // check the expression directly instead of building a 5k-doc corpus:
-    // the admitting cap for a 40-long posting needs n_docs ≥ 6,250.
+    // 40 shared-shingle docs: posting length 40 > 32 — at 40 docs the
+    // cap floors at 32 and drops the shingles entirely (zero pairs); a
+    // larger corpus admits them, so check the expression directly
+    // instead of building a 5k-doc corpus: the admitting cap for a
+    // 40-long posting needs n_docs ≥ 6,250.
     val many = (0 until 40)
       .map(i => (i.toLong, (0 until 60).map(j => s"c$j").mkString(" ")))
       .toDF("doc_id", "text")
@@ -291,13 +276,14 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("bucket cap drops a pathological bucket instead of exploding") {
-    // 50 docs sharing one boilerplate shingle; cap of 8 must keep pair
-    // count far below C(50,2)
+    // 50 docs sharing the boilerplate shingles: their 50-long postings
+    // exceed the cap (32 at 50 docs), which must keep the pair count far
+    // below C(50,2)
     val many = (1L to 50L).map(i =>
       (i, s"shared boiler plate prefix unique$i tail$i word$i"))
       .toDF("doc_id", "text")
     val n = Dedup.ngramJaccardDups(many, "doc_id", "text",
-      threshold = 0.0, maxPosting = 8).count()
+      threshold = 0.0).count()
     assert(n < 100, s"cap failed: $n pairs")
   }
 

@@ -70,7 +70,7 @@ class EmptyInputSpec extends AnyFunSuite {
       Seq.empty[(Long, Long)].toDF("doc_id", "n"), "doc_id", "n", 4)
       .count() === 0)
     assert(graft.functions.TextFunctions.vocabulary(
-      noDocs, "doc_id", "text", 1, 100, 10).count() === 0)
+      noDocs, "doc_id", "text", 1, 10).count() === 0)
     assert(graft.functions.TextFunctions.tfidfKeywords(
       noDocs, "doc_id", "text", 3).count() === 0)
     assert(Dedup.incrementalExact(noDocs,
@@ -98,7 +98,7 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(Dedup.minhashProbe(corpus, emptyIndex, "doc_id", "text").count() === 0)
     // BPE: learning from nothing yields no merges; tokenizing nothing
     // yields no rows; encoding with an empty table falls back to chars
-    assert(graft.functions.Bpe.learnFromCorpus(noDocs, "text", 10, 100) === Seq.empty)
+    assert(graft.functions.Bpe.learnDistributed(noDocs, "text", 10) === Seq.empty)
     assert(graft.functions.Bpe.tokenize(spark, noDocs, "doc_id", "text",
       Seq.empty).count() === 0)
     assert(graft.functions.Bpe.encodeWord("ab", Map.empty) === Vector("a", "b"))
@@ -180,12 +180,10 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(Quantize.hammingTopK(noVecs, q, k = 5, pool = 10).count() === 0)
     val cents = Seq((0L, Array.fill(64)(1.0f))).toDF("cell", "c_emb")
     assert(Similarity.silhouetteByCell(noVecs, cents).count() === 0)
+    // the in-plan threshold aggregate over ZERO baskets must still
+    // produce a (greatest-floored) scalar, not a null that silently
+    // drops everything downstream
     assert(Itemsets.frequentTriples(
-      Seq.empty[(Long, Long)].toDF("bk", "it"), "bk", "it", 2).count() === 0)
-    // fractional form: the in-plan threshold aggregate over ZERO baskets
-    // must still produce a (greatest-floored) scalar, not a null that
-    // silently drops everything downstream
-    assert(Itemsets.frequentTriplesFrac(
       Seq.empty[(Long, Long)].toDF("bk", "it"), "bk", "it",
       basketDenom = 75000L).count() === 0)
     val noNodes = Seq.empty[Tuple1[Long]].toDF("id")

@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.Tables
+import graft.engine.{Scratch, Tables}
 
 /** Contracts of the scale-factor generator (`GenSf`) — the tool every
   * sf≥1 scale claim rests on. Generates k=3 flat and skewed lakes from
@@ -20,12 +19,12 @@ class GenSfSpec extends AnyFunSuite {
   private val k = 3
 
   private lazy val flatDir = {
-    val d = Files.createTempDirectory("gensf-flat").toString
+    val d = Scratch.dir("gensf-flat")
     GenSf.generate(spark, src, d, k)
     d
   }
   private lazy val skewDir = {
-    val d = Files.createTempDirectory("gensf-skew").toString
+    val d = Scratch.dir("gensf-skew")
     GenSf.generate(spark, src, d, k, skew = true)
     d
   }

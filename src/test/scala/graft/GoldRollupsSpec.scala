@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.GoldRollups
+import graft.engine.Scratch
 
 class GoldRollupsSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
@@ -130,7 +131,7 @@ class GoldRollupsSpec extends AnyFunSuite {
       .toDF("event_id", "ts", "user_id", "event_type", "value")
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value").cast("double").as("value"))
-    val dir = java.nio.file.Files.createTempDirectory("attr-fixture")
+    val dir = java.nio.file.Paths.get(Scratch.dir("attr-fixture"))
     events.coalesce(1).write.mode("overwrite")
       .parquet(dir.resolve("events.parquet").toString)
     val out = GoldRollups.defs.find(_.name == "q_attribution_linear").get

@@ -60,8 +60,10 @@ class ItemsetsPropertySpec extends AnyFunSuite {
       val df = rows.toDF("bk", "it")
       val nBaskets = rows.map(_._1).distinct.size
 
+      // floor form: under the default basketDenom (75,000) 40 baskets
+      // derive ceil(40/75000) = 1, so the threshold is the floor itself
       for (thr <- Seq(2L, 3L)) {
-        val got = Itemsets.frequentTriples(df, "bk", "it", minSupport = thr)
+        val got = Itemsets.frequentTriples(df, "bk", "it", floorSupport = thr)
           .as[(String, String, String, Long)].collect().toSet
         assert(got == naiveTriples(rows, thr),
           s"seed=$seed thr=$thr: lattice != brute force")
@@ -70,7 +72,7 @@ class ItemsetsPropertySpec extends AnyFunSuite {
       // fractional form: denom chosen so thr = ceil(nBaskets/denom) > floor
       val denom = 10L
       val derivedThr = math.max(2L, (nBaskets + denom - 1) / denom)
-      val gotFrac = Itemsets.frequentTriplesFrac(df, "bk", "it",
+      val gotFrac = Itemsets.frequentTriples(df, "bk", "it",
           basketDenom = denom)
         .as[(String, String, String, Long)].collect().toSet
       assert(gotFrac == naiveTriples(rows, derivedThr),

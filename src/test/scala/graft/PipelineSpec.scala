@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.engine.{Bronze, Pipeline, SilverPosts, SilverUsers}
+import graft.engine.{Bronze, Pipeline, Scratch, SilverPosts, SilverUsers}
 import graft.sources.Sources
 import java.nio.file.Files
 
@@ -11,7 +11,7 @@ class PipelineSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("full medallion run produces all layers + metadata") {
-    val lake = Files.createTempDirectory("graft-lake").toString
+    val lake = Scratch.dir("graft-lake")
     val counts = new Pipeline(spark, lake).run("/root/testdata/sf0.001")
     assert(counts("bronze_events") === 1000)
     assert(counts("silver_covid") > 0)
@@ -41,7 +41,7 @@ class PipelineSpec extends AnyFunSuite {
     // OUTSIDE the batch keeps its files byte-for-byte (same names, same
     // bytes — dynamic partition overwrite never touched them), while the
     // batch's partitions are genuinely rewritten (fresh part files).
-    val lake = Files.createTempDirectory("graft-lake-incr").toString
+    val lake = Scratch.dir("graft-lake-incr")
     new Pipeline(spark, lake).run("/root/testdata/sf0.001")
     val goldDir = java.nio.file.Paths.get(s"$lake/gold/daily_global_summary")
     def partitionFiles(): Map[String, Map[String, Int]] = {
@@ -81,10 +81,10 @@ class PipelineSpec extends AnyFunSuite {
     // AWAITED the healthy branches first — the await-all-via-Try
     // contract, so no write is still in flight when run() throws and the
     // completed branches' lake tables are fully landed.
-    val src = Files.createTempDirectory("pipe-fail-src")
+    val src = java.nio.file.Paths.get(Scratch.dir("pipe-fail-src"))
     Files.createSymbolicLink(src.resolve("events.parquet"),
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"))
-    val lake = Files.createTempDirectory("pipe-fail-lake").toString
+    val lake = Scratch.dir("pipe-fail-lake")
     val e = intercept[Throwable] {
       new Pipeline(spark, lake).run(src.toString)
     }
@@ -96,7 +96,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("export refuses tables over the single-object row guard") {
-    val lake = Files.createTempDirectory("graft-export-guard").toString
+    val lake = Scratch.dir("graft-export-guard")
     val p = new Pipeline(spark, lake)
     val big = spark.range(100).toDF("id")
     val e = intercept[IllegalArgumentException] {
@@ -110,7 +110,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("sharded training export: one JSONL dir per shard, nothing lost") {
-    val lake = Files.createTempDirectory("graft-shard-export").toString
+    val lake = Scratch.dir("graft-shard-export")
     val p = new Pipeline(spark, lake)
     val docs = spark.range(500).select(col("id").as("doc_id"),
       (col("id") % 97 + 1).as("tokens"),
@@ -131,7 +131,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("compaction shrinks file count without changing rows") {
-    val lake = Files.createTempDirectory("graft-compact").toString
+    val lake = Scratch.dir("graft-compact")
     val p = new Pipeline(spark, lake)
     // 40 appends of tiny frames → 40+ small files
     (1 to 40).foreach { i =>
@@ -156,7 +156,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("deleteKeys rewrites only affected partitions, drops emptied ones") {
-    val lake = Files.createTempDirectory("graft-delete").toString
+    val lake = Scratch.dir("graft-delete")
     val p = new Pipeline(spark, lake)
     // p=1: survivors+deleted mixed; p=2: untouched; p=3: fully deleted
     val rows = Seq(
@@ -190,7 +190,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("applyCdc: deletes, in-place updates, partition-moving updates, inserts") {
-    val lake = Files.createTempDirectory("graft-cdc").toString
+    val lake = Scratch.dir("graft-cdc")
     val p = new Pipeline(spark, lake)
     val base = Seq(
       (1L, "v1", "p1"), (2L, "v2", "p1"), (3L, "v3", "p2"), (4L, "v4", "p2"))
@@ -216,7 +216,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("bucketed tables join with no exchange on either side") {
-    val lake = Files.createTempDirectory("graft-bucketed").toString
+    val lake = Scratch.dir("graft-bucketed")
     val p = new Pipeline(spark, lake)
     val sf = "/root/testdata/sf0.001"
     p.writeBucketed(graft.engine.Tables.orders(spark, sf),
@@ -241,8 +241,8 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("sources: land file:// url, route by filename, json/csv scans") {
-    val land = Files.createTempDirectory("graft-landing").toString
-    val src = Files.createTempDirectory("graft-src")
+    val land = Scratch.dir("graft-landing")
+    val src = java.nio.file.Paths.get(Scratch.dir("graft-src"))
     val usersJson =
       """[{"id": 1, "name": "A", "email": "a@b.co",
         |  "address": {"geo": {"lat": "1.5", "lng": "oops"}}},
@@ -298,7 +298,7 @@ class PipelineSpec extends AnyFunSuite {
         |  "address": {"street": "s", "suite": "1", "city": "c", "zipcode": "z",
         |              "geo": {"lat": "3.25", "lng": "4.5"}},
         |  "company": {"name": "Beta", "catchPhrase": "cp", "bs": "bs"}}]""".stripMargin
-    val tmp = Files.createTempDirectory("users")
+    val tmp = java.nio.file.Paths.get(Scratch.dir("users"))
     Files.writeString(tmp.resolve("users.json"), usersJson)
     val out = SilverUsers.transform(
       Sources.json(spark, tmp.resolve("users.json").toString))

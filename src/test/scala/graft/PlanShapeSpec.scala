@@ -197,14 +197,14 @@ class PlanShapeSpec extends AnyFunSuite {
   // construction of these queries DRIVES real jobs rather than returning
   // a lazy frame: the two pipeline queries execute a full medallion lake
   // run (covered by PipelineSpec; everything they join appears in other
-  // queries) and the six stream replays drive a real Structured
+  // queries) and the seven stream replays drive a real Structured
   // Streaming query whose returned frame is just the lake read-back —
   // their plan shapes live in StreamingSpec and the engine modules.
   private val skip = Set("q_pipeline_run", "q_pipeline_end_state",
     "q_pipeline_engagement_state",
     "q_stream_replay", "q_stream_neardup_replay", "q_stream_window_replay",
-    "q_stream_session_replay", "q_stream_enrich_replay",
-    "q_stream_join_replay")
+    "q_stream_restart_replay", "q_stream_session_replay",
+    "q_stream_enrich_replay", "q_stream_join_replay")
 
   /** One planning pass per query; both audits read these. */
   private lazy val plans: Seq[(String, SparkPlan)] = {

@@ -88,7 +88,8 @@ class Round7OpsSpec extends AnyFunSuite {
       (2, "a"), (2, "b"), (2, "c"),
       (3, "a"), (3, "b"), (3, "d"),
       (4, "x"), (4, "y"), (4, "z")).toDF("bk", "it")
-    val t = Itemsets.frequentTriples(baskets, "bk", "it", minSupport = 2)
+    // support 2: the floor, as 4 baskets derive ceil(4/75000) = 1
+    val t = Itemsets.frequentTriples(baskets, "bk", "it", floorSupport = 2)
       .as[(String, String, String, Long)].collect()
     // {a,b,c} in baskets 1,2; {a,b,d} in baskets 1,3; nothing else twice
     assert(t.toSet == Set(("a", "b", "c", 2L), ("a", "b", "d", 2L)))

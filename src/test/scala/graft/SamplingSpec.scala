@@ -52,8 +52,8 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("stratified sampling applies per-stratum fractions, drops unlisted strata") {
-    val out = Sampling.sampleByStratum(docs, "stratum", "doc_id",
-      Map("0" -> 0.5, "1" -> 0.1))
+    val rates = Seq("0" -> 0.5, "1" -> 0.1).toDF("stratum", "rate")
+    val out = Sampling.sampleByRates(docs, "stratum", "doc_id", rates)
     val byStratum = out.groupBy("stratum").count()
       .as[(String, Long)].collect().toMap
     assert(!byStratum.contains("2"))
@@ -68,20 +68,23 @@ class SamplingSpec extends AnyFunSuite {
     val uniform = Sampling.sample(docs, "doc_id", 0.1)
       .select("doc_id").as[Long].collect().toSet
     val all = docs.withColumn("stratum", lit("s"))
-    val strat = Sampling.sampleByStratum(all, "stratum", "doc_id",
-      Map("s" -> 0.1)).select("doc_id").as[Long].collect().toSet
+    val strat = Sampling.sampleByRates(all, "stratum", "doc_id",
+        Seq("s" -> 0.1).toDF("stratum", "rate"))
+      .select("doc_id").as[Long].collect().toSet
     assert(uniform == strat)
   }
 
-  test("relation-shaped rates select the same rows as the map variant") {
+  test("relation-shaped rates select per stratum exactly the rows sample() keeps") {
     val fractions = Map("0" -> 0.5, "1" -> 0.1, "2" -> 0.97)
-    val viaMap = Sampling.sampleByStratum(docs, "stratum", "doc_id", fractions)
-      .select("doc_id").as[Long].collect().toSet
+    val perStratum = fractions.toSeq.flatMap { case (k, f) =>
+      Sampling.sample(docs.filter($"stratum" === k), "doc_id", f)
+        .select("doc_id").as[Long].collect()
+    }.toSet
     val rates = fractions.toSeq.toDF("stratum", "rate")
     val viaRel = Sampling.sampleByRates(docs, "stratum", "doc_id", rates)
       .select("doc_id").as[Long].collect().toSet
-    assert(viaMap == viaRel, "map and relation variants must agree exactly")
-    // a stratum missing from the rates relation is dropped, like the map
+    assert(perStratum == viaRel, "per-stratum sample() and rates must agree exactly")
+    // a stratum missing from the rates relation is dropped
     val partial = Sampling.sampleByRates(docs, "stratum", "doc_id",
       rates.filter($"stratum" =!= "2"))
     assert(partial.filter($"stratum" === "2").count() === 0)

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.Pipeline
+import graft.engine.{Pipeline, Scratch}
 import graft.streaming.{BloomIngest, NearDupIngest}
 
 /** The engine's writes change nothing beyond what they write: no session
@@ -19,7 +19,7 @@ class SideEffectSpec extends AnyFunSuite {
     val s = SparkTestSession.spark.newSession()
     import s.implicits._
     val before = s.conf.get(modeKey)
-    val p = new Pipeline(s, Files.createTempDirectory("side-lake").toString)
+    val p = new Pipeline(s, Scratch.dir("side-lake"))
     assert(s.conf.get(modeKey) === before, "after new Pipeline")
     p.run(sf)
     assert(s.conf.get(modeKey) === before, "after Pipeline.run")
@@ -27,15 +27,15 @@ class SideEffectSpec extends AnyFunSuite {
     // two one-file batches, ingested twice against the same state: the
     // state keeps both batches exactly once although the session's mode
     // stays static, so the dynamic overwrite comes from the writer
-    val src = Files.createTempDirectory("side-src").toString
+    val src = Scratch.dir("side-src")
     Seq((1L, "alpha beta gamma delta"), (2L, "epsilon zeta eta theta"))
       .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(src)
     Seq((3L, "alpha beta gamma delta"), (4L, "iota kappa lambda mu"))
       .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(src)
     def stream = s.readStream.schema("doc_id BIGINT, text STRING")
       .option("maxFilesPerTrigger", 1).parquet(src)
-    val state = Files.createTempDirectory("side-state").toString + "/st"
-    val out = Files.createTempDirectory("side-out").toString + "/out"
+    val state = Scratch.dir("side-state") + "/st"
+    val out = Scratch.dir("side-out") + "/out"
     BloomIngest.start(stream, "doc_id", "text", state, out)
     BloomIngest.start(stream, "doc_id", "text", state, out)
     assert(s.conf.get(modeKey) === before, "after BloomIngest.start")
@@ -43,8 +43,8 @@ class SideEffectSpec extends AnyFunSuite {
       "each batch's state partition survives the other's overwrite")
     assert(s.read.parquet(out).count() === 4)
 
-    val idx = Files.createTempDirectory("side-idx").toString + "/idx"
-    val pairs = Files.createTempDirectory("side-pairs").toString + "/pairs"
+    val idx = Scratch.dir("side-idx") + "/idx"
+    val pairs = Scratch.dir("side-pairs") + "/pairs"
     NearDupIngest.start(stream, "doc_id", "text", idx, pairs)
     assert(s.conf.get(modeKey) === before, "after NearDupIngest.start")
     assert(s.read.parquet(s"$idx/sizes").count() === 4)

@@ -3,12 +3,13 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Sources
+import graft.engine.Scratch
 
 class SourcesSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
 
   private def write(name: String, body: String, charset: String): String = {
-    val dir = Files.createTempDirectory("graft_srcspec")
+    val dir = Paths.get(Scratch.dir("graft_srcspec"))
     val f = Paths.get(dir.toString, name)
     Files.write(f, body.getBytes(charset))
     f.toString
@@ -26,7 +27,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("schema evolution: mergeSchema reads old files with NULL for new columns") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_evolve").toString
+    val dir = Scratch.dir("graft_evolve")
     Seq((1L, "a")).toDF("id", "name")
       .write.mode("append").parquet(dir)
     Seq((2L, "b", 9.5)).toDF("id", "name", "score")
@@ -40,7 +41,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("ORC round-trips with predicate pushdown reaching the scan") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_orc").toString + "/t"
+    val dir = Scratch.dir("graft_orc") + "/t"
     val df = spark.range(1000).select(
       $"id", ($"id" % 7).as("grp"), ($"id" * 2.5).as("score"))
     df.write.orc(dir)
@@ -55,7 +56,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("ORC archive sink round-trips through the lake") {
-    val lake = Files.createTempDirectory("graft_lake").toString
+    val lake = Scratch.dir("graft_lake")
     val p = new graft.engine.Pipeline(spark, lake)
     p.archiveOrc(spark.range(100).toDF("id"), "ids")
     assert(Sources.orc(spark, s"$lake/archive/ids").count() === 100)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.Stage
+import graft.engine.{Scratch, Stage}
 import graft.operators.Dedup
 
 /** Staging is a cost choice, not a semantics one: the same pipeline must
@@ -74,7 +74,7 @@ class StageSpec extends AnyFunSuite {
     // a genuine single-file parquet scan + a row-wise projection = the
     // under-split shape the guard exists for (coalesce(1) would not do:
     // Repartition is itself a non-scan-like node, correctly passed through)
-    val dir = java.nio.file.Files.createTempDirectory("stage-spread").toString
+    val dir = Scratch.dir("stage-spread")
     docs.coalesce(1).write.mode("overwrite").parquet(dir)
     val one = spark.read.parquet(dir).select($"doc_id",
       org.apache.spark.sql.functions.upper($"text").as("t"))

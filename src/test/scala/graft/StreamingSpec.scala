@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.EventStreams
-import java.nio.file.Files
+import graft.engine.Scratch
 
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -12,7 +12,7 @@ class StreamingSpec extends AnyFunSuite {
 
   private lazy val sourceDir = {
     // stage a small parquet file-stream source from testdata events
-    val dir = Files.createTempDirectory("stream-src").toString
+    val dir = Scratch.dir("stream-src")
     graft.engine.Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "ts", "user_id", "event_type", "value")
       .coalesce(1).write.mode("overwrite").parquet(dir)
@@ -36,7 +36,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming dedup drops duplicate event_ids within the watermark") {
     // duplicate the source file so every event_id appears twice
-    val dir = Files.createTempDirectory("stream-dup").toString
+    val dir = Scratch.dir("stream-dup")
     val src = spark.read.parquet(sourceDir)
     src.coalesce(1).write.mode("append").parquet(dir)
     src.coalesce(1).write.mode("append").parquet(dir)
@@ -59,11 +59,11 @@ class StreamingSpec extends AnyFunSuite {
     val docsA = Seq((1L, base), (3L, "z " + base)).toDF("doc_id", "text")
     val docsB = Seq((2L, variant), (4L, "z " + base), (5L, (0 until 60)
       .map(i => s"q$i").mkString(" "))).toDF("doc_id", "text")
-    val srcDir = Files.createTempDirectory("neardup-src").toString
+    val srcDir = Scratch.dir("neardup-src")
     docsA.coalesce(1).write.mode("append").parquet(srcDir)
     docsB.coalesce(1).write.mode("append").parquet(srcDir)
-    val idxDir = Files.createTempDirectory("neardup-idx").toString + "/idx"
-    val pairsDir = Files.createTempDirectory("neardup-pairs").toString + "/pairs"
+    val idxDir = Scratch.dir("neardup-idx") + "/idx"
+    val pairsDir = Scratch.dir("neardup-pairs") + "/pairs"
     val stream = spark.readStream.schema(docsA.schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
     NearDupIngest.start(stream, "doc_id", "text", idxDir, pairsDir,
@@ -98,11 +98,11 @@ class StreamingSpec extends AnyFunSuite {
       (3L, "ALPHA  beta GAMMA")).toDF("doc_id", "text") // 3 normalizes == 1
     val docsB = Seq((4L, "alpha beta gamma"), (5L, "zeta eta theta"),
       (6L, "delta epsilon")).toDF("doc_id", "text")
-    val srcDir = Files.createTempDirectory("bloom-src").toString
+    val srcDir = Scratch.dir("bloom-src")
     docsA.coalesce(1).write.mode("append").parquet(srcDir)
     docsB.coalesce(1).write.mode("append").parquet(srcDir)
-    val stDir = Files.createTempDirectory("bloom-state").toString + "/st"
-    val outDir = Files.createTempDirectory("bloom-out").toString + "/out"
+    val stDir = Scratch.dir("bloom-state") + "/st"
+    val outDir = Scratch.dir("bloom-out") + "/out"
     val stream = spark.readStream.schema(docsA.schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
     BloomIngest.start(stream, "doc_id", "text", stDir, outDir)
@@ -200,7 +200,7 @@ class StreamingSpec extends AnyFunSuite {
     // last_seen to 10:03, the 10:15 event (12 min later) would wrongly
     // open a second session.
     import java.sql.Timestamp
-    val dir = Files.createTempDirectory("stream-late").toString
+    val dir = Scratch.dir("stream-late")
     def writeBatch(rows: Seq[(Long, String)]): Unit = {
       rows.map { case (id, t) =>
         EventStreams.Event(id, Timestamp.valueOf(t), 42L, "click", 1.0)
@@ -225,7 +225,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("foreachBatch lake sink lands every event; replay does not duplicate") {
-    val lake = Files.createTempDirectory("stream-lake").toString
+    val lake = Scratch.dir("stream-lake")
     val p = new graft.engine.Pipeline(spark, lake)
     val withDate = streamingEvents.withColumn("event_date",
       to_date(col("ts")))
