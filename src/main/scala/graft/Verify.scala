@@ -26,6 +26,10 @@ object Verify {
     val spark = graft.engine.Session.local()
     new java.io.File(outDir).mkdirs()
     defs.foreach { q =>
+      // a query that throws before its write must leave no output behind:
+      // a previous run's directory would be graded in its place
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(s"$outDir/${q.name}"))
       try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>

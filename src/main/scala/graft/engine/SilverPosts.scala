@@ -18,9 +18,6 @@ object SilverPosts {
   val positiveWords = Seq("good", "great", "fast", "small", "new", "best")
   val negativeWords = Seq("bad", "slow", "large", "old", "worst", "error")
 
-  private def hits(c: org.apache.spark.sql.Column, words: Seq[String]) =
-    size(filter(TextFunctions.tokens(c), t => t.isin(words.map(lit): _*)))
-
   def transform(posts: DataFrame, titleCol: String = "title",
       bodyCol: String = "body"): DataFrame = {
     val body = col(bodyCol)
@@ -33,7 +30,8 @@ object SilverPosts {
       .withColumn("has_links", TextFunctions.hasLinks(body))
       .withColumn("sentiment_score",
         when(wc > 0, Det.roundN(
-          (hits(body, positiveWords) - hits(body, negativeWords))
+          (TextFunctions.tokenHits(body, positiveWords) -
+            TextFunctions.tokenHits(body, negativeWords))
             .cast("double") / wc, 4))
           .otherwise(0.0))
   }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join, JoinHint, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 
@@ -12,8 +11,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * hard limit (or OOMs the driver well before it).
   *
   * A plain-size check at optimization time is deliberately conservative:
-  * stats here are file-size/row estimates, so the cap defaults well under
-  * the hard limit (1 GiB, `spark.graft.broadcastGuard.maxBytes`). When
+  * stats here are file-size/row estimates, so the cap sits well under
+  * the hard limit ([[BroadcastGuard.MaxBytes]], 1 GiB). When
   * the hint is stripped, the planner falls back to its normal choice —
   * and AQE can still pick a runtime broadcast if the relation turns out
   * genuinely small, which is exactly the desired asymmetry: broadcasts
@@ -24,11 +23,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * folded hints into the Join nodes, so the rule edits `JoinHint` sides
   * rather than `ResolvedHint` wrappers.
   */
-case class BroadcastGuard(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  private def maxBytes: Long =
-    spark.conf.get("spark.graft.broadcastGuard.maxBytes",
-      (1L << 30).toString).toLong
+class BroadcastGuard extends Rule[LogicalPlan] {
+  import BroadcastGuard.MaxBytes
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case j @ Join(left, right, _, _, hint)
@@ -40,14 +36,19 @@ case class BroadcastGuard(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def overLimit(h: Option[HintInfo], side: LogicalPlan): Boolean =
     h.exists(_.strategy.contains(BROADCAST)) &&
-      side.stats.sizeInBytes > maxBytes
+      side.stats.sizeInBytes > MaxBytes
 
   private def guard(h: Option[HintInfo], side: LogicalPlan,
       which: String): Option[HintInfo] =
     if (overLimit(h, side)) {
       logWarning(s"BroadcastGuard: dropping broadcast hint on $which join " +
-        s"side (est. ${side.stats.sizeInBytes} bytes > $maxBytes); the " +
+        s"side (est. ${side.stats.sizeInBytes} bytes > $MaxBytes); the " +
         s"planner/AQE will choose the strategy from actual sizes")
       h.map(_.copy(strategy = None))
     } else h
+}
+
+object BroadcastGuard {
+  /** The largest estimated join side a broadcast hint may keep. */
+  val MaxBytes: Long = 1L << 30
 }

@@ -1,6 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.call_function
 
@@ -16,16 +17,19 @@ object GraftFunctions {
     "jaro_winkler" -> (c => JaroWinkler(c(0), c(1))),
     "kmv_sketch" -> (c => KmvSketchAgg(c)))
 
-  /** Idempotent: (re)binds the native functions and adds the guard to
-    * `experimental.extraOptimizations` once. */
+  /** Idempotent: binds each native function the session's registry
+    * lacks and adds the guard to `experimental.extraOptimizations` once.
+    * A name already bound is left alone, so a second call neither
+    * replaces it nor logs Spark's replacement warning. */
   def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     natives.foreach { case (name, build) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, build, "scala_udf")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, build, "scala_udf")
     }
     val existing = spark.experimental.extraOptimizations
     if (!existing.exists(_.isInstanceOf[BroadcastGuard]))
-      spark.experimental.extraOptimizations = existing :+ BroadcastGuard(spark)
+      spark.experimental.extraOptimizations = existing :+ new BroadcastGuard
   }
 
   /** Column-API call; requires the function registered in the session. */

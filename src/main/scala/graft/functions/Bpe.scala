@@ -188,7 +188,7 @@ object Bpe {
     val ctes = Seq.newBuilder[String]
     ctes += s"""wc AS MATERIALIZED (
       |  SELECT w, COUNT(*) AS c FROM (
-      |    SELECT unnest(list_filter(str_split_regex(trim(lower(text)), ${l("\\s+")}),
+      |    SELECT unnest(list_filter(${TextFunctions.tokensSql("text")},
       |                              x -> x <> '')) AS w
       |    FROM documents) GROUP BY w)""".stripMargin
     ctes += s"""w0 AS MATERIALIZED (

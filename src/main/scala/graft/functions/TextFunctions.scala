@@ -21,6 +21,10 @@ object TextFunctions {
     * leading whitespace would otherwise produce an empty first token). */
   def tokens(text: Column): Column = split(trim(lower(text)), "\\s+")
 
+  /** DuckDB-dialect mirror of [[tokens]] over a SQL text expression. */
+  def tokensSql(text: String): String =
+    raw"str_split_regex(trim(lower($text)), '\s+')"
+
   def wordCount(text: Column): Column = size(tokens(text)).cast("long")
 
   /** BPE-ish subword proxy: alpha runs, single digits, single punctuation —
@@ -43,10 +47,16 @@ object TextFunctions {
   val stopwordsEn = Seq("the", "a", "an", "and", "of", "to", "in", "is",
     "on", "for", "with")
 
-  private def tokenHits(text: Column, words: Seq[String]): Column =
-    size(filter(tokens(text), t => t.isin(words.map(lit): _*))).cast("long")
+  /** How many of the text's [[tokens]] are in `words` (int). */
+  def tokenHits(text: Column, words: Seq[String]): Column =
+    size(filter(tokens(text), t => t.isin(words.map(lit): _*)))
 
-  def stopwordCount(text: Column): Column = tokenHits(text, stopwordsEn)
+  /** DuckDB-dialect mirror of [[tokenHits]] over a SQL text expression. */
+  def hitsSql(text: String, words: Seq[String]): String =
+    s"len(list_filter(${tokensSql(text)}, t -> t IN (${words.map(w => s"'$w'").mkString(", ")})))"
+
+  def stopwordCount(text: Column): Column =
+    tokenHits(text, stopwordsEn).cast("long")
 
   def hasLinks(text: Column): Column = text.rlike("https?://")
 
@@ -73,15 +83,49 @@ object TextFunctions {
     "fr" -> Seq("le", "les", "la", "et", "est"))
 
   def langHits(text: Column): Map[String, Column] =
-    langMarkers.map { case (l, ws) => l -> tokenHits(text, ws) }.toMap
+    langMarkers.map { case (l, ws) => l -> tokenHits(text, ws).cast("long") }.toMap
 
-  def langId(text: Column): Column = {
-    val h = langHits(text)
+  /** DuckDB-dialect mirror of [[langHits]]: one hit-count column per
+    * language, named by the language, as a SELECT list. */
+  def langHitsSql(text: String): String =
+    langMarkers.map { case (l, ws) => s"${hitsSql(text, ws)} AS $l" }.mkString(", ")
+
+  /** The language whose marker-hit count is highest, from the per-language
+    * hit columns keyed as in [[langMarkers]]. */
+  def langId(h: Map[String, Column]): Column =
     when(h("en") >= h("es") && h("en") >= h("de") && h("en") >= h("fr"), "en")
       .when(h("es") >= h("de") && h("es") >= h("fr"), "es")
       .when(h("de") >= h("fr"), "de")
       .otherwise("fr")
-  }
+
+  def langId(text: Column): Column = langId(langHits(text))
+
+  /** DuckDB-dialect mirror of [[langId]] over hit-count columns named
+    * `en`, `es`, `de` and `fr`. */
+  val langIdSql: String =
+    """CASE WHEN en >= es AND en >= de AND en >= fr THEN 'en'
+      |     WHEN es >= de AND es >= fr THEN 'es'
+      |     WHEN de >= fr THEN 'de' ELSE 'fr' END""".stripMargin
+
+  /** The 0-100 additive text-quality score: from 100, −40 under 5 words,
+    * −20 punctuation ratio over 0.2, −20 average word length outside
+    * [3, 12], −20 no stopword. */
+  def qualityScore(words: Column, punctRatio: Column, avgWordLen: Column,
+      stopHits: Column): Column =
+    greatest(lit(0), lit(100)
+      - when(words < 5, 40).otherwise(0)
+      - when(punctRatio > 0.2, 20).otherwise(0)
+      - when(avgWordLen < 3.0 || avgWordLen > 12.0, 20).otherwise(0)
+      - when(stopHits === 0, 20).otherwise(0))
+
+  /** DuckDB-dialect mirror of [[qualityScore]] over SQL expressions. */
+  def qualityScoreSql(words: String, punctRatio: String, avgWordLen: String,
+      stopHits: String): String =
+    s"""GREATEST(0, 100
+       |  - CASE WHEN $words < 5 THEN 40 ELSE 0 END
+       |  - CASE WHEN $punctRatio > 0.2 THEN 20 ELSE 0 END
+       |  - CASE WHEN $avgWordLen < 3.0 OR $avgWordLen > 12.0 THEN 20 ELSE 0 END
+       |  - CASE WHEN $stopHits = 0 THEN 20 ELSE 0 END)""".stripMargin
 
   /** Content fingerprint: sha256 over the sorted distinct token set — the
     * classic normalization fingerprint (whitespace/order/dup insensitive). */
@@ -322,11 +366,7 @@ object TextFunctions {
         awl.as("avg_word_len"),
         when(wc > 0, Det.roundN(col("stop_hits").cast("double") / wc, 4))
           .otherwise(0.0).as("stopword_ratio"),
-        greatest(lit(0), lit(100)
-          - when(wc < 5, 40).otherwise(0)
-          - when(punctRatio > 0.2, 20).otherwise(0)
-          - when(awl < 3.0 || awl > 12.0, 20).otherwise(0)
-          - when(col("stop_hits") === 0, 20).otherwise(0)).as("quality_score")): _*)
+        qualityScore(wc, punctRatio, awl, col("stop_hits")).as("quality_score")): _*)
   }
 
   /** BM25 keyword-search ranking (Robertson k1/b saturation), log-free.

@@ -62,14 +62,13 @@ object BradleyTerry {
 
     var ratings = totals.select(col("i").as("player"), lit(1.0).as("p"))
     for (_ <- 1 to rounds) {
-      // ratings is the SMALL side of both joins (one row per player vs
-      // one per pairing) — broadcast it so each round costs one shuffle
-      // (the per-player aggregate), not three. BroadcastGuard strips the
-      // hint if a caller's player set outgrows the broadcast budget.
-      val pi = broadcast(
-        ratings.select(col("player").as("i"), col("p").as("p_i")))
-      val pj = broadcast(
-        ratings.select(col("player").as("j"), col("p").as("p_j")))
+      // ratings is the small side of both joins (one row per player vs
+      // one per pairing), but its size estimate compounds through the
+      // staged rounds (over 1 GB from the first round, even at sf0.001),
+      // so BroadcastGuard would strip a broadcast hint here; AQE picks
+      // the join strategy from runtime sizes.
+      val pi = ratings.select(col("player").as("i"), col("p").as("p_i"))
+      val pj = ratings.select(col("player").as("j"), col("p").as("p_j"))
       val den = edges.join(pi, "i").join(pj, "j")
         .withColumn("__t", r12(col("n") / (col("p_i") + col("p_j")))
           .cast(DecimalType(38, 18)))

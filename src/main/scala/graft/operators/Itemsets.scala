@@ -108,14 +108,15 @@ object Itemsets {
     // a_itemsets3 ORACLE NOTE).
     val prefixes = cands.select(col("p1").as("ia"), col("p2").as("ib"))
       .distinct()
+    // no broadcast hints on prefixes and cands: both derive from staged
+    // relations whose size estimates compound past BroadcastGuard's cap
+    // (over 10^19 bytes at sf0.001), so any hint would be stripped
     pairRel
-      .join(broadcast(prefixes), Seq("ia", "ib"), "left_semi")
+      .join(prefixes, Seq("ia", "ib"), "left_semi")
       .join(bf.select(col("bk"), col("it").as("p3")), Seq("bk"))
       .filter(col("ib") < col("p3"))
       .withColumnsRenamed(Map("ia" -> "p1", "ib" -> "p2"))
-      // explicit hint: cands is frequent-pair-bounded but derives from
-      // staged (stats-less) relations, so auto-broadcast never fires
-      .join(broadcast(cands), Seq("p1", "p2", "p3"), "left_semi")
+      .join(cands, Seq("p1", "p2", "p3"), "left_semi")
       .groupBy("p1", "p2", "p3").agg(count(lit(1)).as("support"))
       .crossJoin(broadcast(thr))
       .filter(col("support") >= col("__thr"))

@@ -21,8 +21,11 @@ import graft.engine.Stage.syntax._
   * Scale shape: codebooks are m×k rows (driver-small, broadcast
   * everywhere); encoding is one broadcast join + codegen'd dot products
   * ([[graft.expressions.DotProduct]]) + a min_by aggregate; the ADC scan
-  * is a broadcast join of the m×k LUT against the (id, sub, code) table
-  * and one sum aggregate — shuffle O(rows × m), never O(rows × dims).
+  * is a join of the m×k LUT against the (id, sub, code) table and one
+  * sum aggregate — shuffle O(rows × m), never O(rows × dims). The LUT
+  * join carries no broadcast hint: its size estimate is past
+  * BroadcastGuard's cap at every lake size, so AQE picks the strategy
+  * from the runtime size.
   * Decimal-summed means keep refined codebooks bit-stable across
   * partitionings (same contract as [[Similarity.kmeansStep]]).
   */
@@ -113,7 +116,7 @@ object Pq {
     val lut = codebooks.join(broadcast(qSubs), Seq("sub"))
       .select(col("sub"), col("code"),
         GraftFunctions.dot_product(col("c_emb"), col("qv")).as("pd"))
-    enc.join(broadcast(lut), Seq("sub", "code"))
+    enc.join(lut, Seq("sub", "code"))
       .groupBy("id")
       .agg(sum(col("pd").cast(DecimalType(18, 9))).cast("double")
         .as("adc_score"))

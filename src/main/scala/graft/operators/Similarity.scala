@@ -159,8 +159,11 @@ object Similarity {
       assignCells(vectors, centroids, idCol, embCol))
     val topW = Window.partitionBy("query_id")
       .orderBy(desc("cosine"), col(idCol))
+    // no broadcast hint on probes: its estimate (codebook × query batch
+    // through a window) is past BroadcastGuard's cap at every lake size,
+    // so AQE picks the join from the runtime size
     assigned
-      .join(broadcast(probes), Seq("cell"))
+      .join(probes, Seq("cell"))
       .withColumn("cosine",
         Det.roundN(GraftFunctions.cosine_sim(col(embCol), col("q_emb")), 6))
       .withColumn("__rk", row_number().over(topW))
@@ -200,8 +203,9 @@ object Similarity {
       .withColumn("__rk", row_number().over(probeW))
       .filter(col("__rk") <= nProbe)
       .select(col("query_id"), col("cell"), col("q_emb"))
+    // no broadcast hint on probes, as in ivfTopKBatch
     assignCells(vectors, centroids, idCol, embCol)
-      .join(broadcast(probes), Seq("cell"))
+      .join(probes, Seq("cell"))
       .withColumn("cosine",
         Det.roundN(GraftFunctions.cosine_sim(col(embCol), col("q_emb")), 6))
       .filter(col("cosine") >= tau && col(idCol) =!= col("query_id"))

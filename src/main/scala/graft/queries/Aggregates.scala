@@ -313,7 +313,7 @@ object Aggregates {
         .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
         .join(Tables.lineitem(s, d),
           col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(supp),
+        .join(supp,
           col("l_suppkey") === col("s_suppkey") &&
             col("c_nationkey") === col("s_nationkey"))
         .groupBy("n_name")

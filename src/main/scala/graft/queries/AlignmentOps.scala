@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.engine.{Det, Tables}
 import graft.functions.{TextFunctions, UrlFunctions}
+import graft.functions.TextFunctions.{hitsSql, tokensSql}
 import graft.operators.{BradleyTerry, RangeJoin, Similarity}
 
 /** The preference / alignment layer of a training-data pipeline: building
@@ -29,14 +30,12 @@ object AlignmentOps {
     * Bradley-Terry oracles so they score docs identically to
     * t_text_quality. */
   private def qualityCtes: String = {
-    val stop = TextFunctions.stopwordsEn.map(w => s"'$w'").mkString(", ")
     raw"""f AS (
        |  SELECT doc_id, source, lang, text,
-       |    len(str_split_regex(trim(lower(text)), '\s+')) AS words,
+       |    len(${tokensSql("text")}) AS words,
        |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS punct,
        |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
-       |    len(list_filter(str_split_regex(trim(lower(text)), '\s+'),
-       |        t -> t IN ($stop))) AS stop_hits
+       |    ${hitsSql("text", TextFunctions.stopwordsEn)} AS stop_hits
        |  FROM documents),
        |g AS (
        |  SELECT doc_id, source, lang, words, stop_hits,
@@ -45,11 +44,7 @@ object AlignmentOps {
        |  FROM f),
        |q AS (
        |  SELECT doc_id, source, lang,
-       |    GREATEST(0, 100
-       |      - CASE WHEN words < 5 THEN 40 ELSE 0 END
-       |      - CASE WHEN punct_ratio > 0.2 THEN 20 ELSE 0 END
-       |      - CASE WHEN awl < 3.0 OR awl > 12.0 THEN 20 ELSE 0 END
-       |      - CASE WHEN stop_hits = 0 THEN 20 ELSE 0 END) AS quality_score
+       |    ${TextFunctions.qualityScoreSql("words", "punct_ratio", "awl", "stop_hits")} AS quality_score
        |  FROM g)""".stripMargin
   }
 
@@ -331,7 +326,7 @@ object AlignmentOps {
     QueryDef.sql(
       "sim_range_search",
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-         |cent AS (SELECT vec_id AS cell, emb AS ce FROM e WHERE vec_id < 16),
+         |${Fixtures.codebookCte},
          |qs AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 8),
          |probes AS (
          |  SELECT query_id, cell, qe FROM (
@@ -339,13 +334,7 @@ object AlignmentOps {
          |      row_number() OVER (PARTITION BY q.query_id
          |        ORDER BY (${cosSql("c.ce", "q.qe")}) DESC, c.cell) AS rk
          |    FROM cent c CROSS JOIN qs q) WHERE rk <= 4),
-         |scored AS (
-         |  SELECT e.vec_id, e.emb, cent.cell, ${cosSql("e.emb", "ce")} AS sim
-         |  FROM e CROSS JOIN cent),
-         |assigned AS (
-         |  SELECT vec_id, emb, cell FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell ASC) AS rn
-         |    FROM scored) WHERE rn = 1),
+         |${Fixtures.assignedCtes},
          |hits AS (
          |  SELECT p.query_id, a.vec_id, a.cell,
          |    ${roundN(cosSql("a.emb", "p.qe"), 6)} AS cosine
@@ -354,8 +343,7 @@ object AlignmentOps {
          |WHERE cosine >= 0.25 AND vec_id <> query_id
          |ORDER BY query_id, vec_id""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
+      val centroids = Fixtures.codebook(emb)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
       Similarity.ivfRangeSearch(emb, centroids, qs, tau = 0.25, nProbe = 4)

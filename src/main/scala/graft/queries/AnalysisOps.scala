@@ -114,7 +114,7 @@ object AnalysisOps {
     QueryDef.sql(
       "sim_hard_negatives",
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-         |cent AS (SELECT vec_id AS cell, emb AS ce FROM e WHERE vec_id < 16),
+         |${Fixtures.codebookCte},
          |qs AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 8),
          |probes AS (
          |  SELECT query_id, cell, qe FROM (
@@ -122,13 +122,7 @@ object AnalysisOps {
          |      row_number() OVER (PARTITION BY q.query_id
          |        ORDER BY (${cosSql("c.ce", "q.qe")}) DESC, c.cell) AS rk
          |    FROM cent c CROSS JOIN qs q) WHERE rk <= 4),
-         |scored AS (
-         |  SELECT e.vec_id, e.emb, cent.cell, ${cosSql("e.emb", "ce")} AS sim
-         |  FROM e CROSS JOIN cent),
-         |assigned AS (
-         |  SELECT vec_id, emb, cell FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell ASC) AS rn
-         |    FROM scored) WHERE rn = 1),
+         |${Fixtures.assignedCtes},
          |band AS (
          |  SELECT p.query_id, a.vec_id, a.cell,
          |    ${roundN(cosSql("a.emb", "p.qe"), 6)} AS cosine
@@ -142,8 +136,7 @@ object AnalysisOps {
          |WHERE rk <= 5
          |ORDER BY query_id, cosine DESC, vec_id""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
+      val centroids = Fixtures.codebook(emb)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
       val band = Similarity.ivfRangeSearch(emb, centroids, qs,

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.engine.{Det, Tables}
 import graft.functions.TextFunctions
+import graft.functions.TextFunctions.{hitsSql, tokensSql}
 import graft.operators.{Chunking, Contamination, Dedup, Mixing, Sampling, Scd2, Shards}
 import graft.engine.Stage.syntax._
 
@@ -130,7 +131,7 @@ object Curation {
     QueryDef.sql(
       "t_contamination",
       raw"""WITH toks AS (
-         |  SELECT doc_id, str_split_regex(trim(lower(text)), '\s+') AS t FROM documents),
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
          |sh AS (
          |  SELECT doc_id, CASE WHEN len(t) >= 3
          |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
@@ -170,11 +171,10 @@ object Curation {
       "t_quantile_filter",
       raw"""WITH f AS (
          |  SELECT doc_id, lang, text,
-         |    len(str_split_regex(trim(lower(text)), '\s+')) AS words,
+         |    len(${tokensSql("text")}) AS words,
          |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS punct,
          |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
-         |    len(list_filter(str_split_regex(trim(lower(text)), '\s+'),
-         |        t -> t IN (${TextFunctions.stopwordsEn.map(w => s"'$w'").mkString(", ")}))) AS stop_hits
+         |    ${hitsSql("text", TextFunctions.stopwordsEn)} AS stop_hits
          |  FROM documents),
          |g AS (
          |  SELECT doc_id, lang, words, stop_hits,
@@ -183,11 +183,7 @@ object Curation {
          |  FROM f),
          |q AS (
          |  SELECT doc_id, lang,
-         |    GREATEST(0, 100
-         |      - CASE WHEN words < 5 THEN 40 ELSE 0 END
-         |      - CASE WHEN punct_ratio > 0.2 THEN 20 ELSE 0 END
-         |      - CASE WHEN avg_word_len < 3.0 OR avg_word_len > 12.0 THEN 20 ELSE 0 END
-         |      - CASE WHEN stop_hits = 0 THEN 20 ELSE 0 END) AS quality_score
+         |    ${TextFunctions.qualityScoreSql("words", "punct_ratio", "avg_word_len", "stop_hits")} AS quality_score
          |  FROM g),
          |th AS (
          |  SELECT lang, ${roundN("quantile_cont(quality_score, 0.25)", 4)} AS lang_p25
@@ -275,7 +271,7 @@ object Curation {
     QueryDef.sql(
       "t_vocabulary",
       raw"""WITH t AS (
-         |  SELECT DISTINCT doc_id, unnest(str_split_regex(trim(lower(text)), '\s+')) AS term
+         |  SELECT DISTINCT doc_id, unnest(${tokensSql("text")}) AS term
          |  FROM documents),
          |md AS (SELECT ${TextFunctions.vocabMaxDfOracleSql(
               "COUNT(DISTINCT doc_id)")} AS maxdf FROM t),
@@ -292,7 +288,7 @@ object Curation {
     QueryDef.sql(
       "t_tfidf_keywords",
       raw"""WITH t AS (
-         |  SELECT doc_id, unnest(str_split_regex(trim(lower(text)), '\s+')) AS term
+         |  SELECT doc_id, unnest(${tokensSql("text")}) AS term
          |  FROM documents),
          |tf AS (SELECT doc_id, term, COUNT(*) AS cnt FROM t GROUP BY 1, 2),
          |dl AS (SELECT doc_id, COUNT(*) AS doc_len FROM t GROUP BY 1),
@@ -320,7 +316,7 @@ object Curation {
     QueryDef.sql(
       "t_chunking",
       raw"""WITH toks AS (
-         |  SELECT doc_id, str_split_regex(trim(lower(text)), '\s+') AS t FROM documents),
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
          |st AS (
          |  SELECT doc_id, t,
          |    unnest(generate_series(0, GREATEST(len(t) - 1, 0), 24)) AS start
@@ -344,7 +340,7 @@ object Curation {
     QueryDef.sql(
       "t_jsonl_export",
       raw"""WITH toks AS (
-         |  SELECT doc_id, str_split_regex(trim(lower(text)), '\s+') AS t FROM documents),
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
          |st AS (
          |  SELECT doc_id, t,
          |    unnest(generate_series(0, GREATEST(len(t) - 1, 0), 24)) AS start
@@ -379,7 +375,7 @@ object Curation {
     QueryDef.sql(
       "t_curation_export_v2",
       raw"""WITH toks AS (
-         |  SELECT doc_id, str_split_regex(trim(lower(text)), '\s+') AS t FROM documents),
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
          |sp AS (
          |  SELECT doc_id, i - 1 AS start, array_to_string(t[i:i+7], ' ') AS span
          |  FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 7, 0))) AS i) u),
@@ -520,11 +516,10 @@ object Curation {
       "t_training_export",
       raw"""WITH f AS (
          |  SELECT doc_id, lang, text,
-         |    len(str_split_regex(trim(lower(text)), '\s+')) AS words,
+         |    len(${tokensSql("text")}) AS words,
          |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS punct,
          |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
-         |    len(list_filter(str_split_regex(trim(lower(text)), '\s+'),
-         |        t -> t IN (${TextFunctions.stopwordsEn.map(w => s"'$w'").mkString(", ")}))) AS stop_hits
+         |    ${hitsSql("text", TextFunctions.stopwordsEn)} AS stop_hits
          |  FROM documents WHERE doc_id % 20 <> 0),
          |g AS (
          |  SELECT doc_id, lang, words, stop_hits,
@@ -533,11 +528,7 @@ object Curation {
          |  FROM f),
          |q AS (
          |  SELECT doc_id, lang,
-         |    GREATEST(0, 100
-         |      - CASE WHEN words < 5 THEN 40 ELSE 0 END
-         |      - CASE WHEN punct_ratio > 0.2 THEN 20 ELSE 0 END
-         |      - CASE WHEN avg_word_len < 3.0 OR avg_word_len > 12.0 THEN 20 ELSE 0 END
-         |      - CASE WHEN stop_hits = 0 THEN 20 ELSE 0 END) AS quality_score
+         |    ${TextFunctions.qualityScoreSql("words", "punct_ratio", "avg_word_len", "stop_hits")} AS quality_score
          |  FROM g),
          |th AS (
          |  SELECT lang, ${roundN("quantile_cont(quality_score, 0.25)", 4)} AS lang_p25
@@ -546,7 +537,7 @@ object Curation {
          |  SELECT doc_id FROM q JOIN th ON th.lang = q.lang
          |  WHERE quality_score >= lang_p25),
          |toks AS (
-         |  SELECT doc_id, str_split_regex(trim(lower(text)), '\s+') AS t FROM documents),
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
          |sh AS (
          |  SELECT doc_id, CASE WHEN len(t) >= 3
          |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
@@ -660,23 +651,18 @@ object Curation {
       "t_dataset_card",
       raw"""WITH f AS (
          |  SELECT doc_id,
-         |    len(str_split_regex(trim(lower(text)), '\s+')) AS words,
+         |    len(${tokensSql("text")}) AS words,
          |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS punct,
          |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
-         |    len(list_filter(str_split_regex(trim(lower(text)), '\s+'),
-         |        t -> t IN (${TextFunctions.stopwordsEn.map(w => s"'$w'").mkString(", ")}))) AS stop_hits,
+         |    ${hitsSql("text", TextFunctions.stopwordsEn)} AS stop_hits,
          |    punct * 1.0 / GREATEST(length(text), 1) AS punct_ratio,
-         |    CASE WHEN len(str_split_regex(trim(lower(text)), '\s+')) > 0
-         |      THEN ${Det.roundNSql(raw"length(regexp_replace(text, '\s+', '', 'g')) * 1.0 / len(str_split_regex(trim(lower(text)), '\s+'))", 2)}
+         |    CASE WHEN len(${tokensSql("text")}) > 0
+         |      THEN ${Det.roundNSql(raw"length(regexp_replace(text, '\s+', '', 'g')) * 1.0 / len(${tokensSql("text")})", 2)}
          |      ELSE 0.0 END AS avg_word_len
          |  FROM documents),
          |sc AS (
          |  SELECT doc_id, words,
-         |    GREATEST(0, 100
-         |      - CASE WHEN words < 5 THEN 40 ELSE 0 END
-         |      - CASE WHEN punct_ratio > 0.2 THEN 20 ELSE 0 END
-         |      - CASE WHEN avg_word_len < 3.0 OR avg_word_len > 12.0 THEN 20 ELSE 0 END
-         |      - CASE WHEN stop_hits = 0 THEN 20 ELSE 0 END) AS score
+         |    ${TextFunctions.qualityScoreSql("words", "punct_ratio", "avg_word_len", "stop_hits")} AS score
          |  FROM f),
          |canon AS (
          |  SELECT doc_id, row_number() OVER (
@@ -776,7 +762,7 @@ object Curation {
       "t_seq_pack",
       raw"""WITH t AS (
          |  SELECT doc_id, source,
-         |    len(str_split_regex(trim(lower(text)), '\s+')) AS toks
+         |    len(${tokensSql("text")}) AS toks
          |  FROM documents),
          |c AS (
          |  SELECT doc_id, source, toks,
@@ -806,7 +792,7 @@ object Curation {
       raw"""WITH toks AS (
          |  SELECT doc_id,
          |    source IN ('src0', 'src1', 'src2', 'src3', 'src4') AS t,
-         |    unnest(str_split_regex(trim(lower(text)), '\s+')) AS w
+         |    unnest(${tokensSql("text")}) AS w
          |  FROM documents),
          |counts AS (
          |  SELECT w, COUNT(*) AS n_raw,
@@ -961,7 +947,7 @@ object Curation {
     QueryDef.sql(
       "t_bm25_search",
       raw"""WITH t AS (
-         |  SELECT doc_id, unnest(str_split_regex(trim(lower(text)), '\s+')) AS term
+         |  SELECT doc_id, unnest(${tokensSql("text")}) AS term
          |  FROM documents),
          |dl AS (SELECT doc_id, COUNT(*) AS dl FROM t GROUP BY 1),
          |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM t

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.engine.{Det, Tables}
 import graft.engine.Stage.syntax._
+import graft.functions.TextFunctions.{hitsSql, langHitsSql}
 
 /** The model/data evaluation layer: classifier quality (exact tie-corrected
   * ROC-AUC, trapezoidal PR-AUC) computed entirely from score histograms —
@@ -265,13 +266,9 @@ object EvalOps {
     // map-side scoring pass + one scalar aggregate.
     QueryDef.sql(
       "a_mcnemar", {
-        def hits(ws: Seq[String]) =
-          raw"len(list_filter(str_split_regex(trim(lower(text)), '\s+'), t -> t IN (${ws.map(w => s"'$w'").mkString(", ")})))"
-        val m = graft.functions.TextFunctions.langMarkers.toMap
         s"""WITH h AS (
            |  SELECT lang = 'en' AS truth,
-           |    ${hits(m("en"))} AS en, ${hits(m("es"))} AS es,
-           |    ${hits(m("de"))} AS de, ${hits(m("fr"))} AS fr
+           |    ${langHitsSql("text")}
            |  FROM documents),
            |p AS (
            |  SELECT truth,
@@ -323,12 +320,8 @@ object EvalOps {
     // reports before trusting its labels.
     QueryDef.sql(
       "a_cohen_kappa", {
-        def hits(ws: Seq[String]) =
-          raw"len(list_filter(str_split_regex(trim(lower(text)), '\s+'), t -> t IN (${ws.map(w => s"'$w'").mkString(", ")})))"
-        val m = graft.functions.TextFunctions.langMarkers.toMap
         s"""WITH h AS (
-           |  SELECT ${hits(m("en"))} AS en, ${hits(m("es"))} AS es,
-           |    ${hits(m("de"))} AS de, ${hits(m("fr"))} AS fr
+           |  SELECT ${langHitsSql("text")}
            |  FROM documents),
            |p AS (
            |  SELECT (en >= es AND en >= de AND en >= fr) AS ra,
@@ -390,8 +383,6 @@ object EvalOps {
     // the weighted sum is r12-pinned and DECIMAL-summed.
     QueryDef.sql(
       "a_feature_importance", {
-        def hits(ws: Seq[String]) =
-          raw"len(list_filter(str_split_regex(trim(lower(text)), '\s+'), t -> t IN (${ws.map(w => s"'$w'").mkString(", ")})))"
         val en = graft.functions.TextFunctions.langMarkers.toMap.apply("en")
         def splitSql(feat: String, fexpr: String) =
           s"""SELECT '$feat' AS feature, $fexpr AS v,
@@ -399,7 +390,7 @@ object EvalOps {
              |    COUNT(CASE WHEN lang = 'en' THEN 1 END) AS c1
              |  FROM f GROUP BY 1, 2""".stripMargin
         s"""WITH f AS (
-           |  SELECT lang, source, n_chars, ${hits(en)} AS sh
+           |  SELECT lang, source, n_chars, ${hitsSql("text", en)} AS sh
            |  FROM documents),
            |tot AS (
            |  SELECT COUNT(*) AS n_tot,

@@ -1047,12 +1047,7 @@ object ExperimentOps {
     // clustering family: LP assigns, modularity grades the assignment.
     QueryDef.sql(
       "g_modularity", {
-        s"""WITH nd AS (SELECT doc_id FROM documents),
-           |cnt AS (SELECT COUNT(*) AS n FROM nd),
-           |e0 AS (
-           |  SELECT doc_id AS src, (doc_id * p + j) % cnt.n AS dst
-           |  FROM nd, cnt, (VALUES (1, 31), (2, 97), (3, 211)) m(j, p)),
-           |ed AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
+        s"""WITH ${Fixtures.linkGraphCtes("ed")},
            |es AS (SELECT DISTINCT src, dst FROM (
            |  SELECT src, dst FROM ed
            |  UNION ALL SELECT dst AS src, src AS dst FROM ed)),
@@ -1083,12 +1078,7 @@ object ExperimentOps {
       }) { (s, d) =>
       import graft.operators.Graph
       val docs = Tables.documents(s, d).select(col("doc_id"))
-      val n = docs.agg(count(lit(1)).as("__en"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"), explode(array(
-          (col("doc_id") * 31 + 1) % col("__en"),
-          (col("doc_id") * 97 + 2) % col("__en"),
-          (col("doc_id") * 211 + 3) % col("__en"))).as("dst"))
+      val edges = Fixtures.linkGraph(docs)
       // staged: lab feeds four consumers and es three — unstaged, each
       // re-expanded the propagation/edge lineage (17 documents scans in
       // one plan; rescan audit)

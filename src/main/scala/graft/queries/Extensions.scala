@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.engine.{Det, Tables}
 import graft.functions.TextFunctions
+import graft.functions.TextFunctions.{hitsSql, langHitsSql, tokensSql}
 import graft.operators.{Bloom, Dedup, Multimodal, Sampling, Similarity}
 import graft.engine.Stage.syntax._
 
@@ -96,7 +97,7 @@ object Extensions {
     * alone. */
   private val ngramClusterCte: String =
     raw"""WITH RECURSIVE toks AS (
-       |  SELECT doc_id AS id, str_split_regex(trim(lower(text)), '\s+') AS t FROM documents),
+       |  SELECT doc_id AS id, ${tokensSql("text")} AS t FROM documents),
        |sh AS (
        |  SELECT id, CASE WHEN len(t) >= 3
        |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
@@ -140,7 +141,7 @@ object Extensions {
     * the two cannot drift apart. */
   private[queries] val minhashPairsCte: String =
     raw"""WITH toks AS (
-       |  SELECT doc_id AS id, str_split_regex(trim(lower(text)), '\s+') AS t FROM documents),
+       |  SELECT doc_id AS id, ${tokensSql("text")} AS t FROM documents),
        |sh AS (
        |  SELECT id, CASE WHEN len(t) >= 3
        |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
@@ -185,7 +186,7 @@ object Extensions {
     QueryDef.sql(
       "t_token_count",
       raw"""SELECT doc_id,
-         |  CAST(len(str_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS word_count,
+         |  CAST(len(${tokensSql("text")}) AS BIGINT) AS word_count,
          |  CAST(len(regexp_extract_all(text, '${TextFunctions.bpePattern}')) AS BIGINT) AS bpe_count,
          |  CAST(length(text) AS BIGINT) AS char_count
          |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
@@ -274,8 +275,8 @@ object Extensions {
       "t_phrase_search",
       raw"""WITH toks AS (
          |  SELECT doc_id,
-         |    generate_subscripts(str_split_regex(trim(lower(text)), '\s+'), 1) - 1 AS pos,
-         |    unnest(str_split_regex(trim(lower(text)), '\s+')) AS token
+         |    generate_subscripts(${tokensSql("text")}, 1) - 1 AS pos,
+         |    unnest(${tokensSql("text")}) AS token
          |  FROM documents),
          |m AS (
          |  SELECT a.doc_id, a.pos
@@ -299,7 +300,7 @@ object Extensions {
     QueryDef.sql(
       "t_feature_hashing",
       raw"""WITH toks AS (
-         |  SELECT doc_id, unnest(str_split_regex(trim(lower(text)), '\s+')) AS tk
+         |  SELECT doc_id, unnest(${tokensSql("text")}) AS tk
          |  FROM documents),
          |hashed AS (
          |  SELECT doc_id,
@@ -332,7 +333,7 @@ object Extensions {
       "t_readability",
       raw"""WITH f AS (
          |  SELECT doc_id,
-         |    CAST(len(str_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_words,
+         |    CAST(len(${tokensSql("text")}) AS BIGINT) AS n_words,
          |    CAST(GREATEST(len(regexp_extract_all(text, '[.!?]+')), 1) AS BIGINT) AS n_sentences,
          |    CAST(GREATEST(len(regexp_extract_all(lower(text), '[aeiouy]+')), 1) AS BIGINT) AS n_syllables
          |  FROM documents WHERE text IS NOT NULL),
@@ -369,11 +370,10 @@ object Extensions {
       "t_text_quality",
       raw"""WITH f AS (
          |  SELECT doc_id, text,
-         |    len(str_split_regex(trim(lower(text)), '\s+')) AS words,
+         |    len(${tokensSql("text")}) AS words,
          |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS punct,
          |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
-         |    len(list_filter(str_split_regex(trim(lower(text)), '\s+'),
-         |        t -> t IN (${TextFunctions.stopwordsEn.map(w => s"'$w'").mkString(", ")}))) AS stop_hits
+         |    ${hitsSql("text", TextFunctions.stopwordsEn)} AS stop_hits
          |  FROM documents),
          |g AS (
          |  SELECT doc_id, words, stop_hits,
@@ -382,11 +382,7 @@ object Extensions {
          |  FROM f)
          |SELECT doc_id, CAST(words AS BIGINT) AS word_count, avg_word_len,
          |  CASE WHEN words > 0 THEN ${roundN("stop_hits * 1.0 / words", 4)} ELSE 0.0 END AS stopword_ratio,
-         |  GREATEST(0, 100
-         |    - CASE WHEN words < 5 THEN 40 ELSE 0 END
-         |    - CASE WHEN punct_ratio > 0.2 THEN 20 ELSE 0 END
-         |    - CASE WHEN avg_word_len < 3.0 OR avg_word_len > 12.0 THEN 20 ELSE 0 END
-         |    - CASE WHEN stop_hits = 0 THEN 20 ELSE 0 END) AS quality_score
+         |  ${TextFunctions.qualityScoreSql("words", "punct_ratio", "avg_word_len", "stop_hits")} AS quality_score
          |FROM g ORDER BY doc_id""".stripMargin) { (s, d) =>
       // single-pass token aggregate (explode → one hash agg) + one char-
       // level regex per row — not the per-metric HOF helpers, which would
@@ -408,10 +404,9 @@ object Extensions {
       "t_rule_gate",
       raw"""WITH f AS (
          |  SELECT doc_id,
-         |    len(str_split_regex(trim(lower(text)), '\s+')) AS words,
+         |    len(${tokensSql("text")}) AS words,
          |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
-         |    len(list_filter(str_split_regex(trim(lower(text)), '\s+'),
-         |        t -> t IN (${TextFunctions.stopwordsEn.map(w => s"'$w'").mkString(", ")}))) AS stop_hits
+         |    ${hitsSql("text", TextFunctions.stopwordsEn)} AS stop_hits
          |  FROM documents),
          |g AS (
          |  SELECT doc_id, words,
@@ -448,10 +443,9 @@ object Extensions {
       "t_filter_funnel",
       raw"""WITH f AS (
          |  SELECT doc_id,
-         |    len(str_split_regex(trim(lower(text)), '\s+')) AS words,
+         |    len(${tokensSql("text")}) AS words,
          |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
-         |    len(list_filter(str_split_regex(trim(lower(text)), '\s+'),
-         |        t -> t IN (${TextFunctions.stopwordsEn.map(w => s"'$w'").mkString(", ")}))) AS stop_hits
+         |    ${hitsSql("text", TextFunctions.stopwordsEn)} AS stop_hits
          |  FROM documents),
          |g AS (
          |  SELECT doc_id, words < 30 AS f1, words > 80 AS f2,
@@ -515,7 +509,7 @@ object Extensions {
       "t_bpe_tokenize",
       s"""WITH w AS (
          |  SELECT doc_id,
-         |    list_filter(str_split_regex(trim(lower(text)), '\\s+'),
+         |    list_filter(${tokensSql("text")},
          |                x -> x <> '') AS words
          |  FROM documents),
          |t AS (
@@ -546,7 +540,7 @@ object Extensions {
       "t_bpe_chunking",
       s"""WITH w AS (
          |  SELECT doc_id,
-         |    list_filter(str_split_regex(trim(lower(text)), '\\s+'),
+         |    list_filter(${tokensSql("text")},
          |                x -> x <> '') AS words
          |  FROM documents),
          |t AS (
@@ -582,7 +576,7 @@ object Extensions {
       "t_bpe_fertility",
       s"""WITH w AS (
          |  SELECT doc_id, lang,
-         |    list_filter(str_split_regex(trim(lower(text)), '\\s+'),
+         |    list_filter(${tokensSql("text")},
          |                x -> x <> '') AS words
          |  FROM documents),
          |t AS (
@@ -648,18 +642,12 @@ object Extensions {
 
     QueryDef.sql(
       "t_langid", {
-        def hitsSql(ws: Seq[String]) =
-          raw"len(list_filter(str_split_regex(trim(lower(text)), '\s+'), t -> t IN (${ws.map(w => s"'$w'").mkString(", ")})))"
-        val m = TextFunctions.langMarkers.toMap
         raw"""WITH h AS (
            |  SELECT doc_id, lang AS declared_lang,
-           |    ${hitsSql(m("en"))} AS en, ${hitsSql(m("es"))} AS es,
-           |    ${hitsSql(m("de"))} AS de, ${hitsSql(m("fr"))} AS fr
+           |    ${langHitsSql("text")}
            |  FROM documents)
            |SELECT doc_id, declared_lang,
-           |  CASE WHEN en >= es AND en >= de AND en >= fr THEN 'en'
-           |       WHEN es >= de AND es >= fr THEN 'es'
-           |       WHEN de >= fr THEN 'de' ELSE 'fr' END AS detected_lang
+           |  ${TextFunctions.langIdSql} AS detected_lang
            |FROM h ORDER BY doc_id""".stripMargin
       }) { (s, d) =>
       val docs = Tables.documents(s, d)
@@ -667,18 +655,15 @@ object Extensions {
       val h = TextFunctions.langMarkers.map { case (l, _) => l -> col(s"hits_$l") }.toMap
       docs.join(feats, "doc_id")
         .select(col("doc_id"), col("lang").as("declared_lang"),
-          when(h("en") >= h("es") && h("en") >= h("de") && h("en") >= h("fr"), "en")
-            .when(h("es") >= h("de") && h("es") >= h("fr"), "es")
-            .when(h("de") >= h("fr"), "de")
-            .otherwise("fr").as("detected_lang"))
+          TextFunctions.langId(h).as("detected_lang"))
         .orderBy("doc_id")
     },
 
     QueryDef.sql(
       "t_fingerprint",
-      """SELECT doc_id,
+      s"""SELECT doc_id,
         |  sha256(array_to_string(list_sort(list_distinct(
-        |    str_split_regex(trim(lower(text)), '\s+'))), ' ')) AS fingerprint,
+        |    ${tokensSql("text")})), ' ')) AS fingerprint,
         |  contains(text, 'http://') OR contains(text, 'https://') AS has_links
         |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
       Tables.documents(s, d)
@@ -697,7 +682,7 @@ object Extensions {
       "t_boilerplate_strip",
       raw"""WITH tok AS (
          |  SELECT doc_id, generate_subscripts(toks, 1) - 1 AS pos, unnest(toks) AS tok
-         |  FROM (SELECT doc_id, str_split_regex(trim(lower(text)), '\s+') AS toks
+         |  FROM (SELECT doc_id, ${tokensSql("text")} AS toks
          |        FROM documents)),
          |n AS (SELECT COUNT(*) AS n_docs FROM documents),
          |dfreq AS (SELECT tok, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
@@ -707,8 +692,8 @@ object Extensions {
          |    string_agg(tok, ' ' ORDER BY pos) AS clean_text
          |  FROM tok WHERE tok NOT IN (SELECT tok FROM boiler) GROUP BY 1)
          |SELECT d.doc_id,
-         |  CAST(len(str_split_regex(trim(lower(d.text)), '\s+')) AS BIGINT) AS n_tokens,
-         |  CAST(len(str_split_regex(trim(lower(d.text)), '\s+')) - COALESCE(n_kept, 0) AS BIGINT) AS n_removed,
+         |  CAST(len(${tokensSql("d.text")}) AS BIGINT) AS n_tokens,
+         |  CAST(len(${tokensSql("d.text")}) - COALESCE(n_kept, 0) AS BIGINT) AS n_removed,
          |  COALESCE(clean_text, '') AS clean_text
          |FROM documents d LEFT JOIN rebuilt r ON d.doc_id = r.doc_id
          |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
@@ -723,7 +708,7 @@ object Extensions {
     QueryDef.sql(
       "t_repetition",
       raw"""WITH toks AS (
-         |  SELECT doc_id, str_split_regex(trim(lower(text)), '\s+') AS t FROM documents),
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
          |tok AS (SELECT doc_id, unnest(t) AS tok FROM toks),
          |tokstats AS (
          |  SELECT doc_id, COUNT(*) AS n_tokens, COUNT(DISTINCT tok) AS n_distinct
@@ -925,8 +910,8 @@ object Extensions {
       "t_lm_score",
       raw"""WITH tok AS (
          |  SELECT doc_id,
-         |    unnest(str_split_regex(trim(lower(text)), '\s+')) AS w,
-         |    generate_subscripts(str_split_regex(trim(lower(text)), '\s+'), 1) AS pos
+         |    unnest(${tokensSql("text")}) AS w,
+         |    generate_subscripts(${tokensSql("text")}, 1) AS pos
          |  FROM documents),
          |bi AS (SELECT * FROM (
          |  SELECT doc_id, w, lag(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w_prev
@@ -1118,7 +1103,7 @@ object Extensions {
     QueryDef.sql(
       "dedup_simhash",
       raw"""WITH toks AS (
-         |  SELECT doc_id AS id, unnest(str_split_regex(trim(lower(text)), '\s+')) AS tk
+         |  SELECT doc_id AS id, unnest(${tokensSql("text")}) AS tk
          |  FROM documents),
          |th AS (SELECT id, ${Det.h56Sql("tk")} AS h FROM toks),
          |bits AS (
@@ -1156,7 +1141,7 @@ object Extensions {
     QueryDef.sql(
       "dedup_ngram_jaccard",
       raw"""WITH toks AS (
-         |  SELECT doc_id AS id, str_split_regex(trim(lower(text)), '\s+') AS t FROM documents),
+         |  SELECT doc_id AS id, ${tokensSql("text")} AS t FROM documents),
          |sh AS (
          |  SELECT id, CASE WHEN len(t) >= 3
          |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
@@ -1192,7 +1177,7 @@ object Extensions {
     QueryDef.sql(
       "dedup_containment",
       raw"""WITH toks AS (
-         |  SELECT doc_id AS id, str_split_regex(trim(lower(text)), '\s+') AS t FROM documents),
+         |  SELECT doc_id AS id, ${tokensSql("text")} AS t FROM documents),
          |sh AS (
          |  SELECT id, CASE WHEN len(t) >= 3
          |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
@@ -1232,7 +1217,7 @@ object Extensions {
     QueryDef.sql(
       "dedup_prefix_join",
       raw"""WITH toks AS (
-         |  SELECT doc_id AS id, str_split_regex(trim(lower(text)), '\s+') AS t FROM documents),
+         |  SELECT doc_id AS id, ${tokensSql("text")} AS t FROM documents),
          |sh AS (
          |  SELECT id, CASE WHEN len(t) >= 3
          |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
@@ -1262,7 +1247,7 @@ object Extensions {
     QueryDef.sql(
       "dedup_dup_spans",
       raw"""WITH toks AS (
-         |  SELECT doc_id, str_split_regex(trim(lower(text)), '\s+') AS t FROM documents),
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
          |sp AS (
          |  SELECT doc_id,
          |    unnest([array_to_string(t[i:i+7], ' ') for i in generate_series(1, len(t)-7)]) AS span
@@ -1299,7 +1284,7 @@ object Extensions {
     QueryDef.sql(
       "dedup_strip_spans",
       raw"""WITH toks AS (
-         |  SELECT doc_id, str_split_regex(trim(lower(text)), '\s+') AS t FROM documents),
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
          |sp AS (
          |  SELECT doc_id, i - 1 AS start, array_to_string(t[i:i+7], ' ') AS span
          |  FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 7, 0))) AS i) u),
@@ -1321,8 +1306,8 @@ object Extensions {
          |    string_agg(tk, ' ' ORDER BY pos) AS clean_text
          |  FROM kept GROUP BY 1)
          |SELECT d.doc_id,
-         |  CAST(len(str_split_regex(trim(lower(d.text)), '\s+')) AS BIGINT) AS n_tokens,
-         |  CAST(len(str_split_regex(trim(lower(d.text)), '\s+')) - COALESCE(n_kept, 0) AS BIGINT) AS n_removed,
+         |  CAST(len(${tokensSql("d.text")}) AS BIGINT) AS n_tokens,
+         |  CAST(len(${tokensSql("d.text")}) - COALESCE(n_kept, 0) AS BIGINT) AS n_removed,
          |  COALESCE(clean_text, '') AS clean_text
          |FROM documents d LEFT JOIN rebuilt r ON r.doc_id = d.doc_id
          |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
@@ -1536,7 +1521,7 @@ object Extensions {
       "sim_bruteforce_topk",
       s"""WITH q AS (SELECT embedding::DOUBLE[] AS qe FROM embeddings WHERE vec_id = 0)
          |SELECT vec_id,
-         |  ${roundN("CASE WHEN sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) * sqrt(list_dot_product(qe, qe)) > 0 THEN list_dot_product(embedding::DOUBLE[], qe) / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) * sqrt(list_dot_product(qe, qe))) ELSE 0.0 END", 6)} AS cosine
+         |  ${roundN(cosSql("embedding::DOUBLE[]", "qe"), 6)} AS cosine
          |FROM embeddings, q
          |ORDER BY cosine DESC, vec_id LIMIT 11""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
@@ -1569,30 +1554,19 @@ object Extensions {
     // nProbe=4 cell restriction, cosine top-11.
     QueryDef.sql(
       "sim_ivf_topk", {
-        def cos(a: String, b: String) =
-          s"CASE WHEN sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)) > 0" +
-            s" THEN list_dot_product($a,$b) / (sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)))" +
-            s" ELSE 0.0 END"
         s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
            |q AS (SELECT emb AS qe FROM e WHERE vec_id = 0),
-           |cent AS (SELECT vec_id AS cell, emb AS ce FROM e WHERE vec_id < 16),
+           |${Fixtures.codebookCte},
            |probes AS (
            |  SELECT cell FROM cent, q
-           |  ORDER BY (${cos("ce", "qe")}) DESC, cell LIMIT 4),
-           |scored AS (
-           |  SELECT e.vec_id, e.emb, cent.cell, ${cos("e.emb", "ce")} AS sim
-           |  FROM e CROSS JOIN cent),
-           |assigned AS (
-           |  SELECT vec_id, emb, cell FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell ASC) AS rn
-           |    FROM scored) WHERE rn = 1)
-           |SELECT a.vec_id, a.cell, ${roundN(cos("a.emb", "qe"), 6)} AS cosine
+           |  ORDER BY (${cosSql("ce", "qe")}) DESC, cell LIMIT 4),
+           |${Fixtures.assignedCtes}
+           |SELECT a.vec_id, a.cell, ${roundN(cosSql("a.emb", "qe"), 6)} AS cosine
            |FROM assigned a JOIN probes USING (cell) CROSS JOIN q
            |ORDER BY cosine DESC, vec_id LIMIT 11""".stripMargin
       }) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
+      val centroids = Fixtures.codebook(emb)
       val q = emb.filter(col("vec_id") === 0)
         .select(col("embedding").as("q_emb"))
       Similarity.ivfTopK(emb, centroids, q, k = 11, nProbe = 4)
@@ -1608,7 +1582,7 @@ object Extensions {
     QueryDef.sql(
       "sim_ivf_batch",
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-         |cent AS (SELECT vec_id AS cell, emb AS ce FROM e WHERE vec_id < 16),
+         |${Fixtures.codebookCte},
          |qs AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 8),
          |probes AS (
          |  SELECT query_id, cell, qe FROM (
@@ -1616,13 +1590,7 @@ object Extensions {
          |      row_number() OVER (PARTITION BY q.query_id
          |        ORDER BY (${cosSql("c.ce", "q.qe")}) DESC, c.cell) AS rk
          |    FROM cent c CROSS JOIN qs q) WHERE rk <= 4),
-         |scored AS (
-         |  SELECT e.vec_id, e.emb, cent.cell, ${cosSql("e.emb", "ce")} AS sim
-         |  FROM e CROSS JOIN cent),
-         |assigned AS (
-         |  SELECT vec_id, emb, cell FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell ASC) AS rn
-         |    FROM scored) WHERE rn = 1),
+         |${Fixtures.assignedCtes},
          |hits AS (
          |  SELECT p.query_id, a.vec_id, a.cell,
          |    ${roundN(cosSql("a.emb", "p.qe"), 6)} AS cosine
@@ -1633,8 +1601,7 @@ object Extensions {
          |WHERE rk <= 5
          |ORDER BY query_id, cosine DESC, vec_id""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
+      val centroids = Fixtures.codebook(emb)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
       Similarity.ivfTopKBatch(emb, centroids, qs, k = 5, nProbe = 4)
@@ -1647,14 +1614,8 @@ object Extensions {
     QueryDef.sql(
       "sim_kmeans_step",
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-         |cent AS (SELECT vec_id AS cell, emb AS ce FROM e WHERE vec_id < 16),
-         |scored AS (
-         |  SELECT e.vec_id, e.emb, cent.cell, ${cosSql("e.emb", "ce")} AS sim
-         |  FROM e CROSS JOIN cent),
-         |assigned AS (
-         |  SELECT vec_id, emb, cell FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell ASC) AS rn
-         |    FROM scored) WHERE rn = 1),
+         |${Fixtures.codebookCte},
+         |${Fixtures.assignedCtes},
          |dims AS (
          |  SELECT cell, generate_subscripts(emb, 1) - 1 AS dim, unnest(emb) AS x
          |  FROM assigned),
@@ -1672,8 +1633,7 @@ object Extensions {
          |FROM cdims c LEFT JOIN means m ON m.cell = c.cell AND m.dim = c.dim
          |ORDER BY c.cell, c.dim""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
+      val centroids = Fixtures.codebook(emb)
       Similarity.kmeansStep(emb, centroids)
         .select(col("cell"), col("n_members"),
           posexplode(col("c_emb")).as(Seq("dim", "c_val")))
@@ -1772,7 +1732,7 @@ object Extensions {
            |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
            |cent0 AS (
            |  SELECT vec_id AS cell, emb AS ce, 0 AS n FROM e
-           |  WHERE vec_id < 16),
+           |  WHERE vec_id < ${Fixtures.CodebookSize}),
            |${round(1, "cent0")},
            |${round(2, "cent1")},
            |${round(3, "cent2")}
@@ -1782,8 +1742,7 @@ object Extensions {
            |FROM cent3 ORDER BY cell, dim""".stripMargin
       }) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val init = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
+      val init = Fixtures.codebook(emb)
       Similarity.kmeansIterate(emb, init, rounds = 3, scale = 6)
         .select(col("cell"), col("n_members"),
           posexplode(col("c_emb")).as(Seq("dim", "c_val")))
@@ -1960,7 +1919,7 @@ object Extensions {
     QueryDef.sql(
       "sim_silhouette",
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-         |cent AS (SELECT vec_id AS cell, emb AS ce FROM e WHERE vec_id < 16),
+         |${Fixtures.codebookCte},
          |d AS (
          |  SELECT e.vec_id, c.cell,
          |    ${roundN(s"1.0 - (${cosSql("e.emb", "c.ce")})", 6)} AS dd
@@ -1982,8 +1941,7 @@ object Extensions {
          |  CAST(SUM(CAST(sil AS DECIMAL(18,9))) AS DOUBLE) / COUNT(sil) AS mean_silhouette
          |FROM s GROUP BY cell ORDER BY cell""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
+      val centroids = Fixtures.codebook(emb)
       Similarity.silhouetteByCell(emb, centroids)
     },
 
@@ -2073,34 +2031,23 @@ object Extensions {
     // prune in SQL — the full 500-row annotation is hash-checked.
     QueryDef.sql(
       "dedup_semantic", {
-        def cos(a: String, b: String) =
-          s"CASE WHEN sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)) > 0" +
-            s" THEN list_dot_product($a,$b) / (sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)))" +
-            s" ELSE 0.0 END"
         s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-           |cent AS (SELECT vec_id AS cell, emb AS ce FROM e WHERE vec_id < 16),
-           |scored AS (
-           |  SELECT e.vec_id, e.emb, cent.cell, ${cos("e.emb", "ce")} AS sim
-           |  FROM e CROSS JOIN cent),
-           |assigned AS (
-           |  SELECT vec_id, emb, cell FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell ASC) AS rn
-           |    FROM scored) WHERE rn = 1),
+           |${Fixtures.codebookCte},
+           |${Fixtures.assignedCtes},
            |sized AS (
            |  SELECT *, COUNT(*) OVER (PARTITION BY cell) AS cn FROM assigned),
            |p AS (SELECT * FROM sized WHERE cn <= 512),
            |dropped AS (
            |  SELECT DISTINCT b.vec_id AS dup_id
            |  FROM p a JOIN p b ON a.cell = b.cell AND a.vec_id < b.vec_id
-           |  WHERE ${Det.roundNSql(cos("a.emb", "b.emb"), 6)} >= 0.3)
+           |  WHERE ${Det.roundNSql(cosSql("a.emb", "b.emb"), 6)} >= 0.3)
            |SELECT s.vec_id, s.cell,
            |  CAST(CASE WHEN d.dup_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_kept
            |FROM sized s LEFT JOIN dropped d ON s.vec_id = d.dup_id
            |ORDER BY s.vec_id""".stripMargin
       }) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
+      val centroids = Fixtures.codebook(emb)
       Similarity.semanticDedup(emb, centroids, threshold = 0.3)
         .orderBy("vec_id")
     },
@@ -2122,17 +2069,11 @@ object Extensions {
     QueryDef.sql(
       "sim_ivfpq_topk",
       s"""WITH $pqTrainCte,
-         |cent AS (SELECT vec_id AS cell, emb AS ce FROM e WHERE vec_id < 16),
+         |${Fixtures.codebookCte},
          |probes AS (
          |  SELECT cell FROM cent, q
          |  ORDER BY (${cosSql("ce", "qe")}) DESC, cell LIMIT 8),
-         |scored AS (
-         |  SELECT e.vec_id, e.emb, cent.cell, ${cosSql("e.emb", "ce")} AS sim
-         |  FROM e CROSS JOIN cent),
-         |assigned AS (
-         |  SELECT vec_id, emb, cell FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell ASC) AS rn
-         |    FROM scored) WHERE rn = 1),
+         |${Fixtures.assignedCtes},
          |members AS (
          |  SELECT a.vec_id AS id, a.emb FROM assigned a JOIN probes USING (cell)),
          |menc AS (
@@ -2152,8 +2093,7 @@ object Extensions {
          |FROM members m JOIN adc a ON m.id = a.id CROSS JOIN q
          |ORDER BY cosine DESC, vec_id LIMIT 11""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d).staged
-      val centroids = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
+      val centroids = Fixtures.codebook(emb)
       val assigned = Similarity.assignCells(emb, centroids)
       val cb = graft.operators.Pq.train(emb, m = 8, dims = 64, k = 16,
         iters = 2)
@@ -2171,33 +2111,23 @@ object Extensions {
     // whole chain, so composition itself is hash-checked end-to-end.
     QueryDef.sql(
       "t_corpus_pipeline", {
-        def hitsSql(ws: Seq[String]) =
-          raw"len(list_filter(str_split_regex(trim(lower(text)), '\s+'), t -> t IN (${ws.map(w => s"'$w'").mkString(", ")})))"
-        val m = TextFunctions.langMarkers.toMap
         raw"""WITH f AS (
            |  SELECT doc_id, text,
-           |    len(str_split_regex(trim(lower(text)), '\s+')) AS words,
+           |    len(${tokensSql("text")}) AS words,
            |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS punct,
            |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
-           |    ${hitsSql(TextFunctions.stopwordsEn)} AS stop_hits,
-           |    ${hitsSql(m("en"))} AS en, ${hitsSql(m("es"))} AS es,
-           |    ${hitsSql(m("de"))} AS de, ${hitsSql(m("fr"))} AS fr
+           |    ${hitsSql("text", TextFunctions.stopwordsEn)} AS stop_hits,
+           |    ${langHitsSql("text")}
            |  FROM documents),
            |g AS (
            |  SELECT doc_id, text, words, stop_hits,
            |    CASE WHEN words > 0 THEN ${roundN("chars * 1.0 / words", 2)} ELSE 0.0 END AS awl,
            |    punct * 1.0 / GREATEST(length(text), 1) AS punct_ratio,
-           |    CASE WHEN en >= es AND en >= de AND en >= fr THEN 'en'
-           |         WHEN es >= de AND es >= fr THEN 'es'
-           |         WHEN de >= fr THEN 'de' ELSE 'fr' END AS detected_lang
+           |    ${TextFunctions.langIdSql} AS detected_lang
            |  FROM f),
            |scored AS (
            |  SELECT doc_id, text, detected_lang,
-           |    GREATEST(0, 100
-           |      - CASE WHEN words < 5 THEN 40 ELSE 0 END
-           |      - CASE WHEN punct_ratio > 0.2 THEN 20 ELSE 0 END
-           |      - CASE WHEN awl < 3.0 OR awl > 12.0 THEN 20 ELSE 0 END
-           |      - CASE WHEN stop_hits = 0 THEN 20 ELSE 0 END) AS quality_score
+           |    ${TextFunctions.qualityScoreSql("words", "punct_ratio", "awl", "stop_hits")} AS quality_score
            |  FROM g),
            |kept AS (
            |  SELECT * FROM scored WHERE quality_score >= 90 AND detected_lang = 'en'),
@@ -2221,15 +2151,9 @@ object Extensions {
       val h = TextFunctions.langMarkers.map { case (l, _) => l -> col(s"hits_$l") }.toMap
       val scored = docs.join(feats, "doc_id")
         .select(col("doc_id"), col("text"),
-          when(h("en") >= h("es") && h("en") >= h("de") && h("en") >= h("fr"), "en")
-            .when(h("es") >= h("de") && h("es") >= h("fr"), "es")
-            .when(h("de") >= h("fr"), "de")
-            .otherwise("fr").as("detected_lang"),
-          greatest(lit(0), lit(100)
-            - when(wc < 5, 40).otherwise(0)
-            - when(punctRatio > 0.2, 20).otherwise(0)
-            - when(awl < 3.0 || awl > 12.0, 20).otherwise(0)
-            - when(col("stop_hits") === 0, 20).otherwise(0)).as("quality_score"))
+          TextFunctions.langId(h).as("detected_lang"),
+          TextFunctions.qualityScore(wc, punctRatio, awl, col("stop_hits"))
+            .as("quality_score"))
       val kept = scored
         .filter(col("quality_score") >= 90 && col("detected_lang") === "en")
       Dedup.exact(kept, "doc_id", "text")

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.engine.{Det, GoldEngagement, Pipeline, Scratch, SilverPosts, SilverUsers, Tables}
+import graft.functions.TextFunctions.{hitsSql, tokensSql}
 import graft.sources.Sources
 
 /** Queries exposing the medallion modules (Bronze/Silver/Gold/Pipeline)
@@ -56,14 +57,12 @@ object PipelineQueries {
     // body=text).
     QueryDef.sql(
       "q_silver_posts", {
-        def hits(ws: Seq[String]) =
-          raw"len(list_filter(str_split_regex(trim(lower(text)), '\s+'), t -> t IN (${ws.map(w => s"'$w'").mkString(", ")})))"
         raw"""WITH f AS (
              |  SELECT doc_id, source, text,
-             |    len(str_split_regex(trim(lower(text)), '\s+')) AS wc,
+             |    len(${tokensSql("text")}) AS wc,
              |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
-             |    ${hits(SilverPosts.positiveWords)} AS pos,
-             |    ${hits(SilverPosts.negativeWords)} AS neg
+             |    ${hitsSql("text", SilverPosts.positiveWords)} AS pos,
+             |    ${hitsSql("text", SilverPosts.negativeWords)} AS neg
              |  FROM documents)
              |SELECT doc_id, length(source) AS title_length,
              |  length(text) AS body_length, CAST(wc AS BIGINT) AS word_count,
@@ -445,7 +444,7 @@ object PipelineQueries {
   private def engagementOracleSql: String =
       raw"""WITH f AS (
            |  SELECT doc_id, length(text) AS body_length,
-           |    len(str_split_regex(trim(lower(text)), '\s+')) AS word_count
+           |    len(${tokensSql("text")}) AS word_count
            |  FROM documents),
            |posts AS (
            |  SELECT CAST(doc_id % ${GoldEngagement.nUsers} + 1 AS BIGINT) AS user_id,

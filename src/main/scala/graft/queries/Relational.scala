@@ -217,9 +217,12 @@ object Relational {
           .crossJoin(Tables.lineitem(s, d).agg(count(lit(1)).as("lineitems")))
     },
 
-    // J4 broadcast dim-lookup join: fact orders → small dim chain
-    // customer⋈nation⋈region, broadcast so the 100TB fact side never
-    // shuffles. Ref: model_gold.py:492-493 (map-side lookup).
+    // J4 dim-lookup join: fact orders → small dim chain
+    // customer⋈nation⋈region. No broadcast hint: the optimizer estimates
+    // the chain as a product of its inputs (2.7 GB at sf0.001), so
+    // BroadcastGuard strips any hint on it at every lake size; AQE
+    // broadcasts the dim from its runtime size instead.
+    // Ref: model_gold.py:492-493 (map-side lookup).
     QueryDef.sql(
       "j4_broadcast_lookup",
       """SELECT r.r_name AS region_name, COUNT(*) AS n_orders,
@@ -234,7 +237,7 @@ object Relational {
         .join(Tables.region(s, d), col("n_regionkey") === col("r_regionkey"))
         .select(col("c_custkey"), col("r_name").as("region_name"))
       Tables.orders(s, d)
-        .join(broadcast(dim), col("o_custkey") === col("c_custkey"))
+        .join(dim, col("o_custkey") === col("c_custkey"))
         .groupBy("region_name")
         .agg(count(lit(1)).as("n_orders"),
           Det.dsum(col("o_totalprice")).as("total_price"))

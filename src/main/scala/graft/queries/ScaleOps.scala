@@ -1211,22 +1211,12 @@ object ScaleOps {
     // Stage-cut lineage.
     QueryDef.sql(
       "g_pagerank",
-      s"""WITH nd AS (SELECT doc_id FROM documents),
-         |cnt AS (SELECT COUNT(*) AS n FROM nd),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * p + j) % cnt.n AS dst
-         |  FROM nd, cnt, (VALUES (1, 31), (2, 97), (3, 211)) m(j, p)),
-         |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
+      s"""WITH ${Fixtures.linkGraphCtes("e")},
          |${Graph.pagerankSql("doc_id", iterations = 3)}
          |SELECT id AS doc_id, pr AS pagerank
          |FROM pr3 ORDER BY doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"))
-      val n = docs.agg(count(lit(1)).as("__en"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"), explode(array(
-          (col("doc_id") * 31 + 1) % col("__en"),
-          (col("doc_id") * 97 + 2) % col("__en"),
-          (col("doc_id") * 211 + 3) % col("__en"))).as("dst"))
+      val edges = Fixtures.linkGraph(docs)
       Graph.pagerank(docs, edges, "doc_id", iterations = 3)
         .orderBy("doc_id")
     },
@@ -1241,22 +1231,12 @@ object ScaleOps {
     // graph.
     QueryDef.sql(
       "g_triangle_count",
-      s"""WITH nd AS (SELECT doc_id FROM documents),
-         |cnt AS (SELECT COUNT(*) AS n FROM nd),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * p + j) % cnt.n AS dst
-         |  FROM nd, cnt, (VALUES (1, 31), (2, 97), (3, 211)) m(j, p)),
-         |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
+      s"""WITH ${Fixtures.linkGraphCtes("e")},
          |${Graph.triangleCountsSql("doc_id")}
          |SELECT id AS doc_id, triangles
          |FROM tc ORDER BY doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"))
-      val n = docs.agg(count(lit(1)).as("__en"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"), explode(array(
-          (col("doc_id") * 31 + 1) % col("__en"),
-          (col("doc_id") * 97 + 2) % col("__en"),
-          (col("doc_id") * 211 + 3) % col("__en"))).as("dst"))
+      val edges = Fixtures.linkGraph(docs)
       Graph.triangleCounts(docs, edges, "doc_id")
         .orderBy("doc_id")
     },
@@ -1437,23 +1417,13 @@ object ScaleOps {
     // CTEs, divisions included.
     QueryDef.sql(
       "g_betweenness",
-      s"""WITH nd AS (SELECT doc_id FROM documents),
-         |cnt AS (SELECT COUNT(*) AS n FROM nd),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * p + j) % cnt.n AS dst
-         |  FROM nd, cnt, (VALUES (1, 31), (2, 97), (3, 211)) m(j, p)),
-         |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
+      s"""WITH ${Fixtures.linkGraphCtes("e")},
          |${Graph.betweennessSql("doc_id", "doc_id % 100 = 0", depth = 3)}
          |SELECT nd.doc_id, ${Det.roundNSql("COALESCE(bc.b, 0.0)", 6)} AS betweenness
          |FROM nd LEFT JOIN bc ON bc.id = nd.doc_id
          |ORDER BY nd.doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"))
-      val n = docs.agg(count(lit(1)).as("__en"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"), explode(array(
-          (col("doc_id") * 31 + 1) % col("__en"),
-          (col("doc_id") * 97 + 2) % col("__en"),
-          (col("doc_id") * 211 + 3) % col("__en"))).as("dst"))
+      val edges = Fixtures.linkGraph(docs)
       Graph.betweenness(docs, edges, "doc_id",
           isSource = col("doc_id") % 100 === 0, depth = 3)
         .orderBy("doc_id")
@@ -1465,23 +1435,13 @@ object ScaleOps {
     // broker (betweenness), proximity (harmonic).
     QueryDef.sql(
       "g_harmonic",
-      s"""WITH nd AS (SELECT doc_id FROM documents),
-         |cnt AS (SELECT COUNT(*) AS n FROM nd),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * p + j) % cnt.n AS dst
-         |  FROM nd, cnt, (VALUES (1, 31), (2, 97), (3, 211)) m(j, p)),
-         |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
+      s"""WITH ${Fixtures.linkGraphCtes("e")},
          |${Graph.harmonicSql("doc_id", "doc_id % 100 = 0", depth = 4)}
          |SELECT nd.doc_id, ${Det.roundNSql("COALESCE(hc.h, 0.0)", 6)} AS harmonic
          |FROM nd LEFT JOIN hc ON hc.id = nd.doc_id
          |ORDER BY nd.doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"))
-      val n = docs.agg(count(lit(1)).as("__en"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"), explode(array(
-          (col("doc_id") * 31 + 1) % col("__en"),
-          (col("doc_id") * 97 + 2) % col("__en"),
-          (col("doc_id") * 211 + 3) % col("__en"))).as("dst"))
+      val edges = Fixtures.linkGraph(docs)
       Graph.harmonicFromSources(docs, edges, "doc_id",
           isSource = col("doc_id") % 100 === 0, depth = 4)
         .orderBy("doc_id")
@@ -1494,23 +1454,13 @@ object ScaleOps {
     // top-50 by propagated relevance.
     QueryDef.sql(
       "g_personalized_pagerank",
-      s"""WITH nd AS (SELECT doc_id FROM documents),
-         |cnt AS (SELECT COUNT(*) AS n FROM nd),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * p + j) % cnt.n AS dst
-         |  FROM nd, cnt, (VALUES (1, 31), (2, 97), (3, 211)) m(j, p)),
-         |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
+      s"""WITH ${Fixtures.linkGraphCtes("e")},
          |${Graph.personalizedPagerankSql("doc_id", "doc_id % 100 = 0",
             iterations = 3)}
          |SELECT id AS doc_id, pr AS ppr
          |FROM pr3 ORDER BY ppr DESC, doc_id LIMIT 50""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"))
-      val n = docs.agg(count(lit(1)).as("__en"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"), explode(array(
-          (col("doc_id") * 31 + 1) % col("__en"),
-          (col("doc_id") * 97 + 2) % col("__en"),
-          (col("doc_id") * 211 + 3) % col("__en"))).as("dst"))
+      val edges = Fixtures.linkGraph(docs)
       Graph.personalizedPagerank(docs, edges, "doc_id",
           isSource = col("doc_id") % 100 === 0, iterations = 3)
         .orderBy(desc("ppr"), col("doc_id"))
@@ -1526,12 +1476,7 @@ object ScaleOps {
     // hash-checked.
     QueryDef.sql(
       "g_label_propagation",
-      s"""WITH nd AS (SELECT doc_id FROM documents),
-         |cnt AS (SELECT COUNT(*) AS n FROM nd),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * p + j) % cnt.n AS dst
-         |  FROM nd, cnt, (VALUES (1, 31), (2, 97), (3, 211)) m(j, p)),
-         |ed AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
+      s"""WITH ${Fixtures.linkGraphCtes("ed")},
          |es AS (SELECT DISTINCT src, dst FROM (
          |  SELECT src, dst FROM ed UNION ALL SELECT dst AS src, src AS dst FROM ed)),
          |${Graph.labelPropagationSql("doc_id", rounds = 3)}
@@ -1539,12 +1484,7 @@ object ScaleOps {
          |  COUNT(*) OVER (PARTITION BY label) AS community_size
          |FROM l3 ORDER BY doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"))
-      val n = docs.agg(count(lit(1)).as("__en"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"), explode(array(
-          (col("doc_id") * 31 + 1) % col("__en"),
-          (col("doc_id") * 97 + 2) % col("__en"),
-          (col("doc_id") * 211 + 3) % col("__en"))).as("dst"))
+      val edges = Fixtures.linkGraph(docs)
       Graph.labelPropagation(docs, edges, "doc_id", rounds = 3)
         .orderBy("doc_id")
     },
@@ -1924,22 +1864,12 @@ object ScaleOps {
     // accumulator pattern instead of a fixed depth).
     QueryDef.sql(
       "g_bfs_distance",
-      s"""WITH nd AS (SELECT doc_id FROM documents),
-         |cnt AS (SELECT COUNT(*) AS n FROM nd),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * p + j) % cnt.n AS dst
-         |  FROM nd, cnt, (VALUES (1, 31), (2, 97), (3, 211)) m(j, p)),
-         |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
+      s"""WITH ${Fixtures.linkGraphCtes("e")},
          |${Graph.bfsSql("doc_id", "doc_id % 97 = 0", rounds = 4)}
          |SELECT id AS doc_id, dist
          |FROM d4 ORDER BY doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"))
-      val n = docs.agg(count(lit(1)).as("__en"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"), explode(array(
-          (col("doc_id") * 31 + 1) % col("__en"),
-          (col("doc_id") * 97 + 2) % col("__en"),
-          (col("doc_id") * 211 + 3) % col("__en"))).as("dst"))
+      val edges = Fixtures.linkGraph(docs)
       Graph.bfs(docs, edges, "doc_id", col("doc_id") % 97 === 0, rounds = 4)
         .orderBy("doc_id")
     },
@@ -1952,22 +1882,12 @@ object ScaleOps {
     // unrolled-CTE oracle replays the identical peel.
     QueryDef.sql(
       "g_kcore",
-      s"""WITH nd AS (SELECT doc_id FROM documents),
-         |cnt AS (SELECT COUNT(*) AS n FROM nd),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * p + j) % cnt.n AS dst
-         |  FROM nd, cnt, (VALUES (1, 31), (2, 97), (3, 211)) m(j, p)),
-         |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
+      s"""WITH ${Fixtures.linkGraphCtes("e")},
          |${Graph.kcoreSql(k = 4, rounds = 6)}
          |SELECT id AS doc_id, core_deg
          |FROM kc ORDER BY doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"))
-      val n = docs.agg(count(lit(1)).as("__en"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"), explode(array(
-          (col("doc_id") * 31 + 1) % col("__en"),
-          (col("doc_id") * 97 + 2) % col("__en"),
-          (col("doc_id") * 211 + 3) % col("__en"))).as("dst"))
+      val edges = Fixtures.linkGraph(docs)
       Graph.kcore(docs, edges, "doc_id", k = 4, rounds = 6)
         .orderBy("doc_id")
     },
@@ -1979,12 +1899,7 @@ object ScaleOps {
     // degree the formula needs.
     QueryDef.sql(
       "g_clustering_coeff",
-      s"""WITH nd AS (SELECT doc_id FROM documents),
-         |cnt AS (SELECT COUNT(*) AS n FROM nd),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * p + j) % cnt.n AS dst
-         |  FROM nd, cnt, (VALUES (1, 31), (2, 97), (3, 211)) m(j, p)),
-         |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
+      s"""WITH ${Fixtures.linkGraphCtes("e")},
          |${Graph.triangleCountsSql("doc_id")}
          |SELECT tc.id AS doc_id, triangles,
          |  COALESCE(deg.d, 0) AS degree,
@@ -1995,12 +1910,7 @@ object ScaleOps {
          |FROM tc LEFT JOIN deg ON deg.v = tc.id
          |ORDER BY doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"))
-      val n = docs.agg(count(lit(1)).as("__en"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"), explode(array(
-          (col("doc_id") * 31 + 1) % col("__en"),
-          (col("doc_id") * 97 + 2) % col("__en"),
-          (col("doc_id") * 211 + 3) % col("__en"))).as("dst"))
+      val edges = Fixtures.linkGraph(docs)
         .staged
       val canon = edges.filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("a"),
@@ -2026,23 +1936,13 @@ object ScaleOps {
     // edge set — the "suggested connections" primitive.
     QueryDef.sql(
       "g_link_prediction",
-      s"""WITH nd AS (SELECT doc_id FROM documents),
-         |cnt AS (SELECT COUNT(*) AS n FROM nd),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * p + j) % cnt.n AS dst
-         |  FROM nd, cnt, (VALUES (1, 31), (2, 97), (3, 211)) m(j, p)),
-         |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
+      s"""WITH ${Fixtures.linkGraphCtes("e")},
          |${Graph.commonNeighborsSql}
          |SELECT u, v, cn FROM lp
          |ORDER BY cn DESC, u, v
          |LIMIT 100""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"))
-      val n = docs.agg(count(lit(1)).as("__en"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"), explode(array(
-          (col("doc_id") * 31 + 1) % col("__en"),
-          (col("doc_id") * 97 + 2) % col("__en"),
-          (col("doc_id") * 211 + 3) % col("__en"))).as("dst"))
+      val edges = Fixtures.linkGraph(docs)
       Graph.commonNeighbors(edges, topK = 100)
     },
 

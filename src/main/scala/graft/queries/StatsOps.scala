@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.engine.{Det, Tables}
 import graft.engine.Stage.syntax._
-import graft.operators.{Hilbert, ZOrder}
+import graft.operators.{Hilbert, Similarity, ZOrder}
+import graft.functions.TextFunctions.tokensSql
 
 /** Statistical / experimentation operators over the event and order
   * streams: survival analysis, resampling inference, independence tests,
@@ -25,6 +26,8 @@ import graft.operators.{Hilbert, ZOrder}
 object StatsOps {
 
   private val roundN = Det.roundNSql _
+
+  private val cosSql = Similarity.cosineOracleSql _
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -319,7 +322,7 @@ object StatsOps {
     QueryDef.sql(
       "t_zipf_fit",
       raw"""WITH t AS (
-         |  SELECT unnest(str_split_regex(trim(lower(text)), '\s+')) AS term
+         |  SELECT unnest(${tokensSql("text")}) AS term
          |  FROM documents),
          |f AS (SELECT term, COUNT(*) AS freq FROM t WHERE term <> ''
          |      GROUP BY 1),
@@ -980,28 +983,17 @@ object StatsOps {
     // intersection counts in SQL.
     QueryDef.sql(
       "sim_ann_recall", {
-        def cos(a: String, b: String) =
-          s"CASE WHEN sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)) > 0" +
-            s" THEN list_dot_product($a,$b) / (sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)))" +
-            s" ELSE 0.0 END"
         s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
            |q AS (SELECT emb AS qe FROM e WHERE vec_id = 0),
-           |cent AS (SELECT vec_id AS cell, emb AS ce FROM e WHERE vec_id < 16),
-           |scored AS (
-           |  SELECT e.vec_id, e.emb, cent.cell, ${cos("e.emb", "ce")} AS sim
-           |  FROM e CROSS JOIN cent),
-           |assigned AS (
-           |  SELECT vec_id, emb, cell FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY sim DESC, cell ASC) AS rn
-           |    FROM scored) WHERE rn = 1),
+           |${Fixtures.codebookCte},
+           |${Fixtures.assignedCtes},
            |rc AS (
-           |  SELECT cell, row_number() OVER (ORDER BY (${cos("ce", "qe")})
+           |  SELECT cell, row_number() OVER (ORDER BY (${cosSql("ce", "qe")})
            |    DESC, cell) AS cr
            |  FROM cent, q),
            |exact AS (
            |  SELECT vec_id FROM e, q
-           |  ORDER BY ${roundN(cos("emb", "qe"), 6)} DESC, vec_id LIMIT 11),
+           |  ORDER BY ${roundN(cosSql("emb", "qe"), 6)} DESC, vec_id LIMIT 11),
            |probes(np) AS (VALUES (1), (2), (4)),
            |cand AS (
            |  SELECT p.np, a.vec_id, a.emb
@@ -1010,7 +1002,7 @@ object StatsOps {
            |ivf AS (
            |  SELECT np, vec_id FROM (
            |    SELECT c.np, c.vec_id, row_number() OVER (PARTITION BY c.np
-           |      ORDER BY ${roundN(cos("c.emb", "qe"), 6)} DESC, c.vec_id)
+           |      ORDER BY ${roundN(cosSql("c.emb", "qe"), 6)} DESC, c.vec_id)
            |      AS rn
            |    FROM cand c, q) WHERE rn <= 11),
            |hits AS (
@@ -1026,12 +1018,10 @@ object StatsOps {
            |ORDER BY n_probe""".stripMargin
       }) { (s, d) =>
       import graft.engine.Stage.syntax._
-      import graft.operators.Similarity
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") === 0)
         .select(col("embedding").as("q_emb"))
-      val cent = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
+      val cent = Fixtures.codebook(emb)
       // index-build once (the at-rest partitioning), reused by all probes
       val assigned = Similarity.assignCells(emb, cent).staged
       val exact = Similarity.bruteForceTopK(emb, q, 11).select("vec_id")
@@ -1155,15 +1145,11 @@ object StatsOps {
     // (one pass, map-side); means decimal-routed.
     QueryDef.sql(
       "sim_ood_report", {
-        def cos(a: String, b: String) =
-          s"CASE WHEN sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)) > 0" +
-            s" THEN list_dot_product($a,$b) / (sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)))" +
-            s" ELSE 0.0 END"
         s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
            |           FROM embeddings),
-           |cent AS (SELECT vec_id AS cell, emb AS ce FROM e WHERE vec_id < 16),
+           |${Fixtures.codebookCte},
            |best AS (
-           |  SELECT e.vec_id, e.label, MAX(${cos("e.emb", "ce")}) AS best_sim
+           |  SELECT e.vec_id, e.label, MAX(${cosSql("e.emb", "ce")}) AS best_sim
            |  FROM e CROSS JOIN cent GROUP BY 1, 2)
            |SELECT label, COUNT(*) AS n,
            |  CAST(COUNT(CASE WHEN best_sim < 0.25 THEN 1 END) AS BIGINT)
@@ -1177,8 +1163,7 @@ object StatsOps {
       graft.expressions.GraftFunctions.register(s)
       import graft.expressions.GraftFunctions.cosine_sim
       val emb = Tables.embeddings(s, d)
-      val cent = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
+      val cent = Fixtures.codebook(emb)
       val best = emb.crossJoin(broadcast(cent))
         .groupBy("vec_id", "label")
         .agg(max(cosine_sim(col("embedding"), col("c_emb"))).as("best_sim"))
@@ -1449,14 +1434,10 @@ object StatsOps {
     // from the assignment relation alone.
     QueryDef.sql(
       "sim_ivf_balance", {
-        def cos(a: String, b: String) =
-          s"CASE WHEN sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)) > 0" +
-            s" THEN list_dot_product($a,$b) / (sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)))" +
-            s" ELSE 0.0 END"
         s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-           |cent AS (SELECT vec_id AS cell, emb AS ce FROM e WHERE vec_id < 16),
+           |${Fixtures.codebookCte},
            |scored AS (
-           |  SELECT e.vec_id, cent.cell, ${cos("e.emb", "ce")} AS sim
+           |  SELECT e.vec_id, cent.cell, ${cosSql("e.emb", "ce")} AS sim
            |  FROM e CROSS JOIN cent),
            |assigned AS (
            |  SELECT vec_id, cell FROM (
@@ -1480,10 +1461,8 @@ object StatsOps {
            |   WHERE members * n_cells > 2 * total) AS n_split_candidates
            |FROM stats""".stripMargin
       }) { (s, d) =>
-      import graft.operators.Similarity
       val emb = Tables.embeddings(s, d)
-      val cent = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
+      val cent = Fixtures.codebook(emb)
       val sizes = Similarity.assignCells(emb, cent)
         .groupBy("cell").agg(count(lit(1)).as("members"))
       val stats = sizes.agg(count(lit(1)).as("n_cells"),
@@ -1877,8 +1856,8 @@ object StatsOps {
     QueryDef.sql(
       "t_linear_probe", {
         val x1 = "n_chars / 1000.0"
-        val x2 = "len(str_split_regex(trim(lower(text)), '\\s+')) / 100.0"
-        val x3 = "length(text) / (1.0 + len(str_split_regex(trim(lower(text)), '\\s+')))/ 10.0"
+        val x2 = s"len(${tokensSql("text")}) / 100.0"
+        val x3 = s"length(text) / (1.0 + len(${tokensSql("text")}))/ 10.0"
         s"""WITH f AS (
            |  SELECT doc_id, $x1 AS x1, $x2 AS x2, $x3 AS x3,
            |    CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y
@@ -2038,7 +2017,7 @@ object StatsOps {
          |  SELECT doc_id, generate_subscripts(parts, 1) - 1 AS pos,
          |    unnest(parts) AS term
          |  FROM (SELECT doc_id,
-         |          str_split_regex(trim(lower(text)), '\s+') AS parts
+         |          ${tokensSql("text")} AS parts
          |        FROM documents)),
          |sp AS (
          |  SELECT doc_id, pos, term, pos // 3 AS span_id,

@@ -83,7 +83,7 @@ object TpchOps {
           .filter(col("p_size") <= 10 && col("p_type") === "LARGE")
           .select("p_partkey", "p_name")),
           col("l_partkey") === col("p_partkey"))
-        .join(broadcast(rs), col("l_suppkey") === col("s_suppkey"))
+        .join(rs, col("l_suppkey") === col("s_suppkey"))
         .select(col("p_partkey"), col("p_name"), col("s_name"), col("n_name"),
           Det.roundN(col("s_acctbal"), 2).as("s_acctbal"), col("cost"))
         .orderBy(desc("s_acctbal"), col("n_name"), col("s_name"),

@@ -14,19 +14,17 @@ class BroadcastGuardSpec extends AnyFunSuite {
 
   test("oversized broadcast hint is stripped; a genuinely small one survives") {
     val probe = spark.range(10).toDF("k2")
-    spark.conf.set("spark.graft.broadcastGuard.maxBytes", "1000")
-    try {
-      // ~800 KB estimated — far over the 1000-byte cap: hint must go
-      val big = spark.range(100000).toDF("k")
-      val stripped = joinHint(probe.join(broadcast(big), col("k2") === col("k")))
-      assert(stripped.rightHint.forall(_.strategy.isEmpty),
-        s"oversized hint survived: $stripped")
-      // 5 rows — under the cap: hint must be honored untouched
-      val small = spark.range(5).toDF("k")
-      val kept = joinHint(probe.join(broadcast(small), col("k2") === col("k")))
-      assert(kept.rightHint.exists(_.strategy.contains(BROADCAST)),
-        s"small hint lost: $kept")
-    } finally spark.conf.unset("spark.graft.broadcastGuard.maxBytes")
+    // 2^28 longs, estimated at 2 GiB — over the 1 GiB cap: hint must go.
+    // Only the optimized plan is inspected; nothing executes.
+    val big = spark.range(1L << 28).toDF("k")
+    val stripped = joinHint(probe.join(broadcast(big), col("k2") === col("k")))
+    assert(stripped.rightHint.forall(_.strategy.isEmpty),
+      s"oversized hint survived: $stripped")
+    // 5 rows — under the cap: hint must be honored untouched
+    val small = spark.range(5).toDF("k")
+    val kept = joinHint(probe.join(broadcast(small), col("k2") === col("k")))
+    assert(kept.rightHint.exists(_.strategy.contains(BROADCAST)),
+      s"small hint lost: $kept")
   }
 
   test("with the default 1 GiB cap, ordinary dimension broadcasts pass through") {

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 import graft.engine.Session
@@ -50,12 +51,21 @@ class SessionSpec extends AnyFunSuite {
 
   test("a factory session strips an oversized broadcast hint before any similarity query") {
     fromFactory { s =>
-      s.conf.set("spark.graft.broadcastGuard.maxBytes", "1000")
       val probe = s.range(10).toDF("k2")
-      val big = s.range(100000).toDF("k")
+      // estimated at 2 GiB, over the 1 GiB cap; the plan never executes
+      val big = s.range(1L << 28).toDF("k")
       val hint = probe.join(broadcast(big), col("k2") === col("k"))
         .queryExecution.optimizedPlan.collectFirst { case j: Join => j.hint }.get
       assert(hint.rightHint.forall(_.strategy.isEmpty), s"hint survived: $hint")
+    }
+  }
+
+  test("registering again keeps the bound native functions, unreplaced") {
+    fromFactory { s =>
+      val registry = s.sessionState.functionRegistry
+      val before = registry.lookupFunction(FunctionIdentifier("cosine_sim")).get
+      GraftFunctions.register(s)
+      assert(registry.lookupFunction(FunctionIdentifier("cosine_sim")).get eq before)
     }
   }
 
