@@ -1,0 +1,141 @@
+#!/usr/bin/env bash
+# Refactor check: a change that must move no Spark plan and no oracle text
+# is compared against a parent revision, query by query.
+#
+# For a `git archive` checkout of <parent-rev> and for this working tree it
+#   - dumps oracle_sql.json (a one-query Verify at sf0.001 still writes the
+#     full map) and counts identical and whitespace-only entries, listing
+#     the names that differ otherwise;
+#   - runs `PROFILE_PLAN=1 graft.tools.Profile <sf> 1 [query…]` and compares
+#     each query's formatted plan, with expression ids (#123), plan_id=,
+#     RDD ids, scratch paths and lambda addresses masked;
+#   - compares each query's Profile jobs, stages and tasks counts, rerunning
+#     the queries whose counts differ twice per side.
+# It exits nonzero on any difference in a query outside the allow-list.
+#
+# Usage: scripts/refactor_check.sh [--allow q1,q2] [--stage-none]
+#          [--work DIR] <parent-rev> [sf] [query…]
+#   sf           a name under /root/testdata or a path (default sf0.01)
+#   --stage-none plans with spark.graft.stage.mode=none, so staged
+#                subtrees show in the plans
+#   --work       where the parent checkout and the outputs go (default
+#                /tmp/refactor_check); the parent's outputs are kept per
+#                revision, sf and mode, so a rerun only runs this tree
+set -uo pipefail
+cd "$(dirname "$0")/.."
+tree=$PWD
+allow="" mode=local work=/tmp/refactor_check
+while [ $# -gt 0 ]; do
+  case "$1" in
+    --allow) allow=$2; shift 2 ;;
+    --stage-none) mode=none; shift ;;
+    --work) work=$2; shift 2 ;;
+    *) break ;;
+  esac
+done
+[ $# -ge 1 ] || { sed -n '2,23p' "$0" >&2; exit 2; }
+rev=$(git rev-parse --verify "$1^{commit}") || exit 2
+sf=${2:-sf0.01}
+shift $(( $# >= 2 ? 2 : 1 ))
+case "$sf" in */*) sfdir=$sf ;; *) sfdir=/root/testdata/$sf ;; esac
+parent=$work/$rev
+if [ ! -d "$parent/src" ]; then
+  mkdir -p "$parent" && git archive "$rev" | tar -x -C "$parent" || exit 2
+fi
+
+# run <checkout> <outDir>: the oracle dump and the plan profile
+run() {
+  local dir=$1 out=$2
+  shift 2
+  rm -rf "$out" && mkdir -p "$out"
+  (cd "$dir" && PROFILE_PLAN=1 sbt -batch \
+    "set javaOptions += \"-Dspark.graft.stage.mode=$mode\"" \
+    "runMain graft.Verify /root/testdata/sf0.001 $out/verify q1_pricing_summary" \
+    "runMain graft.tools.Profile $sfdir 1 $*" >"$out/profile.log" 2>&1) \
+    || { echo "FAIL: sbt failed in $dir, see $out/profile.log"; exit 1; }
+}
+key=$(basename "$sfdir")-$mode-$(echo "$*" | md5sum | cut -c1-8)
+[ -s "$parent/out/$key/profile.log" ] || run "$parent" "$parent/out/$key" "$@"
+run "$tree" "$work/tree/$key" "$@"
+
+# compare <allow> <parent out,…> <tree out,…>: exits 3 with a RECHECK line
+# when first-run job counts differ and only one run per side was given
+compare() {
+WORK_DIR=$work python3 - "$@" <<'PY'
+import json, os, re, sys
+allow = set(filter(None, sys.argv[1].split(",")))
+olds, news = sys.argv[2].split(","), sys.argv[3].split(",")
+old, new = olds[0], news[0]
+norm = lambda s: re.sub(r"\s+", " ", s).strip()
+a, b = (json.load(open(f"{d}/verify/oracle_sql.json")) for d in (old, new))
+diff = sorted(set(a) ^ set(b)) + [k for k in a if k in b and norm(a[k]) != norm(b[k])]
+print("oracle: identical", sum(a[k] == b.get(k) for k in a),
+      "whitespace-only", sum(k in b and a[k] != b[k] and norm(a[k]) == norm(b[k]) for k in a),
+      "different", diff)
+
+MASKS = [(r"#\d+L?", "#"), (r"plan_id=\d+", "plan_id="),
+         (r"(/tmp|%s)/[\w./-]*" % re.escape(os.environ["WORK_DIR"]), "<scratch>"),
+         (r"\$\$?Lambda[\w$/.@]*", "<lambda>"), (r"@[0-9a-f]{6,}", "@"),
+         (r"RDD\[\d+\]", "RDD[]")]
+def profile(d):
+    plans, counts, cur = {}, {}, None
+    for line in open(f"{d}/profile.log", errors="replace"):
+        if not line.startswith("[info] "):  # stderr: Spark's log lines
+            continue
+        line = line[7:].rstrip("\n")
+        m = re.match(r"==== (\S+) ====$", line)
+        if m:
+            cur = m.group(1); plans[cur] = []; continue
+        if line.startswith("[profile] "):
+            cur = None
+        elif line.startswith('{"query"'):
+            j = json.loads(line)
+            counts[j["query"]] = tuple(j.get(k) for k in ("jobs", "stages", "tasks")) \
+                if "error" not in j else ("error", j["error"])
+        elif cur:
+            for p, r in MASKS:
+                line = re.sub(p, r, line)
+            plans[cur].append(line)
+    return plans, counts
+(pa, ca), (pb, cb) = profile(old), profile(new)
+plan_diff = sorted(q for q in set(pa) | set(pb) if pa.get(q) != pb.get(q))
+print(f"plans: {len(pa)} parent, {len(pb)} tree; different {plan_diff}")
+# some queries' job counts vary between runs of the same code (by up to
+# three jobs), so a count differs only if the tree's runs fall outside
+# the range of the parent's runs
+first = sorted(q for q in set(ca) | set(cb) if ca.get(q) != cb.get(q))
+if first and len(olds) == 1:
+    print("RECHECK", *first)
+    sys.exit(3)
+seen = lambda dirs: {q: [profile(d)[1].get(q) for d in dirs] for q in first}
+sa, sb = seen(olds), seen(news)
+def apart(x, y):
+    if None in x + y or any(t[0] == "error" for t in x + y):
+        return x != y
+    return any(min(t[i] for t in y) > max(t[i] for t in x) or
+               max(t[i] for t in y) < min(t[i] for t in x) for i in range(3))
+count_diff = [q for q in first if apart(sa[q], sb[q])]
+for q in first:
+    print(f"  jobs/stages/tasks {q}: parent {sa[q]} tree {sb[q]}")
+print(f"counts: {len(ca)} parent, {len(cb)} tree; different {count_diff}")
+bad = (set(diff) | set(plan_diff) | set(count_diff)) - allow
+if not ca or not cb:
+    bad.add("<no profile lines>")
+print("FAIL outside allow-list:" if bad else "OK", *sorted(bad))
+sys.exit(1 if bad else 0)
+PY
+}
+out=$(compare "$allow" "$parent/out/$key" "$work/tree/$key")
+status=$?
+echo "$out" | grep -v '^RECHECK'
+[ $status -eq 3 ] || exit $status
+# rerun the queries whose job counts differed, twice per side
+recheck=$(echo "$out" | sed -n 's/^RECHECK //p')
+echo "rechecking job counts: $recheck"
+olds="$parent/out/$key" news="$work/tree/$key"
+for i in 1 2; do
+  run "$parent" "$work/recheck/parent$i" $recheck
+  run "$tree" "$work/recheck/tree$i" $recheck
+  olds+=",$work/recheck/parent$i" news+=",$work/recheck/tree$i"
+done
+compare "$allow" "$olds" "$news" | grep -v '^oracle\|^plans'

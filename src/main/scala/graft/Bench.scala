@@ -92,9 +92,9 @@ object Bench {
     val spark = graft.engine.Session.local()
     // ambient-load snapshot BEFORE any work: a loaded machine or leftover
     // sibling JVMs are this box's known way to poison a run 6-25x
-    // (BENCH_r06 read 857s for a 130s suite). Recorded into the artifact
-    // so a poisoned number self-identifies instead of reading as a
-    // regression.
+    // (history/BENCH_r06.json read 857s for a 130s suite). Recorded into
+    // the artifact so a poisoned number self-identifies instead of reading
+    // as a regression.
     val loadBefore = loadAvg()
     val load5Before = loadAvg(1)
     val siblingsBefore = siblingJvms()
@@ -210,11 +210,12 @@ object Bench {
     // self-CLEANING: a contaminated pass (host load poisoned the timed
     // region) is re-run in full, up to 2 retries — the round's artifact of
     // record should carry clean numbers, not a flag a judge has to
-    // cross-read against docs (BENCH_r09 shipped retime ratio 4.82 and its
-    // real numbers lived in ARCHITECTURE.md). Later passes are warm-JVM,
-    // which is exactly what the retime self-defense already certifies as
-    // the comparable regime. If every attempt is contaminated, the LAST
-    // pass ships, still flagged — honesty over retries.
+    // cross-read against docs (history/BENCH_r09.json shipped retime
+    // ratio 4.82 and its real numbers lived in ARCHITECTURE.md). Later
+    // passes are warm-JVM, which is exactly what the retime self-defense
+    // already certifies as the comparable regime. If every attempt is
+    // contaminated, the LAST pass ships, still flagged — honesty over
+    // retries.
     val maxAttempts =
       sys.env.get("SPARK_GRAFT_BENCH_RETRIES").map(_.toInt + 1).getOrElse(3)
     val hostCpus = Runtime.getRuntime.availableProcessors()

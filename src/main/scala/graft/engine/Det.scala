@@ -92,6 +92,19 @@ object Det {
     s"FLOOR(($e) * $p + 0.5) / $p"
   }
 
+  private val UsPerDay = 86400000000L
+
+  /** The UTC epoch day of the timestamp `ts`: floor(micros / day), so a
+    * pre-1970 instant lands on its own (negative) day — the oracle's `//`.
+    * Spark's `div` truncates toward zero and would put 1969-12-31T23:00Z
+    * on day 0. Mirror with [[epochDaySql]]. */
+  def epochDay(ts: Column): Column = {
+    val us = unix_micros(ts)
+    ((us - pmod(us, lit(UsPerDay))).divide(lit(UsPerDay))).cast("long")
+  }
+
+  def epochDaySql(ts: String): String = s"epoch_us($ts) // $UsPerDay"
+
   /** Cross-engine deterministic 56-bit hash of a string column.
     *
     * Spark's fast hashes (xxhash64, murmur) don't exist in other engines,

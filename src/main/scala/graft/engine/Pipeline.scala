@@ -48,8 +48,7 @@ final class Pipeline(spark: SparkSession, lakeDir: String) {
     * of clobbering each other. */
   def upsertBatch(df: DataFrame, layer: String, table: String,
       dateCol: String, batchId: Long): Unit =
-    overwritePartitions(df.withColumn("batch_id", lit(batchId)),
-      path(layer, table), dateCol, "batch_id")
+    Pipeline.overwriteBatch(df, path(layer, table), batchId, dateCol)
 
   def read(layer: String, table: String): DataFrame =
     spark.read.parquet(path(layer, table))
@@ -436,6 +435,14 @@ object Pipeline {
       .write.mode(SaveMode.Overwrite).options(dynamicOverwrite)
       .partitionBy(partCols: _*)
       .parquet(path)
+
+  /** The replayed-batch sink: `df` tagged with `batch_id = batchId` and
+    * written by [[overwritePartitions]] over `partCols` then batch_id, so
+    * a replayed micro-batch overwrites exactly its own partitions. */
+  def overwriteBatch(df: DataFrame, path: String, batchId: Long,
+      partCols: String*): Unit =
+    overwritePartitions(df.withColumn("batch_id", lit(batchId)), path,
+      partCols :+ "batch_id": _*)
 
   /** Whether `path` exists on its own filesystem (local here, HDFS or an
     * object store on a cluster). */

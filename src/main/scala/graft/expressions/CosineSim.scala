@@ -1,11 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native cosine similarity over two array<float> columns.
   *
@@ -28,41 +24,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * product (norms over each full array).
   */
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends FloatArrayPair {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim expects (array<float>, array<float>), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = DoubleType
+  override protected def kernel: FloatArrayKernel = CosineSim
 
   override def prettyName: String = "cosine_sim"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    CosineSim.compute(x, y)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val cls = CosineSim.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"${ev.value} = $cls.compute($a, $b);"
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =
     copy(left = newLeft, right = newRight)
 }
 
-object CosineSim {
+object CosineSim extends FloatArrayKernel {
   /** Single fused pass; shared by interpreted eval and generated code. */
   def compute(x: ArrayData, y: ArrayData): Double = {
     val nx = x.numElements()

@@ -1,10 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native dot product over two array<float> columns — the raw-inner-
   * product sibling of [[CosineSim]] (same rationale: one fused codegen
@@ -16,38 +13,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * mismatched lengths use the shorter prefix.
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends FloatArrayPair {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dot_product expects (array<float>, array<float>), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = DoubleType
+  override protected def kernel: FloatArrayKernel = DotProduct
 
   override def prettyName: String = "dot_product"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DotProduct.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val cls = DotProduct.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"${ev.value} = $cls.compute($a, $b);"
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
 }
 
-object DotProduct {
+object DotProduct extends FloatArrayKernel {
   /** Single fused pass; shared by interpreted eval and generated code. */
   def compute(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())

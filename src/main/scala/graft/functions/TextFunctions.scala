@@ -55,9 +55,6 @@ object TextFunctions {
   def hitsSql(text: String, words: Seq[String]): String =
     s"len(list_filter(${tokensSql(text)}, t -> t IN (${words.map(w => s"'$w'").mkString(", ")})))"
 
-  def stopwordCount(text: Column): Column =
-    tokenHits(text, stopwordsEn).cast("long")
-
   def hasLinks(text: Column): Column = text.rlike("https?://")
 
   /** Sentence count: runs of terminal punctuation (`[.!?]+` so "?!" or
@@ -98,8 +95,6 @@ object TextFunctions {
       .when(h("de") >= h("fr"), "de")
       .otherwise("fr")
 
-  def langId(text: Column): Column = langId(langHits(text))
-
   /** DuckDB-dialect mirror of [[langId]] over hit-count columns named
     * `en`, `es`, `de` and `fr`. */
   val langIdSql: String =
@@ -117,6 +112,20 @@ object TextFunctions {
       - when(punctRatio > 0.2, 20).otherwise(0)
       - when(avgWordLen < 3.0 || avgWordLen > 12.0, 20).otherwise(0)
       - when(stopHits === 0, 20).otherwise(0))
+
+  /** DuckDB form of the text-quality features: the CTE
+    * `f(doc_id, <carry>…, text, words, punct, chars, stop_hits)` over
+    * `from` — word count, non-alphanumeric characters, non-space
+    * characters and stopword hits, the inputs of [[qualityScoreSql]]. */
+  def qualityFeaturesSql(carry: Seq[String],
+      from: String = "documents"): String =
+    raw"""f AS (
+       |  SELECT ${("doc_id" +: carry :+ "text").mkString(", ")},
+       |    len(${tokensSql("text")}) AS words,
+       |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS punct,
+       |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
+       |    ${hitsSql("text", stopwordsEn)} AS stop_hits
+       |  FROM $from)""".stripMargin
 
   /** DuckDB-dialect mirror of [[qualityScore]] over SQL expressions. */
   def qualityScoreSql(words: String, punctRatio: String, avgWordLen: String,

@@ -43,6 +43,34 @@ import org.apache.spark.sql.functions._
   */
 object AsOfJoin {
 
+  /** The one relation both as-of joins sort: left rows tagged 1 with a
+    * NULL `__p` of `payloadType`, right rows tagged 0 with `__p` =
+    * `rightPayload`, each with its key `__k` and time `__ts`; right rows
+    * carry NULLs in the left-only columns. Returns the left columns plus
+    * (__p, __k, __ts, __tag). */
+  private def taggedUnion(left: DataFrame, right: DataFrame,
+      leftKey: String, rightKey: String, leftTs: String, rightTs: String,
+      payloadType: org.apache.spark.sql.types.StructType,
+      rightPayload: Column): DataFrame = {
+    val leftCols = left.columns.toSeq
+    val l = left
+      .withColumn("__k", col(leftKey))
+      .withColumn("__ts", col(leftTs))
+      .withColumn("__tag", lit(1))
+      .withColumn("__p", lit(null).cast(payloadType))
+    val r0 = right
+      .withColumn("__k", col(rightKey))
+      .withColumn("__ts", col(rightTs))
+      .withColumn("__tag", lit(0))
+      .withColumn("__p", rightPayload)
+    val rAligned = leftCols.foldLeft(r0)((d, c) =>
+      if (d.columns.contains(c)) d
+      else d.withColumn(c, lit(null).cast(left.schema(c).dataType)))
+    val cols = leftCols ++ Seq("__p", "__k", "__ts", "__tag")
+    l.select(cols.map(col): _*)
+      .unionByName(rAligned.select(cols.map(col): _*))
+  }
+
   /** @param left       rows to enrich
     * @param right      lookup rows (key, ts, payload columns)
     * @param leftKey    join key column name on the left
@@ -58,23 +86,9 @@ object AsOfJoin {
     val leftCols = left.columns.toSeq
     val payloadType = org.apache.spark.sql.types.StructType(
       payload.map(p => right.schema(p).copy(name = p)))
-    val l = left
-      .withColumn("__k", col(leftKey))
-      .withColumn("__ts", col(leftTs))
-      .withColumn("__tag", lit(1))
-      .withColumn("__p", lit(null).cast(payloadType))
-    val r0 = right
-      .withColumn("__k", col(rightKey))
-      .withColumn("__ts", col(rightTs))
-      .withColumn("__tag", lit(0))
-      // the whole payload as one non-null struct: match-or-not is atomic
-      .withColumn("__p", struct(payload.map(col): _*))
-    val rAligned = leftCols.foldLeft(r0)((d, c) =>
-      if (d.columns.contains(c)) d
-      else d.withColumn(c, lit(null).cast(left.schema(c).dataType)))
-    val cols = leftCols ++ Seq("__p", "__k", "__ts", "__tag")
-    val unioned = l.select(cols.map(col): _*)
-      .unionByName(rAligned.select(cols.map(col): _*))
+    // the whole payload as one non-null struct: match-or-not is atomic
+    val unioned = taggedUnion(left, right, leftKey, rightKey, leftTs,
+      rightTs, payloadType, struct(payload.map(col): _*))
     // right rows (tag 0) sort before left rows at equal ts → inclusive <=;
     // the payload struct breaks ties among duplicate right rows at the
     // same (key, ts), making the carried row deterministic (left rows all
@@ -130,24 +144,10 @@ object AsOfJoin {
         org.apache.spark.sql.types.StructField("__cid",
           right.schema(rightId).dataType) +:
         payload.map(p => right.schema(p).copy(name = p)))
-    val l = left
-      .withColumn("__k", col(leftKey))
-      .withColumn("__ts", col(leftTs))
-      .withColumn("__tag", lit(1))
-      .withColumn("__p", lit(null).cast(payloadType))
-    val r0 = right
-      .withColumn("__k", col(rightKey))
-      .withColumn("__ts", col(rightTs))
-      .withColumn("__tag", lit(0))
-      .withColumn("__p", struct(
+    val unioned = taggedUnion(left, right, leftKey, rightKey, leftTs,
+      rightTs, payloadType, struct(
         (-col(rightId)).as("__negid") +: col(rightTs).as("__cts") +:
           col(rightId).as("__cid") +: payload.map(col): _*))
-    val rAligned = leftCols.foldLeft(r0)((d, c) =>
-      if (d.columns.contains(c)) d
-      else d.withColumn(c, lit(null).cast(left.schema(c).dataType)))
-    val cols = leftCols ++ Seq("__p", "__k", "__ts", "__tag")
-    val unioned = l.select(cols.map(col): _*)
-      .unionByName(rAligned.select(cols.map(col): _*))
     // backward: right rows before left at equal ts (inclusive <=), max
     // window order among ties = min id via the leading -id field
     val wB = Window.partitionBy("__k")

@@ -50,13 +50,10 @@ object Dedup {
       .drop("__rn")
   }
 
-  /** One (id, shingle) row per distinct shingle per doc. The token array
-    * is materialized FIRST (Stage.materialize): that boundary stops
-    * CollapseProject from inlining the tokenize regex into the shingle
-    * lambda (inlined, the regex re-runs once per shingle — the measured
-    * round-1 pathology), so the single non-nested `transform` below only
-    * does O(1) `element_at` reads per shingle. This replaces the previous
-    * posexplode → window-lead construction — same output, one less
+  /** One (id, shingle) row per distinct shingle per doc. The token arrays
+    * come first ([[tokenArrays]]), so the shingle `transform` ([[ngrams]])
+    * only does O(1) `element_at` reads per shingle. This replaces the
+    * previous posexplode → window-lead construction — same output, one less
     * shuffle+sort over the exploded relation. Docs shorter than the
     * shingle size fall back to one whole-text shingle, selected by token
     * count.
@@ -68,30 +65,14 @@ object Dedup {
     * Blocks are released by the ContextCleaner when the result goes out
     * of scope, so library callers don't leak executor cache. */
   private[operators] def explodedShingles(df: DataFrame, idCol: String,
-      textCol: String, shingleSize: Int): DataFrame =
-    explodedShingles(df, idCol, textCol, shingleSize, withHashes = true)
-
-  /** `withHashes = false` skips the two md5 spans: the ngram-Jaccard /
-    * containment / prefix-join consumers never read `__h1`/`__h2`
-    * (only the minhash family does), so computing and staging them
-    * there was two wasted md5 calls per shingle plus 16 bytes per row
-    * through every downstream exchange. */
-  private[operators] def explodedShingles(df: DataFrame, idCol: String,
-      textCol: String, shingleSize: Int, withHashes: Boolean): DataFrame = {
-    // lazy persist, not an eager localCheckpoint: the relation has exactly
-    // one consumer (the shingle projection below), so it needs the
-    // CollapseProject BARRIER — without one the tokenize regex inlines
-    // into the shingle lambda and re-runs per element_at — but not its own
-    // materialization job; the staging job for `rel` below computes the
-    // token arrays on its way through the cache.
-    val toks = graft.engine.Stage.cache(
-      df.select(col(idCol).as("id"), col(textCol).as("__text"))
-        .spreadBy(col("id"))
-        .select(col("id"), TextFunctions.tokens(col("__text")).as("toks")))
-    val shingle = transform(
-      sequence(lit(0), size(col("toks")) - shingleSize),
-      i => concat_ws(" ",
-        (0 until shingleSize).map(j => element_at(col("toks"), i + j + 1)): _*))
+      textCol: String, shingleSize: Int,
+      withHashes: Boolean = true): DataFrame = {
+    // `withHashes = false` skips the two md5 spans: the ngram-Jaccard /
+    // containment / prefix-join consumers never read `__h1`/`__h2` (only
+    // the minhash family does), so computing and staging them there was
+    // two wasted md5 calls per shingle plus 16 bytes per row through
+    // every downstream exchange.
+    val toks = tokenArrays(df, idCol, textCol)
     // per-doc distinct via array_distinct INSIDE the row, not a global
     // distinct() of the exploded relation: the dedup is per (id, shingle)
     // and every id's shingles come from one row, so the set is identical —
@@ -99,7 +80,7 @@ object Dedup {
     // cost. The short-doc fallback rides the same CASE (evaluated lazily
     // per branch), replacing the former full/short union's second scan.
     val shingles = when(size(col("toks")) >= shingleSize,
-        array_distinct(shingle))
+        array_distinct(ngrams(shingleSize)))
       .otherwise(array(concat_ws(" ", col("toks"))))
     // __h1/__h2: the shingle string hashed ONCE into the staged relation
     // (two independent 56-bit md5 spans). Consumers that derive
@@ -116,6 +97,41 @@ object Dedup {
       .staged
   }
 
+  /** DuckDB mirror of [[explodedShingles]] over `documents` at shingle
+    * size 3: the CTEs `toks`, `sh` and `s(<id>, shingle)`, the doc id
+    * selected as `idSel` (`doc_id`, or `doc_id AS id`) and named `id`
+    * after it. */
+  def shinglesSql(idSel: String, id: String): String =
+    raw"""toks AS (
+       |  SELECT $idSel, ${TextFunctions.tokensSql("text")} AS t FROM documents),
+       |sh AS (
+       |  SELECT $id, CASE WHEN len(t) >= 3
+       |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
+       |    ELSE [array_to_string(t, ' ')] END AS shingles
+       |  FROM toks),
+       |s AS (SELECT $id, unnest(shingles) AS shingle FROM sh)""".stripMargin
+
+  /** Each doc's token array as (id, toks), cached lazily rather than
+    * staged by an eager localCheckpoint: its consumers need the
+    * CollapseProject BARRIER, not a materialization job of its own.
+    * Without the barrier the tokenize regex inlines into a consumer's
+    * per-span lambda and re-runs per `element_at` (the measured round-1
+    * pathology); the first consumer's job computes the arrays on its way
+    * through the cache. */
+  private def tokenArrays(df: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    graft.engine.Stage.cache(
+      df.select(col(idCol).as("id"), col(textCol).as("__text"))
+        .spreadBy(col("id"))
+        .select(col("id"), TextFunctions.tokens(col("__text")).as("toks")))
+
+  /** Every `n`-token span of the `toks` array column in order, each
+    * space-joined: one non-nested `transform` of O(1) `element_at` reads
+    * per span. */
+  private def ngrams(n: Int): Column =
+    transform(sequence(lit(0), size(col("toks")) - n),
+      i => concat_ws(" ", (0 until n).map(j => element_at(col("toks"), i + j + 1)): _*))
+
   private def dropHashes(df: DataFrame): DataFrame = df.drop("__h1", "__h2")
 
   /** Jaccard from intersection count + per-doc set sizes:
@@ -129,16 +145,17 @@ object Dedup {
         col("inter") / (col("n_a") + col("n_b") - col("inter")), 4))
 
   /** Candidate pairs from (id, band_id, band_hash) rows, bucket-capped,
-    * id-ordered, deduped.
+    * id-ordered, deduped — the LSH banding step of [[minhashNearDups]],
+    * [[lshEval]] and [[Similarity.embeddingNearDups]].
     *
-    * `keyed` is staged first: it is the OUTPUT of the signature aggregate
-    * (the 64-min() minhash loop / the 56-sum simhash pack), and the
-    * bucket self-join below consumes it on BOTH sides — unstaged,
+    * Callers stage `keyed` first: it is the OUTPUT of a signature
+    * aggregate (the 64-min() minhash loop, the sign-LSH projection sums),
+    * and the bucket self-join below consumes it on BOTH sides — unstaged,
     * Catalyst evaluates the whole aggregate + posexplode + window subtree
     * once per side (AQE reuses only the exchange, not the post-shuffle
     * window stage). The staged relation is tiny (rows × bands). */
-  private def pairsFromBuckets(keyed0: DataFrame, maxBucket: Int): DataFrame = {
-    val keyed = graft.engine.Stage.materialize(keyed0)
+  private[operators] def bucketPairs(keyed: DataFrame,
+      maxBucket: Int): DataFrame = {
     val sized = keyed
       .withColumn("__bn",
         count(lit(1)).over(Window.partitionBy("band_id", "band_hash")))
@@ -149,6 +166,36 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
   }
+
+  /** Per-doc set sizes (id, n) of an (id, shingle) relation. The relation
+    * is distinct per (id, shingle) by construction, so a row count is the
+    * set size. */
+  private def setSizes(exploded: DataFrame): DataFrame =
+    exploded.groupBy(col("id")).agg(count(lit(1)).as("n"))
+
+  /** (id_a, id_b, inter): the row count of each pair in `pairs`. */
+  private def interCounts(pairs: DataFrame): DataFrame =
+    pairs.groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
+
+  /** Exact-verify intersection counts: each candidate pair's shared
+    * shingles, joined from the (id, shingle) relation on both sides —
+    * counts on the exploded relation, never array intersections. No
+    * broadcast hint on the candidate side: its cardinality is
+    * data-dependent and unbounded at corpus scale, and a forced broadcast
+    * would fail the job past the 8 GB cap — AQE picks a broadcast join at
+    * runtime when the candidate set actually is small. */
+  private def candidateIntersections(cands: DataFrame,
+      shingles: DataFrame): DataFrame =
+    interCounts(cands
+      .join(shingles.withColumnsRenamed(Map("id" -> "id_a")), Seq("id_a"))
+      .join(shingles.withColumnsRenamed(Map("id" -> "id_b")), Seq("id_b", "shingle")))
+
+  /** Co-occurrence counts of every id pair sharing a shingle in the
+    * (id, shingle) `postings`: the posting self-join, id_a < id_b. */
+  private def coOccurrences(postings: DataFrame): DataFrame =
+    interCounts(postings.withColumnsRenamed(Map("id" -> "id_a"))
+      .join(postings.withColumnsRenamed(Map("id" -> "id_b")), Seq("shingle"))
+      .filter(col("id_a") < col("id_b")))
 
   /** Largest prime below 2^56 — the affine MinHash family's modulus.
     * WITHOUT the mod, h1 + i·h2 is order-preserving in h2 for large i, so
@@ -202,8 +249,7 @@ object Dedup {
     // every evaluation of `sigs` pays the full 64-min() update loop. The
     // count-only plan computes identical n (exploded is distinct per
     // (id, shingle) by construction) at 1/65th the aggregate state.
-    val sizes = exploded.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    (sizes, keyed)
+    (setSizes(exploded), keyed)
   }
 
   /** MinHash-LSH near-dup pairs with exact-Jaccard verification.
@@ -213,17 +259,8 @@ object Dedup {
       shingleSize: Int = 3, maxBucket: Int = 64): DataFrame = {
     val exploded = explodedShingles(df, idCol, textCol, shingleSize)
     val (sizes, keyed) = sigKeyed(exploded, numHashes, bands)
-    val cands = pairsFromBuckets(keyed, maxBucket)
-    // exact intersection counts via the exploded relation. No broadcast
-    // hint on the candidate side: its cardinality is data-dependent and
-    // unbounded at corpus scale, and a forced broadcast would fail the job
-    // past the 8 GB cap — AQE picks a broadcast join at runtime when the
-    // candidate set actually is small.
-    val inter = cands
-      .join(dropHashes(exploded).withColumnsRenamed(Map("id" -> "id_a")), Seq("id_a"))
-      .join(dropHashes(exploded).withColumnsRenamed(Map("id" -> "id_b")), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    jaccardFromCounts(inter, sizes)
+    val cands = bucketPairs(graft.engine.Stage.materialize(keyed), maxBucket)
+    jaccardFromCounts(candidateIntersections(cands, dropHashes(exploded)), sizes)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -250,19 +287,11 @@ object Dedup {
       shingleSize: Int = 3, maxBucket: Int = 64): DataFrame = {
     val exploded = explodedShingles(df, idCol, textCol, shingleSize)
     val (sizes, keyed) = sigKeyed(exploded, numHashes, bands)
-    val cands = pairsFromBuckets(keyed, maxBucket)
+    val cands = bucketPairs(graft.engine.Stage.materialize(keyed), maxBucket)
     val e = dropHashes(exploded)
-    val inter = cands
-      .join(e.withColumnsRenamed(Map("id" -> "id_a")), Seq("id_a"))
-      .join(e.withColumnsRenamed(Map("id" -> "id_b")), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    val candJ = jaccardFromCounts(inter, sizes)
+    val candJ = jaccardFromCounts(candidateIntersections(cands, e), sizes)
       .select("id_a", "id_b", "jaccard")
-    val gInter = e.withColumnsRenamed(Map("id" -> "id_a"))
-      .join(e.withColumnsRenamed(Map("id" -> "id_b")), Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    val truth = jaccardFromCounts(gInter, sizes)
+    val truth = jaccardFromCounts(coOccurrences(e), sizes)
       .filter(col("jaccard") >= threshold)
     val m = candJ.agg(
       count(lit(1)).as("n_candidates"),
@@ -392,11 +421,7 @@ object Dedup {
       .distinct()
     val shingles = batch.shingles.unionByName(index.shingles)
     val sizes = bSizes.unionByName(index.sizes)
-    val inter = cands
-      .join(shingles.withColumnsRenamed(Map("id" -> "id_a")), Seq("id_a"))
-      .join(shingles.withColumnsRenamed(Map("id" -> "id_b")), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    jaccardFromCounts(inter, sizes)
+    jaccardFromCounts(candidateIntersections(cands, shingles), sizes)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -429,7 +454,7 @@ object Dedup {
     // carry the signature through the bucket join so the Hamming filter
     // runs INSIDE the join — only surviving pairs reach the distinct,
     // instead of shuffling every bucket collision first. Staged for the
-    // same reason as pairsFromBuckets: both self-join sides read it, and
+    // same reason as bucketPairs: both self-join sides read it, and
     // unstaged the 56-sum pack aggregate evaluates once per side.
     val keyed = graft.engine.Stage.materialize(
       packed.select(col("id"), col("simhash"),
@@ -616,29 +641,20 @@ object Dedup {
     * (idCol, n_tokens, n_removed, clean_text). */
   def stripDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
       window: Int = 4): DataFrame = {
-    // Token ARRAYS, staged once (lazy persist: the barrier stops
-    // CollapseProject from inlining the tokenize regex into the span
-    // lambda — explodedShingles' measured pathology): spans and the
+    // Token ARRAYS, cached once ([[tokenArrays]]): spans and the
     // reassembly tokens both derive from the arrays map-side, so the old
     // posexplode → Exchange + Sort + Window(lead×(w−1)) span build — run
     // TWICE, once per spans consumer (dup-set aggregate and coverage
     // join; only the exchange is AQE-reused, not the window stage) — is
     // replaced by a shuffle-free in-row transform, the same shape
     // explodedShingles moved to in r15.
-    val toks = graft.engine.Stage.cache(
-      df.select(col(idCol).as("id"), col(textCol).as("__text"))
-        .spreadBy(col("id"))
-        .select(col("id"), TextFunctions.tokens(col("__text")).as("toks")))
-    val spanArr = transform(
-      sequence(lit(0), size(col("toks")) - window),
-      i => concat_ws(" ",
-        (0 until window).map(j => element_at(col("toks"), i + j + 1)): _*))
+    val toks = tokenArrays(df, idCol, textCol)
     // spans cached lazily: both consumers (dup-set aggregate, coverage
     // join) read it, and the per-span concat_ws would otherwise run once
     // per consumer; the first consumer's pass materializes the cache
     val spans = graft.engine.Stage.cache(
       toks.filter(size(col("toks")) >= window)
-        .select(col("id"), posexplode(spanArr).as(Seq("start", "span"))))
+        .select(col("id"), posexplode(ngrams(window)).as(Seq("start", "span"))))
     val tok = toks.select(col("id"),
       posexplode(col("toks")).as(Seq("pos", "t0")))
     // duplicated-span set via hash aggregate + join, not a count()
@@ -670,6 +686,34 @@ object Dedup {
         (col("n_tokens") - coalesce(col("__n_kept"), lit(0L))).as("n_removed"),
         coalesce(col("clean_text"), lit("")).as("clean_text"))
   }
+
+  /** DuckDB mirror of [[stripDuplicateSpans]] up to the reassembly, over
+    * `documents`: the CTEs `toks(doc_id, t)`, `sp(doc_id, start, span)`
+    * (every `window`-token span), `counts`, `cov` (the covered positions),
+    * `tok`, `kept` and `rebuilt(doc_id, n_kept, clean_text)`. */
+  def stripDuplicateSpansSql(window: Int): String =
+    raw"""toks AS (
+       |  SELECT doc_id, ${TextFunctions.tokensSql("text")} AS t FROM documents),
+       |sp AS (
+       |  SELECT doc_id, i - 1 AS start, array_to_string(t[i:i+${window - 1}], ' ') AS span
+       |  FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - ${window - 1}, 0))) AS i) u),
+       |counts AS (SELECT span, COUNT(*) AS c FROM sp GROUP BY 1),
+       |cov AS (
+       |  SELECT DISTINCT s.doc_id, s.start + o AS pos
+       |  FROM sp s JOIN counts c USING (span),
+       |       LATERAL (SELECT unnest(generate_series(0, ${window - 1})) AS o) x
+       |  WHERE c.c >= 2),
+       |tok AS (
+       |  SELECT doc_id, generate_subscripts(t, 1) - 1 AS pos, unnest(t) AS tk
+       |  FROM toks),
+       |kept AS (
+       |  SELECT tok.doc_id, tok.pos, tok.tk
+       |  FROM tok LEFT JOIN cov ON cov.doc_id = tok.doc_id AND cov.pos = tok.pos
+       |  WHERE cov.doc_id IS NULL),
+       |rebuilt AS (
+       |  SELECT doc_id, COUNT(*) AS n_kept,
+       |    string_agg(tk, ' ' ORDER BY pos) AS clean_text
+       |  FROM kept GROUP BY 1)""".stripMargin
 
   /** Relative posting-list cap for the inverted-index similarity ops:
     * `greatest(base, ceil(n_docs·base/per))` — 32 postings per 5,000 docs
@@ -726,6 +770,32 @@ object Dedup {
     exploded.select("id", "shingle").join(ok, Seq("shingle"))
   }
 
+  /** DuckDB form of a posting cap: the (<id>, shingle) rows of `from`
+    * whose shingle's posting count `pn` meets `cond`; `join` adds a
+    * relation `cond` reads (", nd"). */
+  def cappedPostingsSql(id: String, from: String, cond: String,
+      join: String = ""): String =
+    s"""SELECT $id, shingle FROM (
+       |    SELECT $id, shingle, COUNT(*) OVER (PARTITION BY shingle) AS pn FROM $from)$join
+       |  WHERE $cond""".stripMargin
+
+  /** DuckDB mirror of [[usefulPostings]] over the CTE `s(id, shingle)`:
+    * the CTEs `nd(cap)` and `useful(id, shingle)`. */
+  val usefulPostingsSql: String =
+    s"""nd AS (SELECT ${postingCapOracleSql("COUNT(DISTINCT id)")} AS cap FROM s),
+       |useful AS (
+       |  ${cappedPostingsSql("id", "s", "pn BETWEEN 2 AND nd.cap", ", nd")})""".stripMargin
+
+  /** The front half of [[ngramJaccardDups]] and [[containmentDups]]:
+    * per-doc set sizes (id, n) and the co-occurrence counts
+    * (id_a, id_b, inter) of the capped postings. */
+  private def cappedCoOccurrences(df: DataFrame, idCol: String,
+      textCol: String, shingleSize: Int): (DataFrame, DataFrame) = {
+    val exploded = explodedShingles(df, idCol, textCol, shingleSize,
+      withHashes = false)
+    (setSizes(exploded), coOccurrences(usefulPostings(exploded, df)))
+  }
+
   /** N-gram Jaccard via inverted-index blocking: prune shingles to useful
     * postings (2..cap docs, the cap derived from the corpus size in-plan
     * by [[postingCapExprSql]]), self-join the postings to count
@@ -737,14 +807,7 @@ object Dedup {
     * COUNT(DISTINCT id) and the cap admits longer postings. */
   def ngramJaccardDups(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, shingleSize: Int = 3): DataFrame = {
-    val exploded = explodedShingles(df, idCol, textCol, shingleSize,
-      withHashes = false)
-    val sizes = exploded.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val useful = usefulPostings(exploded, df)
-    val inter = useful.withColumnsRenamed(Map("id" -> "id_a"))
-      .join(useful.withColumnsRenamed(Map("id" -> "id_b")), Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
+    val (sizes, inter) = cappedCoOccurrences(df, idCol, textCol, shingleSize)
     jaccardFromCounts(inter, sizes)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
@@ -782,7 +845,7 @@ object Dedup {
       threshold: Double = 0.8, shingleSize: Int = 3): DataFrame = {
     val exploded = explodedShingles(df, idCol, textCol, shingleSize,
       withHashes = false)
-    val sizes = exploded.groupBy(col("id")).agg(count(lit(1)).as("n")).staged
+    val sizes = setSizes(exploded).staged
     // global total order on tokens: rarest first (document frequency asc,
     // shingle asc — total because shingle is unique in the freq relation)
     val freq = exploded.groupBy("shingle").agg(count(lit(1)).as("__df"))
@@ -807,12 +870,7 @@ object Dedup {
       .filter(least(col("__na"), col("__nb")) >=
         lit(threshold) * greatest(col("__na"), col("__nb")) - lit(1e-9))
       .select("id_a", "id_b").distinct()
-    val inter = cands
-      .join(exploded.select(col("id").as("id_a"), col("shingle")), Seq("id_a"))
-      .join(exploded.select(col("id").as("id_b"), col("shingle")),
-        Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    jaccardFromCounts(inter, sizes)
+    jaccardFromCounts(candidateIntersections(cands, exploded), sizes)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -838,14 +896,7 @@ object Dedup {
     * `df`. */
   def containmentDups(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.9, shingleSize: Int = 3): DataFrame = {
-    val exploded = explodedShingles(df, idCol, textCol, shingleSize,
-      withHashes = false)
-    val sizes = exploded.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val useful = usefulPostings(exploded, df)
-    val inter = useful.withColumnsRenamed(Map("id" -> "id_a"))
-      .join(useful.withColumnsRenamed(Map("id" -> "id_b")), Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
+    val (sizes, inter) = cappedCoOccurrences(df, idCol, textCol, shingleSize)
     inter
       .join(sizes.select(col("id").as("id_a"), col("n").as("__na")), Seq("id_a"))
       .join(sizes.select(col("id").as("id_b"), col("n").as("__nb")), Seq("id_b"))

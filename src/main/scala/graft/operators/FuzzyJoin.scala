@@ -49,6 +49,40 @@ import org.apache.spark.sql.functions._
   */
 object FuzzyJoin {
 
+  /** The distinct non-empty strings of `c` as (__s, __len). */
+  private def clean(df: DataFrame, c: String): DataFrame =
+    df.select(col(c).cast("string").as("__s"))
+      .filter(col("__s").isNotNull && length(col("__s")) >= 1)
+      .distinct()
+      .withColumn("__len", length(col("__s")))
+
+  /** Each string's positional `q`-gram multiset (__s, __len, __pos, __g);
+    * strings shorter than q emit none (they are all in the short bucket
+    * anyway). */
+  private def grams(strs: DataFrame, q: Int): DataFrame = strs
+    .select(col("__s"), col("__len"), posexplode(
+      expr(s"transform(sequence(1, greatest(__len - $q + 1, 0)), " +
+        s"i -> substring(__s, i, $q))")).as(Seq("__pos", "__g")))
+
+  /** Each string's `prefixLen` rarest grams by the global gram document
+    * frequencies `freq` (__g, __df), ties by gram then position — a total
+    * order; the per-string window partitions are gram counts (string
+    * length), never corpus-sized. Returns (__s, __len, __g). */
+  private def prefix(g: DataFrame, freq: DataFrame,
+      prefixLen: Int): DataFrame = g.join(freq, Seq("__g"))
+    .withColumn("__rk", row_number().over(
+      Window.partitionBy("__s").orderBy(col("__df"), col("__g"),
+        col("__pos"))))
+    .filter(col("__rk") <= prefixLen)
+    .select(col("__s"), col("__len"), col("__g"))
+
+  /** The strings shorter than `minLongLen`, below the prefix bound's
+    * reach, as (`name`, `lenName`). */
+  private def short(strs: DataFrame, minLongLen: Int, name: String,
+      lenName: String): DataFrame =
+    strs.filter(col("__len") < minLongLen)
+      .select(col("__s").as(name), col("__len").as(lenName))
+
   /** @param df      relation carrying the string column (deduplicated
     *                internally; pass the projected column)
     * @param strCol  string column to join on
@@ -62,32 +96,17 @@ object FuzzyJoin {
     val prefixLen = q * maxDist + 1
     val minLongLen = q * maxDist + q // gram count > q*d ⇔ len >= q*d + q
 
-    val strs = df.select(col(strCol).cast("string").as("__s"))
-      .filter(col("__s").isNotNull && length(col("__s")) >= 1)
-      .distinct()
-      .withColumn("__len", length(col("__s")))
+    val strs = clean(df, strCol)
 
-    // 1. positional gram multiset (strings shorter than q grams emit none
-    //    — they are all in the short bucket anyway).
-    val grams = strs
-      .select(col("__s"), col("__len"), posexplode(
-        expr(s"transform(sequence(1, greatest(__len - $q + 1, 0)), " +
-          s"i -> substring(__s, i, $q))")).as(Seq("__pos", "__g")))
-
-    // 2-3. rarest-first rank per string; the per-string window partitions
-    //      are gram counts (string length), never corpus-sized.
-    val freq = grams.groupBy("__g").agg(count(lit(1)).as("__df"))
-    val prefix = grams.join(freq, Seq("__g"))
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy("__s").orderBy(col("__df"), col("__g"),
-          col("__pos"))))
-      .filter(col("__rk") <= prefixLen)
-      .select(col("__s"), col("__len"), col("__g"))
+    // 1-3. positional gram multiset, rarest-first prefix per string
+    val g = grams(strs, q)
+    val freq = g.groupBy("__g").agg(count(lit(1)).as("__df"))
+    val pre = prefix(g, freq, prefixLen)
 
     // 4. inverted-index candidate join + length filter.
-    val indexed = prefix
+    val indexed = pre
       .select(col("__s").as("str_a"), col("__len").as("__la"), col("__g"))
-      .join(prefix
+      .join(pre
         .select(col("__s").as("str_b"), col("__len").as("__lb"), col("__g")),
         Seq("__g"))
       .filter(col("str_a") < col("str_b") &&
@@ -95,9 +114,8 @@ object FuzzyJoin {
       .select("str_a", "str_b").distinct()
 
     // Short×short fallback: both sides below the bound's reach.
-    val short = strs.filter(col("__len") < minLongLen).select("__s", "__len")
-    val shortPairs = short.select(col("__s").as("str_a"), col("__len").as("__la"))
-      .crossJoin(short.select(col("__s").as("str_b"), col("__len").as("__lb")))
+    val shortPairs = short(strs, minLongLen, "str_a", "__la")
+      .crossJoin(short(strs, minLongLen, "str_b", "__lb"))
       .filter(col("str_a") < col("str_b") &&
         abs(col("__la") - col("__lb")) <= maxDist)
       .select("str_a", "str_b")
@@ -131,42 +149,23 @@ object FuzzyJoin {
     val prefixLen = q * maxDist + 1
     val minLongLen = q * maxDist + q
 
-    def clean(df: DataFrame, c: String) =
-      df.select(col(c).cast("string").as("__s"))
-        .filter(col("__s").isNotNull && length(col("__s")) >= 1)
-        .distinct()
-        .withColumn("__len", length(col("__s")))
     val p = clean(probes, probeCol)
     val d = clean(dict, dictCol)
-
-    def grams(df: DataFrame) = df
-      .select(col("__s"), col("__len"), posexplode(
-        expr(s"transform(sequence(1, greatest(__len - $q + 1, 0)), " +
-          s"i -> substring(__s, i, $q))")).as(Seq("__pos", "__g")))
-    val pg = grams(p)
-    val dg = grams(d)
+    val pg = grams(p, q)
+    val dg = grams(d, q)
     val freq = pg.select("__g").union(dg.select("__g"))
       .groupBy("__g").agg(count(lit(1)).as("__df"))
 
-    def prefix(g: DataFrame) = g.join(freq, Seq("__g"))
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy("__s").orderBy(col("__df"), col("__g"),
-          col("__pos"))))
-      .filter(col("__rk") <= prefixLen)
-      .select(col("__s"), col("__len"), col("__g"))
-
-    val indexed = prefix(pg)
+    val indexed = prefix(pg, freq, prefixLen)
       .select(col("__s").as("probe"), col("__len").as("__lp"), col("__g"))
-      .join(prefix(dg)
+      .join(prefix(dg, freq, prefixLen)
         .select(col("__s").as("match"), col("__len").as("__ld"), col("__g")),
         Seq("__g"))
       .filter(abs(col("__lp") - col("__ld")) <= maxDist)
       .select("probe", "match").distinct()
 
-    val shortPairs = p.filter(col("__len") < minLongLen)
-      .select(col("__s").as("probe"), col("__len").as("__lp"))
-      .crossJoin(d.filter(col("__len") < minLongLen)
-        .select(col("__s").as("match"), col("__len").as("__ld")))
+    val shortPairs = short(p, minLongLen, "probe", "__lp")
+      .crossJoin(short(d, minLongLen, "match", "__ld"))
       .filter(abs(col("__lp") - col("__ld")) <= maxDist)
       .select("probe", "match")
 

@@ -27,6 +27,67 @@ import graft.engine.{Det, Stage}
   */
 object Graph {
 
+  /** `edges` as a simple directed graph, staged: (src, dst) with
+    * self-loops and repeats dropped. */
+  private def simpleEdges(edges: DataFrame): DataFrame =
+    Stage.materialize(
+      edges.select(col("src"), col("dst"))
+        .filter(col("src") =!= col("dst")).distinct())
+
+  /** The power iteration of [[pagerank]] and [[personalizedPagerank]]
+    * over the staged simple graph `e` and the node relation `ids`
+    * (`__id` plus the columns `init` and `teleport` read): rank starts at
+    * `init`, and each round is `teleport` + damping × the decimal-summed
+    * in-contributions pr/outdeg, pinned to `scale` decimals. Returns
+    * (__id, pr). */
+  private def powerIterate(e: DataFrame, ids: DataFrame, init: Column,
+      teleport: Column, iterations: Int, damping: Double,
+      scale: Int): DataFrame = {
+    val od = Stage.materialize(
+      e.groupBy("src").agg(count(lit(1)).as("outdeg")))
+    var pr = ids.select(col("__id"), init.as("pr"))
+    for (_ <- 1 to iterations) {
+      val contrib = pr
+        .join(e, pr("__id") === e("src"))
+        .join(od, Seq("src"))
+        .groupBy(col("dst"))
+        .agg(Det.dsum(col("pr") / col("outdeg"), scale).as("__c"))
+      pr = Stage.materializeAlways(
+        ids.join(contrib, ids("__id") === contrib("dst"), "left")
+          .select(col("__id"),
+            Det.roundN(
+              teleport + lit(damping) * coalesce(col("__c"), lit(0.0)),
+              scale).as("pr")))
+    }
+    pr
+  }
+
+  /** DuckDB mirror of [[powerIterate]] over the CTE `e(src, dst)`: the
+    * CTEs `od`, then `nodeCtes` (ending in `ndn(id, …)`), `pr0(id, pr)`
+    * from `init`, and `c<i>`/`pr<i>` for i in 1..iterations; `init` is a
+    * SQL expression over the `ndn` row and `teleport` over `nd`, its
+    * alias in each round. Ends in `pr<iterations>(id, pr)`. */
+  private def powerIterateSql(nodeCtes: String, init: String,
+      teleport: String, iterations: Int, damping: Double,
+      scale: Int): String = {
+    val rounds = (1 to iterations).map { i =>
+      s"""c$i AS (
+         |  SELECT e.dst AS id,
+         |    ${Det.dsumSql(s"pr${i - 1}.pr / od.outdeg", scale)} AS c
+         |  FROM e JOIN pr${i - 1} ON pr${i - 1}.id = e.src
+         |  JOIN od ON od.src = e.src
+         |  GROUP BY 1),
+         |pr$i AS (
+         |  SELECT nd.id, ${Det.roundNSql(
+            s"$teleport + $damping * COALESCE(c$i.c, 0.0)", scale)} AS pr
+         |  FROM ndn nd LEFT JOIN c$i ON c$i.id = nd.id)""".stripMargin
+    }.mkString(",\n")
+    s"""od AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1),
+       |$nodeCtes,
+       |pr0 AS (SELECT id, $init AS pr FROM ndn),
+       |$rounds""".stripMargin
+  }
+
   /** Simplified PageRank (no dangling-mass redistribution: a node with no
     * out-edges simply stops forwarding its mass — the usual choice when
     * the graph is a sampled subweb and absolute calibration doesn't
@@ -40,59 +101,25 @@ object Graph {
       iterations: Int, damping: Double = 0.85,
       scale: Int = 12): DataFrame = {
     require(iterations >= 1 && iterations <= 50, s"iterations: $iterations")
-    val e = Stage.materialize(
-      edges.select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst")).distinct())
-    val od = Stage.materialize(
-      e.groupBy("src").agg(count(lit(1)).as("outdeg")))
+    val e = simpleEdges(edges)
     // node count enters as a broadcast 1-row relation, not a driver-side
     // collect — the loop stays one declarative plan per round
     val n = nodes.agg(count(lit(1)).as("__n"))
     val ids = Stage.materialize(
       nodes.select(col(idCol).as("__id")).crossJoin(broadcast(n)))
-    val base = 1.0 - damping
-    var pr = ids.select(col("__id"),
-      (lit(1.0) / col("__n")).as("pr"))
-    for (_ <- 1 to iterations) {
-      val contrib = pr
-        .join(e, pr("__id") === e("src"))
-        .join(od, Seq("src"))
-        .groupBy(col("dst"))
-        .agg(Det.dsum(col("pr") / col("outdeg"), scale).as("__c"))
-      pr = Stage.materializeAlways(
-        ids.join(contrib, ids("__id") === contrib("dst"), "left")
-          .select(col("__id"),
-            Det.roundN(
-              lit(base) / col("__n")
-                + lit(damping) * coalesce(col("__c"), lit(0.0)),
-              scale).as("pr")))
-    }
-    pr.select(col("__id").as(idCol), col("pr").as("pagerank"))
+    powerIterate(e, ids, lit(1.0) / col("__n"),
+        lit(1.0 - damping) / col("__n"), iterations, damping, scale)
+      .select(col("__id").as(idCol), col("pr").as("pagerank"))
   }
 
   /** DuckDB mirror of [[pagerank]] as unrolled CTEs over an `e(src,dst)`
     * CTE (already self-loop-free and distinct) and a node CTE
     * `nd(<idCol>)`. Returns CTE text ending in `prK` with (id, pr). */
   def pagerankSql(idCol: String, iterations: Int, damping: Double = 0.85,
-      scale: Int = 12): String = {
-    val base = (1.0 - damping).toString
-    val rounds = (1 to iterations).map { i =>
-      s"""c$i AS (
-         |  SELECT e.dst AS id,
-         |    ${Det.dsumSql(s"pr${i - 1}.pr / od.outdeg", scale)} AS c
-         |  FROM e JOIN pr${i - 1} ON pr${i - 1}.id = e.src
-         |  JOIN od ON od.src = e.src
-         |  GROUP BY 1),
-         |pr$i AS (
-         |  SELECT nd.id, ${Det.roundNSql(
-            s"$base / nd.n + $damping * COALESCE(c$i.c, 0.0)", scale)} AS pr
-         |  FROM ndn nd LEFT JOIN c$i ON c$i.id = nd.id)""".stripMargin
-    }.mkString(",\n")
-    s"""od AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1),
-       |ndn AS (SELECT $idCol AS id, (SELECT COUNT(*) FROM nd) AS n FROM nd),
-       |pr0 AS (SELECT id, 1.0 / n AS pr FROM ndn),
-       |$rounds""".stripMargin
-  }
+      scale: Int = 12): String =
+    powerIterateSql(
+      s"ndn AS (SELECT $idCol AS id, (SELECT COUNT(*) FROM nd) AS n FROM nd)",
+      "1.0 / n", s"${1.0 - damping} / nd.n", iterations, damping, scale)
 
   /** Personalized PageRank — teleport restricted to a SOURCE SET instead
     * of all nodes: pr⁰ = 1/|S| on S (0 elsewhere), each round
@@ -111,59 +138,27 @@ object Graph {
       isSource: Column, iterations: Int, damping: Double = 0.85,
       scale: Int = 12): DataFrame = {
     require(iterations >= 1 && iterations <= 50, s"iterations: $iterations")
-    val e = Stage.materialize(
-      edges.select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst")).distinct())
-    val od = Stage.materialize(
-      e.groupBy("src").agg(count(lit(1)).as("outdeg")))
+    val e = simpleEdges(edges)
     val marked = nodes.select(col(idCol).as("__id"),
       when(isSource, 1.0).otherwise(0.0).as("__s"))
     val nS = marked.agg(sum(col("__s")).as("__ns"))
     val ids = Stage.materialize(marked.crossJoin(broadcast(nS)))
-    val base = 1.0 - damping
-    var pr = ids.select(col("__id"), (col("__s") / col("__ns")).as("pr"))
-    for (_ <- 1 to iterations) {
-      val contrib = pr
-        .join(e, pr("__id") === e("src"))
-        .join(od, Seq("src"))
-        .groupBy(col("dst"))
-        .agg(Det.dsum(col("pr") / col("outdeg"), scale).as("__c"))
-      pr = Stage.materializeAlways(
-        ids.join(contrib, ids("__id") === contrib("dst"), "left")
-          .select(col("__id"),
-            Det.roundN(
-              lit(base) * col("__s") / col("__ns")
-                + lit(damping) * coalesce(col("__c"), lit(0.0)),
-              scale).as("pr")))
-    }
-    pr.select(col("__id").as(idCol), col("pr").as("ppr"))
+    powerIterate(e, ids, col("__s") / col("__ns"),
+        lit(1.0 - damping) * col("__s") / col("__ns"), iterations, damping,
+        scale)
+      .select(col("__id").as(idCol), col("pr").as("ppr"))
   }
 
   /** DuckDB mirror of [[personalizedPagerank]]. Expects CTEs `nd($idCol)`
     * and `e(src, dst)`; `srcPred` is a boolean SQL expression over nd's
     * row. Ends in `pr$iterations(id, pr)`. */
   def personalizedPagerankSql(idCol: String, srcPred: String,
-      iterations: Int, damping: Double = 0.85, scale: Int = 12): String = {
-    val base = (1.0 - damping).toString
-    val rounds = (1 to iterations).map { i =>
-      s"""c$i AS (
-         |  SELECT e.dst AS id,
-         |    ${Det.dsumSql(s"pr${i - 1}.pr / od.outdeg", scale)} AS c
-         |  FROM e JOIN pr${i - 1} ON pr${i - 1}.id = e.src
-         |  JOIN od ON od.src = e.src
-         |  GROUP BY 1),
-         |pr$i AS (
-         |  SELECT nd.id, ${Det.roundNSql(
-            s"$base * nd.s / nd.ns + $damping * COALESCE(c$i.c, 0.0)", scale)} AS pr
-         |  FROM ndn nd LEFT JOIN c$i ON c$i.id = nd.id)""".stripMargin
-    }.mkString(",\n")
-    s"""od AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1),
-       |ndm AS (SELECT $idCol AS id,
-       |  CASE WHEN $srcPred THEN 1.0 ELSE 0.0 END AS s FROM nd),
-       |ndn AS (SELECT id, s, (SELECT SUM(s) FROM ndm) AS ns FROM ndm),
-       |pr0 AS (SELECT id, s / ns AS pr FROM ndn),
-       |$rounds""".stripMargin
-  }
+      iterations: Int, damping: Double = 0.85, scale: Int = 12): String =
+    powerIterateSql(
+      s"""ndm AS (SELECT $idCol AS id,
+         |  CASE WHEN $srcPred THEN 1.0 ELSE 0.0 END AS s FROM nd),
+         |ndn AS (SELECT id, s, (SELECT SUM(s) FROM ndm) AS ns FROM ndm)""".stripMargin,
+      "s / ns", s"${1.0 - damping} * nd.s / nd.ns", iterations, damping, scale)
 
   /** Synchronous label-propagation communities (LPA, Raghavan et al.
     * 2007) made DETERMINISTIC: every node starts labeled with its own id;
@@ -247,9 +242,7 @@ object Graph {
   def harmonicFromSources(nodes: DataFrame, edges: DataFrame, idCol: String,
       isSource: Column, depth: Int): DataFrame = {
     require(depth >= 1 && depth <= 10, s"depth: $depth")
-    val e = Stage.materialize(
-      edges.select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst")).distinct())
+    val e = simpleEdges(edges)
     var reached = Stage.materialize(
       nodes.filter(isSource).select(col(idCol).as("s"),
         col(idCol).as("v"), lit(0).as("dist")))
@@ -320,9 +313,7 @@ object Graph {
   def betweenness(nodes: DataFrame, edges: DataFrame, idCol: String,
       isSource: Column, depth: Int): DataFrame = {
     require(depth >= 1 && depth <= 10, s"depth: $depth")
-    val e = Stage.materialize(
-      edges.select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst")).distinct())
+    val e = simpleEdges(edges)
     // forward: reached(s, v, dist, sigma)
     var reached = Stage.materialize(
       nodes.filter(isSource).select(col(idCol).as("s"),
@@ -496,9 +487,7 @@ object Graph {
   def bfs(nodes: DataFrame, edges: DataFrame, idCol: String,
       isSource: Column, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 20, s"rounds: $rounds")
-    val e = Stage.materialize(
-      edges.select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst")).distinct())
+    val e = simpleEdges(edges)
     var dist = Stage.materialize(nodes.select(col(idCol).as("__id"),
       when(isSource, lit(0L)).as("dist")))
     for (r <- 1 to rounds) {

@@ -35,6 +35,15 @@ object Kmv {
     val hashed = df
       .select(col(grpCol), Det.h56(col(keyCol).cast("string")).as("h"))
       .distinct()
+    bottomK(hashed, grpCol, k)
+  }
+
+  /** The ≤ k rows per `grpCol` group with the smallest `h`, ranked in two
+    * levels: per (group, h mod 64) bucket first, so no group funnels its
+    * full row set through one rank partition and the final per-group sort
+    * sees at most 64·k candidates. [[QuantileSketch]] samples with it. */
+  private[operators] def bottomK(hashed: DataFrame, grpCol: String,
+      k: Int): DataFrame = {
     val pre = hashed
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col(grpCol), pmod(col("h"), lit(64))).orderBy("h")))
@@ -100,13 +109,7 @@ object Kmv {
     val counted = df.groupBy(col(keyCol).cast("string").as("__key"))
       .agg(count(lit(1)).as("cnt"))
       .select(Det.h56(col("__key")).as("h"), col("cnt"), lit(1).as("__g"))
-    // same two-level rank as sketch(): the final single-group sort sees
-    // at most 64·k pre-capped candidates, never the full key domain
-    val pre = counted.withColumn("__rn", row_number().over(
-        Window.partitionBy(col("__g"), pmod(col("h"), lit(64))).orderBy("h")))
-      .filter(col("__rn") <= k)
-      .drop("__rn")
-    topK(pre, "__g", k).drop("__g")
+    bottomK(counted, "__g", k).drop("__g")
   }
 
   /** Join-cardinality estimate |A ⋈ B| from two [[countedSketch]]

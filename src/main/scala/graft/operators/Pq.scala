@@ -129,12 +129,8 @@ object Pq {
   private def rescore(vectors: DataFrame, shortlist: DataFrame,
       query: DataFrame, kTop: Int, idCol: String,
       embCol: String): DataFrame =
-    vectors.join(shortlist, col(idCol) === col("id"))
-      .crossJoin(broadcast(query))
-      .withColumn("cosine",
-        Det.roundN(GraftFunctions.cosine_sim(col(embCol), col("q_emb")), 6))
-      .orderBy(desc("cosine"), col(idCol))
-      .limit(kTop)
+    Similarity.cosineTopK(vectors.join(shortlist, col(idCol) === col("id")),
+        query, kTop, idCol, embCol, "cosine")
       .select(col(idCol), col("cosine"),
         Det.roundN(col("adc_score"), 6).as("adc_score"))
 
@@ -170,14 +166,7 @@ object Pq {
       m: Int, dims: Int, rescoreFactor: Int = 5,
       idCol: String = "vec_id", embCol: String = "embedding",
       preAssigned: Option[DataFrame] = None): DataFrame = {
-    GraftFunctions.register(vectors.sparkSession)
-    val probes = centroids
-      .crossJoin(broadcast(query))
-      .withColumn("__sim",
-        GraftFunctions.cosine_sim(col("c_emb"), col("q_emb")))
-      .orderBy(desc("__sim"), col("cell"))
-      .limit(nProbe)
-      .select("cell")
+    val probes = Similarity.probeCells(centroids, query, nProbe)
     val assigned = preAssigned.getOrElse(
       Similarity.assignCells(vectors, centroids, idCol, embCol))
     val members = assigned.join(broadcast(probes), Seq("cell"))

@@ -42,26 +42,13 @@ object QuantileSketch {
     val hashed = df.select(col(grpCol),
       Det.h56(col(keyCol).cast("string")).as("h"),
       col(valCol).cast("double").as("v"))
-    // two-level rank: bucket by h mod 64 first so no group funnels its
-    // full row set through one rank partition
-    val pre = hashed
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col(grpCol), pmod(col("h"), lit(64))).orderBy("h")))
-      .filter(col("__rn") <= k)
-      .drop("__rn")
-    topK(pre, grpCol, k)
+    Kmv.bottomK(hashed, grpCol, k)
   }
 
   /** Merge two sample relations into the sample of the union corpus
     * (disjoint row sets — e.g. daily increments). */
   def merge(a: DataFrame, b: DataFrame, grpCol: String, k: Int): DataFrame =
-    topK(a.unionByName(b), grpCol, k)
-
-  private def topK(sk: DataFrame, grpCol: String, k: Int): DataFrame =
-    sk.withColumn("__rn",
-        row_number().over(Window.partitionBy(grpCol).orderBy("h")))
-      .filter(col("__rn") <= k)
-      .drop("__rn")
+    Kmv.bottomK(a.unionByName(b), grpCol, k)
 
   /** R-7 (quantile_cont-convention) estimates over the sample's order
     * statistics: one row per group with a `p<q>_est` column per requested

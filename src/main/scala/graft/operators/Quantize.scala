@@ -85,14 +85,8 @@ object Quantize {
       .agg(sum(bit_count(col("word").bitwiseXOR(col("q_word"))))
         .as("hamming"))
     val cands = ham.orderBy(col("hamming"), col(idCol)).limit(pool)
-    graft.expressions.GraftFunctions.register(vectors.sparkSession)
-    vectors
-      .join(broadcast(cands), Seq(idCol))
-      .crossJoin(broadcast(query))
-      .withColumn("cosine", graft.engine.Det.roundN(
-        graft.expressions.GraftFunctions.cosine_sim(col(embCol), col("q_emb")), 6))
-      .orderBy(desc("cosine"), col(idCol))
-      .limit(k)
+    Similarity.cosineTopK(vectors.join(broadcast(cands), Seq(idCol)), query,
+        k, idCol, embCol, "cosine")
       .select(col(idCol), col("hamming"), col("cosine"))
   }
 }

@@ -54,16 +54,29 @@ object Similarity {
     * innermost ANN loop stays in whole-stage codegen instead of
     * interpreted higher-order functions; identical double math. */
   def bruteForceTopK(vectors: DataFrame, query: DataFrame, k: Int,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
+      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame =
+    cosineTopK(vectors, query, k, idCol, embCol, "cosine")
+      .select(col(idCol), col("cosine"))
+
+  /** The top `k` rows of `vectors` by `score` against the 1-row `query`
+    * (broadcast): the score pinned to 6 decimals into `scoreCol`, ranked
+    * descending, ties to the lower `idCol`. Every column of both sides
+    * rides along. */
+  private[operators] def topKAgainst(vectors: DataFrame, query: DataFrame,
+      k: Int, idCol: String, scoreCol: String, score: Column): DataFrame = {
     GraftFunctions.register(vectors.sparkSession)
     vectors
       .crossJoin(broadcast(query))
-      .withColumn("cosine",
-        Det.roundN(GraftFunctions.cosine_sim(col(embCol), col("q_emb")), 6))
-      .orderBy(desc("cosine"), col(idCol))
+      .withColumn(scoreCol, Det.roundN(score, 6))
+      .orderBy(desc(scoreCol), col(idCol))
       .limit(k)
-      .select(col(idCol), col("cosine"))
   }
+
+  /** [[topKAgainst]] by the cosine of `embCol` and the query's `q_emb`. */
+  private[operators] def cosineTopK(vectors: DataFrame, query: DataFrame,
+      k: Int, idCol: String, embCol: String, scoreCol: String): DataFrame =
+    topKAgainst(vectors, query, k, idCol, scoreCol,
+      GraftFunctions.cosine_sim(col(embCol), col("q_emb")))
 
   /** Maximum-inner-product top-k: rank by the RAW dot product, no norm —
     * the retrieval scoring for embeddings trained with inner-product
@@ -72,16 +85,10 @@ object Similarity {
     * Same broadcast-query scan shape as [[bruteForceTopK]]; at corpus
     * scale the IVF cell restriction composes in front identically. */
   def mipsTopK(vectors: DataFrame, query: DataFrame, k: Int,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(vectors.sparkSession)
-    vectors
-      .crossJoin(broadcast(query))
-      .withColumn("score",
-        Det.roundN(GraftFunctions.dot_product(col(embCol), col("q_emb")), 6))
-      .orderBy(desc("score"), col(idCol))
-      .limit(k)
+      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame =
+    topKAgainst(vectors, query, k, idCol, "score",
+        GraftFunctions.dot_product(col(embCol), col("q_emb")))
       .select(col(idCol), col("score"))
-  }
 
   /** Assign each vector to its nearest centroid (broadcast codebook).
     * Returns the input plus `cell` (centroid id). */
@@ -110,23 +117,40 @@ object Similarity {
       k: Int, nProbe: Int, idCol: String = "vec_id",
       embCol: String = "embedding",
       preAssigned: Option[DataFrame] = None): DataFrame = {
-    GraftFunctions.register(vectors.sparkSession)
-    val probes = centroids
+    val probes = probeCells(centroids, query, nProbe)
+    val assigned = preAssigned.getOrElse(
+      assignCells(vectors, centroids, idCol, embCol))
+    cosineTopK(assigned.join(broadcast(probes), Seq("cell")), query, k,
+        idCol, embCol, "cosine")
+      .select(col(idCol), col("cell"), col("cosine"))
+  }
+
+  /** The `nProbe` cells of `centroids` (cell, c_emb) nearest the 1-row
+    * `query` by cosine, ties to the lower cell: (cell). */
+  private[operators] def probeCells(centroids: DataFrame, query: DataFrame,
+      nProbe: Int): DataFrame = {
+    GraftFunctions.register(centroids.sparkSession)
+    centroids
       .crossJoin(broadcast(query))
       .withColumn("__sim", GraftFunctions.cosine_sim(col("c_emb"), col("q_emb")))
       .orderBy(desc("__sim"), col("cell"))
       .limit(nProbe)
       .select("cell")
-    val assigned = preAssigned.getOrElse(
-      assignCells(vectors, centroids, idCol, embCol))
-    assigned
-      .join(broadcast(probes), Seq("cell"))
-      .crossJoin(broadcast(query))
-      .withColumn("cosine",
-        Det.roundN(GraftFunctions.cosine_sim(col(embCol), col("q_emb")), 6))
-      .orderBy(desc("cosine"), col(idCol))
-      .limit(k)
-      .select(col(idCol), col("cell"), col("cosine"))
+  }
+
+  /** [[probeCells]] for a batch of `queries` (query_id, q_emb): each
+    * query's `nProbe` nearest cells, ranked by a window over the
+    * broadcast centroid × query grid. Returns (query_id, cell, q_emb). */
+  private def probeCellsBatch(centroids: DataFrame, queries: DataFrame,
+      nProbe: Int): DataFrame = {
+    val probeW = Window.partitionBy("query_id")
+      .orderBy(desc("__sim"), col("cell"))
+    centroids
+      .crossJoin(broadcast(queries))
+      .withColumn("__sim", GraftFunctions.cosine_sim(col("c_emb"), col("q_emb")))
+      .withColumn("__rk", row_number().over(probeW))
+      .filter(col("__rk") <= nProbe)
+      .select(col("query_id"), col("cell"), col("q_emb"))
   }
 
   /** Batched IVF top-k: N query vectors answered in ONE pass — the
@@ -147,14 +171,7 @@ object Similarity {
       embCol: String = "embedding",
       preAssigned: Option[DataFrame] = None): DataFrame = {
     GraftFunctions.register(vectors.sparkSession)
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(desc("__sim"), col("cell"))
-    val probes = centroids
-      .crossJoin(broadcast(queries))
-      .withColumn("__sim", GraftFunctions.cosine_sim(col("c_emb"), col("q_emb")))
-      .withColumn("__rk", row_number().over(probeW))
-      .filter(col("__rk") <= nProbe)
-      .select(col("query_id"), col("cell"), col("q_emb"))
+    val probes = probeCellsBatch(centroids, queries, nProbe)
     val assigned = preAssigned.getOrElse(
       assignCells(vectors, centroids, idCol, embCol))
     val topW = Window.partitionBy("query_id")
@@ -195,14 +212,7 @@ object Similarity {
       queries: DataFrame, tau: Double, nProbe: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     GraftFunctions.register(vectors.sparkSession)
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(desc("__sim"), col("cell"))
-    val probes = centroids
-      .crossJoin(broadcast(queries))
-      .withColumn("__sim", GraftFunctions.cosine_sim(col("c_emb"), col("q_emb")))
-      .withColumn("__rk", row_number().over(probeW))
-      .filter(col("__rk") <= nProbe)
-      .select(col("query_id"), col("cell"), col("q_emb"))
+    val probes = probeCellsBatch(centroids, queries, nProbe)
     // no broadcast hint on probes, as in ivfTopKBatch
     assignCells(vectors, centroids, idCol, embCol)
       .join(probes, Seq("cell"))
@@ -525,15 +535,7 @@ object Similarity {
       .crossJoin(broadcast(rRel))
       .select(col("id"), col("band_id"),
         col("band_full").substr(lit(1), col("__r")).as("band_hash")))
-    val sized = keyed
-      .withColumn("__bn", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band_id", "band_hash")))
-      .filter(col("__bn") <= maxBucket)
-    val l = sized.select(col("band_id"), col("band_hash"), col("id").as("id_a"))
-    val r = sized.select(col("band_id"), col("band_hash"), col("id").as("id_b"))
-    val cands = l.join(r, Seq("band_id", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    val cands = Dedup.bucketPairs(keyed, maxBucket)
     // exact-cosine verification in codegen form: dot products via a
     // dim-aligned join over the exploded relation, norms from one
     // aggregate — no per-pair array lambdas. No broadcast hint on the
@@ -583,12 +585,7 @@ object Similarity {
       embCol: String = "embedding"): DataFrame = {
     require(k >= 1 && k <= poolSize, s"k=$k poolSize=$poolSize")
     GraftFunctions.register(vectors.sparkSession)
-    val pool = vectors
-      .crossJoin(broadcast(query))
-      .withColumn("rel",
-        Det.roundN(GraftFunctions.cosine_sim(col(embCol), col("q_emb")), 6))
-      .orderBy(desc("rel"), col(idCol))
-      .limit(poolSize)
+    val pool = cosineTopK(vectors, query, poolSize, idCol, embCol, "rel")
       .select(col(idCol), col("rel"), col(embCol))
       .staged
     // poolSize² pairwise cosines via a constant-key hash join (both sides

@@ -24,12 +24,15 @@ import graft.engine.Det
   * correlate meaningfully. */
 object TimeSeries {
 
-  def correlationTopK(series: DataFrame, keyCol: String, timeCol: String,
-      valCol: String, query: DataFrame, k: Int,
-      minPoints: Long = 2L): DataFrame = {
+  /** Pearson correlation of `valCol` against the query series' `qv` per
+    * `keys` group of the aligned rows `joined`: the five sums decimal-summed
+    * (order-independent), groups under `minPoints` rows dropped, `corr_r`
+    * pinned to 6 decimals (0 when either variance is 0). Returns the
+    * groups with n, the sums and corr_r. */
+  private def pearson(joined: DataFrame, keys: Seq[Column], valCol: String,
+      minPoints: Long): DataFrame = {
     def dec(c: Column) = c.cast(DecimalType(28, 6))
-    val joined = series.join(broadcast(query), Seq(timeCol))
-    val stats = joined.groupBy(col(keyCol))
+    val stats = joined.groupBy(keys: _*)
       .agg(count(lit(1)).as("n"),
         sum(dec(col(valCol))).cast("double").as("sx"),
         sum(dec(col("qv"))).cast("double").as("sy"),
@@ -43,6 +46,13 @@ object TimeSeries {
       .withColumn("corr_r", Det.roundN(
         when(dx > 0 && dy > 0, num / (sqrt(dx) * sqrt(dy))).otherwise(0.0),
         6))
+  }
+
+  def correlationTopK(series: DataFrame, keyCol: String, timeCol: String,
+      valCol: String, query: DataFrame, k: Int,
+      minPoints: Long = 2L): DataFrame = {
+    val joined = series.join(broadcast(query), Seq(timeCol))
+    pearson(joined, Seq(col(keyCol)), valCol, minPoints)
       .orderBy(desc("corr_r"), col(keyCol))
       .limit(k)
       .select(col(keyCol), col("n"), col("corr_r"))
@@ -60,27 +70,13 @@ object TimeSeries {
   def bestLagCorrelation(series: DataFrame, keyCol: String, timeCol: String,
       valCol: String, query: DataFrame, maxLag: Int,
       minPoints: Long = 2L): DataFrame = {
-    def dec(c: Column) = c.cast(DecimalType(28, 6))
     val shifted = query
       .select(col(timeCol), col("qv"),
         explode(sequence(lit(-maxLag), lit(maxLag))).as("lag"))
       .select(date_add(col(timeCol), col("lag")).as(timeCol), col("lag"),
         col("qv"))
     val joined = series.join(broadcast(shifted), Seq(timeCol))
-    val stats = joined.groupBy(col(keyCol), col("lag"))
-      .agg(count(lit(1)).as("n"),
-        sum(dec(col(valCol))).cast("double").as("sx"),
-        sum(dec(col("qv"))).cast("double").as("sy"),
-        sum(dec(col(valCol) * col("qv"))).cast("double").as("sxy"),
-        sum(dec(col(valCol) * col(valCol))).cast("double").as("sxx"),
-        sum(dec(col("qv") * col("qv"))).cast("double").as("syy"))
-    val num = col("n") * col("sxy") - col("sx") * col("sy")
-    val dx = col("n") * col("sxx") - col("sx") * col("sx")
-    val dy = col("n") * col("syy") - col("sy") * col("sy")
-    stats.filter(col("n") >= minPoints)
-      .withColumn("corr_r", Det.roundN(
-        when(dx > 0 && dy > 0, num / (sqrt(dx) * sqrt(dy))).otherwise(0.0),
-        6))
+    pearson(joined, Seq(col(keyCol), col("lag")), valCol, minPoints)
       .groupBy(col(keyCol))
       .agg(max(struct(col("corr_r").as("c"), (-col("lag")).as("neg_lag"),
         col("n").as("n"))).as("__best"))

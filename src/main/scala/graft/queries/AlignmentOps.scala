@@ -30,13 +30,7 @@ object AlignmentOps {
     * Bradley-Terry oracles so they score docs identically to
     * t_text_quality. */
   private def qualityCtes: String = {
-    raw"""f AS (
-       |  SELECT doc_id, source, lang, text,
-       |    len(${tokensSql("text")}) AS words,
-       |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS punct,
-       |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
-       |    ${hitsSql("text", TextFunctions.stopwordsEn)} AS stop_hits
-       |  FROM documents),
+    raw"""${TextFunctions.qualityFeaturesSql(Seq("source", "lang"))},
        |g AS (
        |  SELECT doc_id, source, lang, words, stop_hits,
        |    CASE WHEN words > 0 THEN ${roundN("chars * 1.0 / words", 2)} ELSE 0.0 END AS awl,
@@ -327,13 +321,7 @@ object AlignmentOps {
       "sim_range_search",
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
          |${Fixtures.codebookCte},
-         |qs AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 8),
-         |probes AS (
-         |  SELECT query_id, cell, qe FROM (
-         |    SELECT q.query_id, c.cell, q.qe,
-         |      row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY (${cosSql("c.ce", "q.qe")}) DESC, c.cell) AS rk
-         |    FROM cent c CROSS JOIN qs q) WHERE rk <= 4),
+         |${Fixtures.queryProbesCtes},
          |${Fixtures.assignedCtes},
          |hits AS (
          |  SELECT p.query_id, a.vec_id, a.cell,

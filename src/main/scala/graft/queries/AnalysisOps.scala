@@ -115,13 +115,7 @@ object AnalysisOps {
       "sim_hard_negatives",
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
          |${Fixtures.codebookCte},
-         |qs AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 8),
-         |probes AS (
-         |  SELECT query_id, cell, qe FROM (
-         |    SELECT q.query_id, c.cell, q.qe,
-         |      row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY (${cosSql("c.ce", "q.qe")}) DESC, c.cell) AS rk
-         |    FROM cent c CROSS JOIN qs q) WHERE rk <= 4),
+         |${Fixtures.queryProbesCtes},
          |${Fixtures.assignedCtes},
          |band AS (
          |  SELECT p.query_id, a.vec_id, a.cell,

@@ -130,21 +130,12 @@ object Curation {
     // posting cap, overlap from co-occurrence counts).
     QueryDef.sql(
       "t_contamination",
-      raw"""WITH toks AS (
-         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
-         |sh AS (
-         |  SELECT doc_id, CASE WHEN len(t) >= 3
-         |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
-         |    ELSE [array_to_string(t, ' ')] END AS shingles
-         |  FROM toks),
-         |s AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
+      raw"""WITH ${Dedup.shinglesSql("doc_id", "doc_id")},
          |corp AS (SELECT doc_id, shingle FROM s WHERE doc_id % 20 <> 0),
          |bench AS (SELECT doc_id AS bench_id, shingle FROM s WHERE doc_id % 20 = 0),
          |bn AS (SELECT bench_id, COUNT(*) AS bench_n FROM bench GROUP BY 1),
          |cu AS (
-         |  SELECT doc_id, shingle FROM (
-         |    SELECT doc_id, shingle, COUNT(*) OVER (PARTITION BY shingle) AS pn FROM corp)
-         |  WHERE pn <= 1000),
+         |  ${Dedup.cappedPostingsSql("doc_id", "corp", "pn <= 1000")}),
          |ov AS (
          |  SELECT cu.doc_id, b.bench_id, COUNT(*) AS ov_n
          |  FROM cu JOIN bench b USING (shingle) GROUP BY 1, 2),
@@ -169,13 +160,7 @@ object Curation {
     // 100 TB flip to percentile_approx (the a_approx_percentiles toggle).
     QueryDef.sql(
       "t_quantile_filter",
-      raw"""WITH f AS (
-         |  SELECT doc_id, lang, text,
-         |    len(${tokensSql("text")}) AS words,
-         |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS punct,
-         |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
-         |    ${hitsSql("text", TextFunctions.stopwordsEn)} AS stop_hits
-         |  FROM documents),
+      raw"""WITH ${TextFunctions.qualityFeaturesSql(Seq("lang"))},
          |g AS (
          |  SELECT doc_id, lang, words, stop_hits,
          |    CASE WHEN words > 0 THEN ${roundN("chars * 1.0 / words", 2)} ELSE 0.0 END AS avg_word_len,
@@ -374,28 +359,7 @@ object Curation {
     // the literal export bytes.
     QueryDef.sql(
       "t_curation_export_v2",
-      raw"""WITH toks AS (
-         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
-         |sp AS (
-         |  SELECT doc_id, i - 1 AS start, array_to_string(t[i:i+7], ' ') AS span
-         |  FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 7, 0))) AS i) u),
-         |counts AS (SELECT span, COUNT(*) AS c FROM sp GROUP BY 1),
-         |cov AS (
-         |  SELECT DISTINCT s.doc_id, s.start + o AS pos
-         |  FROM sp s JOIN counts c USING (span),
-         |       LATERAL (SELECT unnest(generate_series(0, 7)) AS o) x
-         |  WHERE c.c >= 2),
-         |tok AS (
-         |  SELECT doc_id, generate_subscripts(t, 1) - 1 AS pos, unnest(t) AS tk
-         |  FROM toks),
-         |kept AS (
-         |  SELECT tok.doc_id, tok.pos, tok.tk
-         |  FROM tok LEFT JOIN cov ON cov.doc_id = tok.doc_id AND cov.pos = tok.pos
-         |  WHERE cov.doc_id IS NULL),
-         |rebuilt AS (
-         |  SELECT doc_id, COUNT(*) AS n_kept,
-         |    string_agg(tk, ' ' ORDER BY pos) AS clean_text
-         |  FROM kept GROUP BY 1),
+      raw"""WITH ${Dedup.stripDuplicateSpansSql(8)},
          |ct AS (
          |  SELECT doc_id, str_split_regex(clean_text, '\s+') AS t
          |  FROM rebuilt WHERE n_kept >= 20),
@@ -514,13 +478,7 @@ object Curation {
     // chain is hash-checked end-to-end.
     QueryDef.sql(
       "t_training_export",
-      raw"""WITH f AS (
-         |  SELECT doc_id, lang, text,
-         |    len(${tokensSql("text")}) AS words,
-         |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS punct,
-         |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
-         |    ${hitsSql("text", TextFunctions.stopwordsEn)} AS stop_hits
-         |  FROM documents WHERE doc_id % 20 <> 0),
+      raw"""WITH ${TextFunctions.qualityFeaturesSql(Seq("lang"), "documents WHERE doc_id % 20 <> 0")},
          |g AS (
          |  SELECT doc_id, lang, words, stop_hits,
          |    CASE WHEN words > 0 THEN ${roundN("chars * 1.0 / words", 2)} ELSE 0.0 END AS avg_word_len,
@@ -536,21 +494,12 @@ object Curation {
          |gated AS (
          |  SELECT doc_id FROM q JOIN th ON th.lang = q.lang
          |  WHERE quality_score >= lang_p25),
-         |toks AS (
-         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
-         |sh AS (
-         |  SELECT doc_id, CASE WHEN len(t) >= 3
-         |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
-         |    ELSE [array_to_string(t, ' ')] END AS shingles
-         |  FROM toks),
-         |s AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
+         |${Dedup.shinglesSql("doc_id", "doc_id")},
          |corp AS (SELECT doc_id, shingle FROM s WHERE doc_id % 20 <> 0),
          |bench AS (SELECT doc_id AS bench_id, shingle FROM s WHERE doc_id % 20 = 0),
          |bn AS (SELECT bench_id, COUNT(*) AS bench_n FROM bench GROUP BY 1),
          |cu AS (
-         |  SELECT doc_id, shingle FROM (
-         |    SELECT doc_id, shingle, COUNT(*) OVER (PARTITION BY shingle) AS pn FROM corp)
-         |  WHERE pn <= 1000),
+         |  ${Dedup.cappedPostingsSql("doc_id", "corp", "pn <= 1000")}),
          |ov AS (
          |  SELECT cu.doc_id, b.bench_id, COUNT(*) AS ov_n
          |  FROM cu JOIN bench b USING (shingle) GROUP BY 1, 2),

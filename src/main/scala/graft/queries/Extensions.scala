@@ -96,20 +96,9 @@ object Extensions {
     * lake); materialized, the closure iterates over the pair list
     * alone. */
   private val ngramClusterCte: String =
-    raw"""WITH RECURSIVE toks AS (
-       |  SELECT doc_id AS id, ${tokensSql("text")} AS t FROM documents),
-       |sh AS (
-       |  SELECT id, CASE WHEN len(t) >= 3
-       |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
-       |    ELSE [array_to_string(t, ' ')] END AS shingles
-       |  FROM toks),
-       |s AS (SELECT id, unnest(shingles) AS shingle FROM sh),
+    raw"""WITH RECURSIVE ${Dedup.shinglesSql("doc_id AS id", "id")},
        |sizes AS (SELECT id, COUNT(*) AS n FROM s GROUP BY 1),
-       |nd AS (SELECT ${Dedup.postingCapOracleSql("COUNT(DISTINCT id)")} AS cap FROM s),
-       |useful AS (
-       |  SELECT id, shingle FROM (
-       |    SELECT id, shingle, COUNT(*) OVER (PARTITION BY shingle) AS pn FROM s), nd
-       |  WHERE pn BETWEEN 2 AND nd.cap),
+       |${Dedup.usefulPostingsSql},
        |inter AS (
        |  SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS inter
        |  FROM useful a JOIN useful b USING (shingle)
@@ -140,14 +129,7 @@ object Extensions {
     * Used by both the full-corpus and the incremental-probe oracles so
     * the two cannot drift apart. */
   private[queries] val minhashPairsCte: String =
-    raw"""WITH toks AS (
-       |  SELECT doc_id AS id, ${tokensSql("text")} AS t FROM documents),
-       |sh AS (
-       |  SELECT id, CASE WHEN len(t) >= 3
-       |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
-       |    ELSE [array_to_string(t, ' ')] END AS shingles
-       |  FROM toks),
-       |s AS (SELECT id, unnest(shingles) AS shingle FROM sh),
+    raw"""WITH ${Dedup.shinglesSql("doc_id AS id", "id")},
        |sizes AS (SELECT id, COUNT(*) AS n FROM s GROUP BY 1),
        |shh AS (
        |  SELECT id, shingle, ${Det.h56Sql("shingle")} AS h1,
@@ -368,13 +350,7 @@ object Extensions {
 
     QueryDef.sql(
       "t_text_quality",
-      raw"""WITH f AS (
-         |  SELECT doc_id, text,
-         |    len(${tokensSql("text")}) AS words,
-         |    len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS punct,
-         |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
-         |    ${hitsSql("text", TextFunctions.stopwordsEn)} AS stop_hits
-         |  FROM documents),
+      raw"""WITH ${TextFunctions.qualityFeaturesSql(Nil)},
          |g AS (
          |  SELECT doc_id, words, stop_hits,
          |    CASE WHEN words > 0 THEN ${roundN("chars * 1.0 / words", 2)} ELSE 0.0 END AS avg_word_len,
@@ -1140,20 +1116,9 @@ object Extensions {
     // Jaccard from co-occurrence counts.
     QueryDef.sql(
       "dedup_ngram_jaccard",
-      raw"""WITH toks AS (
-         |  SELECT doc_id AS id, ${tokensSql("text")} AS t FROM documents),
-         |sh AS (
-         |  SELECT id, CASE WHEN len(t) >= 3
-         |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
-         |    ELSE [array_to_string(t, ' ')] END AS shingles
-         |  FROM toks),
-         |s AS (SELECT id, unnest(shingles) AS shingle FROM sh),
+      raw"""WITH ${Dedup.shinglesSql("doc_id AS id", "id")},
          |sizes AS (SELECT id, COUNT(*) AS n FROM s GROUP BY 1),
-         |nd AS (SELECT ${Dedup.postingCapOracleSql("COUNT(DISTINCT id)")} AS cap FROM s),
-         |useful AS (
-         |  SELECT id, shingle FROM (
-         |    SELECT id, shingle, COUNT(*) OVER (PARTITION BY shingle) AS pn FROM s), nd
-         |  WHERE pn BETWEEN 2 AND nd.cap),
+         |${Dedup.usefulPostingsSql},
          |inter AS (
          |  SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS inter
          |  FROM useful a JOIN useful b USING (shingle)
@@ -1176,20 +1141,9 @@ object Extensions {
     // into its two directed containment rows.
     QueryDef.sql(
       "dedup_containment",
-      raw"""WITH toks AS (
-         |  SELECT doc_id AS id, ${tokensSql("text")} AS t FROM documents),
-         |sh AS (
-         |  SELECT id, CASE WHEN len(t) >= 3
-         |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
-         |    ELSE [array_to_string(t, ' ')] END AS shingles
-         |  FROM toks),
-         |s AS (SELECT id, unnest(shingles) AS shingle FROM sh),
+      raw"""WITH ${Dedup.shinglesSql("doc_id AS id", "id")},
          |sizes AS (SELECT id, COUNT(*) AS n FROM s GROUP BY 1),
-         |nd AS (SELECT ${Dedup.postingCapOracleSql("COUNT(DISTINCT id)")} AS cap FROM s),
-         |useful AS (
-         |  SELECT id, shingle FROM (
-         |    SELECT id, shingle, COUNT(*) OVER (PARTITION BY shingle) AS pn FROM s), nd
-         |  WHERE pn BETWEEN 2 AND nd.cap),
+         |${Dedup.usefulPostingsSql},
          |inter AS (
          |  SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS inter
          |  FROM useful a JOIN useful b USING (shingle)
@@ -1216,14 +1170,7 @@ object Extensions {
     // zero-false-negative claim the prefix filter makes.
     QueryDef.sql(
       "dedup_prefix_join",
-      raw"""WITH toks AS (
-         |  SELECT doc_id AS id, ${tokensSql("text")} AS t FROM documents),
-         |sh AS (
-         |  SELECT id, CASE WHEN len(t) >= 3
-         |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
-         |    ELSE [array_to_string(t, ' ')] END AS shingles
-         |  FROM toks),
-         |s AS (SELECT id, unnest(shingles) AS shingle FROM sh),
+      raw"""WITH ${Dedup.shinglesSql("doc_id AS id", "id")},
          |sizes AS (SELECT id, COUNT(*) AS n FROM s GROUP BY 1),
          |inter AS (
          |  SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS inter
@@ -1283,28 +1230,7 @@ object Extensions {
     // what keeps the rewrite meaningful at scale.
     QueryDef.sql(
       "dedup_strip_spans",
-      raw"""WITH toks AS (
-         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
-         |sp AS (
-         |  SELECT doc_id, i - 1 AS start, array_to_string(t[i:i+7], ' ') AS span
-         |  FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 7, 0))) AS i) u),
-         |counts AS (SELECT span, COUNT(*) AS c FROM sp GROUP BY 1),
-         |cov AS (
-         |  SELECT DISTINCT s.doc_id, s.start + o AS pos
-         |  FROM sp s JOIN counts c USING (span),
-         |       LATERAL (SELECT unnest(generate_series(0, 7)) AS o) x
-         |  WHERE c.c >= 2),
-         |tok AS (
-         |  SELECT doc_id, generate_subscripts(t, 1) - 1 AS pos, unnest(t) AS tk
-         |  FROM toks),
-         |kept AS (
-         |  SELECT tok.doc_id, tok.pos, tok.tk
-         |  FROM tok LEFT JOIN cov ON cov.doc_id = tok.doc_id AND cov.pos = tok.pos
-         |  WHERE cov.doc_id IS NULL),
-         |rebuilt AS (
-         |  SELECT doc_id, COUNT(*) AS n_kept,
-         |    string_agg(tk, ' ' ORDER BY pos) AS clean_text
-         |  FROM kept GROUP BY 1)
+      raw"""WITH ${Dedup.stripDuplicateSpansSql(8)}
          |SELECT d.doc_id,
          |  CAST(len(${tokensSql("d.text")}) AS BIGINT) AS n_tokens,
          |  CAST(len(${tokensSql("d.text")}) - COALESCE(n_kept, 0) AS BIGINT) AS n_removed,
@@ -1583,13 +1509,7 @@ object Extensions {
       "sim_ivf_batch",
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
          |${Fixtures.codebookCte},
-         |qs AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 8),
-         |probes AS (
-         |  SELECT query_id, cell, qe FROM (
-         |    SELECT q.query_id, c.cell, q.qe,
-         |      row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY (${cosSql("c.ce", "q.qe")}) DESC, c.cell) AS rk
-         |    FROM cent c CROSS JOIN qs q) WHERE rk <= 4),
+         |${Fixtures.queryProbesCtes},
          |${Fixtures.assignedCtes},
          |hits AS (
          |  SELECT p.query_id, a.vec_id, a.cell,

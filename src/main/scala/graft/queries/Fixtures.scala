@@ -35,6 +35,19 @@ object Fixtures {
        |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell ASC) AS rn
        |    FROM scored) WHERE rn = 1)""".stripMargin
 
+  /** DuckDB form of [[Similarity.ivfTopKBatch]]'s probe choice for the
+    * fixed query batch: the CTEs `qs(query_id, qe)`, the `e` rows with
+    * `vec_id < 8`, and `probes(query_id, cell, qe)`, each query's 4
+    * highest-cosine `cent` cells, ties to the lower cell. */
+  val queryProbesCtes: String =
+    s"""qs AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 8),
+       |probes AS (
+       |  SELECT query_id, cell, qe FROM (
+       |    SELECT q.query_id, c.cell, q.qe,
+       |      row_number() OVER (PARTITION BY q.query_id
+       |        ORDER BY (${Similarity.cosineOracleSql("c.ce", "q.qe")}) DESC, c.cell) AS rk
+       |    FROM cent c CROSS JOIN qs q) WHERE rk <= 4)""".stripMargin
+
   /** Out-links of the synthetic document link graph: doc d links to
     * (d·p + j) mod n for the j-th multiplier p (j from 1), n the document
     * count. */

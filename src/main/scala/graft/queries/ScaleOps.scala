@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.{Det, Tables}
@@ -55,6 +55,37 @@ object ScaleOps {
             s"CASE WHEN $dx > 0 AND $dy > 0 THEN $num / (SQRT($dx) * SQRT($dy)) ELSE 0.0 END", 6)} AS corr_r
          |  FROM m""".stripMargin
     }
+
+  /** The percentile_approx rank contract's counts over `ev(event_type,
+    * value)`: each group's p50 and p90 sketched at every accuracy in
+    * `accs`, joined back, and counted — n, then per accuracy the rows
+    * strictly below (`lt50`, `lt90`) and at or below (`le50`, `le90`)
+    * each estimate, every sketch and count column suffixed by `sfx(acc)`.
+    * Exact integer rank logic; no interpolated percentile is compared. */
+  private def percentileRanks(ev: DataFrame, accs: Seq[Int],
+      sfx: Int => String): DataFrame = {
+    val sketchCols = accs.flatMap { acc => Seq(
+      percentile_approx(col("value"), lit(0.5), lit(acc)).as(s"p50${sfx(acc)}"),
+      percentile_approx(col("value"), lit(0.9), lit(acc)).as(s"p90${sfx(acc)}")) }
+    val ap = ev.groupBy("event_type").agg(sketchCols.head, sketchCols.tail: _*)
+    val rankCols = Seq(count(col("value")).as("n")) ++ accs.flatMap { acc =>
+      val p = sfx(acc)
+      Seq(count(when(col("value") < col(s"p50$p"), 1)).as(s"lt50$p"),
+        count(when(col("value") <= col(s"p50$p"), 1)).as(s"le50$p"),
+        count(when(col("value") < col(s"p90$p"), 1)).as(s"lt90$p"),
+        count(when(col("value") <= col(s"p90$p"), 1)).as(s"le90$p")) }
+    ev.join(broadcast(ap), Seq("event_type"))
+      .groupBy("event_type")
+      .agg(rankCols.head, rankCols.tail: _*)
+  }
+
+  /** Whether the estimate counted by the `lt<c>`/`le<c>` columns of
+    * [[percentileRanks]] keeps its rank bound: its [strictly-below,
+    * at-or-below] rank interval intersects [q−ε, q+ε]·n, ±1 row of slack
+    * at the boundary. */
+  private def rankOk(q: Double, eps: Double, c: String): Column =
+    (col(s"lt$c") <= (col("n") * (q + eps) + 1)) &&
+      (col(s"le$c") >= (col("n") * (q - eps) - 1))
 
   /** The full q_item_recs pipeline (item-item CF over order-basket
     * co-occurrence, relative-threshold prune, top-20 neighborhoods,
@@ -380,24 +411,10 @@ object ScaleOps {
           when(col("event_id") % 10 =!= 0, lit(0.0))
             .otherwise(pow(lit(10.0), (col("event_id") % 13).cast("double")))
             .as("value"))
-      val ap = ev.groupBy("event_type")
-        .agg(
-          percentile_approx(col("value"), lit(0.5), lit(1000)).as("p50"),
-          percentile_approx(col("value"), lit(0.9), lit(1000)).as("p90"))
-      def ok(q: Double, lt: org.apache.spark.sql.Column,
-          le: org.apache.spark.sql.Column) =
-        (lt <= (col("n") * (q + 0.001) + 1)) &&
-          (le >= (col("n") * (q - 0.001) - 1))
-      ev.join(broadcast(ap), Seq("event_type"))
-        .groupBy("event_type")
-        .agg(count(col("value")).as("n"),
-          count(when(col("value") < col("p50"), 1)).as("lt50"),
-          count(when(col("value") <= col("p50"), 1)).as("le50"),
-          count(when(col("value") < col("p90"), 1)).as("lt90"),
-          count(when(col("value") <= col("p90"), 1)).as("le90"))
+      percentileRanks(ev, Seq(1000), _ => "")
         .select(col("event_type"),
-          ok(0.5, col("lt50"), col("le50")).as("p50_ok"),
-          ok(0.9, col("lt90"), col("le90")).as("p90_ok"))
+          rankOk(0.5, 0.001, "50").as("p50_ok"),
+          rankOk(0.9, 0.001, "90").as("p90_ok"))
         .orderBy("event_type")
     },
 
@@ -461,7 +478,7 @@ object ScaleOps {
     QueryDef.sql(
       "z_order_pruning",
       s"""WITH evs AS (
-         |  SELECT event_id, user_id, epoch_us(ts) // 86400000000 AS day
+         |  SELECT event_id, user_id, ${Det.epochDaySql("ts")} AS day
          |  FROM events),
          |zf AS (
          |  SELECT user_id, day, (row_number() OVER (ORDER BY
@@ -497,14 +514,8 @@ object ScaleOps {
          |FROM sc JOIN tot USING (layout)
          |ORDER BY query_name, layout""".stripMargin) { (s, d) =>
       import s.implicits._
-      // day via FLOOR division to match DuckDB `//`: Spark's `div`
-      // truncates toward zero, which disagrees with the oracle for
-      // pre-1970 timestamps. (a - pmod(a,b)) div b is exact integer
-      // floor-division for any sign of a.
-      val us = expr("unix_micros(ts)")
       val evs = Tables.events(s, d).select(col("event_id"), col("user_id"),
-        ((us - pmod(us, lit(86400000000L)))
-          .divide(lit(86400000000L))).cast("long").as("day"))
+        Det.epochDay(col("ts")).as("day"))
       // BOTH layouts via the SCALE path (range shuffle + two-phase rank)
       // — bit-identical file ids to the demo global window (ZOrderSpec),
       // so the oracle's row_number mirror still hash-matches. The demo
@@ -782,27 +793,10 @@ object ScaleOps {
         |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin) { (s, d) =>
       val ev = Tables.events(s, d).select("event_type", "value")
       val accs = Seq(100, 1000, 10000)
-      val sketchCols = accs.flatMap { acc => Seq(
-        percentile_approx(col("value"), lit(0.5), lit(acc)).as(s"p50_$acc"),
-        percentile_approx(col("value"), lit(0.9), lit(acc)).as(s"p90_$acc")) }
-      val ap = ev.groupBy("event_type").agg(sketchCols.head, sketchCols.tail: _*)
-      val rankCols = Seq(count(col("value")).as("n")) ++ accs.flatMap { acc =>
-        Seq(count(when(col("value") < col(s"p50_$acc"), 1)).as(s"lt50_$acc"),
-          count(when(col("value") <= col(s"p50_$acc"), 1)).as(s"le50_$acc"),
-          count(when(col("value") < col(s"p90_$acc"), 1)).as(s"lt90_$acc"),
-          count(when(col("value") <= col(s"p90_$acc"), 1)).as(s"le90_$acc")) }
-      def ok(q: Double, eps: Double, lt: org.apache.spark.sql.Column,
-          le: org.apache.spark.sql.Column) =
-        (lt <= (col("n") * (q + eps) + 1)) && (le >= (col("n") * (q - eps) - 1))
-      ev.join(broadcast(ap), Seq("event_type"))
-        .groupBy("event_type")
-        .agg(rankCols.head, rankCols.tail: _*)
+      percentileRanks(ev, accs, acc => s"_$acc")
         .select(Seq(col("event_type"), col("n")) ++ accs.flatMap { acc =>
-          val eps = 1.0 / acc
-          Seq(ok(0.5, eps, col(s"lt50_$acc"), col(s"le50_$acc"))
-              .as(s"p50_ok_a$acc"),
-            ok(0.9, eps, col(s"lt90_$acc"), col(s"le90_$acc"))
-              .as(s"p90_ok_a$acc")) }: _*)
+          Seq(rankOk(0.5, 1.0 / acc, s"50_$acc").as(s"p50_ok_a$acc"),
+            rankOk(0.9, 1.0 / acc, s"90_$acc").as(s"p90_ok_a$acc")) }: _*)
         .orderBy("event_type")
     },
 
@@ -820,24 +814,10 @@ object ScaleOps {
       """SELECT event_type, TRUE AS p50_ok, TRUE AS p90_ok
         |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin) { (s, d) =>
       val ev = Tables.events(s, d).select("event_type", "value")
-      val ap = ev.groupBy("event_type")
-        .agg(
-          percentile_approx(col("value"), lit(0.5), lit(1000)).as("p50"),
-          percentile_approx(col("value"), lit(0.9), lit(1000)).as("p90"))
-      def ok(q: Double, lt: org.apache.spark.sql.Column,
-          le: org.apache.spark.sql.Column) =
-        (lt <= (col("n") * (q + 0.001) + 1)) &&
-          (le >= (col("n") * (q - 0.001) - 1))
-      ev.join(broadcast(ap), Seq("event_type"))
-        .groupBy("event_type")
-        .agg(count(col("value")).as("n"),
-          count(when(col("value") < col("p50"), 1)).as("lt50"),
-          count(when(col("value") <= col("p50"), 1)).as("le50"),
-          count(when(col("value") < col("p90"), 1)).as("lt90"),
-          count(when(col("value") <= col("p90"), 1)).as("le90"))
+      percentileRanks(ev, Seq(1000), _ => "")
         .select(col("event_type"),
-          ok(0.5, col("lt50"), col("le50")).as("p50_ok"),
-          ok(0.9, col("lt90"), col("le90")).as("p90_ok"))
+          rankOk(0.5, 0.001, "50").as("p50_ok"),
+          rankOk(0.9, 0.001, "90").as("p90_ok"))
         .orderBy("event_type")
     },
 
@@ -1253,7 +1233,7 @@ object ScaleOps {
     QueryDef.sql(
       "k_compaction_plan",
       s"""WITH evs AS (
-         |  SELECT event_id, user_id, epoch_us(ts) // 86400000000 AS day
+         |  SELECT event_id, user_id, ${Det.epochDaySql("ts")} AS day
          |  FROM events),
          |zf AS (
          |  SELECT (row_number() OVER (ORDER BY
@@ -1270,10 +1250,8 @@ object ScaleOps {
          |SELECT bin, COUNT(*) AS n_files, CAST(SUM(n_rows) AS BIGINT) AS total_rows,
          |  MIN(file_id) AS first_file, MAX(file_id) AS last_file
          |FROM planned GROUP BY bin ORDER BY bin""".stripMargin) { (s, d) =>
-      val us = expr("unix_micros(ts)")
       val evs = Tables.events(s, d).select(col("event_id"), col("user_id"),
-        ((us - pmod(us, lit(86400000000L)))
-          .divide(lit(86400000000L))).cast("long").as("day"))
+        Det.epochDay(col("ts")).as("day"))
       val zed = ZOrder.fileLayoutRanged(evs,
         Seq(ZOrder.zValue(col("user_id"), col("day"), 11), col("event_id")),
         rowsPerFile = 128)
@@ -1306,7 +1284,7 @@ object ScaleOps {
         val p1 = Det.h56Sql("CAST(uid AS VARCHAR)")
         val p2 = Det.h56Sql("CAST(uid AS VARCHAR)", 17)
         s"""WITH evs AS (
-           |  SELECT event_id, user_id, epoch_us(ts) // 86400000000 AS day
+           |  SELECT event_id, user_id, ${Det.epochDaySql("ts")} AS day
            |  FROM events),
            |zf AS (
            |  SELECT user_id, (row_number() OVER (ORDER BY
@@ -1358,10 +1336,8 @@ object ScaleOps {
            |ORDER BY probe_uid""".stripMargin
       }) { (s, d) =>
       import s.implicits._
-      val us = expr("unix_micros(ts)")
       val evs = Tables.events(s, d).select(col("event_id"), col("user_id"),
-        ((us - pmod(us, lit(86400000000L)))
-          .divide(lit(86400000000L))).cast("long").as("day"))
+        Det.epochDay(col("ts")).as("day"))
       val zed = ZOrder.fileLayoutRanged(evs,
         Seq(ZOrder.zValue(col("user_id"), col("day"), 11), col("event_id")),
         rowsPerFile = 512).staged

@@ -508,7 +508,7 @@ object StatsOps {
     QueryDef.sql(
       "z_hilbert_layout",
       s"""WITH evs AS (
-         |  SELECT event_id, user_id, epoch_us(ts) // 86400000000 AS day
+         |  SELECT event_id, user_id, ${Det.epochDaySql("ts")} AS day
          |  FROM events),
          |b AS (
          |  SELECT MIN(user_id) AS umin, MAX(user_id) AS umax,
@@ -554,10 +554,8 @@ object StatsOps {
          |SELECT query_name, layout, n_files, files_scanned, rows_scanned
          |FROM sc JOIN tot USING (layout)
          |ORDER BY query_name, layout""".stripMargin) { (s, d) =>
-      val us = expr("unix_micros(ts)")
       val evs = Tables.events(s, d).select(col("event_id"), col("user_id"),
-        ((us - pmod(us, lit(86400000000L)))
-          .divide(lit(86400000000L))).cast("long").as("day"))
+        Det.epochDay(col("ts")).as("day"))
       val b = evs.agg(min("user_id").as("umin"), max("user_id").as("umax"),
         min("day").as("dmin"), max("day").as("dmax"))
       val q = evs.crossJoin(broadcast(b)).select(
@@ -727,7 +725,7 @@ object StatsOps {
     QueryDef.sql(
       "w_changepoint_split",
       s"""WITH daily AS (
-         |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+         |  SELECT event_type, ${Det.epochDaySql("ts")} AS day,
          |    COUNT(*) AS c
          |  FROM events GROUP BY 1, 2),
          |pre AS (
@@ -755,11 +753,8 @@ object StatsOps {
          |  ${roundN("stat", 6)} AS stat, ${roundN("mean_l", 6)} AS mean_left,
          |  ${roundN("mean_r", 6)} AS mean_right
          |FROM best WHERE rn = 1 ORDER BY event_type""".stripMargin) { (s, d) =>
-      val us = expr("unix_micros(ts)")
       val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          ((us - pmod(us, lit(86400000000L))).divide(lit(86400000000L)))
-            .cast("long").as("day"))
+        .groupBy(col("event_type"), Det.epochDay(col("ts")).as("day"))
         .agg(count(lit(1)).as("c"))
       val wCum = Window.partitionBy("event_type").orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1664,7 +1659,7 @@ object StatsOps {
     QueryDef.sql(
       "k_retention_sweep",
       s"""WITH evs AS (
-         |  SELECT event_id, epoch_us(ts) // 86400000000 AS day
+         |  SELECT event_id, ${Det.epochDaySql("ts")} AS day
          |  FROM events),
          |lay AS (
          |  SELECT day,
@@ -1689,7 +1684,7 @@ object StatsOps {
          |FROM tiered, tot GROUP BY tier, all_rows
          |ORDER BY tier""".stripMargin) { (s, d) =>
       val evs = Tables.events(s, d).select(col("event_id"),
-        expr("unix_micros(ts) div 86400000000").as("day"))
+        Det.epochDay(col("ts")).as("day"))
       val lay = ZOrder.fileLayoutRanged(evs,
         Seq(col("day"), col("event_id")), rowsPerFile = 2048)
       val stats = lay.groupBy("file_id")
@@ -1775,7 +1770,7 @@ object StatsOps {
     QueryDef.sql(
       "w_theil_sen",
       s"""WITH daily AS (
-         |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+         |  SELECT event_type, ${Det.epochDaySql("ts")} AS day,
          |    COUNT(*) AS c
          |  FROM events GROUP BY 1, 2),
          |pairs AS (
@@ -1808,7 +1803,7 @@ object StatsOps {
          |ORDER BY t.event_type""".stripMargin) { (s, d) =>
       val daily = Tables.events(s, d)
         .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
+          Det.epochDay(col("ts")).as("day"))
         .agg(count(lit(1)).as("c"))
       val b = daily.select(col("event_type"), col("day").as("d2"),
         col("c").as("c2"))

@@ -205,7 +205,8 @@ object StreamingQueries {
       sentinel("2024-03-02 00:00:00"))
     val out = replay(s, runs(batches)) { (stream, _, out) =>
       EventStreams
-        .windowedAgg(stream, windowLen = "1 hour", watermark = "1 day")
+        .windowedAgg(stream, windowLen = "1 hour", slide = "1 hour",
+          watermark = "1 day")
         .writeStream.outputMode("append").format("parquet")
         .option("path", out)
     }

@@ -64,8 +64,7 @@ object BloomIngest {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         def write(df: DataFrame, path: String): Unit =
-          Pipeline.overwritePartitions(df.withColumn("batch_id",
-            lit(batchId)), path, "batch_id")
+          Pipeline.overwriteBatch(df, path, batchId)
         val w = Window.partitionBy("content_hash").orderBy(idCol)
         val b = batch.select(col(idCol),
             sha2(Dedup.normalize(col(textCol)), 256).as("content_hash"))

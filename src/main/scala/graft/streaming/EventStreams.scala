@@ -24,14 +24,17 @@ object EventStreams {
   final case class SessionUpdate(user_id: Long, events: Long,
       total_value: Double, session_start: Timestamp, last_seen: Timestamp)
 
-  /** Tumbling-window counts/sums with a watermark for late data.
-    * Late rows beyond the watermark are dropped; closed windows become
-    * immutable results (append-mode compatible). */
-  def windowedAgg(events: DataFrame, windowLen: String = "5 minutes",
+  /** Windowed counts/sums per event type with a watermark for late data:
+    * windows of `windowLen` starting every `slide`. The tumbling case is
+    * `slide == windowLen`; a shorter slide overlaps the windows, so each
+    * event contributes to windowLen/slide of them (trend smoothing over
+    * streams). Late rows beyond the watermark are dropped; closed windows
+    * become immutable results (append-mode compatible). */
+  def windowedAgg(events: DataFrame, windowLen: String, slide: String,
       watermark: String = "10 minutes"): DataFrame =
     events
       .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen), col("event_type"))
+      .groupBy(window(col("ts"), windowLen, slide), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value")).as("total_value"))
       .select(col("window.start").as("window_start"),
@@ -102,22 +105,6 @@ object EventStreams {
           }
       }
   }
-
-  /** Sliding-window counts/sums: overlapping windows of `windowLen` every
-    * `slide` — each event contributes to windowLen/slide windows (trend
-    * smoothing over streams; the tumbling case is slide == windowLen).
-    * Same bounded-state/watermark behavior as [[windowedAgg]]. */
-  def slidingAgg(events: DataFrame, windowLen: String = "10 minutes",
-      slide: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen, slide), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value")).as("total_value"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("event_type"), col("n_events"), col("total_value"))
 
   /** Stream-stream interval join: pair left rows with right rows on the
     * same key whose timestamp lands in [left_ts, left_ts + maxDelay] —

@@ -71,8 +71,7 @@ object NearDupIngest {
         // replay idempotency depends on overwriting ONLY the replayed
         // batch's partitions
         def write(df: DataFrame, path: String): Unit =
-          Pipeline.overwritePartitions(df.withColumn("batch_id",
-            lit(batchId)), path, "batch_id")
+          Pipeline.overwriteBatch(df, path, batchId)
         // NOT staged: the batch is a file-source parquet slice, and the
         // only consumers that re-scan it are the (already-staged) shingle
         // explode inside minhashIndex and the tiny id projection below —

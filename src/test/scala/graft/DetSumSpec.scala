@@ -66,4 +66,16 @@ class DetSumSpec extends AnyFunSuite {
       .as[Double].head()
     assert(got == expect)
   }
+
+  test("epochDay floors pre-1970 instants to their own negative day") {
+    val secs = Seq(-86400L, -3600L, -1L, 0L, 86399L, 86400L)
+    val rows = secs.toDF("s")
+      .select(timestamp_seconds(col("s")).as("ts"))
+      .select(Det.epochDay(col("ts")).as("day"),
+        expr("unix_micros(ts) div 86400000000").as("truncated"))
+      .as[(Long, Long)].collect()
+    assert(rows.map(_._1).toSeq == Seq(-1L, -1L, -1L, 0L, 0L, 1L))
+    // 1969-12-31T23:00:00Z: the truncating form puts it on day 0
+    assert(rows(1)._2 == 0L)
+  }
 }

@@ -65,12 +65,12 @@ class QualitySpec extends AnyFunSuite {
     val row = df.select(
       TextFunctions.wordCount(col("text")).as("wc"),
       TextFunctions.punctCount(col("text")).as("pc"),
-      TextFunctions.stopwordCount(col("text")).as("sc"),
-      TextFunctions.langId(col("text")).as("lang"),
+      TextFunctions.tokenHits(col("text"), TextFunctions.stopwordsEn).as("sc"),
+      TextFunctions.langId(TextFunctions.langHits(col("text"))).as("lang"),
       TextFunctions.hasLinks(col("text")).as("links")).collect().head
     assert(row.getLong(0) === 8)
     assert(row.getLong(1) === 2)
-    assert(row.getLong(2) === 3) // the, and, the
+    assert(row.getInt(2) === 3) // the, and, the
     assert(row.getString(3) === "en")
     assert(!row.getBoolean(4))
     // fingerprint invariant under word order + duplication

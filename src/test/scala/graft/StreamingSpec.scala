@@ -25,7 +25,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("windowed aggregation with watermark matches batch totals") {
     EventStreams.runToMemory(
-      EventStreams.windowedAgg(streamingEvents, "1 hour", "2 hours"),
+      EventStreams.windowedAgg(streamingEvents, "1 hour", "1 hour", "2 hours"),
       "win_out")
     val streamed = spark.table("win_out")
       .agg(sum("n_events")).as[Long].collect().head
@@ -161,7 +161,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("sliding windows place every event in windowLen/slide windows") {
     EventStreams.runToMemory(
-      EventStreams.slidingAgg(streamingEvents, "2 hours", "1 hour", "2 hours"),
+      EventStreams.windowedAgg(streamingEvents, "2 hours", "1 hour", "2 hours"),
       "slide_out")
     val streamed = spark.table("slide_out")
       .agg(sum("n_events")).as[Long].collect().head
