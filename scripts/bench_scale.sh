@@ -14,11 +14,12 @@
 #     failure; the artifact is still written first.
 #
 #   scripts/bench_scale.sh heap <lake> [heap…]
-#     Runs graft.tools.Profile over the ten heaviest flat-sf1 queries
-#     under each driver heap (default 2g 4g 8g): one JSON line per query
-#     with spill bytes and peak execution memory. Then hash-verifies the
-#     same queries against the DuckDB oracle at the first heap, so "it
-#     spilled" is also "it stayed correct".
+#     Runs graft.Bench over the ten heaviest flat-sf1 queries under each
+#     driver heap (default 2g 4g 8g) and prints, from the artifact's
+#     `profile` map, one JSON line per query with spill bytes and peak
+#     execution memory, then a total line with the summed spill. Then
+#     hash-verifies the same queries against the DuckDB oracle at the
+#     first heap, so "it spilled" is also "it stayed correct".
 #
 # Run on a quiet machine, after scripts/verify_scale.sh ran green on the
 # same lakes. SPARK_GRAFT_CPUS sets the local cores (default: all).
@@ -70,7 +71,7 @@ HEAVY_SF1=(
   dedup_embedding_cosine dedup_lsh_eval dedup_ngram_jaccard dedup_containment
 )
 
-usage() { sed -n '2,24p' "$0" >&2; exit 2; }
+usage() { sed -n '2,25p' "$0" >&2; exit 2; }
 
 settle() { # wait up to 12 min for the 1-min load (<1.5) and 5-min load
   # (<3.0) to decay: each leg ends at full tilt, and a leg launched on the
@@ -120,12 +121,18 @@ case "${1:-}" in
     heaps=("$@")
     [ ${#heaps[@]} -gt 0 ] || heaps=(2g 4g 8g)
     for heap in "${heaps[@]}"; do
-      echo "=== Profile $lake @ $heap [$(date -u +%H:%M:%S)] ==="
-      SPARK_DRIVER_MEM=$heap \
-        sbt -batch "runMain graft.tools.Profile $lake 1 ${HEAVY_SF1[*]}" 2>&1 \
-        | grep -E '\{"(query|total)"|OutOfMemoryError' | tee "$tmp/profile_$heap.log" || true
-      # no total line: the JVM died before the last query
-      grep -q '"total"' "$tmp/profile_$heap.log"
+      SPARK_DRIVER_MEM=$heap SPARK_GRAFT_BENCH_RETRIES=0 \
+        bench "$lake" "$tmp/heap_$heap.json" "${HEAVY_SF1[@]}"
+      python3 - "$tmp/heap_$heap.json" <<'PY'
+import json, sys
+art = json.load(open(sys.argv[1]))
+keys = ("memory_spilled_bytes", "disk_spilled_bytes", "peak_exec_bytes")
+for q, p in art["profile"].items():
+    print(json.dumps({"query": q, **{k: p[k] for k in keys}}))
+print(json.dumps({"total": {"heap_mb": art["env"]["heap_mb"],
+    "queries": len(art["profile"]), "failed": len(art.get("errors", {})),
+    **{k: sum(p[k] for p in art["profile"].values()) for k in keys[:2]}}}))
+PY
     done
     echo "=== hash-verify at ${heaps[0]} ==="
     SPARK_DRIVER_MEM=${heaps[0]} \

@@ -6,12 +6,15 @@
 #   - dumps oracle_sql.json (a one-query Verify at sf0.001 still writes the
 #     full map) and counts identical and whitespace-only entries, listing
 #     the names that differ otherwise;
-#   - runs `PROFILE_PLAN=1 graft.tools.Profile <sf> 1 [query…]` and compares
-#     each query's formatted plan, with expression ids (#123), plan_id=,
-#     RDD ids, scratch paths and lambda addresses masked;
-#   - compares each query's Profile jobs, stages and tasks counts, rerunning
-#     the queries whose counts differ twice per side.
-# It exits nonzero on any difference in a query outside the allow-list.
+#   - runs `PROFILE_PLAN=1 SPARK_GRAFT_BENCH_RETRIES=0 graft.Bench [query…]`
+#     on the sf lake and compares each query's formatted plan from stdout,
+#     with expression ids (#123), plan_id=, RDD ids, scratch paths and
+#     lambda addresses masked;
+#   - compares each query's jobs, stages and tasks from the `profile` map
+#     of the Bench artifact, rerunning the queries whose counts differ
+#     twice per side.
+# The parent must have Bench's `profile` map and PROFILE_PLAN. It exits
+# nonzero on any difference in a query outside the allow-list.
 #
 # Usage: scripts/refactor_check.sh [--allow q1,q2] [--stage-none]
 #          [--work DIR] <parent-rev> [sf] [query…]
@@ -33,7 +36,7 @@ while [ $# -gt 0 ]; do
     *) break ;;
   esac
 done
-[ $# -ge 1 ] || { sed -n '2,23p' "$0" >&2; exit 2; }
+[ $# -ge 1 ] || { sed -n '2,26p' "$0" >&2; exit 2; }
 rev=$(git rev-parse --verify "$1^{commit}") || exit 2
 sf=${2:-sf0.01}
 shift $(( $# >= 2 ? 2 : 1 ))
@@ -43,19 +46,22 @@ if [ ! -d "$parent/src" ]; then
   mkdir -p "$parent" && git archive "$rev" | tar -x -C "$parent" || exit 2
 fi
 
-# run <checkout> <outDir>: the oracle dump and the plan profile
+# run <checkout> <outDir>: the oracle dump, then the profiled Bench pass
+# (which exits nonzero when a query fails; its artifact records the error)
 run() {
   local dir=$1 out=$2
   shift 2
   rm -rf "$out" && mkdir -p "$out"
-  (cd "$dir" && PROFILE_PLAN=1 sbt -batch \
+  (cd "$dir" && PROFILE_PLAN=1 SPARK_GRAFT_BENCH_RETRIES=0 \
+    SPARK_GRAFT_SF_DIR=$sfdir SPARK_GRAFT_BENCH_OUT=$out/bench.json sbt -batch \
     "set javaOptions += \"-Dspark.graft.stage.mode=$mode\"" \
     "runMain graft.Verify /root/testdata/sf0.001 $out/verify q1_pricing_summary" \
-    "runMain graft.tools.Profile $sfdir 1 $*" >"$out/profile.log" 2>&1) \
-    || { echo "FAIL: sbt failed in $dir, see $out/profile.log"; exit 1; }
+    "runMain graft.Bench $*" >"$out/bench.log" 2>&1)
+  [ -s "$out/bench.json" ] \
+    || { echo "FAIL: no Bench artifact from $dir, see $out/bench.log"; exit 1; }
 }
 key=$(basename "$sfdir")-$mode-$(echo "$*" | md5sum | cut -c1-8)
-[ -s "$parent/out/$key/profile.log" ] || run "$parent" "$parent/out/$key" "$@"
+[ -s "$parent/out/$key/bench.json" ] || run "$parent" "$parent/out/$key" "$@"
 run "$tree" "$work/tree/$key" "$@"
 
 # compare <allow> <parent out,…> <tree out,…>: exits 3 with a RECHECK line
@@ -78,24 +84,24 @@ MASKS = [(r"#\d+L?", "#"), (r"plan_id=\d+", "plan_id="),
          (r"\$\$?Lambda[\w$/.@]*", "<lambda>"), (r"@[0-9a-f]{6,}", "@"),
          (r"RDD\[\d+\]", "RDD[]")]
 def profile(d):
-    plans, counts, cur = {}, {}, None
-    for line in open(f"{d}/profile.log", errors="replace"):
+    plans, cur = {}, None
+    for line in open(f"{d}/bench.log", errors="replace"):
         if not line.startswith("[info] "):  # stderr: Spark's log lines
             continue
         line = line[7:].rstrip("\n")
         m = re.match(r"==== (\S+) ====$", line)
         if m:
             cur = m.group(1); plans[cur] = []; continue
-        if line.startswith("[profile] "):
+        if line.startswith('{"metric"'):
             cur = None
-        elif line.startswith('{"query"'):
-            j = json.loads(line)
-            counts[j["query"]] = tuple(j.get(k) for k in ("jobs", "stages", "tasks")) \
-                if "error" not in j else ("error", j["error"])
         elif cur:
             for p, r in MASKS:
                 line = re.sub(p, r, line)
             plans[cur].append(line)
+    art = json.load(open(f"{d}/bench.json"))
+    counts = {q: tuple(p.get(k) for k in ("jobs", "stages", "tasks"))
+              for q, p in art.get("profile", {}).items()}
+    counts.update({q: ("error", e) for q, e in art.get("errors", {}).items()})
     return plans, counts
 (pa, ca), (pb, cb) = profile(old), profile(new)
 plan_diff = sorted(q for q in set(pa) | set(pb) if pa.get(q) != pb.get(q))
@@ -120,7 +126,7 @@ for q in first:
 print(f"counts: {len(ca)} parent, {len(cb)} tree; different {count_diff}")
 bad = (set(diff) | set(plan_diff) | set(count_diff)) - allow
 if not ca or not cb:
-    bad.add("<no profile lines>")
+    bad.add("<no profile map>")
 print("FAIL outside allow-list:" if bad else "OK", *sorted(bad))
 sys.exit(1 if bad else 0)
 PY

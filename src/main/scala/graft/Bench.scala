@@ -1,7 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import graft.Verify.jsonStr
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.collection.mutable
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+
+import graft.Verify.jsonStr
+import graft.engine.{Stage, Tables}
+import graft.expressions.BroadcastGuard
+import graft.queries.QueryDef
+
+/** The benchmark main: times every query (or the named ones) in
+  * declaration order in one warm session, and breaks each timed run down
+  * by layer. One JSON line goes to stdout; the same line plus a
+  * `"profile": {query: {…}}` map goes to `SPARK_GRAFT_BENCH_OUT`
+  * (default `bench_out.json`). See [[step]] for the profile fields.
+  *
+  * Settings: `SPARK_GRAFT_SF_DIR` (the lake), `SPARK_GRAFT_BENCH_OUT`,
+  * `SPARK_GRAFT_BENCH_RETRIES` (re-runs of a contaminated pass, default
+  * 2), query names as arguments, and `PROFILE_PLAN=1`, which prints each
+  * query's formatted plan, untimed, between its build and its count.
+  *
+  * Usage: runMain graft.Bench [query…]
+  */
 object Bench {
 
   /** Contamination gate, pure so BenchGateSpec can pin the thresholds.
@@ -51,6 +76,19 @@ object Bench {
       Some((f.sum, if (f.length > 7) f(7) else 0L))
     } catch { case _: Throwable => None }
 
+  /** Steal % between two [[cpuStat]] readings. */
+  private def stealBetween(a: Option[(Long, Long)],
+      b: Option[(Long, Long)]): Option[Double] =
+    for (x <- a; y <- b) yield 100.0 * (y._2 - x._2) / ((y._1 - x._1) max 1L)
+
+  // Double.toString (not the f-interpolator) keeps the JSON parseable on
+  // comma-decimal locales — `f"%.2f"` would splice "8,50" unquoted
+  private def pct(p: Option[Double]): String =
+    p.map(v => (math.rint(100 * v) / 100).toString).getOrElse("null")
+
+  private def obj(kvs: Seq[(String, Any)]): String =
+    kvs.map { case (k, v) => jsonStr(k) + ":" + v }.mkString("{", ",", "}")
+
   /** Count OTHER java processes on the box whose cmdline mentions sbt,
     * spark, or this project — the known bench poisoners (forked JVMs
     * survive sbt kills; see ARCHITECTURE.md). Scans /proc/N/cmdline.
@@ -85,6 +123,135 @@ object Bench {
         }
       } finally procs.close()
     } catch { case _: Throwable => -1 }
+  }
+
+  private val TagKey = "graft.bench.tag"
+
+  /** Task-metric totals of the jobs started under `TagKey=query`. */
+  private final class Listener extends SparkListener {
+    private val sums = mutable.Map.empty[String, Long].withDefaultValue(0L)
+    private val stageIds = mutable.Set.empty[Int]
+    private val drained = new CountDownLatch(1)
+    private var drainJob = -1
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      Option(e.properties).map(_.getProperty(TagKey)).orNull match {
+        case "query" => sums("jobs") += 1; stageIds ++= e.stageIds
+        case "drain" => drainJob = e.jobId
+        case _ => ()
+      }
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      if (e.jobId == drainJob) drained.countDown()
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized {
+        if (stageIds(e.stageInfo.stageId)) sums("stages") += 1
+      }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      val t = e.taskMetrics
+      if (stageIds(e.stageId) && t != null) {
+        sums("tasks") += 1
+        sums("executor_run_ms") += t.executorRunTime
+        sums("shuffle_read_bytes") += t.shuffleReadMetrics.totalBytesRead
+        sums("shuffle_write_bytes") += t.shuffleWriteMetrics.bytesWritten
+        sums("memory_spilled_bytes") += t.memoryBytesSpilled
+        sums("disk_spilled_bytes") += t.diskBytesSpilled
+        sums("peak_exec_bytes") = sums("peak_exec_bytes") max t.peakExecutionMemory
+      }
+    }
+
+    /** The totals once every event posted so far has been delivered: the
+      * listener bus is FIFO, so a marker job's end arrives after
+      * everything that ran before it. */
+    def drain(sc: SparkContext): Map[String, Long] = {
+      sc.setLocalProperty(TagKey, "drain")
+      try sc.parallelize(Seq(0), 1).count()
+      finally sc.setLocalProperty(TagKey, null)
+      if (!drained.await(1, TimeUnit.MINUTES))
+        System.err.println("[bench] listener bus not drained; totals may be partial")
+      synchronized(sums.toMap.withDefaultValue(0L))
+    }
+  }
+
+  /** `{table:n}` for every base table `plan` scans at least 3 times. */
+  private def rescans(plan: String): String =
+    obj(Tables.names.map(t => t -> s"$t.parquet".r.findAllIn(plan).length)
+      .filter(_._2 >= 3))
+
+  private val Fields = Seq("jobs", "stages", "tasks", "executor_run_ms",
+    "shuffle_read_bytes", "shuffle_write_bytes", "memory_spilled_bytes",
+    "disk_spilled_bytes", "peak_exec_bytes")
+
+  private val printPlans = sys.env.get("PROFILE_PLAN").contains("1")
+
+  /** One timed query: its wall, its row count, and its `profile` entry as
+    * (field, JSON value) pairs. */
+  final case class Measured(wall: Double, rows: Long,
+      profile: Seq[(String, String)])
+
+  /** Times `q` once — building its frame plus one counting action — and
+    * profiles that run. Outside the timed region it reads:
+    *
+    *   - `build_ms`: building the DataFrame, including eager staging jobs;
+    *   - `analysis_ms` / `optimization_ms` / `planning_ms`: the counting
+    *     action's `QueryExecution.tracker` phases;
+    *   - `jobs`, `stages`, `tasks`, `executor_run_ms`, shuffle read/write,
+    *     memory/disk spill and peak execution memory: task metrics of the
+    *     jobs the run started, from a `SparkListener` drained by one
+    *     marker job;
+    *   - `rescans`: each base table the counting action's physical plan
+    *     reads three times or more, with its scan count. Self-joins read a
+    *     table twice; three or more reads usually mean a shared subtree
+    *     that should be staged (`graft.engine.Stage`);
+    *   - `steal_pct`: hypervisor steal over the timed region;
+    *   - `guard_drops`: broadcast hints [[BroadcastGuard]] stripped.
+    *
+    * `Dataset.count()` is `groupBy().count()` collected, so keeping that
+    * frame runs the same plan and exposes its tracker. A query that
+    * throws is a `Left` with its error, never a wall. */
+  def step(spark: SparkSession, q: QueryDef,
+      sfDir: String): Either[String, Measured] = {
+    val sc = spark.sparkContext
+    val listener = new Listener
+    sc.addSparkListener(listener)
+    BroadcastGuard.drops.set(0)
+    val cpu0 = cpuStat()
+    sc.setLocalProperty(TagKey, "query")
+    try {
+      val t0 = System.nanoTime()
+      val df = q.run(spark, sfDir)
+      val t1 = System.nanoTime()
+      // untimed, and before the count: a plan made after it would see
+      // the cached subtrees the count materialized and drop exchanges
+      if (printPlans)
+        println(s"==== ${q.name} ====\n" +
+          df.queryExecution.explainString(FormattedMode))
+      val t2 = System.nanoTime()
+      val counted = df.groupBy().count()
+      val rows = counted.collect().head.getLong(0)
+      val wall = (t1 - t0 + System.nanoTime() - t2) / 1e9
+      sc.setLocalProperty(TagKey, null)
+      val steal = stealBetween(cpu0, cpuStat())
+      val drops = BroadcastGuard.drops.get
+      val m = listener.drain(sc)
+      val phases = counted.queryExecution.tracker.phases
+      Right(Measured(wall, rows,
+        ("build_ms" -> ((t1 - t0) / 1000000).toString) +:
+          Seq("analysis", "optimization", "planning").map(p =>
+            s"${p}_ms" -> phases.get(p).fold(0L)(_.durationMs).toString) ++:
+          Fields.map(k => k -> m(k).toString) ++:
+          Seq("rescans" -> rescans(counted.queryExecution.sparkPlan.toString),
+            "steal_pct" -> pct(steal), "guard_drops" -> drops.toString)))
+    } catch { case e: Throwable =>
+      Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}")
+    } finally {
+      sc.setLocalProperty(TagKey, null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -133,9 +300,10 @@ object Bench {
     // (warmup/FS-cache effects always land on the same early queries)
     // optional: query names as args restrict the run (local iteration);
     // the driver passes none, so the full declaration-order suite runs
-    val defs = SparkEntry.select(args.toSet).map(q => (q.name, q.run))
+    val defs = SparkEntry.select(args.toSet)
     var cleanupCount = 0
-    def cleanup(): Unit = {
+    def run(q: QueryDef): Either[String, Measured] = {
+      val outcome = step(spark, q, sfDir)
       // drop any staging relations an operator persisted, so cached data
       // from earlier queries can't pressure later ones — cleanup cost is
       // deliberately OUTSIDE the timed region. clearCache() owns the SQL
@@ -148,7 +316,7 @@ object Bench {
       // itself registered — NOT all persistent RDDs — so a future
       // intentionally long-lived cache can't be silently evicted.
       spark.catalog.clearCache()
-      graft.engine.Stage.releaseStaged(spark)
+      Stage.releaseStaged(spark)
       // Nudge the ContextCleaner: broadcast blocks and shuffle files are
       // only reclaimed when the driver GC collects their weak references,
       // and an 8 GiB mostly-idle driver heap can go hundreds of queries
@@ -160,19 +328,7 @@ object Bench {
       // outside the timed region, like the rest of cleanup.
       cleanupCount += 1
       if (cleanupCount % 8 == 0) System.gc()
-    }
-    def timeOne(name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-      : (Double, Either[String, Long]) = {
-      val t0 = System.nanoTime()
-      // a thrown query is recorded as a failure, never as a fast timing
-      val outcome = try Right(fn(spark, sfDir).count()) catch {
-        case e: Throwable => Left(
-          s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}")
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      cleanup()
-      (secs, outcome)
+      outcome
     }
     // one measurement pass: time every query in declaration order, then
     // self-defend by re-timing the 5 slowest successful queries. Mid-suite
@@ -180,20 +336,14 @@ object Bench {
     // re-run of the same query lands near its original time; if the
     // re-run beats the original by >2.5x for most of the slowest queries,
     // the main loop was contended — the pass is CONTAMINATED.
-    def measurePass(): (Seq[(String, Double, Either[String, Long])],
+    def measurePass(): (Seq[(QueryDef, Either[String, Measured])],
         Seq[(String, Double, Double)], Double, Double) = {
       val jiffies0 = cpuStat()
-      val results = defs.map { case (name, fn) =>
-        val (secs, outcome) = timeOne(name, fn)
-        (name, secs, outcome)
-      }
-      val slowest = results.collect { case (n, s, Right(_)) => (n, s) }
+      val results = defs.map(q => q -> run(q))
+      val slowest = results.collect { case (q, Right(m)) => (q, m.wall) }
         .sortBy(-_._2).take(5)
-      val retimes = slowest.map { case (name, orig) =>
-        val fn = defs.find(_._1 == name).get._2
-        val (secs, _) = timeOne(name, fn)
-        (name, orig, secs)
-      }
+      val retimes = slowest.flatMap { case (q, orig) =>
+        run(q).toOption.map(m => (q.name, orig, m.wall)) }
       val ratios = retimes.map { case (_, orig, re) => orig / math.max(re, 1e-3) }
       val medianRatio =
         if (ratios.isEmpty) 1.0
@@ -201,12 +351,11 @@ object Bench {
       // hypervisor steal over THIS pass: contention a noisy neighbor VM
       // causes is invisible to loadavg and can persist through the
       // retimes, so it gets its own gate arm
-      val passSteal = (for {
-        a <- jiffies0; b <- cpuStat()
-        dTot = (b._1 - a._1) max 1L
-      } yield 100.0 * (b._2 - a._2) / dTot).getOrElse(0.0)
-      (results, retimes, medianRatio, passSteal)
+      (results, retimes, medianRatio,
+        stealBetween(jiffies0, cpuStat()).getOrElse(0.0))
     }
+    def passTotal(rs: Seq[(QueryDef, Either[String, Measured])]): Double =
+      rs.collect { case (_, Right(m)) => m.wall }.sum
     // self-CLEANING: a contaminated pass (host load poisoned the timed
     // region) is re-run in full, up to 2 retries — the round's artifact of
     // record should carry clean numbers, not a flag a judge has to
@@ -224,8 +373,7 @@ object Bench {
     // 1-minute load, which would self-condemn every retry
     var passLoad = loadBefore
     var (results, retimes, medianRatio, passSteal) = measurePass()
-    val attemptTotals =
-      scala.collection.mutable.ArrayBuffer(results.map(_._2).sum)
+    val attemptTotals = mutable.ArrayBuffer(passTotal(results))
     var attempts = 1
     while (passContaminated(medianRatio, passLoad, hostCpus, passSteal)
         && attempts < maxAttempts) {
@@ -235,65 +383,53 @@ object Bench {
       val next = measurePass()
       results = next._1; retimes = next._2; medianRatio = next._3
       passSteal = next._4
-      attemptTotals += results.map(_._2).sum
+      attemptTotals += passTotal(results)
       attempts += 1
     }
     val loadAfter = loadAvg()
     val siblingsAfter = siblingJvms()
-    val cpuJiffiesAtEnd = cpuStat()
     // sibling counts are reported but NOT part of the flag: an unrelated
     // idle JVM shouldn't condemn a clean run — the retime delta (and, on
     // the first pass, the ambient start load) is the direct evidence of
     // contention during THIS run's timed region
     val contaminated = passContaminated(medianRatio, passLoad, hostCpus,
       passSteal)
-    val qs = results.map { case (n, v, _) => jsonStr(n) + ":" + v }
-      .mkString("{", ",", "}")
-    // per-query result rows: vacuity evidence for the artifact build —
-    // an expected-empty or must-be-nonempty contract (bench_sf1.py
-    // EXPECT_ROWS) can only be enforced if the rows travel with the run
-    val rowsJson = results.collect { case (n, _, Right(rows)) =>
-      jsonStr(n) + ":" + rows }.mkString("{", ",", "}")
-    val errs = results.collect { case (n, _, Left(m)) => jsonStr(n) + ":" + jsonStr(m) }
-    val total = results.map(_._2).sum
-    val errJson = if (errs.isEmpty) "" else ",\"errors\":" + errs.mkString("{", ",", "}")
-    val retimeJson = retimes.map { case (n, _, re) => jsonStr(n) + ":" + re }
-      .mkString("{", ",", "}")
-    val setupJson = setup.map { case (n, v) => jsonStr(n) + ":" + v }
-      .mkString("{", ",", "}")
+    val ok = results.collect { case (q, Right(m)) => (q.name, m) }
+    val errs = results.collect { case (q, Left(e)) => (q.name, jsonStr(e)) }
+    val errJson = if (errs.isEmpty) "" else ",\"errors\":" + obj(errs)
     // hypervisor steal over the whole run: Δsteal / Δtotal from
     // /proc/stat — the r14 sf0.1/sf1 legs read ~1.9x r13's walls with
     // contaminated=false, and sampled steal at the time was ~8.5%; the
     // artifact must carry the host's honesty metric, not just load
-    // Double.toString (not the f-interpolator) keeps the JSON parseable
-    // on comma-decimal locales — `f"%.2f"` is locale-sensitive and would
-    // splice "8,50" unquoted into the artifact
-    val stealPct = (for {
-      a <- cpuJiffies; b <- cpuJiffiesAtEnd
-      dTot = (b._1 - a._1) max 1L
-    } yield (math.rint(10000.0 * (b._2 - a._2) / dTot) / 100.0).toString)
-      .getOrElse("null")
     val envJson =
-      s""","setup":$setupJson""" +
-      s""","env":{"cpus":${Runtime.getRuntime.availableProcessors()},""" +
+      s""","setup":${obj(setup)}""" +
+      s""","env":{"cpus":$hostCpus,""" +
       s""""heap_mb":${Runtime.getRuntime.maxMemory() / 1048576},""" +
       s""""load_before":$loadBefore,"load5_before":$load5Before,""" +
       s""""load_after":$loadAfter,""" +
-      s""""steal_pct":$stealPct,""" +
+      s""""steal_pct":${pct(stealBetween(cpuJiffies, cpuStat()))},""" +
       s""""sibling_jvms_before":$siblingsBefore,"sibling_jvms_after":$siblingsAfter},""" +
-      s""""retime_slowest":$retimeJson,"retime_median_ratio":$medianRatio,""" +
+      s""""retime_slowest":${obj(retimes.map(r => r._1 -> r._3))},""" +
+      s""""retime_median_ratio":$medianRatio,""" +
       s""""contaminated":$contaminated,"attempts":$attempts,""" +
       s""""attempt_totals":${attemptTotals.mkString("[", ",", "]")}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"rows":$rowsJson,"sf":"$sfDir"$envJson$errJson}"""
+    // per-query result rows: vacuity evidence for the artifact build —
+    // an expected-empty or must-be-nonempty contract (bench_sf1.py
+    // EXPECT_ROWS) can only be enforced if the rows travel with the run
+    val line = s"""{"metric":"total","value":${passTotal(results)},"unit":"sec",""" +
+      s""""queries":${obj(ok.map(r => r._1 -> r._2.wall))},""" +
+      s""""rows":${obj(ok.map(r => r._1 -> r._2.rows))},"sf":"$sfDir"$envJson$errJson}"""
     println(line)
     // the stdout line can be lost to log truncation (the driver keeps a
-    // bounded tail); the file is the complete round-comparable artifact
-    // (scripts/bench_compare.py diffs two of them)
+    // bounded tail) and leaves the ~100 KB profile out; the file is the
+    // complete round-comparable artifact (scripts/bench_compare.py diffs
+    // two of them)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "bench_out.json")
     val partialJson =
       if (args.nonEmpty) s""","partial":true""" else ""
-    val fileLine = line.stripSuffix("}") + partialJson + "}"
+    val fileLine = line.stripSuffix("}") + partialJson +
+      s""","profile":${obj(ok.map(r => r._1 -> obj(r._2.profile)))}}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
       fileLine + "\n")
     catch { case e: Throwable =>

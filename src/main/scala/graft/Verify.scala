@@ -7,7 +7,7 @@ object Verify {
   /** JSON string literal of `s`: escapes backslash, quote, and ALL
     * control chars (<0x20) — a tab or CR in an oracle SQL string would
     * otherwise make a consumer's json.load fail and silently zero the
-    * correctness compare. Bench and Profile write their JSON with it. */
+    * correctness compare. Bench writes its JSON with it. */
   def jsonStr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"

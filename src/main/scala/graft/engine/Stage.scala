@@ -33,15 +33,15 @@ object Stage {
 
   // ids of persistent RDDs created by staging (a localCheckpoint leaves
   // its blocks registered in sparkContext.getPersistentRDDs).
-  // Harness mains (Bench/Verify/Profile) unpersist exactly these
+  // Harness mains (Bench, Verify) unpersist exactly these
   // between queries instead of sweeping ALL persistent RDDs — a global
   // sweep would silently evict any intentionally long-lived cache and
   // re-inflate timings with no error.
   private val stagedIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
   /** Atomically return-and-clear the staged-block ids accumulated since
-    * the last drain. Harness cleanup loops call this after each query. */
-  def drainStagedIds(): Set[Int] = {
+    * the last drain. */
+  private def drainStagedIds(): Set[Int] = {
     val it = stagedIds.iterator()
     val b = Set.newBuilder[Int]
     while (it.hasNext) { b += it.next(); it.remove() }

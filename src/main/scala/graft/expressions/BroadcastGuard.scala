@@ -41,6 +41,7 @@ class BroadcastGuard extends Rule[LogicalPlan] {
   private def guard(h: Option[HintInfo], side: LogicalPlan,
       which: String): Option[HintInfo] =
     if (overLimit(h, side)) {
+      BroadcastGuard.drops.incrementAndGet()
       logWarning(s"BroadcastGuard: dropping broadcast hint on $which join " +
         s"side (est. ${side.stats.sizeInBytes} bytes > $MaxBytes); the " +
         s"planner/AQE will choose the strategy from actual sizes")
@@ -51,4 +52,9 @@ class BroadcastGuard extends Rule[LogicalPlan] {
 object BroadcastGuard {
   /** The largest estimated join side a broadcast hint may keep. */
   val MaxBytes: Long = 1L << 30
+
+  /** Hints stripped, JVM-wide, since the last reset; one per stripped
+    * hint per optimization, like the WARN line. `graft.Bench` resets it
+    * before each query and reports it as `guard_drops`. */
+  val drops = new java.util.concurrent.atomic.AtomicLong
 }

@@ -617,7 +617,9 @@ object Similarity {
         .orderBy(desc("mmr"), col(idCol))
         .limit(1)
         .select(col(idCol), lit(r).as("rank"), col("mmr"))
-      selected = selected.union(pick).staged
+      // a real cut even under stage.mode=none: `selected` feeds the next
+      // round twice, so an uncut plan doubles every round
+      selected = selected.union(pick).stagedAlways
     }
     selected.select(col(idCol), col("rank"), Det.roundN(col("mmr"), 6).as("mmr"))
       .orderBy(col("rank"))

@@ -1,13 +1,14 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.QueryDef
 
 /** Pins the bench contamination gate's thresholds (VERDICT r14 item 3):
   * the old `> 2.5` retime gate let a poisoned 557 s artifact ship as
   * `contaminated=false` at the exact ratio 2.494 while every comparable
   * query read slower and the in-run retime recovered round-13 walls. The
   * gate is a pure function so these cases stay pinned without a Spark
-  * session.
+  * session. The last case runs Bench's per-query step on the sf0.001 lake.
   */
 class BenchGateSpec extends AnyFunSuite {
 
@@ -42,5 +43,24 @@ class BenchGateSpec extends AnyFunSuite {
       SparkEntry.select(Set("q1_pricing_summary", "q_typo")))
     assert(e.getMessage.contains("q_typo"))
     assert(!e.getMessage.contains("q1_pricing_summary"))
+  }
+
+  test("the per-query step times, profiles, and records a failure") {
+    val spark = SparkTestSession.spark
+    val sf = "/root/testdata/sf0.001"
+    def step(name: String) =
+      Bench.step(spark, SparkEntry.select(Set(name)).head, sf).toOption.get
+    val q1 = step("q1_pricing_summary")
+    val p = q1.profile.toMap
+    assert(q1.rows > 0 && q1.wall > 0)
+    assert(p("jobs").toLong >= 1)
+    assert(p("tasks").toLong >= p("stages").toLong && p("stages").toLong >= 1)
+    for (phase <- Seq("analysis_ms", "optimization_ms", "planning_ms"))
+      assert(p(phase).toLong >= 0, phase)
+    // one scan of each table per check family
+    assert(step("q_quality_report").profile.toMap.apply("rescans") ===
+      """{"customer":3,"orders":4,"events":3}""")
+    val boom = QueryDef("boom", (_, _) => throw new IllegalStateException("boom"), None)
+    assert(Bench.step(spark, boom, sf) === Left("IllegalStateException: boom"))
   }
 }

@@ -1,7 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.Union
 import org.apache.spark.sql.functions._
+import graft.engine.Stage
 import graft.operators.{Multimodal, Similarity}
 
 class SimilaritySpec extends AnyFunSuite {
@@ -302,5 +305,27 @@ class SimilaritySpec extends AnyFunSuite {
       assert(r.media.length.toLong ===
         plan(r.id).getLong(7), s"payload length == plan for id ${r.id}")
     }
+  }
+
+  test("MMR's greedy rounds cut lineage under stage.mode=none too") {
+    // each round feeds `selected` into the next twice (the union and the
+    // anti-join), so uncut rounds double the plan: k = 8 would nest 127
+    // Unions. The plan is checked before anything executes.
+    val none = spark.newSession()
+    none.conf.set(Stage.modeKey, "none")
+    def mmr(s: SparkSession) = {
+      val vs = s.createDataFrame((0 until 12).map(i => (i.toLong,
+          Array(math.cos(i).toFloat, math.sin(i).toFloat, (i % 3).toFloat, 1f))))
+        .toDF("vec_id", "embedding")
+      val q = vs.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
+      Similarity.mmrDiverseTopK(vs, q, k = 8, poolSize = 10)
+    }
+    val unstaged = mmr(none)
+    val plan = unstaged.queryExecution.analyzed
+    assert(plan.collect { case u: Union => u }.isEmpty, plan.treeString)
+    assert(plan.collect { case p => p }.size < 10, plan.treeString)
+    val rows = unstaged.collect().toSeq
+    assert(rows.map(_.getInt(1)) === (1 to 8))
+    assert(rows === mmr(spark).collect().toSeq)
   }
 }
