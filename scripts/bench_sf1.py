@@ -32,8 +32,8 @@ the triage travels as data instead of ARCHITECTURE.md prose.
 import json
 import sys
 
-# round-11/12 triage decisions (see ARCHITECTURE.md "sf1 campaign" for the
-# full reasoning per query)
+# round-11/12 triage decisions (see history/ARCHITECTURE_rounds.md
+# "Round-11: the sf1 campaign" for the full reasoning per query)
 TRIAGE_SF1 = {
     "f_levenshtein_dedup": "fixed",          # FastSS deletion-variant
                                              #   blocking (r13); candidates
@@ -63,7 +63,7 @@ TRIAGE_SF1 = {
 # density are expected to cost more on the hostile lake and are labeled
 # here; anything else past the ceiling is unreviewed and fails the build.
 TRIAGE_SKEW = {
-    # r12 sweep decisions (see ARCHITECTURE.md "Round-12")
+    # r12 sweep decisions (see history/ARCHITECTURE_rounds.md "Round-12")
     "a_itemsets3": "fixed",            # basket-wise support counting
     "q_attribution_linear": "fixed",   # window-edge cumulative counts
     "g_walk_sample": "fixed",          # distinct-first edge build

@@ -11,8 +11,10 @@
 #     with expression ids (#123), plan_id=, RDD ids, scratch paths and
 #     lambda addresses masked;
 #   - compares each query's jobs, stages and tasks from the `profile` map
-#     of the Bench artifact, rerunning the queries whose counts differ
-#     twice per side.
+#     of the Bench artifact, rerunning twice per side the queries whose
+#     plans or counts differ: a plan then differs only if no tree run
+#     printed a plan any parent run printed, a count only if the tree's
+#     runs fall outside the parent's range.
 # The parent must have Bench's `profile` map and PROFILE_PLAN. It exits
 # nonzero on any difference in a query outside the allow-list.
 #
@@ -36,7 +38,7 @@ while [ $# -gt 0 ]; do
     *) break ;;
   esac
 done
-[ $# -ge 1 ] || { sed -n '2,26p' "$0" >&2; exit 2; }
+[ $# -ge 1 ] || { sed -n '2,28p' "$0" >&2; exit 2; }
 rev=$(git rev-parse --verify "$1^{commit}") || exit 2
 sf=${2:-sf0.01}
 shift $(( $# >= 2 ? 2 : 1 ))
@@ -65,7 +67,7 @@ key=$(basename "$sfdir")-$mode-$(echo "$*" | md5sum | cut -c1-8)
 run "$tree" "$work/tree/$key" "$@"
 
 # compare <allow> <parent out,…> <tree out,…>: exits 3 with a RECHECK line
-# when first-run job counts differ and only one run per side was given
+# when first-run plans or counts differ and one run per side was given
 compare() {
 WORK_DIR=$work python3 - "$@" <<'PY'
 import json, os, re, sys
@@ -104,17 +106,24 @@ def profile(d):
     counts.update({q: ("error", e) for q, e in art.get("errors", {}).items()})
     return plans, counts
 (pa, ca), (pb, cb) = profile(old), profile(new)
-plan_diff = sorted(q for q in set(pa) | set(pb) if pa.get(q) != pb.get(q))
-print(f"plans: {len(pa)} parent, {len(pb)} tree; different {plan_diff}")
-# some queries' job counts vary between runs of the same code (by up to
-# three jobs), so a count differs only if the tree's runs fall outside
-# the range of the parent's runs
+plan_first = sorted(q for q in set(pa) | set(pb) if pa.get(q) != pb.get(q))
+print(f"plans: {len(pa)} parent, {len(pb)} tree; different {plan_first}")
+# some queries' plans (the order of RewriteDistinctAggregates' Expand
+# groups) and job counts (by up to three jobs) vary between runs of the
+# same code, so both are rechecked over more runs per side
 first = sorted(q for q in set(ca) | set(cb) if ca.get(q) != cb.get(q))
-if first and len(olds) == 1:
-    print("RECHECK", *first)
+if (first or plan_first) and len(olds) == 1:
+    print("RECHECK", *sorted(set(first) | set(plan_first)))
     sys.exit(3)
-seen = lambda dirs: {q: [profile(d)[1].get(q) for d in dirs] for q in first}
-sa, sb = seen(olds), seen(news)
+runs = lambda dirs: [profile(d) for d in dirs]
+ra, rb = runs(olds), runs(news)
+# a plan differs only if no run of the tree printed any plan the parent did
+plan_diff = [q for q in plan_first
+             if not any(r[0].get(q) in [p[0].get(q) for p in ra] for r in rb)]
+print(f"plans after recheck: different {plan_diff}")
+# a count differs only if the tree's runs fall outside the parent's range
+sa = {q: [r[1].get(q) for r in ra] for q in first}
+sb = {q: [r[1].get(q) for r in rb] for q in first}
 def apart(x, y):
     if None in x + y or any(t[0] == "error" for t in x + y):
         return x != y
@@ -135,13 +144,13 @@ out=$(compare "$allow" "$parent/out/$key" "$work/tree/$key")
 status=$?
 echo "$out" | grep -v '^RECHECK'
 [ $status -eq 3 ] || exit $status
-# rerun the queries whose job counts differed, twice per side
+# rerun the queries whose plans or job counts differed, twice per side
 recheck=$(echo "$out" | sed -n 's/^RECHECK //p')
-echo "rechecking job counts: $recheck"
+echo "rechecking plans and job counts: $recheck"
 olds="$parent/out/$key" news="$work/tree/$key"
 for i in 1 2; do
   run "$parent" "$work/recheck/parent$i" $recheck
   run "$tree" "$work/recheck/tree$i" $recheck
   olds+=",$work/recheck/parent$i" news+=",$work/recheck/tree$i"
 done
-compare "$allow" "$olds" "$news" | grep -v '^oracle\|^plans'
+compare "$allow" "$olds" "$news" | grep -v '^oracle\|^plans:'

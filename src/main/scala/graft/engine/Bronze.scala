@@ -45,11 +45,14 @@ object Bronze {
     df.select(cols: _*) // P2: prune + fixed order
   }
 
+  /** Every bronze row's `validation_status` until silver validates it. */
+  val AuditStatus = "pending"
+
   /** P3 audit columns (load_bronze.py:281-284,350-355). `sourceFile` uses
     * input_file_name() when rows came straight from a scan. */
-  def withAudit(df: DataFrame, status: String = "pending"): DataFrame =
+  def withAudit(df: DataFrame): DataFrame =
     df.withColumn("ingestion_timestamp", current_timestamp())
-      .withColumn("validation_status", lit(status))
+      .withColumn("validation_status", lit(AuditStatus))
       .withColumn("data_hash",
         sha2(to_json(struct(df.columns.toIndexedSeq.map(col): _*)), 256).substr(1, 16))
 }

@@ -66,7 +66,7 @@ final class Pipeline(spark: SparkSession, lakeDir: String) {
     * compaction contract); pass `seqCol` to keep-last dedup a raw feed
     * by that ordering first. */
   def applyCdc(layer: String, table: String, partCol: String,
-      keyCol: String, changes: DataFrame, opCol: String = "op",
+      keyCol: String, changes: DataFrame,
       seqCol: Option[String] = None): (Long, Long) = {
     val batch = seqCol match {
       case Some(sc) =>
@@ -79,7 +79,7 @@ final class Pipeline(spark: SparkSession, lakeDir: String) {
     }
     val stats = deleteKeys(layer, table, partCol, keyCol,
       batch.select(keyCol))
-    batch.filter(col(opCol).isin("I", "U")).drop(opCol)
+    batch.filter(col(Pipeline.OpCol).isin("I", "U")).drop(Pipeline.OpCol)
       .repartition(col(partCol))
       .write.mode(SaveMode.Append).partitionBy(partCol)
       .parquet(path(layer, table))
@@ -178,11 +178,10 @@ final class Pipeline(spark: SparkSession, lakeDir: String) {
     * repartition by shard makes each output directory a small number of
     * whole files instead of nShards slivers per input task. */
   def exportTrainingShards(df: DataFrame, idCol: String, weightCol: String,
-      lineCol: String, nShards: Int,
-      heavyCutoff: Long = Long.MaxValue): String = {
+      lineCol: String, nShards: Int): String = {
     val dir = s"$lakeDir/exports/training_shards"
     graft.operators.Shards
-      .assign(df, idCol, weightCol, nShards, heavyCutoff)
+      .assign(df, idCol, weightCol, nShards)
       .select(col("shard"), col(lineCol).as("value"))
       .repartition(col("shard"))
       .write.mode(SaveMode.Overwrite).options(Pipeline.dynamicOverwrite)
@@ -413,6 +412,9 @@ final class Pipeline(spark: SparkSession, lakeDir: String) {
 }
 
 object Pipeline {
+
+  /** The change-operation column of a CDC batch: I, U or D. */
+  val OpCol = "op"
 
   /** Dynamic partition overwrite as a WRITER option: it rewrites only the
     * partitions present in the written frame, and leaves the session's

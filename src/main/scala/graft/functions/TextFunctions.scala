@@ -215,24 +215,27 @@ object TextFunctions {
       .limit(maxTerms)
   }
 
+  /** A token in more than this percentage of documents is boilerplate. */
+  val BoilerplateMaxDfPct = 78
+
   /** Corpus-frequency boilerplate strip — the CCNet-style rewrite that
     * removes ubiquitous segments (here: tokens whose document frequency
-    * exceeds maxDfPct% of the corpus) and reassembles each document in
+    * exceeds BoilerplateMaxDfPct% of the corpus) and reassembles each document in
     * original token order. Unlike [[vocabulary]] (which only reports the
     * band), this is the REWRITE: the cleaned text ships downstream.
     *
     * Shape: one posexplode staged once (two consumers: the df aggregate
     * and the reassembly join), distinct → hash-agg for per-token df, and a
     * broadcast anti-join to drop boilerplate tokens. The boilerplate set
-    * is provably small — a token needs df > maxDfPct% · N, and a doc has
-    * L_avg tokens, so at most ~L_avg / (maxDfPct/100) tokens can qualify —
+    * is provably small — a token needs df > BoilerplateMaxDfPct% · N, and a doc has
+    * L_avg tokens, so at most ~L_avg / (BoilerplateMaxDfPct/100) tokens can qualify —
     * which is what makes the broadcast safe at any corpus size.
     * Reassembly is a per-doc collect_list(struct(pos, tok)) → array_sort —
     * bounded by document length, never corpus-wide. Returns every input
     * doc: (idCol, n_tokens, n_removed, clean_text); a fully-boilerplate
     * doc yields an empty clean_text. */
   def stripBoilerplate(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, maxDfPct: Int = 78): org.apache.spark.sql.DataFrame = {
+      textCol: String): org.apache.spark.sql.DataFrame = {
     val tok = df.select(col(idCol).as("id"),
         posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
       .staged
@@ -241,7 +244,7 @@ object TextFunctions {
       .groupBy("tok").agg(count(lit(1)).as("__df"))
       .crossJoin(broadcast(total))
       // integer-exact threshold: df/N > pct/100 without float rounding
-      .filter(col("__df") * 100 > col("__n_docs") * maxDfPct)
+      .filter(col("__df") * 100 > col("__n_docs") * BoilerplateMaxDfPct)
       .select("tok")
     val rebuilt = tok.join(broadcast(boiler), Seq("tok"), "left_anti")
       .groupBy("id")
@@ -378,6 +381,10 @@ object TextFunctions {
         qualityScore(wc, punctRatio, awl, col("stop_hits")).as("quality_score")): _*)
   }
 
+  /** Okapi BM25's usual saturation (k1) and length normalization (b). */
+  val Bm25K1 = 1.2
+  val Bm25B = 0.75
+
   /** BM25 keyword-search ranking (Robertson k1/b saturation), log-free.
     *
     * Classic BM25 multiplies a log-IDF into the saturated-TF term; `ln` is
@@ -396,8 +403,7 @@ object TextFunctions {
     * global sort.
     */
   def bm25Search(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, queryTerms: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): org.apache.spark.sql.DataFrame = {
+      textCol: String, queryTerms: Seq[String], k: Int): org.apache.spark.sql.DataFrame = {
     // staged once: the exploded terms feed both doc-length and tf
     val terms = df.select(col(idCol), explode(tokens(col(textCol))).as("term"))
       .staged
@@ -412,8 +418,8 @@ object TextFunctions {
     val idf = (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) +
       lit(1.0)
     val rel = (col("dl") * col("n_docs")) / col("total_len")
-    val score = idf * (col("tf") * lit(k1 + 1.0)) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * rel))
+    val score = idf * (col("tf") * lit(Bm25K1 + 1.0)) /
+      (col("tf") + lit(Bm25K1) * (lit(1.0 - Bm25B) + lit(Bm25B) * rel))
     tf.join(dl, idCol)
       .join(broadcast(dfreq), "term")
       .crossJoin(broadcast(stats))
@@ -427,9 +433,9 @@ object TextFunctions {
   /** The oracle-side per-term BM25 score expression, with the SAME Scala
     * doubles interpolated (Double.toString round-trips, so DuckDB parses
     * the identical IEEE values Spark's literals hold). */
-  def bm25ScoreSql(k1: Double = 1.2, b: Double = 0.75): String =
-    s"((n_docs - df + 0.5) / (df + 0.5) + 1.0) * (tf * ${k1 + 1.0}) / " +
-      s"(tf + $k1 * (${1.0 - b} + $b * (dl * n_docs) / total_len))"
+  def bm25ScoreSql(): String =
+    s"((n_docs - df + 0.5) / (df + 0.5) + 1.0) * (tf * ${Bm25K1 + 1.0}) / " +
+      s"(tf + $Bm25K1 * (${1.0 - Bm25B} + $Bm25B * (dl * n_docs) / total_len))"
 
   /** Exact phrase search over a POSITIONAL inverted index — what BM25's
     * bag-of-words postings can't answer ("value table" as adjacent

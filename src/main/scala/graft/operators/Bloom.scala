@@ -51,6 +51,11 @@ object Bloom {
         explode(array((0 until k).map(j =>
           (col("__h1") + lit(j.toLong) * col("__h2")) % mBits): _*)).as("p"))
 
+  /** 65,536 bits × 5 probes: ≈ 1 % false positives up to ~6,600 keys. */
+  val MBits = 65536L
+  val K = 5
+  val PerGroupMBits = 2048L
+
   /** Build the filter relation from a corpus key column: m/32 rows of
     * (word_idx, bits — 32 bits per word: bit 63 of a signed shift
     * overflows in ANSI engines while Spark wraps silently, so words stay
@@ -58,8 +63,8 @@ object Bloom {
     * one explode(k) + one bit_or
     * aggregate — fully map-side combinable; merging two builds is
     * `union.groupBy(word_idx).agg(bit_or(bits))`. */
-  def build(keys: DataFrame, keyCol: String, mBits: Long = 65536L,
-      k: Int = 5): DataFrame = {
+  def build(keys: DataFrame, keyCol: String, mBits: Long = MBits,
+      k: Int = K): DataFrame = {
     require(mBits % 32 == 0 && mBits > 0, s"mBits must be a multiple of 32: $mBits")
     require(k >= 1 && k < 64, s"k out of range: $k")
     positionsOf(keys.select(keyCol).distinct(), keyCol, mBits, k)
@@ -75,17 +80,14 @@ object Bloom {
     * the layout sorts by exactly that column). Same affine-md5 bit math
     * as [[build]], one extra grouping key; merging increments per group
     * is the same union + bit_or. */
-  def buildPerGroup(df: DataFrame, groupCol: String, keyCol: String,
-      mBits: Long = 2048L, k: Int = 5): DataFrame = {
-    require(mBits % 32 == 0 && mBits > 0, s"mBits: $mBits")
-    require(k >= 1 && k < 64, s"k: $k")
+  def buildPerGroup(df: DataFrame, groupCol: String, keyCol: String): DataFrame = {
     df.select(col(groupCol), col(keyCol)).distinct()
       .select(col(groupCol),
         Det.h56(col(keyCol)).as("__h1"),
         Det.h56(col(keyCol), pos = 17).as("__h2"))
       .select(col(groupCol),
-        explode(array((0 until k).map(j =>
-          (col("__h1") + lit(j.toLong) * col("__h2")) % mBits): _*)).as("p"))
+        explode(array((0 until K).map(j =>
+          (col("__h1") + lit(j.toLong) * col("__h2")) % PerGroupMBits): _*)).as("p"))
       .groupBy(col(groupCol), shiftright(col("p"), 5).as("word_idx"))
       .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(p % 32 AS INT)))")
         .as("bits"))
@@ -96,7 +98,7 @@ object Bloom {
     * distinct key against the word relation; absent words read as unset
     * bits (left join, null-safe). */
   def probe(batch: DataFrame, bloom: DataFrame, keyCol: String,
-      mBits: Long = 65536L, k: Int = 5): DataFrame = {
+      mBits: Long = MBits, k: Int = K): DataFrame = {
     val pos = positionsOf(batch.select(keyCol).distinct(), keyCol, mBits, k)
       .withColumn("word_idx", shiftright(col("p"), 5))
     val hits = pos

@@ -22,14 +22,17 @@ import graft.engine.Det
   */
 object Contamination {
 
+  val Threshold = 0.5
+  /** Shingles in more corpus docs than this are boilerplate, not overlap. */
+  val MaxPosting = 1000
+
   /** Returns (doc_id, bench_id, overlap, bench_n, overlap_frac) for every
     * corpus/benchmark pair with overlap_frac >= threshold, where overlap
     * counts shared distinct shingles and bench_n is the benchmark doc's
     * distinct-shingle count. */
   def ngramOverlap(corpus: DataFrame, benchmark: DataFrame,
-      idCol: String, textCol: String,
-      shingleSize: Int = 3, threshold: Double = 0.5,
-      maxPosting: Int = 1000): DataFrame = {
+      idCol: String, textCol: String, shingleSize: Int = Dedup.ShingleSize,
+      threshold: Double = Threshold): DataFrame = {
     val c = Dedup.explodedShingles(corpus, idCol, textCol, shingleSize,
       withHashes = false)
     val b = Dedup.explodedShingles(benchmark, idCol, textCol, shingleSize,
@@ -42,7 +45,7 @@ object Contamination {
     // surviving shingles back against the staged relation
     val cOk = c.select("shingle")
       .groupBy("shingle").agg(count(lit(1)).as("__pn"))
-      .filter(col("__pn") <= maxPosting)
+      .filter(col("__pn") <= MaxPosting)
       .select("shingle")
     val cUseful = c.select(col("id").as("doc_id"), col("shingle"))
       .join(cOk, Seq("shingle"))

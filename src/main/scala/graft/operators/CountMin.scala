@@ -41,10 +41,13 @@ object CountMin {
         position(k, j, width)): _*)).as(Seq("row_id", "col_id")))
   }
 
+  val Width = 1024
+  val Depth = 4
+
   /** Build the sketch from a key column (one row per occurrence):
     * (row_id, col_id, cnt), ≤ d·w rows. */
-  def build(df: DataFrame, keyCol: String, width: Int = 1024,
-      depth: Int = 4): DataFrame = {
+  def build(df: DataFrame, keyCol: String, width: Int = Width,
+      depth: Int = Depth): DataFrame = {
     require(width > 0 && depth >= 1 && depth < 64,
       s"bad sketch shape: $width x $depth")
     cells(df, keyCol, width, depth)
@@ -58,7 +61,7 @@ object CountMin {
     * MUST equal the values the sketch was built with — different values
     * probe positions the build never wrote and silently under-read. */
   def estimate(keys: DataFrame, sketch: DataFrame, keyCol: String,
-      width: Int = 1024, depth: Int = 4): DataFrame =
+      width: Int = Width, depth: Int = Depth): DataFrame =
     cells(keys.select(keyCol).distinct(), keyCol, width, depth)
       .join(sketch, Seq("row_id", "col_id"), "left")
       .groupBy(col("__k").as(keyCol))

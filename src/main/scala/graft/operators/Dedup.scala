@@ -98,15 +98,15 @@ object Dedup {
   }
 
   /** DuckDB mirror of [[explodedShingles]] over `documents` at shingle
-    * size 3: the CTEs `toks`, `sh` and `s(<id>, shingle)`, the doc id
+    * size [[ShingleSize]]: the CTEs `toks`, `sh` and `s(<id>, shingle)`, the doc id
     * selected as `idSel` (`doc_id`, or `doc_id AS id`) and named `id`
     * after it. */
   def shinglesSql(idSel: String, id: String): String =
     raw"""toks AS (
        |  SELECT $idSel, ${TextFunctions.tokensSql("text")} AS t FROM documents),
        |sh AS (
-       |  SELECT $id, CASE WHEN len(t) >= 3
-       |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
+       |  SELECT $id, CASE WHEN len(t) >= $ShingleSize
+       |    THEN list_distinct([array_to_string(t[i:i+${ShingleSize - 1}], ' ') for i in generate_series(1, len(t)-${ShingleSize - 1})])
        |    ELSE [array_to_string(t, ' ')] END AS shingles
        |  FROM toks),
        |s AS (SELECT $id, unnest(shingles) AS shingle FROM sh)""".stripMargin
@@ -209,6 +209,16 @@ object Dedup {
     * per component. Sum stays under 2^62 — exact on both engines. */
   val MinhashPrime = 72057594037927931L
 
+  /** The MinHash-LSH geometry of every near-dup path: 64 components (the
+    * overflow-safe maximum, see [[sigKeyed]]) in 16 bands of 4, so a pair
+    * at Jaccard 0.8 shares a band with p ≈ 0.9998; buckets over 64 members
+    * are boilerplate. */
+  val NumHashes = 64
+  val Bands = 16
+  val ShingleSize = 3
+  val MaxBucket = 64
+  val JaccardThreshold = 0.8
+
   /** MinHash signatures + LSH band keys from a staged shingle relation.
     * One codegen'd aggregate computes every minhash component + set size.
     * The component family is the affine construction
@@ -220,23 +230,17 @@ object Dedup {
     * are the plain comma-joined component strings (no re-hash: the
     * string IS a unique key for the band's component vector).
     * Returns (sizes: (id, n), keyed: (id, band_id, band_hash)). */
-  private[operators] def sigKeyed(exploded: DataFrame, numHashes: Int,
-      bands: Int): (DataFrame, DataFrame) = {
-    // overflow guard: h1,h2 < 2^56, so h1 + i·h2 stays under 2^63 only
-    // for i ≤ 64 — beyond that the Long wraps negative and Spark's %
-    // keeps the sign, silently corrupting components (degraded recall
-    // with no error). Bloom/CountMin carry the same k<64 guard.
-    require(numHashes <= 64 && numHashes >= 1,
-      s"numHashes=$numHashes out of the overflow-safe range [1,64] " +
-        "for the affine h1+i*h2 family")
-    require(bands >= 1 && numHashes % bands == 0,
-      s"bands=$bands must divide numHashes=$numHashes")
-    val rows = numHashes / bands
-    val minCols = (0 until numHashes).map(i =>
+  private def sigKeyed(exploded: DataFrame): (DataFrame, DataFrame) = {
+    // [[NumHashes]] is capped by overflow: h1,h2 < 2^56, so h1 + i·h2
+    // stays under 2^63 only for i ≤ 64 — beyond that the Long wraps
+    // negative and Spark's % keeps the sign, silently corrupting
+    // components (degraded recall with no error).
+    val rows = NumHashes / Bands
+    val minCols = (0 until NumHashes).map(i =>
       min((col("__h1") + lit(i.toLong) * col("__h2")) % MinhashPrime)
         .as(s"__h$i"))
     val sigs = exploded.groupBy(col("id")).agg(minCols.head, minCols.tail: _*)
-    val bandCols = (0 until bands).map { b =>
+    val bandCols = (0 until Bands).map { b =>
       concat_ws(",",
         (0 until rows).map(r => col(s"__h${b * rows + r}").cast("string")): _*)
     }
@@ -255,11 +259,10 @@ object Dedup {
   /** MinHash-LSH near-dup pairs with exact-Jaccard verification.
     * Returns (id_a, id_b, jaccard) for pairs ≥ threshold. */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, numHashes: Int = 64, bands: Int = 16,
-      shingleSize: Int = 3, maxBucket: Int = 64): DataFrame = {
-    val exploded = explodedShingles(df, idCol, textCol, shingleSize)
-    val (sizes, keyed) = sigKeyed(exploded, numHashes, bands)
-    val cands = bucketPairs(graft.engine.Stage.materialize(keyed), maxBucket)
+      threshold: Double = JaccardThreshold): DataFrame = {
+    val exploded = explodedShingles(df, idCol, textCol, ShingleSize)
+    val (sizes, keyed) = sigKeyed(exploded)
+    val cands = bucketPairs(graft.engine.Stage.materialize(keyed), MaxBucket)
     jaccardFromCounts(candidateIntersections(cands, dropHashes(exploded)), sizes)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
@@ -267,7 +270,7 @@ object Dedup {
 
   /** LSH quality evaluation — precision/recall/F1 of the banded MinHash
     * CANDIDATE set against exact ground truth, the metric pair that
-    * decides (bands, rows, maxBucket) tuning before a 100 TB dedup run:
+    * decides ([[Bands]], rows, [[MaxBucket]]) tuning before a 100 TB dedup run:
     * recall < 1 means the band scheme drops true near-dups (more bands /
     * shorter rows needed); low precision means wasted exact-verify work.
     *
@@ -283,11 +286,10 @@ object Dedup {
     * corpus-size-independent output, rounded after division so both
     * engines compare identical doubles. */
   def lshEval(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, numHashes: Int = 64, bands: Int = 16,
-      shingleSize: Int = 3, maxBucket: Int = 64): DataFrame = {
-    val exploded = explodedShingles(df, idCol, textCol, shingleSize)
-    val (sizes, keyed) = sigKeyed(exploded, numHashes, bands)
-    val cands = bucketPairs(graft.engine.Stage.materialize(keyed), maxBucket)
+      threshold: Double = JaccardThreshold): DataFrame = {
+    val exploded = explodedShingles(df, idCol, textCol, ShingleSize)
+    val (sizes, keyed) = sigKeyed(exploded)
+    val cands = bucketPairs(graft.engine.Stage.materialize(keyed), MaxBucket)
     val e = dropHashes(exploded)
     val candJ = jaccardFromCounts(candidateIntersections(cands, e), sizes)
       .select("id_a", "id_b", "jaccard")
@@ -316,20 +318,17 @@ object Dedup {
     * (the exact-verify source), and per-doc set sizes. On a cluster these
     * three relations live as parquet/Delta tables bucketed by
     * (band_id, band_hash) resp. id; a new batch probes them without ever
-    * re-running corpus×corpus LSH. The LSH parameters ride along so a probe
-    * can't silently use a different hash family than the index build. */
+    * re-running corpus×corpus LSH. Index and probe share one hash family,
+    * the geometry constants above. */
   final case class MinhashLshIndex(buckets: DataFrame, shingles: DataFrame,
-      sizes: DataFrame, numHashes: Int, bands: Int, shingleSize: Int)
+      sizes: DataFrame)
 
   /** Build the [[MinhashLshIndex]] for an existing corpus — the one-time
     * (or incrementally maintained) index-build job. */
-  def minhashIndex(corpus: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 64, bands: Int = 16,
-      shingleSize: Int = 3): MinhashLshIndex = {
-    val exploded = explodedShingles(corpus, idCol, textCol, shingleSize)
-    val (sizes, keyed) = sigKeyed(exploded, numHashes, bands)
-    MinhashLshIndex(keyed, dropHashes(exploded), sizes,
-      numHashes, bands, shingleSize)
+  def minhashIndex(corpus: DataFrame, idCol: String, textCol: String): MinhashLshIndex = {
+    val exploded = explodedShingles(corpus, idCol, textCol, ShingleSize)
+    val (sizes, keyed) = sigKeyed(exploded)
+    MinhashLshIndex(keyed, dropHashes(exploded), sizes)
   }
 
   /** Incremental MinHash near-dup: probe an arriving batch against a stored
@@ -347,8 +346,7 @@ object Dedup {
     * is identical to re-running [[minhashNearDups]] over corpus ∪ batch
     * and keeping the batch-involving pairs — DedupSpec proves it. */
   def minhashProbe(batch: DataFrame, index: MinhashLshIndex, idCol: String,
-      textCol: String, threshold: Double = 0.8,
-      maxBucket: Int = 64): DataFrame = {
+      textCol: String, threshold: Double = JaccardThreshold): DataFrame = {
     // both bucket relations are multi-consumer inside the probe (batch 3×,
     // corpus 2×) and on THIS path they are unstaged sigKeyed outputs —
     // each consumer would re-run the full 64-min signature aggregate.
@@ -357,13 +355,10 @@ object Dedup {
     // parquet-backed relations whose corpus side it anti-joins per
     // micro-batch, and staging O(corpus) buckets every batch is exactly
     // the wrong trade at ingest rates.
-    def stagedKeyed(ix: MinhashLshIndex) = MinhashLshIndex(
-      graft.engine.Stage.materializeIfComputed(ix.buckets),
-      ix.shingles, ix.sizes, ix.numHashes, ix.bands, ix.shingleSize)
-    minhashProbeIndexed(
-      stagedKeyed(minhashIndex(batch, idCol, textCol, index.numHashes,
-        index.bands, index.shingleSize)),
-      stagedKeyed(index), threshold, maxBucket)
+    def stagedKeyed(ix: MinhashLshIndex) = ix.copy(
+      buckets = graft.engine.Stage.materializeIfComputed(ix.buckets))
+    minhashProbeIndexed(stagedKeyed(minhashIndex(batch, idCol, textCol)),
+      stagedKeyed(index), threshold)
   }
 
   /** [[minhashProbe]] with the batch's OWN index pre-built: callers that
@@ -373,10 +368,7 @@ object Dedup {
     * and the store append — the family is the dominant cost per batch,
     * so recomputing it inside the probe doubled every micro-batch. */
   def minhashProbeIndexed(batch: MinhashLshIndex, index: MinhashLshIndex,
-      threshold: Double = 0.8, maxBucket: Int = 64): DataFrame = {
-    require(batch.numHashes == index.numHashes && batch.bands == index.bands
-      && batch.shingleSize == index.shingleSize,
-      "batch and corpus indexes were built with different LSH parameters")
+      threshold: Double = JaccardThreshold): DataFrame = {
     // multi-consumer bucket relations (batch 3×, corpus 2×): callers that
     // build them in-session stage them first (see minhashProbe); the
     // ingest loop's are parquet-backed and cheap to re-read.
@@ -406,7 +398,7 @@ object Dedup {
           "left_semi")
         .select("band_id", "band_hash"))
       .groupBy("band_id", "band_hash").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") <= maxBucket)
+      .filter(col("__n") <= MaxBucket)
       .select("band_id", "band_hash")
     val bM = bKeyed.join(broadcast(okBuckets), Seq("band_id", "band_hash"))
     val cM = cKeyed.join(broadcast(okBuckets), Seq("band_id", "band_hash"))
@@ -426,6 +418,9 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
+  val MaxHamming = 6
+  val SimhashMaxBucket = 256
+
   /** SimHash near-dup pairs: 56-bit majority-vote signatures (explode →
     * 56 signed sums → pack), 4×14-bit band blocking, xor-popcount verify.
     *
@@ -436,7 +431,7 @@ object Dedup {
     * shift the Hamming-distance-per-cosine-angle scale by 56/64 ≈ 0.9 —
     * immaterial next to end-to-end verifiability. */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 6, maxBucket: Int = 256): DataFrame = {
+      maxHamming: Int = MaxHamming): DataFrame = {
     val tok = df.select(col(idCol).as("id"),
       explode(TextFunctions.tokens(col(textCol))).as("t"))
       .select(col("id"), Det.h56(col("t")).as("h"))
@@ -462,7 +457,7 @@ object Dedup {
     val sized = keyed
       .withColumn("__bn",
         count(lit(1)).over(Window.partitionBy("band_id", "band_hash")))
-      .filter(col("__bn") <= maxBucket)
+      .filter(col("__bn") <= SimhashMaxBucket)
     val l = sized.select(col("band_id"), col("band_hash"),
       col("id").as("id_a"), col("simhash").as("sim_a"))
     val r = sized.select(col("band_id"), col("band_hash"),
@@ -576,6 +571,8 @@ object Dedup {
       .drop("__seen")
   }
 
+  val SpanWindow = 8
+
   /** Exact substring-duplication signal: every length-`window` token span
     * in every document, counted corpus-wide; a document's duplication
     * fraction is the share of its spans that occur more than once in the
@@ -593,7 +590,7 @@ object Dedup {
     * (idCol, n_spans, n_dup_spans, dup_fraction); docs shorter than
     * `window` tokens report zeros. */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
-      window: Int = 8): DataFrame = {
+      window: Int = SpanWindow): DataFrame = {
     val tok = df.select(col(idCol).as("id"),
       posexplode(TextFunctions.tokens(col(textCol))).as(Seq("pos", "t0")))
     val w = Window.partitionBy("id").orderBy("pos")
@@ -729,13 +726,13 @@ object Dedup {
     * join literature's standard form of this knob. */
   val PostingCapBase = 32L
   val PostingCapPerDocs = 5000L
-  def postingCapExprSql(nDocsExpr: String, base: Long = PostingCapBase,
-      per: Long = PostingCapPerDocs): String =
-    s"greatest($base, ($nDocsExpr * $base + ${per - 1}) div $per)"
+  def postingCapExprSql(nDocsExpr: String): String =
+    s"greatest($PostingCapBase, ($nDocsExpr * $PostingCapBase + " +
+      s"${PostingCapPerDocs - 1}) div $PostingCapPerDocs)"
   /** DuckDB-dialect mirror of [[postingCapExprSql]]. */
-  def postingCapOracleSql(nDocsExpr: String, base: Long = PostingCapBase,
-      per: Long = PostingCapPerDocs): String =
-    s"GREATEST($base, ($nDocsExpr * $base + ${per - 1}) // $per)"
+  def postingCapOracleSql(nDocsExpr: String): String =
+    s"GREATEST($PostingCapBase, ($nDocsExpr * $PostingCapBase + " +
+      s"${PostingCapPerDocs - 1}) // $PostingCapPerDocs)"
 
   /** Postings banded to [2, cap], the cap [[postingCapExprSql]] over the
     * corpus size: a `count(1)` aggregate broadcast into the filter as a
@@ -790,8 +787,8 @@ object Dedup {
     * per-doc set sizes (id, n) and the co-occurrence counts
     * (id_a, id_b, inter) of the capped postings. */
   private def cappedCoOccurrences(df: DataFrame, idCol: String,
-      textCol: String, shingleSize: Int): (DataFrame, DataFrame) = {
-    val exploded = explodedShingles(df, idCol, textCol, shingleSize,
+      textCol: String): (DataFrame, DataFrame) = {
+    val exploded = explodedShingles(df, idCol, textCol, ShingleSize,
       withHashes = false)
     (setSizes(exploded), coOccurrences(usefulPostings(exploded, df)))
   }
@@ -806,8 +803,8 @@ object Dedup {
     * `count(1)` over `df`; with repeated ids it exceeds the oracle's
     * COUNT(DISTINCT id) and the cap admits longer postings. */
   def ngramJaccardDups(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, shingleSize: Int = 3): DataFrame = {
-    val (sizes, inter) = cappedCoOccurrences(df, idCol, textCol, shingleSize)
+      threshold: Double = JaccardThreshold): DataFrame = {
+    val (sizes, inter) = cappedCoOccurrences(df, idCol, textCol)
     jaccardFromCounts(inter, sizes)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
@@ -842,8 +839,8 @@ object Dedup {
     * pandas' first-of-exact-duplicates; this is the corpus-scale exact
     * generalization. */
   def prefixJaccardJoin(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, shingleSize: Int = 3): DataFrame = {
-    val exploded = explodedShingles(df, idCol, textCol, shingleSize,
+      threshold: Double = JaccardThreshold): DataFrame = {
+    val exploded = explodedShingles(df, idCol, textCol, ShingleSize,
       withHashes = false)
     val sizes = setSizes(exploded).staged
     // global total order on tokens: rarest first (document frequency asc,
@@ -875,6 +872,8 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
+  val ContainmentThreshold = 0.9
+
   /** Directed containment detection — C(A→B) = |A∩B| / |A| over n-gram
     * shingle sets: flags documents SUBSUMED by a larger one (quoted
     * articles, excerpt pages, boilerplate-wrapped copies) that symmetric
@@ -895,8 +894,8 @@ object Dedup {
     * [[ngramJaccardDups]]: the cap's corpus count is `count(1)` over
     * `df`. */
   def containmentDups(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.9, shingleSize: Int = 3): DataFrame = {
-    val (sizes, inter) = cappedCoOccurrences(df, idCol, textCol, shingleSize)
+      threshold: Double = ContainmentThreshold): DataFrame = {
+    val (sizes, inter) = cappedCoOccurrences(df, idCol, textCol)
     inter
       .join(sizes.select(col("id").as("id_a"), col("n").as("__na")), Seq("id_a"))
       .join(sizes.select(col("id").as("id_b"), col("n").as("__nb")), Seq("id_b"))
@@ -912,6 +911,9 @@ object Dedup {
       .filter(col("containment") >= threshold)
   }
 
+  /** The id column of a cluster relation, (id, cluster_id). */
+  val ClusterIdCol = "id"
+
   /** Soft dedup — downweight duplicates instead of dropping them: every
     * member of a near-dup cluster gets sampling weight 1/|cluster|, so a
     * document duplicated n times contributes ONE document's worth of
@@ -925,7 +927,7 @@ object Dedup {
     * unique-keyed joins; shuffle O(rows). Returns (idCol, cluster_id —
     * the doc's own id when unclustered, n_dups, weight). */
   def duplicationWeights(clusters: DataFrame, docs: DataFrame,
-      idCol: String = "id"): DataFrame = {
+      idCol: String = ClusterIdCol): DataFrame = {
     val sizes = clusters.groupBy("cluster_id").agg(count(lit(1)).as("n_dups"))
     val labeled = clusters.join(sizes, Seq("cluster_id"))
       .withColumnsRenamed(Map("id" -> "__cid"))
@@ -952,7 +954,7 @@ object Dedup {
     * re-runs, partitioning, and cluster size). Returns one DataFrame per
     * weight, complete and disjoint. */
   def leakageSafeSplit(clusters: DataFrame, docs: DataFrame, idCol: String,
-      weights: Seq[Double], salt: Int = 0): Seq[DataFrame] = {
+      weights: Seq[Double]): Seq[DataFrame] = {
     val labeled = docs
       .join(clusters.withColumnsRenamed(Map("id" -> idCol)), Seq(idCol),
         "left")
@@ -960,9 +962,11 @@ object Dedup {
       .drop("cluster_id")
       // staged once: every split's filter re-reads the labeled relation
       .staged
-    Sampling.split(labeled, "__split_g", weights, salt)
+    Sampling.split(labeled, "__split_g", weights)
       .map(_.drop("__split_g"))
   }
+
+  val SourceCol = "source"
 
   /** Canonical-representative selection over dedup clusters by SOURCE
     * preference — the production rule is rarely "keep the lowest id": a
@@ -978,13 +982,13 @@ object Dedup {
     * rows), no pair enumeration. Returns (id, cluster_id, source,
     * canon_id, is_canonical) for every cluster member. */
   def canonicalSelection(clusters: DataFrame, attrs: DataFrame,
-      priorities: DataFrame, idCol: String = "id",
-      sourceCol: String = "source"): DataFrame = {
+      priorities: DataFrame): DataFrame = {
     // staged once (cluster-member-sized): feeds the per-cluster argmin
     // AND the final annotation join — otherwise the attrs join (a corpus
     // scan at rest) runs twice
     val ranked = clusters
-      .join(attrs.select(col(idCol).as("id"), col(sourceCol).as("source")),
+      .join(attrs.select(col(ClusterIdCol).as("id"),
+        col(SourceCol).as("source")),
         Seq("id"))
       .join(broadcast(priorities), Seq("source"), "left")
       .withColumn("__prio", coalesce(col("priority"), lit(Long.MaxValue)))

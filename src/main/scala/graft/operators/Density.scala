@@ -24,14 +24,17 @@ import graft.engine.Stage.syntax._
   */
 object Density {
 
+  /** Shifts grid coordinates so negative cells pack into one id too. */
+  val GridOffset = 512
+
   /** Cluster on two coordinate columns. Cell ids are linearized as
-    * (cx+offset)·2^20 + (cy+offset) — exact integers, identical in any
-    * engine; coordinates must land within ±offset cells.
+    * (cx+GridOffset)·2^20 + (cy+GridOffset) — exact integers, identical in any
+    * engine; coordinates must land within ±GridOffset cells.
     *
     * Returns per-point (idCol, cluster) where cluster is the component's
     * min cell id, or -1 for noise. */
   def gridCluster(points: DataFrame, idCol: String, xCol: String,
-      yCol: String, eps: Double, minPts: Long, offset: Int = 512): DataFrame = {
+      yCol: String, eps: Double, minPts: Long): DataFrame = {
     require(eps > 0 && minPts >= 1, s"eps=$eps minPts=$minPts")
     val cx = floor(col(xCol).cast("double") / eps).cast("int")
     val cy = floor(col(yCol).cast("double") / eps).cast("int")
@@ -39,7 +42,7 @@ object Density {
       .select(col(idCol), cx.as("cx"), cy.as("cy"))
       .staged
     def cellId(cxc: org.apache.spark.sql.Column, cyc: org.apache.spark.sql.Column) =
-      ((cxc + offset).cast("long") * (1L << 20)) + (cyc + offset).cast("long")
+      ((cxc + GridOffset).cast("long") * (1L << 20)) + (cyc + GridOffset).cast("long")
     val dense = cells.groupBy("cx", "cy")
       .agg(count(lit(1)).as("n"))
       .filter(col("n") >= minPts)

@@ -28,8 +28,10 @@ import graft.engine.Stage.syntax._
   * group; a zero-variance corpus flags nothing (stat 0). */
 object Drift {
 
-  def meanShift(df: DataFrame, keyCol: String, valCol: String,
-      z: Double = 2.0): DataFrame = {
+  /** A group drifts past this many standard errors from the corpus mean. */
+  val ZThreshold = 2.0
+
+  def meanShift(df: DataFrame, keyCol: String, valCol: String): DataFrame = {
     val dec = col(valCol).cast("double").cast(DecimalType(28, 6))
     // staged once (group-count-sized): feeds both the corpus rollup and
     // the final select — otherwise the corpus scan behind it runs twice
@@ -52,7 +54,7 @@ object Drift {
       .select(col(keyCol), col("n_docs"),
         Det.roundN(meanG, 4).as("mean_val"),
         stat.as("drift_stat"),
-        (stat > z * z).as("is_drifted"))
+        (stat > ZThreshold * ZThreshold).as("is_drifted"))
   }
 
   /** Reference moments of a metric — (ref_mean, ref_var) as a 1-row
@@ -160,10 +162,9 @@ object Drift {
     * the whole report hash-matches a SQL oracle.
     *
     * Returns (keyCol, n_vecs, centroid_cosine) per segment. */
-  def embeddingDrift(df: DataFrame, keyCol: String,
-      embCol: String = "embedding"): DataFrame = {
+  def embeddingDrift(df: DataFrame, keyCol: String): DataFrame = {
     val dims = df.select(col(keyCol),
-        posexplode(col(embCol)).as(Seq("dim", "x")))
+        posexplode(col(Similarity.EmbCol)).as(Seq("dim", "x")))
       .select(col(keyCol), col("dim"), col("x").cast("double").as("x"))
       .staged
     def centroid(grouped: Seq[String]) = dims
@@ -188,7 +189,7 @@ object Drift {
   }
 
   def meanShiftAgainst(df: DataFrame, keyCol: String, valCol: String,
-      reference: DataFrame, z: Double = 2.0): DataFrame = {
+      reference: DataFrame): DataFrame = {
     val dec = col(valCol).cast("double").cast(DecimalType(28, 6))
     val perGroup = df.groupBy(col(keyCol))
       .agg(count(lit(1)).as("n_docs"),
@@ -202,6 +203,6 @@ object Drift {
       .select(col(keyCol), col("n_docs"),
         Det.roundN(meanG, 4).as("mean_val"),
         stat.as("drift_stat"),
-        (stat > z * z).as("is_drifted"))
+        (stat > ZThreshold * ZThreshold).as("is_drifted"))
   }
 }

@@ -138,6 +138,8 @@ object EventAnalytics {
           .as("retention_pct"))
   }
 
+  val TransitionScale = 6
+
   /** First-order Markov transition matrix over per-entity event
     * sequences: for each consecutive (type → next type) step in an
     * entity's time-ordered stream, the corpus-wide count and the
@@ -152,9 +154,9 @@ object EventAnalytics {
     * deterministic on any engine.
     *
     * Returns (from_type, to_type, n_transitions, p) with p =
-    * n / Σ_to n, pinned via Det.roundN(scale). */
+    * n / Σ_to n, pinned via Det.roundN([[TransitionScale]]). */
   def transitionMatrix(events: DataFrame, entityCol: String, typeCol: String,
-      timeCol: String, tieCol: String, scale: Int = 6): DataFrame = {
+      timeCol: String, tieCol: String): DataFrame = {
     val w = Window.partitionBy(entityCol).orderBy(col(timeCol), col(tieCol))
     val counts = events
       .select(col(typeCol).as("from_type"),
@@ -165,6 +167,6 @@ object EventAnalytics {
     counts.withColumn("p",
       Det.roundN(col("n_transitions") * lit(1.0) /
         sum(col("n_transitions")).over(Window.partitionBy("from_type")),
-        scale))
+        TransitionScale))
   }
 }

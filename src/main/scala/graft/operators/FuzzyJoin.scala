@@ -83,23 +83,23 @@ object FuzzyJoin {
     strs.filter(col("__len") < minLongLen)
       .select(col("__s").as(name), col("__len").as(lenName))
 
+  /** Gram size of the q-gram filters; bigrams suit short fields. */
+  val Q = 2
+
   /** @param df      relation carrying the string column (deduplicated
     *                internally; pass the projected column)
     * @param strCol  string column to join on
     * @param maxDist inclusive Levenshtein threshold d >= 1
-    * @param q       gram size (default 2; bigrams suit short fields)
     */
-  def editDistancePairs(df: DataFrame, strCol: String, maxDist: Int,
-      q: Int = 2): DataFrame = {
+  def editDistancePairs(df: DataFrame, strCol: String, maxDist: Int): DataFrame = {
     require(maxDist >= 1, s"maxDist must be >= 1: $maxDist")
-    require(q >= 1, s"q must be >= 1: $q")
-    val prefixLen = q * maxDist + 1
-    val minLongLen = q * maxDist + q // gram count > q*d ⇔ len >= q*d + q
+    val prefixLen = Q * maxDist + 1
+    val minLongLen = Q * maxDist + Q // gram count > Q*d ⇔ len >= Q*d + Q
 
     val strs = clean(df, strCol)
 
     // 1-3. positional gram multiset, rarest-first prefix per string
-    val g = grams(strs, q)
+    val g = grams(strs, Q)
     val freq = g.groupBy("__g").agg(count(lit(1)).as("__df"))
     val pre = prefix(g, freq, prefixLen)
 
@@ -142,17 +142,15 @@ object FuzzyJoin {
     * `maxDist` are absent (left-join downstream if needed).
     */
   def editDistanceLookup(probes: DataFrame, dict: DataFrame,
-      probeCol: String, dictCol: String, maxDist: Int,
-      q: Int = 2): DataFrame = {
+      probeCol: String, dictCol: String, maxDist: Int): DataFrame = {
     require(maxDist >= 1, s"maxDist must be >= 1: $maxDist")
-    require(q >= 1, s"q must be >= 1: $q")
-    val prefixLen = q * maxDist + 1
-    val minLongLen = q * maxDist + q
+    val prefixLen = Q * maxDist + 1
+    val minLongLen = Q * maxDist + Q
 
     val p = clean(probes, probeCol)
     val d = clean(dict, dictCol)
-    val pg = grams(p, q)
-    val dg = grams(d, q)
+    val pg = grams(p, Q)
+    val dg = grams(d, Q)
     val freq = pg.select("__g").union(dg.select("__g"))
       .groupBy("__g").agg(count(lit(1)).as("__df"))
 

@@ -27,6 +27,10 @@ import graft.engine.{Det, Stage}
   */
 object Graph {
 
+  /** PageRank's damping and the decimals each round's rank is pinned to. */
+  val Damping = 0.85
+  val RankScale = 12
+
   /** `edges` as a simple directed graph, staged: (src, dst) with
     * self-loops and repeats dropped. */
   private def simpleEdges(edges: DataFrame): DataFrame =
@@ -37,12 +41,11 @@ object Graph {
   /** The power iteration of [[pagerank]] and [[personalizedPagerank]]
     * over the staged simple graph `e` and the node relation `ids`
     * (`__id` plus the columns `init` and `teleport` read): rank starts at
-    * `init`, and each round is `teleport` + damping × the decimal-summed
-    * in-contributions pr/outdeg, pinned to `scale` decimals. Returns
+    * `init`, and each round is `teleport` + [[Damping]] × the decimal-summed
+    * in-contributions pr/outdeg, pinned to [[RankScale]] decimals. Returns
     * (__id, pr). */
   private def powerIterate(e: DataFrame, ids: DataFrame, init: Column,
-      teleport: Column, iterations: Int, damping: Double,
-      scale: Int): DataFrame = {
+      teleport: Column, iterations: Int): DataFrame = {
     val od = Stage.materialize(
       e.groupBy("src").agg(count(lit(1)).as("outdeg")))
     var pr = ids.select(col("__id"), init.as("pr"))
@@ -51,13 +54,13 @@ object Graph {
         .join(e, pr("__id") === e("src"))
         .join(od, Seq("src"))
         .groupBy(col("dst"))
-        .agg(Det.dsum(col("pr") / col("outdeg"), scale).as("__c"))
+        .agg(Det.dsum(col("pr") / col("outdeg"), RankScale).as("__c"))
       pr = Stage.materializeAlways(
         ids.join(contrib, ids("__id") === contrib("dst"), "left")
           .select(col("__id"),
             Det.roundN(
-              teleport + lit(damping) * coalesce(col("__c"), lit(0.0)),
-              scale).as("pr")))
+              teleport + lit(Damping) * coalesce(col("__c"), lit(0.0)),
+              RankScale).as("pr")))
     }
     pr
   }
@@ -68,18 +71,17 @@ object Graph {
     * SQL expression over the `ndn` row and `teleport` over `nd`, its
     * alias in each round. Ends in `pr<iterations>(id, pr)`. */
   private def powerIterateSql(nodeCtes: String, init: String,
-      teleport: String, iterations: Int, damping: Double,
-      scale: Int): String = {
+      teleport: String, iterations: Int): String = {
     val rounds = (1 to iterations).map { i =>
       s"""c$i AS (
          |  SELECT e.dst AS id,
-         |    ${Det.dsumSql(s"pr${i - 1}.pr / od.outdeg", scale)} AS c
+         |    ${Det.dsumSql(s"pr${i - 1}.pr / od.outdeg", RankScale)} AS c
          |  FROM e JOIN pr${i - 1} ON pr${i - 1}.id = e.src
          |  JOIN od ON od.src = e.src
          |  GROUP BY 1),
          |pr$i AS (
          |  SELECT nd.id, ${Det.roundNSql(
-            s"$teleport + $damping * COALESCE(c$i.c, 0.0)", scale)} AS pr
+            s"$teleport + $Damping * COALESCE(c$i.c, 0.0)", RankScale)} AS pr
          |  FROM ndn nd LEFT JOIN c$i ON c$i.id = nd.id)""".stripMargin
     }.mkString(",\n")
     s"""od AS (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY 1),
@@ -98,8 +100,7 @@ object Graph {
     * nodes absent from `edges` still receive the base rank.
     */
   def pagerank(nodes: DataFrame, edges: DataFrame, idCol: String,
-      iterations: Int, damping: Double = 0.85,
-      scale: Int = 12): DataFrame = {
+      iterations: Int): DataFrame = {
     require(iterations >= 1 && iterations <= 50, s"iterations: $iterations")
     val e = simpleEdges(edges)
     // node count enters as a broadcast 1-row relation, not a driver-side
@@ -108,18 +109,17 @@ object Graph {
     val ids = Stage.materialize(
       nodes.select(col(idCol).as("__id")).crossJoin(broadcast(n)))
     powerIterate(e, ids, lit(1.0) / col("__n"),
-        lit(1.0 - damping) / col("__n"), iterations, damping, scale)
+        lit(1.0 - Damping) / col("__n"), iterations)
       .select(col("__id").as(idCol), col("pr").as("pagerank"))
   }
 
   /** DuckDB mirror of [[pagerank]] as unrolled CTEs over an `e(src,dst)`
     * CTE (already self-loop-free and distinct) and a node CTE
     * `nd(<idCol>)`. Returns CTE text ending in `prK` with (id, pr). */
-  def pagerankSql(idCol: String, iterations: Int, damping: Double = 0.85,
-      scale: Int = 12): String =
+  def pagerankSql(idCol: String, iterations: Int): String =
     powerIterateSql(
       s"ndn AS (SELECT $idCol AS id, (SELECT COUNT(*) FROM nd) AS n FROM nd)",
-      "1.0 / n", s"${1.0 - damping} / nd.n", iterations, damping, scale)
+      "1.0 / n", s"${1.0 - Damping} / nd.n", iterations)
 
   /** Personalized PageRank — teleport restricted to a SOURCE SET instead
     * of all nodes: pr⁰ = 1/|S| on S (0 elsewhere), each round
@@ -135,8 +135,7 @@ object Graph {
     * `isSource`: boolean Column over the node relation's columns.
     * Returns (idCol, ppr). */
   def personalizedPagerank(nodes: DataFrame, edges: DataFrame, idCol: String,
-      isSource: Column, iterations: Int, damping: Double = 0.85,
-      scale: Int = 12): DataFrame = {
+      isSource: Column, iterations: Int): DataFrame = {
     require(iterations >= 1 && iterations <= 50, s"iterations: $iterations")
     val e = simpleEdges(edges)
     val marked = nodes.select(col(idCol).as("__id"),
@@ -144,8 +143,7 @@ object Graph {
     val nS = marked.agg(sum(col("__s")).as("__ns"))
     val ids = Stage.materialize(marked.crossJoin(broadcast(nS)))
     powerIterate(e, ids, col("__s") / col("__ns"),
-        lit(1.0 - damping) * col("__s") / col("__ns"), iterations, damping,
-        scale)
+        lit(1.0 - Damping) * col("__s") / col("__ns"), iterations)
       .select(col("__id").as(idCol), col("pr").as("ppr"))
   }
 
@@ -153,12 +151,12 @@ object Graph {
     * and `e(src, dst)`; `srcPred` is a boolean SQL expression over nd's
     * row. Ends in `pr$iterations(id, pr)`. */
   def personalizedPagerankSql(idCol: String, srcPred: String,
-      iterations: Int, damping: Double = 0.85, scale: Int = 12): String =
+      iterations: Int): String =
     powerIterateSql(
       s"""ndm AS (SELECT $idCol AS id,
          |  CASE WHEN $srcPred THEN 1.0 ELSE 0.0 END AS s FROM nd),
          |ndn AS (SELECT id, s, (SELECT SUM(s) FROM ndm) AS ns FROM ndm)""".stripMargin,
-      "s / ns", s"${1.0 - damping} * nd.s / nd.ns", iterations, damping, scale)
+      "s / ns", s"${1.0 - Damping} * nd.s / nd.ns", iterations)
 
   /** Synchronous label-propagation communities (LPA, Raghavan et al.
     * 2007) made DETERMINISTIC: every node starts labeled with its own id;

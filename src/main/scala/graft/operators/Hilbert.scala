@@ -60,25 +60,26 @@ object Hilbert {
     walked.withColumnRenamed("__hd", out).drop("__hx", "__hy")
   }
 
-  /** DuckDB mirror of [[index]]: a CTE chain `<prefix>N AS (...)` walking
+  val SqlPrefix = "hil"
+
+  /** DuckDB mirror of [[index]]: a CTE chain `hilN AS (...)` walking
     * the same rounds. `from` is the relation feeding round 0; the caller
-    * selects from `<prefix>0`, whose columns are the originals plus
+    * selects from `hil0`, whose columns are the originals plus
     * `hx`/`hy` (scratch) and `hd` (the index). `x`/`y` are SQL
     * expressions over `from`'s columns. */
-  def indexSql(from: String, x: String, y: String, bits: Int,
-      prefix: String = "hil"): String = {
+  def indexSql(from: String, x: String, y: String, bits: Int): String = {
     require(bits >= 1 && bits <= 28, s"bits out of range: $bits")
-    val init = s"$prefix${bits} AS (SELECT *, CAST(($x) AS BIGINT) AS hx, " +
+    val init = s"$SqlPrefix${bits} AS (SELECT *, CAST(($x) AS BIGINT) AS hx, " +
       s"CAST(($y) AS BIGINT) AS hy, CAST(0 AS BIGINT) AS hd FROM $from)"
     val rounds = (bits - 1 to 0 by -1).map { i =>
       val s = 1L << i
       val rx = s"(CASE WHEN hx & $s > 0 THEN 1 ELSE 0 END)"
       val ry = s"(CASE WHEN hy & $s > 0 THEN 1 ELSE 0 END)"
-      s"""$prefix$i AS (SELECT * EXCLUDE (hx, hy, hd),
+      s"""$SqlPrefix$i AS (SELECT * EXCLUDE (hx, hy, hd),
          |  CASE WHEN $ry = 0 THEN (CASE WHEN $rx = 1 THEN ${s - 1} - hy ELSE hy END) ELSE hx END AS hx,
          |  CASE WHEN $ry = 0 THEN (CASE WHEN $rx = 1 THEN ${s - 1} - hx ELSE hx END) ELSE hy END AS hy,
          |  hd + ${s * s} * xor(3 * $rx, $ry) AS hd
-         |FROM $prefix${i + 1})""".stripMargin
+         |FROM $SqlPrefix${i + 1})""".stripMargin
     }
     (init +: rounds).mkString(",\n")
   }

@@ -32,10 +32,13 @@ import graft.functions.TextFunctions
   */
 object Importance {
 
+  /** The most frequent tokens that carry an importance weight. */
+  val VocabSize = 64
+
   /** Per-doc importance weights: (idCol, n_hits, weight). `targetCol` is
     * a boolean column marking rows of the target distribution. */
   def weights(docs: DataFrame, idCol: String, textCol: String,
-      targetCol: String, vocabSize: Int = 64): DataFrame = {
+      targetCol: String, vocabSize: Int = VocabSize): DataFrame = {
     val toks = docs.select(col(idCol).as("id"), col(targetCol).as("__t"),
       explode(TextFunctions.tokens(col(textCol))).as("w")).staged
     val counts = toks.groupBy("w").agg(

@@ -28,14 +28,14 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Inequality {
 
+  /** Decimal scale of the values (exact for |x| < 10^(18-GiniScale)). */
+  val GiniScale = 2
+
   /** @param bucketWidth value-domain granularity; the bucket relation
     *                    (≈ range/width rows) is broadcast — size it to
     *                    thousands, not millions
-    * @param scale       decimal scale of the value column (exactness
-    *                    domain: |x| < 10^(18-scale))
     */
-  def gini(df: DataFrame, valCol: String, bucketWidth: Double,
-      scale: Int = 2): DataFrame = {
+  def gini(df: DataFrame, valCol: String, bucketWidth: Double): DataFrame = {
     require(bucketWidth > 0, s"bucketWidth must be positive: $bucketWidth")
     val v = df.select(col(valCol).as("__v")).filter(col("__v").isNotNull)
       .withColumn("__b", floor(col("__v") / bucketWidth).cast("long"))
@@ -43,7 +43,7 @@ object Inequality {
       .withColumn("__pre", coalesce(
         sum(col("__bc")).over(Window.orderBy("__b")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    val dv = col("__v").cast(DecimalType(18, scale))
+    val dv = col("__v").cast(DecimalType(18, GiniScale))
     val ranked = v
       .join(broadcast(hist.select(col("__b"), col("__pre"))), Seq("__b"))
       .withColumn("__rk", col("__pre") + row_number().over(

@@ -36,19 +36,20 @@ object Itemsets {
     * ScaleOps all derive from it via the helpers below, so
     * tuning the rate cannot desynchronize a query from its oracle. */
   val DefaultBasketDenom = 75000L
+  val DefaultFloorSupport = 2L
 
   /** Spark-dialect relative threshold over a basket-count aggregate
     * expression: greatest(floor, ceil(count / denom)) in exact integer
     * form. */
   def thresholdExprSql(countExpr: String,
-      denom: Long = DefaultBasketDenom, floor: Long = 2L): String =
+      denom: Long = DefaultBasketDenom, floor: Long = DefaultFloorSupport): String =
     s"greatest($floor, ($countExpr + ${denom - 1}) div $denom)"
 
   /** DuckDB-dialect mirror of [[thresholdExprSql]] (integer division is
     * `//`). */
-  def thresholdOracleSql(countExpr: String,
-      denom: Long = DefaultBasketDenom, floor: Long = 2L): String =
-    s"GREATEST($floor, ($countExpr + ${denom - 1}) // $denom)"
+  def thresholdOracleSql(countExpr: String): String =
+    s"GREATEST($DefaultFloorSupport, ($countExpr + ${DefaultBasketDenom - 1})" +
+      s" // $DefaultBasketDenom)"
 
   /** Frequent triples with RELATIVE minimum support — the A-priori norm:
     * threshold = greatest(floorSupport, ceil(n_baskets / basketDenom)),
@@ -66,7 +67,7 @@ object Itemsets {
     * the final triples match a single end filter. */
   def frequentTriples(baskets: DataFrame, basketCol: String,
       itemCol: String, basketDenom: Long = DefaultBasketDenom,
-      floorSupport: Long = 2L): DataFrame = {
+      floorSupport: Long = DefaultFloorSupport): DataFrame = {
     require(basketDenom >= 1, s"basketDenom: $basketDenom")
     require(floorSupport >= 1, s"floorSupport: $floorSupport")
     val b = baskets.select(col(basketCol).as("bk"), col(itemCol).as("it"))

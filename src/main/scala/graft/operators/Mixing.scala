@@ -17,12 +17,14 @@ import graft.engine.Stage.syntax._
   */
 object Mixing {
 
+  val Alpha = 0.5
+
   /** Returns (source, total_weight, share, mix_weight), shares rounded to
     * 6 places. alpha = 0.5 routes through sqrt (IEEE-correctly-rounded on
     * every engine, unlike pow(x, 0.5) which libm does not guarantee) —
     * prefer it when cross-engine determinism matters. */
   def temperatureWeights(df: DataFrame, srcCol: String, weightCol: String,
-      alpha: Double = 0.5): DataFrame = {
+      alpha: Double = Alpha): DataFrame = {
     def powA(c: org.apache.spark.sql.Column) =
       if (alpha == 0.5) sqrt(c) else pow(c, alpha)
     import org.apache.spark.sql.types.DecimalType

@@ -87,22 +87,24 @@ object Multimodal {
   def rademacherSign(j: Int, i: Int): Double =
     if ((((j * 31 + i) * 2654435761L >>> 16) & 1) == 1) 1.0 else -1.0
 
-  def pseudoEmbed(features: DataFrame, dims: Int = 8,
-      featCol: String = "features"): DataFrame = {
-    val comps = (0 until dims).map { j =>
+  val PseudoDims = 8
+  val FeatCol = "features"
+
+  def pseudoEmbed(features: DataFrame): DataFrame = {
+    val comps = (0 until PseudoDims).map { j =>
       (0 until 16).map(i =>
-        element_at(col(featCol), i + 1) * lit(rademacherSign(j, i)))
+        element_at(col(FeatCol), i + 1) * lit(rademacherSign(j, i)))
         .reduce(_ + _).as(s"__e$j")
     }
     val withComps = features.select(col("*") +: comps: _*)
-    val norm = sqrt((0 until dims).map(j => col(s"__e$j") * col(s"__e$j"))
+    val norm = sqrt((0 until PseudoDims).map(j => col(s"__e$j") * col(s"__e$j"))
       .reduce(_ + _))
     withComps
       .withColumn("__n", norm)
-      .withColumn("embedding", array((0 until dims).map(j =>
+      .withColumn("embedding", array((0 until PseudoDims).map(j =>
         when(col("__n") > 0, col(s"__e$j") / col("__n")).otherwise(0.0)
           .cast("float")): _*))
-      .drop((0 until dims).map(j => s"__e$j") :+ "__n": _*)
+      .drop((0 until PseudoDims).map(j => s"__e$j") :+ "__n": _*)
   }
 
   /** Aspect-preserving resize PLAN: pure integer metadata arithmetic —

@@ -30,11 +30,12 @@ import graft.engine.Stage.syntax._
   * partitionings (same contract as [[Similarity.kmeansStep]]).
   */
 object Pq {
+  import Similarity.{EmbCol, IdCol}
 
   /** Long-form subvectors: (id, sub, sv: array<float>), sub in [0, m).
     * `dims` must be divisible by m. */
   def subVectors(df: DataFrame, m: Int, dims: Int,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
+      idCol: String = IdCol, embCol: String = EmbCol): DataFrame = {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m")
     val subDim = dims / m
     df.select(col(idCol).as("id"),
@@ -45,12 +46,11 @@ object Pq {
   /** Seed codebooks from the k lowest-id vectors: (sub, code, c_emb).
     * The window is over k rows post-limit (codebook-sized, not data-sized),
     * so the unpartitioned row_number is bounded by construction. */
-  def seedCodebooks(df: DataFrame, m: Int, dims: Int, k: Int,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val seeds = df.orderBy(col(idCol)).limit(k)
+  def seedCodebooks(df: DataFrame, m: Int, dims: Int, k: Int): DataFrame = {
+    val seeds = df.orderBy(col(IdCol)).limit(k)
       .withColumn("__code",
-        row_number().over(Window.orderBy(col(idCol))) - 1)
-    subVectors(seeds, m, dims, "__code", embCol)
+        row_number().over(Window.orderBy(col(IdCol))) - 1)
+    subVectors(seeds, m, dims, "__code", EmbCol)
       .select(col("sub"), col("id").cast("int").as("code"),
         col("sv").as("c_emb"))
   }
@@ -92,10 +92,9 @@ object Pq {
   /** Train codebooks: seed from the k lowest-id vectors, run `iters`
     * Lloyd refinements. The subvector relation is staged once; each round
     * materializes a codebook-sized result. */
-  def train(df: DataFrame, m: Int, dims: Int, k: Int, iters: Int,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val sv = subVectors(df, m, dims, idCol, embCol).stagedAlways
-    var cb = seedCodebooks(df, m, dims, k, idCol, embCol).stagedAlways
+  def train(df: DataFrame, m: Int, dims: Int, k: Int, iters: Int): DataFrame = {
+    val sv = subVectors(df, m, dims).stagedAlways
+    var cb = seedCodebooks(df, m, dims, k).stagedAlways
     (0 until iters).foreach { _ =>
       cb = pqStep(sv, cb).select("sub", "code", "c_emb").stagedAlways
     }
@@ -107,10 +106,9 @@ object Pq {
     * Decimal-summed so the shortlist cutoff can't flutter on double
     * accumulation order at a rank boundary. Returns (id, adc_score). */
   private def adcShortlist(subset: DataFrame, codebooks: DataFrame,
-      query: DataFrame, limit: Int, m: Int, dims: Int,
-      idCol: String, embCol: String): DataFrame = {
+      query: DataFrame, limit: Int, m: Int, dims: Int): DataFrame = {
     GraftFunctions.register(subset.sparkSession)
-    val enc = encode(subVectors(subset, m, dims, idCol, embCol), codebooks)
+    val enc = encode(subVectors(subset, m, dims), codebooks)
     val qSubs = subVectors(query.select(lit(0L).as("__qid"), col("q_emb")),
       m, dims, "__qid", "q_emb").select(col("sub"), col("sv").as("qv"))
     val lut = codebooks.join(broadcast(qSubs), Seq("sub"))
@@ -125,27 +123,25 @@ object Pq {
   }
 
   /** Exact-cosine rescore of an ADC shortlist against the raw vectors.
-    * Returns (idCol, cosine, adc_score), cosine-ranked. */
+    * Returns (vec_id, cosine, adc_score), cosine-ranked. */
   private def rescore(vectors: DataFrame, shortlist: DataFrame,
-      query: DataFrame, kTop: Int, idCol: String,
-      embCol: String): DataFrame =
-    Similarity.cosineTopK(vectors.join(shortlist, col(idCol) === col("id")),
-        query, kTop, idCol, embCol, "cosine")
-      .select(col(idCol), col("cosine"),
+      query: DataFrame, kTop: Int): DataFrame =
+    Similarity.cosineTopK(vectors.join(shortlist, col(IdCol) === col("id")),
+        query, kTop, "cosine")
+      .select(col(IdCol), col("cosine"),
         Det.roundN(col("adc_score"), 6).as("adc_score"))
 
   /** ADC top-k with exact rescoring: the query builds its m×k partial-dot
     * LUT against the codebooks, encoded vectors are scored by summing m
     * LUT entries, and the top kTop×rescoreFactor shortlist is rescored
     * with exact cosine against the raw vectors. Returns
-    * (idCol, cosine, adc_score) — cosine-ranked, ADC kept for diagnostics.
+    * (vec_id, cosine, adc_score) — cosine-ranked, ADC kept for diagnostics.
     * `query`: 1-row DataFrame with float-array column q_emb. */
   def adcTopK(df: DataFrame, codebooks: DataFrame, query: DataFrame,
-      kTop: Int, m: Int, dims: Int, rescoreFactor: Int = 5,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
+      kTop: Int, m: Int, dims: Int, rescoreFactor: Int = 5): DataFrame = {
     val shortlist = adcShortlist(df, codebooks, query,
-      kTop * rescoreFactor, m, dims, idCol, embCol)
-    rescore(df, shortlist, query, kTop, idCol, embCol)
+      kTop * rescoreFactor, m, dims)
+    rescore(df, shortlist, query, kTop)
   }
 
   /** IVF-PQ: the coarse quantizer restricts the scan to the nProbe cells
@@ -164,15 +160,14 @@ object Pq {
   def ivfPqTopK(vectors: DataFrame, centroids: DataFrame,
       codebooks: DataFrame, query: DataFrame, kTop: Int, nProbe: Int,
       m: Int, dims: Int, rescoreFactor: Int = 5,
-      idCol: String = "vec_id", embCol: String = "embedding",
       preAssigned: Option[DataFrame] = None): DataFrame = {
     val probes = Similarity.probeCells(centroids, query, nProbe)
     val assigned = preAssigned.getOrElse(
-      Similarity.assignCells(vectors, centroids, idCol, embCol))
+      Similarity.assignCells(vectors, centroids))
     val members = assigned.join(broadcast(probes), Seq("cell"))
-      .select(col(idCol), col(embCol))
+      .select(col(IdCol), col(EmbCol))
     val shortlist = adcShortlist(members, codebooks, query,
-      kTop * rescoreFactor, m, dims, idCol, embCol)
-    rescore(members, shortlist, query, kTop, idCol, embCol)
+      kTop * rescoreFactor, m, dims)
+    rescore(members, shortlist, query, kTop)
   }
 }

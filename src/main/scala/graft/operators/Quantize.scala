@@ -25,17 +25,20 @@ import org.apache.spark.sql.functions._
   * [[graft.expressions.CosineSim]] scan exactly like the flat path.
   */
 object Quantize {
+  import Similarity.{EmbCol, IdCol}
 
-  /** Adds (scaleCol, qCol: array<int> in [-127, 127]) to the frame. */
-  def int8(df: DataFrame, embCol: String, qCol: String = "q_emb8",
-      scaleCol: String = "q_scale"): DataFrame =
-    df.withColumn(scaleCol,
+  val QCol = "q_emb8"
+  val ScaleCol = "q_scale"
+
+  /** Adds ([[ScaleCol]], [[QCol]]: array<int> in [-127, 127]) to the frame. */
+  def int8(df: DataFrame, embCol: String): DataFrame =
+    df.withColumn(ScaleCol,
         (array_max(transform(col(embCol), x => abs(x))) / lit(127.0))
           .cast("double"))
-      .withColumn(qCol,
-        when(col(scaleCol) > 0,
+      .withColumn(QCol,
+        when(col(ScaleCol) > 0,
           transform(col(embCol), x =>
-            least(greatest(floor(x / col(scaleCol) + lit(0.5)), lit(-127.0)),
+            least(greatest(floor(x / col(ScaleCol) + lit(0.5)), lit(-127.0)),
               lit(127.0)).cast("int")))
           .otherwise(transform(col(embCol), _ => lit(0))))
 
@@ -72,21 +75,20 @@ object Quantize {
   /** Hamming-candidate ANN: rank the corpus by popcount(sig XOR q_sig),
     * keep the `pool` best (id-tiebroken), then exact-cosine rerank the
     * pool to top `k`. The expensive float read touches only `pool` rows.
-    * Returns (idCol, hamming, cosine), cosine-ranked. */
-  def hammingTopK(vectors: DataFrame, query: DataFrame, k: Int, pool: Int,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val sigs = signBits(vectors, idCol, embCol)
+    * Returns (vec_id, hamming, cosine), cosine-ranked. */
+  def hammingTopK(vectors: DataFrame, query: DataFrame, k: Int, pool: Int): DataFrame = {
+    val sigs = signBits(vectors, IdCol, EmbCol)
     val qsig = signBits(query.select(lit(0L).as("__qid"), col("q_emb")),
         "__qid", "q_emb")
       .select(col("word_idx"), col("word").as("q_word"))
     val ham = sigs
       .join(broadcast(qsig), Seq("word_idx"))
-      .groupBy(col(idCol))
+      .groupBy(col(IdCol))
       .agg(sum(bit_count(col("word").bitwiseXOR(col("q_word"))))
         .as("hamming"))
-    val cands = ham.orderBy(col("hamming"), col(idCol)).limit(pool)
-    Similarity.cosineTopK(vectors.join(broadcast(cands), Seq(idCol)), query,
-        k, idCol, embCol, "cosine")
-      .select(col(idCol), col("hamming"), col("cosine"))
+    val cands = ham.orderBy(col("hamming"), col(IdCol)).limit(pool)
+    Similarity.cosineTopK(vectors.join(broadcast(cands), Seq(IdCol)), query,
+        k, "cosine")
+      .select(col(IdCol), col("hamming"), col("cosine"))
   }
 }

@@ -15,15 +15,17 @@ import org.apache.spark.sql.functions._
   */
 object Salting {
 
+  val JoinType = "inner"
+
   /** Salted inner/left equi-join of `large` with `small` on `key`. */
   def saltedJoin(large: DataFrame, small: DataFrame, key: String,
-      salts: Int, joinType: String = "inner"): DataFrame = {
+      salts: Int): DataFrame = {
     val saltedLarge = large.withColumn("__salt",
       pmod(xxhash64(monotonically_increasing_id(), col(key)), lit(salts))
         .cast("int"))
     val saltedSmall = small.withColumn("__salt",
       explode(sequence(lit(0), lit(salts - 1))))
-    saltedLarge.join(saltedSmall, Seq(key, "__salt"), joinType)
+    saltedLarge.join(saltedSmall, Seq(key, "__salt"), JoinType)
       .drop("__salt")
   }
 

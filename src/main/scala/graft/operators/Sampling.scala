@@ -26,20 +26,21 @@ import graft.engine.Stage.syntax._
 object Sampling {
 
   val Buckets = 10000
+  val DefaultSalt = 0
 
   /** Stable bucket in [0, Buckets) from the row key (+ optional salt so
     * different samples over the same data are independent). Mirror in SQL
     * with [[bucketSql]]. */
-  def bucket(key: Column, salt: Int = 0): Column =
+  def bucket(key: Column, salt: Int = DefaultSalt): Column =
     pmod(Det.h56(concat(lit(s"$salt:"), key.cast("string"))), lit(Buckets))
 
   /** DuckDB mirror of [[bucket]]: `e` is a SQL expression for the key. */
-  def bucketSql(e: String, salt: Int = 0): String =
-    s"(${Det.h56Sql(s"'$salt:' || CAST($e AS VARCHAR)")} % $Buckets)"
+  def bucketSql(e: String): String =
+    s"(${Det.h56Sql(s"'$DefaultSalt:' || CAST($e AS VARCHAR)")} % $Buckets)"
 
   /** Keep ~`fraction` of rows, deterministically. */
   def sample(df: DataFrame, keyCol: String, fraction: Double,
-      salt: Int = 0): DataFrame = {
+      salt: Int = DefaultSalt): DataFrame = {
     require(fraction >= 0 && fraction <= 1, s"fraction out of range: $fraction")
     df.filter(bucket(col(keyCol), salt) < (fraction * Buckets).round)
   }
@@ -47,12 +48,11 @@ object Sampling {
   /** Split into disjoint, jointly-complete parts with the given weights
     * (normalized). Each part is a contiguous bucket range, so the split is
     * stable under re-runs and resizings. */
-  def split(df: DataFrame, keyCol: String, weights: Seq[Double],
-      salt: Int = 0): Seq[DataFrame] = {
+  def split(df: DataFrame, keyCol: String, weights: Seq[Double]): Seq[DataFrame] = {
     require(weights.nonEmpty && weights.forall(_ > 0), s"bad weights: $weights")
     val total = weights.sum
     val cuts = weights.scanLeft(0.0)(_ + _).map(w => (w / total * Buckets).round)
-    val b = bucket(col(keyCol), salt)
+    val b = bucket(col(keyCol))
     cuts.sliding(2).map { case Seq(lo, hi) =>
       df.filter(b >= lo && b < hi)
     }.toSeq
@@ -66,11 +66,11 @@ object Sampling {
     * Index = how many interior cut points the key's bucket has passed;
     * identical membership to split() by construction (same cuts, same
     * bucket — SamplingSpec proves it). */
-  def partIndex(key: Column, weights: Seq[Double], salt: Int = 0): Column = {
+  def partIndex(key: Column, weights: Seq[Double]): Column = {
     require(weights.nonEmpty && weights.forall(_ > 0), s"bad weights: $weights")
     val total = weights.sum
     val cuts = weights.scanLeft(0.0)(_ + _).map(w => (w / total * Buckets).round)
-    val b = bucket(key, salt)
+    val b = bucket(key)
     cuts.drop(1).dropRight(1)
       .map(c => when(b >= c, 1).otherwise(0))
       .foldLeft(lit(0))(_ + _)
@@ -85,7 +85,7 @@ object Sampling {
     * join). Thresholds round exactly like [[sample]], so for equal
     * fractions both select IDENTICAL rows (SamplingSpec proves it). */
   def sampleByRates(df: DataFrame, strataCol: String, keyCol: String,
-      rates: DataFrame, salt: Int = 0): DataFrame = {
+      rates: DataFrame): DataFrame = {
     // floor(x + 0.5), not round(): identical to Scala's Double.round used
     // by sample(), and exactly mirrorable in oracle SQL (Spark's
     // round() routes through BigDecimal shortest-repr HALF_UP, which other
@@ -93,7 +93,7 @@ object Sampling {
     val threshold = floor(col("rate") * Buckets + 0.5).cast("long")
     df.join(broadcast(rates.select(col(strataCol), col("rate"))),
         Seq(strataCol))
-      .filter(bucket(col(keyCol), salt) < threshold)
+      .filter(bucket(col(keyCol)) < threshold)
       .drop("rate")
   }
 

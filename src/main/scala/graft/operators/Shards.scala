@@ -38,13 +38,15 @@ import graft.engine.Stage.syntax._
   */
 object Shards {
 
+  val DefaultSalt = 0
+
   /** Adds a `shard` int column in [0, nShards). */
   def assign(df: DataFrame, idCol: String, weightCol: String, nShards: Int,
-      heavyCutoff: Long = Long.MaxValue, salt: Int = 0): DataFrame = {
+      heavyCutoff: Long = Long.MaxValue): DataFrame = {
     require(nShards > 0, s"nShards must be positive: $nShards")
     val light = df.filter(col(weightCol) < heavyCutoff)
       .withColumn("shard",
-        pmod(Det.h56(concat(lit(s"$salt:"), col(idCol).cast("string"))),
+        pmod(Det.h56(concat(lit(s"$DefaultSalt:"), col(idCol).cast("string"))),
           lit(nShards)).cast("int"))
     val heavy0 = df.filter(col(weightCol) >= heavyCutoff)
     // global rank decomposition (see scaladoc): offsets from the
@@ -79,7 +81,7 @@ object Shards {
     * ranks the full corpus — the window partitions by shard. New salt =
     * new independent epoch order. */
   def shuffled(df: DataFrame, idCol: String, nShards: Int,
-      salt: Int = 0): DataFrame = {
+      salt: Int = DefaultSalt): DataFrame = {
     require(nShards > 0 && ((1L << 56) % nShards == 0),
       s"nShards must divide 2^56 (use a power of two): $nShards")
     val width = (1L << 56) / nShards

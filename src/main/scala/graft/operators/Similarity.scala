@@ -29,6 +29,10 @@ import graft.engine.Stage.syntax._
   */
 object Similarity {
 
+  /** The id and embedding columns of every vector relation. */
+  val IdCol = "vec_id"
+  val EmbCol = "embedding"
+
   /** Cast array<float> → array<double>. */
   def asDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
@@ -53,30 +57,29 @@ object Similarity {
     * cosine is the native codegen'd [[graft.expressions.CosineSim]] — the
     * innermost ANN loop stays in whole-stage codegen instead of
     * interpreted higher-order functions; identical double math. */
-  def bruteForceTopK(vectors: DataFrame, query: DataFrame, k: Int,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame =
-    cosineTopK(vectors, query, k, idCol, embCol, "cosine")
-      .select(col(idCol), col("cosine"))
+  def bruteForceTopK(vectors: DataFrame, query: DataFrame, k: Int): DataFrame =
+    cosineTopK(vectors, query, k, "cosine")
+      .select(col(IdCol), col("cosine"))
 
   /** The top `k` rows of `vectors` by `score` against the 1-row `query`
     * (broadcast): the score pinned to 6 decimals into `scoreCol`, ranked
-    * descending, ties to the lower `idCol`. Every column of both sides
+    * descending, ties to the lower [[IdCol]]. Every column of both sides
     * rides along. */
   private[operators] def topKAgainst(vectors: DataFrame, query: DataFrame,
-      k: Int, idCol: String, scoreCol: String, score: Column): DataFrame = {
+      k: Int, scoreCol: String, score: Column): DataFrame = {
     GraftFunctions.register(vectors.sparkSession)
     vectors
       .crossJoin(broadcast(query))
       .withColumn(scoreCol, Det.roundN(score, 6))
-      .orderBy(desc(scoreCol), col(idCol))
+      .orderBy(desc(scoreCol), col(IdCol))
       .limit(k)
   }
 
-  /** [[topKAgainst]] by the cosine of `embCol` and the query's `q_emb`. */
+  /** [[topKAgainst]] by the cosine of [[EmbCol]] and the query's `q_emb`. */
   private[operators] def cosineTopK(vectors: DataFrame, query: DataFrame,
-      k: Int, idCol: String, embCol: String, scoreCol: String): DataFrame =
-    topKAgainst(vectors, query, k, idCol, scoreCol,
-      GraftFunctions.cosine_sim(col(embCol), col("q_emb")))
+      k: Int, scoreCol: String): DataFrame =
+    topKAgainst(vectors, query, k, scoreCol,
+      GraftFunctions.cosine_sim(col(EmbCol), col("q_emb")))
 
   /** Maximum-inner-product top-k: rank by the RAW dot product, no norm —
     * the retrieval scoring for embeddings trained with inner-product
@@ -84,25 +87,23 @@ object Similarity {
     * part of its relevance and cosine's normalization would erase it.
     * Same broadcast-query scan shape as [[bruteForceTopK]]; at corpus
     * scale the IVF cell restriction composes in front identically. */
-  def mipsTopK(vectors: DataFrame, query: DataFrame, k: Int,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame =
-    topKAgainst(vectors, query, k, idCol, "score",
-        GraftFunctions.dot_product(col(embCol), col("q_emb")))
-      .select(col(idCol), col("score"))
+  def mipsTopK(vectors: DataFrame, query: DataFrame, k: Int): DataFrame =
+    topKAgainst(vectors, query, k, "score",
+        GraftFunctions.dot_product(col(EmbCol), col("q_emb")))
+      .select(col(IdCol), col("score"))
 
   /** Assign each vector to its nearest centroid (broadcast codebook).
     * Returns the input plus `cell` (centroid id). */
-  def assignCells(vectors: DataFrame, centroids: DataFrame,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
+  def assignCells(vectors: DataFrame, centroids: DataFrame): DataFrame = {
     GraftFunctions.register(vectors.sparkSession)
     val scored = vectors
       .crossJoin(broadcast(centroids))
-      .withColumn("__sim", GraftFunctions.cosine_sim(col(embCol), col("c_emb")))
+      .withColumn("__sim", GraftFunctions.cosine_sim(col(EmbCol), col("c_emb")))
     scored
-      .groupBy(col(idCol))
+      .groupBy(col(IdCol))
       .agg(
         max_by(col("cell"), struct(col("__sim"), -col("cell"))).as("cell"),
-        first(col(embCol)).as(embCol))
+        first(col(EmbCol)).as(EmbCol))
   }
 
   /** IVF top-k: probe the nProbe cells nearest to the query, brute-force
@@ -114,15 +115,14 @@ object Similarity {
     * touches only nProbe/nCells of the data. When absent (ad-hoc use)
     * assignment is computed inline, which costs a full codebook scan. */
   def ivfTopK(vectors: DataFrame, centroids: DataFrame, query: DataFrame,
-      k: Int, nProbe: Int, idCol: String = "vec_id",
-      embCol: String = "embedding",
+      k: Int, nProbe: Int,
       preAssigned: Option[DataFrame] = None): DataFrame = {
     val probes = probeCells(centroids, query, nProbe)
     val assigned = preAssigned.getOrElse(
-      assignCells(vectors, centroids, idCol, embCol))
+      assignCells(vectors, centroids))
     cosineTopK(assigned.join(broadcast(probes), Seq("cell")), query, k,
-        idCol, embCol, "cosine")
-      .select(col(idCol), col("cell"), col("cosine"))
+        "cosine")
+      .select(col(IdCol), col("cell"), col("cosine"))
   }
 
   /** The `nProbe` cells of `centroids` (cell, c_emb) nearest the 1-row
@@ -164,28 +164,24 @@ object Similarity {
     * only the queries that probe its cell — work is Σ_cell members(cell) ×
     * queries-probing(cell), never members × batch. The final per-query
     * top-k is a window partitioned by query_id (shuffle cardinality =
-    * batch size). At rest, `preAssigned` partitioned by cell makes the
-    * probe join partition-pruned exactly like the single-query path. */
+    * batch size). */
   def ivfTopKBatch(vectors: DataFrame, centroids: DataFrame,
-      queries: DataFrame, k: Int, nProbe: Int, idCol: String = "vec_id",
-      embCol: String = "embedding",
-      preAssigned: Option[DataFrame] = None): DataFrame = {
+      queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
     GraftFunctions.register(vectors.sparkSession)
     val probes = probeCellsBatch(centroids, queries, nProbe)
-    val assigned = preAssigned.getOrElse(
-      assignCells(vectors, centroids, idCol, embCol))
+    val assigned = assignCells(vectors, centroids)
     val topW = Window.partitionBy("query_id")
-      .orderBy(desc("cosine"), col(idCol))
+      .orderBy(desc("cosine"), col(IdCol))
     // no broadcast hint on probes: its estimate (codebook × query batch
     // through a window) is past BroadcastGuard's cap at every lake size,
     // so AQE picks the join from the runtime size
     assigned
       .join(probes, Seq("cell"))
       .withColumn("cosine",
-        Det.roundN(GraftFunctions.cosine_sim(col(embCol), col("q_emb")), 6))
+        Det.roundN(GraftFunctions.cosine_sim(col(EmbCol), col("q_emb")), 6))
       .withColumn("__rk", row_number().over(topW))
       .filter(col("__rk") <= k)
-      .select(col("query_id"), col(idCol), col("cell"), col("cosine"))
+      .select(col("query_id"), col(IdCol), col("cell"), col("cosine"))
   }
 
   /** IVF RANGE search: every vector within a cosine radius of each query
@@ -206,20 +202,19 @@ object Similarity {
     * corpus-sized is broadcast and no global sort runs — the final
     * ORDER BY is the caller's presentation choice.
     *
-    * Returns (query_id, idCol, cell, cosine) for cosine >= tau,
+    * Returns (query_id, vec_id, cell, cosine) for cosine >= tau,
     * excluding the query row itself. */
   def ivfRangeSearch(vectors: DataFrame, centroids: DataFrame,
-      queries: DataFrame, tau: Double, nProbe: Int,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
+      queries: DataFrame, tau: Double, nProbe: Int): DataFrame = {
     GraftFunctions.register(vectors.sparkSession)
     val probes = probeCellsBatch(centroids, queries, nProbe)
     // no broadcast hint on probes, as in ivfTopKBatch
-    assignCells(vectors, centroids, idCol, embCol)
+    assignCells(vectors, centroids)
       .join(probes, Seq("cell"))
       .withColumn("cosine",
-        Det.roundN(GraftFunctions.cosine_sim(col(embCol), col("q_emb")), 6))
-      .filter(col("cosine") >= tau && col(idCol) =!= col("query_id"))
-      .select(col("query_id"), col(idCol), col("cell"), col("cosine"))
+        Det.roundN(GraftFunctions.cosine_sim(col(EmbCol), col("q_emb")), 6))
+      .filter(col("cosine") >= tau && col(IdCol) =!= col("query_id"))
+      .select(col("query_id"), col(IdCol), col("cell"), col("cosine"))
   }
 
   /** One Lloyd (k-means) iteration over an embedding column: assign every
@@ -241,11 +236,10 @@ object Similarity {
     * caller can choose to reseed dead cells explicitly.
     *
     * Returns (cell, c_emb: array<double>, n_members). */
-  def kmeansStep(vectors: DataFrame, centroids: DataFrame,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val assigned = assignCells(vectors, centroids, idCol, embCol)
+  def kmeansStep(vectors: DataFrame, centroids: DataFrame): DataFrame = {
+    val assigned = assignCells(vectors, centroids)
     val dimMeans = assigned
-      .select(col("cell"), posexplode(col(embCol)).as(Seq("dim", "x")))
+      .select(col("cell"), posexplode(col(EmbCol)).as(Seq("dim", "x")))
       .groupBy("cell", "dim")
       .agg((sum(col("x").cast(org.apache.spark.sql.types.DecimalType(18, 9)))
           .cast("double") / count(lit(1))).as("c_mean"),
@@ -266,11 +260,14 @@ object Similarity {
         coalesce(col("n_members"), lit(0L)).as("n_members"))
   }
 
+  /** Decimals each training round pins centroid values to. */
+  val KmeansScale = 6
+
   /** Full Lloyd iteration — [[kmeansStep]] repeated `rounds` times, the
     * IVF codebook TRAINING loop (the single step is the refine primitive;
     * this is what actually builds a codebook from scratch).
     *
-    * Each round's centroid values are PINNED — `Det.roundN(scale)` then a
+    * Each round's centroid values are PINNED — `Det.roundN(KmeansScale)` then a
     * float cast, the PQ-codebook discipline — before feeding the next
     * assignment: with per-round decimal means and pinned values, every
     * engine computes the identical assignment trajectory, so the whole
@@ -286,13 +283,12 @@ object Similarity {
     * (cells × dims) is the only thing staged — vectors are re-scanned
     * per round, never cached, so the loop holds at any corpus size. */
   def kmeansIterate(vectors: DataFrame, initCentroids: DataFrame,
-      rounds: Int, scale: Int = 6, idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 20, s"rounds: $rounds")
-    val p = math.pow(10, scale)
+    val p = math.pow(10, KmeansScale)
     var cent = initCentroids
     for (_ <- 1 to rounds) {
-      val stepped = kmeansStep(vectors, cent, idCol, embCol)
+      val stepped = kmeansStep(vectors, cent)
       cent = Stage.materializeAlways(
         stepped.select(col("cell"),
           transform(col("c_emb"),
@@ -336,40 +332,38 @@ object Similarity {
     * filter, so the codebook grows with the corpus without a driver-side
     * count. Returns (cell, c_emb).
     *
-    * CONTRACT: `idCol` must be dense 0..N-1 (the lake's vec_id layout —
+    * CONTRACT: `vec_id` must be dense 0..N-1 (the lake's layout —
     * the same assumption the previous hardcoded `vec_id < 16` made). A
     * sparse or offset id space selects fewer than K rows (possibly zero
     * → an empty kNN graph with no error); for such corpora seed via a
     * rank instead, e.g.
-    * `row_number().over(Window.orderBy(idCol)) <= __k`. */
-  def seedCentroids(vectors: DataFrame, idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
+    * `row_number().over(Window.orderBy(vec_id)) <= __k`. */
+  def seedCentroids(vectors: DataFrame): DataFrame = {
     val kRel = vectors
       .agg(expr(ivfCellsSql("count(1)")).cast("long").as("__k"))
     vectors.crossJoin(broadcast(kRel))
-      .filter(col(idCol) < col("__k"))
-      .select(col(idCol).as("cell"), col(embCol).as("c_emb"))
+      .filter(col(IdCol) < col("__k"))
+      .select(col(IdCol).as("cell"), col(EmbCol).as("c_emb"))
   }
 
   def knnGraph(vectors: DataFrame, centroids: DataFrame, k: Int,
-      nProbe: Int, idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
+      nProbe: Int): DataFrame = {
     GraftFunctions.register(vectors.sparkSession)
     // one corpus scan: the (id, emb) projection feeds both the probe
     // choice and the member assignment; the codebook is read once too
-    val base = vectors.select(col(idCol), col(embCol)).staged
+    val base = vectors.select(col(IdCol), col(EmbCol)).staged
     val cents = centroids.staged
-    val probeW = Window.partitionBy(idCol)
+    val probeW = Window.partitionBy(IdCol)
       .orderBy(desc("__sim"), col("cell"))
     val probes = base
       .crossJoin(broadcast(cents))
       .withColumn("__sim",
-        GraftFunctions.cosine_sim(col(embCol), col("c_emb")))
+        GraftFunctions.cosine_sim(col(EmbCol), col("c_emb")))
       .withColumn("__rk", row_number().over(probeW))
       .filter(col("__rk") <= nProbe)
-      .select(col(idCol).as("src"), col("cell"), col(embCol).as("__q"))
-    val members = assignCells(base, cents, idCol, embCol)
-      .select(col("cell"), col(idCol).as("dst"), col(embCol).as("__m"))
+      .select(col(IdCol).as("src"), col("cell"), col(EmbCol).as("__q"))
+    val members = assignCells(base, cents)
+      .select(col("cell"), col(IdCol).as("dst"), col(EmbCol).as("__m"))
     val topW = Window.partitionBy("src")
       .orderBy(desc("cosine"), col("dst"))
     probes.join(members, Seq("cell"))
@@ -395,33 +389,32 @@ object Similarity {
     * Deterministic end-to-end (argmax assignment tie-broken on cell id,
     * keep-lowest-id pruning, cosine rounded before the threshold), so the
     * full annotation is oracle-able. Returns every input vector:
-    * (idCol, cell, is_kept: 0/1 bigint). */
+    * (vec_id, cell, is_kept: 0/1 bigint). */
   def semanticDedup(vectors: DataFrame, centroids: DataFrame,
-      threshold: Double, maxCluster: Int = 512,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
+      threshold: Double, maxCluster: Int = 512): DataFrame = {
     GraftFunctions.register(vectors.sparkSession)
     // staged once: the assignment pass (a full corpus scan against the
     // codebook) feeds BOTH sides of the pair self-join and the final
     // annotation join — without the checkpoint Catalyst recomputes the
     // whole subtree three times (three corpus scans at 100 TB)
-    val assigned = assignCells(vectors, centroids, idCol, embCol)
+    val assigned = assignCells(vectors, centroids)
       .withColumn("__cn", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("cell")))
       .staged
     val prunable = assigned.filter(col("__cn") <= maxCluster)
     // equi-join on cell: shuffles by cluster, pairs never leave a cell
-    val l = prunable.select(col("cell"), col(idCol).as("id_a"),
-      col(embCol).as("__e_a"))
-    val r = prunable.select(col("cell"), col(idCol).as("id_b"),
-      col(embCol).as("__e_b"))
+    val l = prunable.select(col("cell"), col(IdCol).as("id_a"),
+      col(EmbCol).as("__e_a"))
+    val r = prunable.select(col("cell"), col(IdCol).as("id_b"),
+      col(EmbCol).as("__e_b"))
     val dropped = l.join(r, Seq("cell"))
       .filter(col("id_a") < col("id_b"))
       .filter(Det.roundN(GraftFunctions.cosine_sim(col("__e_a"), col("__e_b")), 6)
         >= threshold)
       .select(col("id_b").as("__dup_id")).distinct()
     assigned
-      .join(dropped, assigned(idCol) === dropped("__dup_id"), "left")
-      .select(col(idCol), col("cell"),
+      .join(dropped, assigned(IdCol) === dropped("__dup_id"), "left")
+      .select(col(IdCol), col("cell"),
         when(col("__dup_id").isNull, 1L).otherwise(0L).as("is_kept"))
   }
 
@@ -443,6 +436,11 @@ object Similarity {
     "8" + (1 to 14).map(j =>
       s" + (CASE WHEN ($nExpr) >= ${2048L * (1L << j)} THEN 1 ELSE 0 END)")
       .mkString
+
+  /** Sign-LSH geometry: 4 bands × 22 bits (88 of 112 md5 bits), 256 cap. */
+  val LshBands = 4
+  val LshBitsPerBand = 22
+  val LshMaxBucket = 256
 
   /** Near-duplicate vector pairs: banded sign-LSH candidates + exact
     * cosine ≥ threshold. Returns (id_a, id_b, cosine).
@@ -472,8 +470,8 @@ object Similarity {
     * is a degenerate-data safety valve (all-equal vectors), not the
     * operator's geometry. */
   def embeddingNearDups(vectors: DataFrame, threshold: Double,
-      bands: Int = 4, maxBitsPerBand: Int = 22, maxBucket: Int = 256,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
+      bands: Int = LshBands, maxBitsPerBand: Int = LshBitsPerBand,
+      maxBucket: Int = LshMaxBucket): DataFrame = {
     val nBits = bands * maxBitsPerBand
     require(nBits <= 112,
       s"bands*maxBitsPerBand must fit the two 56-bit dim hash spans: $nBits")
@@ -484,7 +482,7 @@ object Similarity {
     // ContextCleaner when the result goes out of scope (no cache leak into
     // library callers).
     val dims = Stage.spread(
-        vectors.select(col(idCol).as("id"), col(embCol).as("__emb")),
+        vectors.select(col(IdCol).as("id"), col(EmbCol).as("__emb")),
         col("id"))
       .select(col("id"), posexplode(col("__emb")).as(Seq("dim", "x")))
       .select(col("id"), col("dim"), col("x").cast("double").as("x"))
@@ -579,49 +577,48 @@ object Similarity {
     * the final scores — is engine-reproducible; the DuckDB oracle replays
     * the identical k steps as unrolled CTEs.
     *
-    * Returns (idCol, rank 1..k, mmr) in selection order. */
+    * Returns (vec_id, rank 1..k, mmr) in selection order. */
   def mmrDiverseTopK(vectors: DataFrame, query: DataFrame, k: Int,
-      poolSize: Int, lambda: Double = 0.7, idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
+      poolSize: Int, lambda: Double = 0.7): DataFrame = {
     require(k >= 1 && k <= poolSize, s"k=$k poolSize=$poolSize")
     GraftFunctions.register(vectors.sparkSession)
-    val pool = cosineTopK(vectors, query, poolSize, idCol, embCol, "rel")
-      .select(col(idCol), col("rel"), col(embCol))
+    val pool = cosineTopK(vectors, query, poolSize, "rel")
+      .select(col(IdCol), col("rel"), col(EmbCol))
       .staged
     // poolSize² pairwise cosines via a constant-key hash join (both sides
     // bounded); NOT a BNLJ — PlanShapeSpec's discipline
-    val a = pool.select(col(idCol).as("__ia"), col(embCol).as("__ea"),
+    val a = pool.select(col(IdCol).as("__ia"), col(EmbCol).as("__ea"),
       lit(1).as("__k"))
-    val b = pool.select(col(idCol).as("__ib"), col(embCol).as("__eb"),
+    val b = pool.select(col(IdCol).as("__ib"), col(EmbCol).as("__eb"),
       lit(1).as("__k"))
     val pairSims = a.join(b, Seq("__k")).filter(col("__ia") =!= col("__ib"))
       .select(col("__ia"), col("__ib"),
         Det.roundN(GraftFunctions.cosine_sim(col("__ea"), col("__eb")), 6)
           .as("sim"))
       .staged
-    val poolSlim = pool.select(col(idCol), col("rel"))
+    val poolSlim = pool.select(col(IdCol), col("rel"))
     var selected = poolSlim
-      .orderBy(desc("rel"), col(idCol)).limit(1)
-      .select(col(idCol), lit(1).as("rank"),
+      .orderBy(desc("rel"), col(IdCol)).limit(1)
+      .select(col(IdCol), lit(1).as("rank"),
         (lit(lambda) * col("rel")).as("mmr"))
     for (r <- 2 to k) {
-      val selIds = selected.select(col(idCol))
+      val selIds = selected.select(col(IdCol))
       val maxSim = pairSims
-        .join(selIds.withColumnRenamed(idCol, "__ib"), Seq("__ib"))
+        .join(selIds.withColumnRenamed(IdCol, "__ib"), Seq("__ib"))
         .groupBy(col("__ia")).agg(max(col("sim")).as("__ms"))
       val pick = poolSlim
-        .join(selIds, Seq(idCol), "left_anti")
-        .join(maxSim.withColumnRenamed("__ia", idCol), Seq(idCol), "left")
+        .join(selIds, Seq(IdCol), "left_anti")
+        .join(maxSim.withColumnRenamed("__ia", IdCol), Seq(IdCol), "left")
         .withColumn("mmr", lit(lambda) * col("rel") -
           lit(1.0 - lambda) * coalesce(col("__ms"), lit(0.0)))
-        .orderBy(desc("mmr"), col(idCol))
+        .orderBy(desc("mmr"), col(IdCol))
         .limit(1)
-        .select(col(idCol), lit(r).as("rank"), col("mmr"))
+        .select(col(IdCol), lit(r).as("rank"), col("mmr"))
       // a real cut even under stage.mode=none: `selected` feeds the next
       // round twice, so an uncut plan doubles every round
       selected = selected.union(pick).stagedAlways
     }
-    selected.select(col(idCol), col("rank"), Det.roundN(col("mmr"), 6).as("mmr"))
+    selected.select(col(IdCol), col("rank"), Det.roundN(col("mmr"), 6).as("mmr"))
       .orderBy(col("rank"))
   }
 
@@ -646,17 +643,16 @@ object Similarity {
     * decimal-summed — fully oracle-replayable.
     *
     * Returns (cell, n_members, mean_silhouette) by cell. */
-  def silhouetteByCell(vectors: DataFrame, centroids: DataFrame,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
+  def silhouetteByCell(vectors: DataFrame, centroids: DataFrame): DataFrame = {
     GraftFunctions.register(vectors.sparkSession)
     val scored = vectors
       .crossJoin(broadcast(centroids))
       .withColumn("__d",
-        Det.roundN(lit(1.0) - GraftFunctions.cosine_sim(col(embCol), col("c_emb")), 6))
-    val w = Window.partitionBy(col(idCol)).orderBy(col("__d"), col("cell"))
+        Det.roundN(lit(1.0) - GraftFunctions.cosine_sim(col(EmbCol), col("c_emb")), 6))
+    val w = Window.partitionBy(col(IdCol)).orderBy(col("__d"), col("cell"))
     val perVec = scored
       .withColumn("__rn", row_number().over(w))
-      .groupBy(col(idCol))
+      .groupBy(col(IdCol))
       .agg(
         min(when(col("__rn") === 1, col("__d"))).as("a"),
         min(when(col("__rn") === 1, col("cell"))).as("cell"),

@@ -84,6 +84,8 @@ object TimeSeries {
         col("__best.n").as("n"), col("__best.c").as("corr_r"))
   }
 
+  val InterpScale = 4
+
   /** Calendar gap-fill + linear interpolation over keyed daily series —
     * the resampling step every downstream trend/correlation consumer
     * assumes has already happened (W2/W4-style rolling math silently
@@ -107,7 +109,7 @@ object TimeSeries {
     * two O(1)-state running windows instead of a per-row backward scan,
     * and expressible identically in ANSI SQL for the oracle. */
   def gapFillInterpolate(obs: DataFrame, seriesCol: String, dateCol: String,
-      valCol: String, scale: Int = 4): DataFrame = {
+      valCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val mm = obs.agg(min(col(dateCol)).as("__d0"), max(col(dateCol)).as("__d1"))
     val cal = mm.select(
@@ -138,7 +140,7 @@ object TimeSeries {
               (datediff(col(dateCol), col("__pd")).cast("double") /
                 datediff(col("__nd"), col("__pd")).cast("double")))
           .when(col("__pv").isNotNull, col("__pv"))
-          .otherwise(col("__nv")), scale).as("filled"),
+          .otherwise(col("__nv")), InterpScale).as("filled"),
       when(col("__v").isNotNull, lit("obs"))
         .when(col("__pv").isNotNull && col("__nv").isNotNull, lit("interp"))
         .when(col("__pv").isNotNull, lit("ffill"))

@@ -41,12 +41,14 @@ import graft.engine.Stage.syntax._
   */
 object WeightedStats {
 
+  val MedianScale = 2
+
   /** (grpCol, weighted_median, total_weight): smallest `valCol` whose
-    * cumulative `weightCol` (scaled-long at `scale`) reaches q=0.5 of
+    * cumulative `weightCol` (scaled-long at [[MedianScale]]) reaches q=0.5 of
     * the group total. */
   def weightedMedian(df: DataFrame, grpCol: String, valCol: String,
-      weightCol: String, scale: Int = 2): DataFrame = {
-    val p = math.pow(10, scale)
+      weightCol: String): DataFrame = {
+    val p = math.pow(10, MedianScale)
     // scaled-long rows, DECIMAL(38,0) sums (Det.dsum discipline): the
     // per-row quantized weight is a long, every aggregate over it widens
     // to decimal so group totals can't wrap at 2^63.

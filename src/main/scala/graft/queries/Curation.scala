@@ -149,7 +149,7 @@ object Curation {
       Contamination.ngramOverlap(
           docs.filter(col("doc_id") % 20 =!= 0),
           docs.filter(col("doc_id") % 20 === 0),
-          "doc_id", "text", shingleSize = 3, threshold = 0.5)
+          "doc_id", "text")
         .orderBy("doc_id", "bench_id")
     },
 
@@ -243,7 +243,7 @@ object Curation {
       val index = Dedup.minhashIndex(docs.filter(col("doc_id") % 10 =!= 7),
         "doc_id", "text")
       Dedup.minhashProbe(docs.filter(col("doc_id") % 10 === 7), index,
-          "doc_id", "text", threshold = 0.8)
+          "doc_id", "text")
         .orderBy("id_a", "id_b")
     },
 
@@ -430,7 +430,7 @@ object Curation {
       val docs = Tables.documents(s, d)
       // staged once (source-count-sized): feeds the max rollup + rates
       val w = graft.operators.Mixing
-        .temperatureWeights(docs, "source", "n_chars", alpha = 0.5)
+        .temperatureWeights(docs, "source", "n_chars")
         .filter(col("share") > 0)
         .withColumn("__rel", col("mix_weight") / col("share"))
         .staged
@@ -465,8 +465,7 @@ object Curation {
          |  ${roundN("share", 6)} AS share,
          |  ${roundN("raw / rsum", 6)} AS mix_weight
          |FROM sc, rs ORDER BY source""".stripMargin) { (s, d) =>
-      Mixing.temperatureWeights(Tables.documents(s, d), "source", "n_chars",
-          alpha = 0.5)
+      Mixing.temperatureWeights(Tables.documents(s, d), "source", "n_chars")
         .orderBy("source")
     },
 
@@ -530,7 +529,7 @@ object Curation {
         .filter(col("quality_score") >= col("lang_p25"))
         .select("doc_id")
       val contaminated = Contamination.ngramOverlap(corpus, bench,
-          "doc_id", "text", shingleSize = 3, threshold = 0.5)
+          "doc_id", "text")
         .select("doc_id").distinct()
       val clean = gated.join(contaminated, Seq("doc_id"), "left_anti")
       Chunking.byTokens(docs.join(clean, Seq("doc_id")),
@@ -767,7 +766,7 @@ object Curation {
       val docs = Tables.documents(s, d).withColumn("is_target",
         col("source").isin("src0", "src1", "src2", "src3", "src4"))
       graft.operators.Importance.weights(docs, "doc_id", "text",
-          "is_target", vocabSize = 64)
+          "is_target")
         .orderBy("doc_id")
     },
 

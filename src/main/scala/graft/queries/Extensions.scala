@@ -119,8 +119,8 @@ object Extensions {
        |clusters AS (SELECT id, MIN(label) AS cluster_id FROM walk GROUP BY id)""".stripMargin
 
   /** Shared MinHash-LSH oracle chain mirroring
-    * [[graft.operators.Dedup.minhashNearDups]] (numHashes=64, bands=16,
-    * shingleSize=3, maxBucket=64) bit-for-bit: distinct 3-gram shingles
+    * [[graft.operators.Dedup.minhashNearDups]] (the Dedup geometry
+    * constants) bit-for-bit: distinct 3-gram shingles
     * (whole-text fallback), two 56-bit md5 spans per shingle, affine
     * component family h1 + i·h2, 16 bands of 4 comma-joined components,
     * bucket cap on band-key population, exact-Jaccard verify from
@@ -128,7 +128,8 @@ object Extensions {
     * UNTHRESHOLDED; callers apply their own threshold/scope filters.
     * Used by both the full-corpus and the incremental-probe oracles so
     * the two cannot drift apart. */
-  private[queries] val minhashPairsCte: String =
+  private[queries] val minhashPairsCte: String = {
+    val bandRows = Dedup.NumHashes / Dedup.Bands
     raw"""WITH ${Dedup.shinglesSql("doc_id AS id", "id")},
        |sizes AS (SELECT id, COUNT(*) AS n FROM s GROUP BY 1),
        |shh AS (
@@ -137,16 +138,16 @@ object Extensions {
        |  FROM s),
        |comp AS (
        |  SELECT id, i, MIN((h1 + i * h2) % ${Dedup.MinhashPrime}) AS c
-       |  FROM shh, (SELECT unnest(generate_series(0, 63)) AS i) ii
+       |  FROM shh, (SELECT unnest(generate_series(0, ${Dedup.NumHashes - 1})) AS i) ii
        |  GROUP BY id, i),
        |keyed AS (
-       |  SELECT id, i // 4 AS band_id,
+       |  SELECT id, i // $bandRows AS band_id,
        |    string_agg(CAST(c AS VARCHAR), ',' ORDER BY i) AS band_hash
-       |  FROM comp GROUP BY id, i // 4),
+       |  FROM comp GROUP BY id, i // $bandRows),
        |bsized AS (
        |  SELECT *, COUNT(*) OVER (PARTITION BY band_id, band_hash) AS bn
        |  FROM keyed),
-       |okb AS (SELECT id, band_id, band_hash FROM bsized WHERE bn <= 64),
+       |okb AS (SELECT id, band_id, band_hash FROM bsized WHERE bn <= ${Dedup.MaxBucket}),
        |cands AS (
        |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
        |  FROM okb a JOIN okb b USING (band_id, band_hash) WHERE a.id < b.id),
@@ -160,6 +161,7 @@ object Extensions {
        |  SELECT id_a, id_b,
        |    ${Det.roundNSql("inter * 1.0 / (sa.n + sb.n - inter)", 4)} AS jaccard
        |  FROM minter JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b)""".stripMargin
+  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -757,7 +759,7 @@ object Extensions {
          |  drift_stat, drift_stat > 4.0 AS is_drifted
          |FROM st ORDER BY source""".stripMargin) { (s, d) =>
       graft.operators.Drift.meanShift(Tables.documents(s, d),
-          "source", "n_chars", z = 2.0)
+          "source", "n_chars")
         .orderBy("source")
     },
 
@@ -975,10 +977,9 @@ object Extensions {
     QueryDef.sql(
       "dedup_minhash_lsh",
       s"""$minhashPairsCte
-         |SELECT id_a, id_b, jaccard FROM mh_pairs WHERE jaccard >= 0.8
+         |SELECT id_a, id_b, jaccard FROM mh_pairs WHERE jaccard >= ${Dedup.JaccardThreshold}
          |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
-      Dedup.minhashNearDups(Tables.documents(s, d), "doc_id", "text",
-          threshold = 0.8)
+      Dedup.minhashNearDups(Tables.documents(s, d), "doc_id", "text")
         .orderBy("id_a", "id_b")
     },
 
@@ -998,10 +999,10 @@ object Extensions {
          |truth AS (
          |  SELECT id_a, id_b
          |  FROM gt JOIN sizes za ON za.id = id_a JOIN sizes zb ON zb.id = id_b
-         |  WHERE ${Det.roundNSql("inter * 1.0 / (za.n + zb.n - inter)", 4)} >= 0.8),
+         |  WHERE ${Det.roundNSql("inter * 1.0 / (za.n + zb.n - inter)", 4)} >= ${Dedup.JaccardThreshold}),
          |m AS (
          |  SELECT COUNT(*) AS n_candidates,
-         |    COUNT(CASE WHEN jaccard >= 0.8 THEN 1 END) AS tp
+         |    COUNT(CASE WHEN jaccard >= ${Dedup.JaccardThreshold} THEN 1 END) AS tp
          |  FROM mh_pairs),
          |g AS (SELECT COUNT(*) AS n_truth FROM truth),
          |pr AS (
@@ -1012,7 +1013,7 @@ object Extensions {
          |SELECT n_candidates, n_truth, tp, prec, rec,
          |  ${Det.roundNSql("CASE WHEN prec + rec > 0 THEN 2.0 * prec * rec / (prec + rec) ELSE 0.0 END", 6)} AS f1
          |FROM pr""".stripMargin) { (s, d) =>
-      Dedup.lshEval(Tables.documents(s, d), "doc_id", "text", threshold = 0.8)
+      Dedup.lshEval(Tables.documents(s, d), "doc_id", "text")
     },
 
     // Bloom-filter membership pre-check — the ingest-time shape that
@@ -1103,8 +1104,7 @@ object Extensions {
          |FROM ok a JOIN ok b USING (band_id, band_hash)
          |WHERE a.id < b.id AND bit_count(xor(a.simhash, b.simhash)) <= 6
          |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
-      Dedup.simhashNearDups(Tables.documents(s, d), "doc_id", "text",
-          maxHamming = 6)
+      Dedup.simhashNearDups(Tables.documents(s, d), "doc_id", "text")
         .orderBy("id_a", "id_b")
     },
 
@@ -1129,8 +1129,7 @@ object Extensions {
          |  FROM inter JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b)
          |SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.8
          |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
-      Dedup.ngramJaccardDups(Tables.documents(s, d), "doc_id", "text",
-          threshold = 0.8)
+      Dedup.ngramJaccardDups(Tables.documents(s, d), "doc_id", "text")
         .orderBy("id_a", "id_b")
     },
 
@@ -1158,8 +1157,7 @@ object Extensions {
          |SELECT id_sub, id_sup, containment FROM dirs
          |WHERE containment >= 0.9
          |ORDER BY id_sub, id_sup""".stripMargin) { (s, d) =>
-      Dedup.containmentDups(Tables.documents(s, d), "doc_id", "text",
-          threshold = 0.9)
+      Dedup.containmentDups(Tables.documents(s, d), "doc_id", "text")
         .orderBy("id_sub", "id_sup")
     },
 
@@ -1182,8 +1180,7 @@ object Extensions {
          |  FROM inter JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b)
          |SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.8
          |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
-      Dedup.prefixJaccardJoin(Tables.documents(s, d), "doc_id", "text",
-          threshold = 0.8)
+      Dedup.prefixJaccardJoin(Tables.documents(s, d), "doc_id", "text")
         .orderBy("id_a", "id_b")
     },
 
@@ -1211,8 +1208,7 @@ object Extensions {
          |       ELSE 0.0 END AS dup_fraction
          |FROM documents d LEFT JOIN agg ON agg.doc_id = d.doc_id
          |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
-      Dedup.duplicateSpans(Tables.documents(s, d), "doc_id", "text",
-          window = 8)
+      Dedup.duplicateSpans(Tables.documents(s, d), "doc_id", "text")
         .orderBy("doc_id")
     },
 
@@ -1263,7 +1259,7 @@ object Extensions {
          |SELECT id, cluster_id, id = cluster_id AS is_canonical
          |FROM clusters ORDER BY cluster_id, id""".stripMargin) { (s, d) =>
       val pairs = Dedup.ngramJaccardDups(Tables.documents(s, d),
-        "doc_id", "text", threshold = 0.8)
+        "doc_id", "text")
       Dedup.connectedComponents(pairs)
         .withColumn("is_canonical", col("id") === col("cluster_id"))
         .orderBy("cluster_id", "id")
@@ -1288,7 +1284,7 @@ object Extensions {
          |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       val clusters = Dedup.connectedComponents(
-        Dedup.ngramJaccardDups(docs, "doc_id", "text", threshold = 0.8))
+        Dedup.ngramJaccardDups(docs, "doc_id", "text"))
       Dedup.duplicationWeights(clusters, docs, idCol = "doc_id")
         .orderBy("doc_id")
     },
@@ -1316,7 +1312,7 @@ object Extensions {
          |ORDER BY cluster_id, id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       val clusters = Dedup.connectedComponents(
-        Dedup.ngramJaccardDups(docs, "doc_id", "text", threshold = 0.8))
+        Dedup.ngramJaccardDups(docs, "doc_id", "text"))
       val priorities = docs.select(col("source")).distinct()
         .withColumn("priority",
           regexp_extract(col("source"), "src(\\d+)", 1).cast("long"))
@@ -1348,7 +1344,7 @@ object Extensions {
          |GROUP BY 1 ORDER BY split_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       val clusters = Dedup.connectedComponents(
-          Dedup.ngramJaccardDups(docs, "doc_id", "text", threshold = 0.8))
+          Dedup.ngramJaccardDups(docs, "doc_id", "text"))
         .staged
       Dedup.leakageSafeSplit(clusters, docs, "doc_id", Seq(0.8, 0.2))
         .zipWithIndex.map { case (df, i) =>
@@ -1375,14 +1371,11 @@ object Extensions {
     // deciding the prefix width, band buckets + cap, dim-aligned dot/norm
     // cosine verify.
     {
-    // ONE definition of the sign-LSH geometry serves engine and oracle
-    // (ADVICE r14): these constants are interpolated into the oracle SQL
-    // below AND passed to the embeddingNearDups call, so changing bands /
-    // band width / bucket cap here cannot silently diverge the two (the
-    // old text hardcoded LEAST(22, …), 88 projection bits and `p // 22`,
-    // aligned with the engine only because the call used the defaults).
-    val lshBands = 4; val lshBitsPerBand = 22; val lshMaxBucket = 256
-    val lshNBits = lshBands * lshBitsPerBand
+    // ONE definition of the sign-LSH geometry serves engine and oracle:
+    // Similarity's constants are interpolated into the oracle SQL below
+    // and are embeddingNearDups' defaults, so the two cannot diverge.
+    import Similarity.{LshBands, LshBitsPerBand, LshMaxBucket}
+    val lshNBits = LshBands * LshBitsPerBand
     QueryDef.sql(
       "dedup_embedding_cosine",
       s"""WITH dims AS (
@@ -1394,7 +1387,7 @@ object Extensions {
          |    ${Det.h56Sql("CAST(dim AS VARCHAR)", 17)} AS dhash2
          |  FROM dims),
          |nr AS (
-         |  SELECT LEAST($lshBitsPerBand, ${Similarity.lshBandBitsSql(
+         |  SELECT LEAST($LshBitsPerBand, ${Similarity.lshBandBitsSql(
               "SELECT COUNT(*) FROM embeddings")}) AS r),
          |proj AS (
          |  SELECT id, p,
@@ -1408,15 +1401,15 @@ object Extensions {
          |       (SELECT unnest(generate_series(0, ${lshNBits - 1})) AS p) pp
          |  GROUP BY id, p),
          |sig AS (
-         |  SELECT id, p // $lshBitsPerBand AS band_id,
+         |  SELECT id, p // $LshBitsPerBand AS band_id,
          |    substring(
          |      string_agg(CASE WHEN s >= 0 THEN '1' ELSE '0' END, '' ORDER BY p),
          |      1, (SELECT r FROM nr)) AS band_hash
-         |  FROM proj GROUP BY id, p // $lshBitsPerBand),
+         |  FROM proj GROUP BY id, p // $LshBitsPerBand),
          |bsized AS (
          |  SELECT *, COUNT(*) OVER (PARTITION BY band_id, band_hash) AS bn
          |  FROM sig),
-         |okb AS (SELECT id, band_id, band_hash FROM bsized WHERE bn <= $lshMaxBucket),
+         |okb AS (SELECT id, band_id, band_hash FROM bsized WHERE bn <= $LshMaxBucket),
          |cands AS (
          |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
          |  FROM okb a JOIN okb b USING (band_id, band_hash) WHERE a.id < b.id),
@@ -1433,9 +1426,7 @@ object Extensions {
          |  FROM dots JOIN norms na ON na.id = id_a JOIN norms nb ON nb.id = id_b)
          |SELECT id_a, id_b, cosine FROM cs WHERE cosine >= -1.0
          |ORDER BY cosine DESC, id_a, id_b LIMIT 20""".stripMargin) { (s, d) =>
-      Similarity.embeddingNearDups(Tables.embeddings(s, d),
-          threshold = -1.0, bands = lshBands,
-          maxBitsPerBand = lshBitsPerBand, maxBucket = lshMaxBucket)
+      Similarity.embeddingNearDups(Tables.embeddings(s, d), threshold = -1.0)
         .orderBy(desc("cosine"), col("id_a"), col("id_b"))
         .limit(20)
     }
@@ -1630,7 +1621,7 @@ object Extensions {
              |  SELECT cell, dim,
              |    ${roundN(
                   "CAST(SUM(CAST(x AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*)",
-                  6)} AS mv,
+                  Similarity.KmeansScale)} AS mv,
              |    COUNT(*) AS n
              |  FROM (
              |    SELECT cell, generate_subscripts(emb, 1) - 1 AS dim,
@@ -1639,7 +1630,7 @@ object Extensions {
              |  GROUP BY 1, 2),
              |cent$r AS (
              |  SELECT p.cell,
-             |    list(CAST(COALESCE(m.mv, ${roundN("p.pv", 6)}) AS REAL)
+             |    list(CAST(COALESCE(m.mv, ${roundN("p.pv", Similarity.KmeansScale)}) AS REAL)
              |      ORDER BY p.dim) AS ce,
              |    COALESCE(MAX(m.n), 0) AS n
              |  FROM (
@@ -1663,7 +1654,7 @@ object Extensions {
       }) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val init = Fixtures.codebook(emb)
-      Similarity.kmeansIterate(emb, init, rounds = 3, scale = 6)
+      Similarity.kmeansIterate(emb, init, rounds = 3)
         .select(col("cell"), col("n_members"),
           posexplode(col("c_emb")).as(Seq("dim", "c_val")))
         .select(col("cell"), col("dim").cast("long").as("dim"),

@@ -138,6 +138,58 @@ object ScaleOps {
       .select("o_custkey", "rec_part", "score", "rk")
   }
 
+  /** The oracle half of [[itemRecsFull]] both item-recs queries share:
+    * each item's top-20 neighborhood `simd` over the symmetric `simd0`,
+    * then scoring over `ui`, unseen filtering and the top-3 per user. */
+  private val itemRecsSimdSql =
+    """simd AS (
+      |  SELECT ia, ib, s FROM (
+      |    SELECT ia, ib, s, row_number() OVER (
+      |      PARTITION BY ia ORDER BY s DESC, ib) AS nrk
+      |    FROM simd0) WHERE nrk <= 20),""".stripMargin
+  private val itemRecsTailSql =
+    s"""sc AS (
+       |  SELECT u.o_custkey, sd.ib AS rec_part,
+       |    ${Det.dsumSql("sd.s", 6)} AS score
+       |  FROM ui u JOIN simd sd ON sd.ia = u.l_partkey
+       |  GROUP BY 1, 2),
+       |unseen AS (
+       |  SELECT sc.* FROM sc
+       |  LEFT JOIN ui seen ON seen.o_custkey = sc.o_custkey
+       |    AND seen.l_partkey = sc.rec_part
+       |  WHERE seen.l_partkey IS NULL),
+       |rk AS (
+       |  SELECT o_custkey, rec_part, score, row_number() OVER (
+       |    PARTITION BY o_custkey ORDER BY score DESC, rec_part) AS rk
+       |  FROM unseen)
+       |SELECT o_custkey, rec_part, score, rk FROM rk WHERE rk <= 3
+       |ORDER BY o_custkey, rk""".stripMargin
+
+  /** The KMV oracle a_kmv_distinct and a_kmv_native share: both engine
+    * paths must produce the same rows. */
+  private val kmvOracleSql =
+    s"""WITH h AS (
+       |  SELECT DISTINCT o_orderpriority AS grp,
+       |    ${Det.h56Sql("CAST(o_custkey AS VARCHAR)")} AS h
+       |  FROM orders),
+       |r AS (
+       |  SELECT grp, h, row_number() OVER (PARTITION BY grp ORDER BY h) AS rn
+       |  FROM h),
+       |sk AS (SELECT grp, h FROM r WHERE rn <= 64),
+       |est AS (
+       |  SELECT grp, ${Det.roundNSql(
+            "CASE WHEN COUNT(*) < 64 THEN CAST(COUNT(*) AS DOUBLE) " +
+              "ELSE 63e0 * 72057594037927936e0 / MAX(h) END", 2)} AS est_distinct
+       |  FROM sk GROUP BY grp),
+       |ex AS (
+       |  SELECT o_orderpriority AS grp,
+       |    COUNT(DISTINCT o_custkey) AS exact_distinct
+       |  FROM orders GROUP BY 1)
+       |SELECT grp AS o_orderpriority, est_distinct, exact_distinct,
+       |  ${Det.roundNSql("abs(est_distinct - exact_distinct) / exact_distinct", 4)} AS rel_err
+       |FROM est JOIN ex USING (grp)
+       |ORDER BY o_orderpriority""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     // Salted skew join: same result as the plain equi-join (the oracle IS
@@ -451,7 +503,7 @@ object ScaleOps {
            |FROM est ORDER BY exact_count DESC, o_custkey""".stripMargin
       }) { (s, d) =>
       val orders = Tables.orders(s, d)
-      val sketch = CountMin.build(orders, "o_custkey", width = 1024, depth = 4)
+      val sketch = CountMin.build(orders, "o_custkey")
       // staged (10 rows): read twice — estimate probes + the join back —
       // and each read would otherwise recompute the full corpus count-agg
       val top = orders.groupBy("o_custkey")
@@ -459,7 +511,7 @@ object ScaleOps {
         .orderBy(desc("exact_count"), col("o_custkey"))
         .limit(10)
         .staged
-      CountMin.estimate(top, sketch, "o_custkey", width = 1024, depth = 4)
+      CountMin.estimate(top, sketch, "o_custkey")
         .join(top.withColumn("o_custkey", col("o_custkey").cast("string")),
           Seq("o_custkey"))
         .select(col("o_custkey").cast("long").as("o_custkey"),
@@ -560,27 +612,7 @@ object ScaleOps {
     // a_kmv_native below — bit-identical by construction.)
     QueryDef.sql(
       "a_kmv_distinct",
-      s"""WITH h AS (
-         |  SELECT DISTINCT o_orderpriority AS grp,
-         |    ${Det.h56Sql("CAST(o_custkey AS VARCHAR)")} AS h
-         |  FROM orders),
-         |r AS (
-         |  SELECT grp, h, row_number() OVER (PARTITION BY grp ORDER BY h) AS rn
-         |  FROM h),
-         |sk AS (SELECT grp, h FROM r WHERE rn <= 64),
-         |est AS (
-         |  SELECT grp, ${Det.roundNSql(
-              "CASE WHEN COUNT(*) < 64 THEN CAST(COUNT(*) AS DOUBLE) " +
-                "ELSE 63e0 * 72057594037927936e0 / MAX(h) END", 2)} AS est_distinct
-         |  FROM sk GROUP BY grp),
-         |ex AS (
-         |  SELECT o_orderpriority AS grp,
-         |    COUNT(DISTINCT o_custkey) AS exact_distinct
-         |  FROM orders GROUP BY 1)
-         |SELECT grp AS o_orderpriority, est_distinct, exact_distinct,
-         |  ${Det.roundNSql("abs(est_distinct - exact_distinct) / exact_distinct", 4)} AS rel_err
-         |FROM est JOIN ex USING (grp)
-         |ORDER BY o_orderpriority""".stripMargin) { (s, d) =>
+      kmvOracleSql) { (s, d) =>
       val orders = Tables.orders(s, d)
       val sk = Kmv.sketch(orders, "o_orderpriority", "o_custkey", 64)
       val exact = orders.groupBy("o_orderpriority")
@@ -599,31 +631,11 @@ object ScaleOps {
     // per-group buffer — so the only exchange carries ≤ k longs per
     // (group, partition) instead of the key domain. Min-k is
     // associative/commutative/idempotent, so the result is a pure
-    // function of the value set: the oracle is IDENTICAL to
-    // a_kmv_distinct's, proving native ≡ relational bit-for-bit.
+    // function of the value set: the oracle is a_kmv_distinct's
+    // (kmvOracleSql), proving native ≡ relational bit-for-bit.
     QueryDef.sql(
       "a_kmv_native",
-      s"""WITH h AS (
-         |  SELECT DISTINCT o_orderpriority AS grp,
-         |    ${Det.h56Sql("CAST(o_custkey AS VARCHAR)")} AS h
-         |  FROM orders),
-         |r AS (
-         |  SELECT grp, h, row_number() OVER (PARTITION BY grp ORDER BY h) AS rn
-         |  FROM h),
-         |sk AS (SELECT grp, h FROM r WHERE rn <= 64),
-         |est AS (
-         |  SELECT grp, ${Det.roundNSql(
-            "CASE WHEN COUNT(*) < 64 THEN CAST(COUNT(*) AS DOUBLE) " +
-              "ELSE 63e0 * 72057594037927936e0 / MAX(h) END", 2)} AS est_distinct
-         |  FROM sk GROUP BY grp),
-         |ex AS (
-         |  SELECT o_orderpriority AS grp,
-         |    COUNT(DISTINCT o_custkey) AS exact_distinct
-         |  FROM orders GROUP BY 1)
-         |SELECT grp AS o_orderpriority, est_distinct, exact_distinct,
-         |  ${Det.roundNSql("abs(est_distinct - exact_distinct) / exact_distinct", 4)} AS rel_err
-         |FROM est JOIN ex USING (grp)
-         |ORDER BY o_orderpriority""".stripMargin) { (s, d) =>
+      kmvOracleSql) { (s, d) =>
       graft.expressions.GraftFunctions.register(s)
       val orders = Tables.orders(s, d)
       val sk = orders.groupBy("o_orderpriority")
@@ -1344,7 +1356,7 @@ object ScaleOps {
       val fk = zed.select(col("file_id"),
         col("user_id").cast("string").as("ukey"))
       val blooms = graft.operators.Bloom
-        .buildPerGroup(fk, "file_id", "ukey", mBits = 2048L, k = 5)
+        .buildPerGroup(fk, "file_id", "ukey")
         .staged
       val probes = Seq(7L, 42L, 77L).toDF("uid")
       val ppos = probes.select(col("uid"),
@@ -1635,30 +1647,11 @@ object ScaleOps {
          |simd0 AS (
          |  SELECT ia, ib, s FROM sim
          |  UNION ALL SELECT ib AS ia, ia AS ib, s FROM sim),
-         |simd AS (
-         |  SELECT ia, ib, s FROM (
-         |    SELECT ia, ib, s, row_number() OVER (
-         |      PARTITION BY ia ORDER BY s DESC, ib) AS nrk
-         |    FROM simd0) WHERE nrk <= 20),
+         |$itemRecsSimdSql
          |ui AS (
          |  SELECT DISTINCT o.o_custkey, ob.l_partkey
          |  FROM orders o JOIN ob ON ob.l_orderkey = o.o_orderkey),
-         |sc AS (
-         |  SELECT u.o_custkey, sd.ib AS rec_part,
-         |    ${Det.dsumSql("sd.s", 6)} AS score
-         |  FROM ui u JOIN simd sd ON sd.ia = u.l_partkey
-         |  GROUP BY 1, 2),
-         |unseen AS (
-         |  SELECT sc.* FROM sc
-         |  LEFT JOIN ui seen ON seen.o_custkey = sc.o_custkey
-         |    AND seen.l_partkey = sc.rec_part
-         |  WHERE seen.l_partkey IS NULL),
-         |rk AS (
-         |  SELECT o_custkey, rec_part, score, row_number() OVER (
-         |    PARTITION BY o_custkey ORDER BY score DESC, rec_part) AS rk
-         |  FROM unseen)
-         |SELECT o_custkey, rec_part, score, rk FROM rk WHERE rk <= 3
-         |ORDER BY o_custkey, rk""".stripMargin) { (s, d) =>
+         |$itemRecsTailSql""".stripMargin) { (s, d) =>
       itemRecsFull(s, d).orderBy("o_custkey", "rk")
     },
 
@@ -1705,27 +1698,8 @@ object ScaleOps {
          |  SELECT ia, ib, ${Det.roundNSql("n / sqrt(fa.f * fb.f)", 6)} AS s
          |  FROM cop JOIN freq fa ON fa.l_partkey = ia
          |           JOIN freq fb ON fb.l_partkey = ib),
-         |simd AS (
-         |  SELECT ia, ib, s FROM (
-         |    SELECT ia, ib, s, row_number() OVER (
-         |      PARTITION BY ia ORDER BY s DESC, ib) AS nrk
-         |    FROM simd0) WHERE nrk <= 20),
-         |sc AS (
-         |  SELECT u.o_custkey, sd.ib AS rec_part,
-         |    ${Det.dsumSql("sd.s", 6)} AS score
-         |  FROM ui u JOIN simd sd ON sd.ia = u.l_partkey
-         |  GROUP BY 1, 2),
-         |unseen AS (
-         |  SELECT sc.* FROM sc
-         |  LEFT JOIN ui seen ON seen.o_custkey = sc.o_custkey
-         |    AND seen.l_partkey = sc.rec_part
-         |  WHERE seen.l_partkey IS NULL),
-         |rk AS (
-         |  SELECT o_custkey, rec_part, score, row_number() OVER (
-         |    PARTITION BY o_custkey ORDER BY score DESC, rec_part) AS rk
-         |  FROM unseen)
-         |SELECT o_custkey, rec_part, score, rk FROM rk WHERE rk <= 3
-         |ORDER BY o_custkey, rk""".stripMargin) { (s, d) =>
+         |$itemRecsSimdSql
+         |$itemRecsTailSql""".stripMargin) { (s, d) =>
       itemRecsFull(s, d).filter(col("o_custkey") % 211 === 17)
         .orderBy("o_custkey", "rk")
     },

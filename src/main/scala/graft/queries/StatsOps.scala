@@ -523,7 +523,7 @@ object StatsOps {
          |hf AS (
          |  SELECT user_id, day,
          |    (row_number() OVER (ORDER BY hd, event_id) - 1) // 512 AS file_id
-         |  FROM hil0),
+         |  FROM ${Hilbert.SqlPrefix}0),
          |mf AS (
          |  SELECT user_id, day,
          |    (row_number() OVER (ORDER BY

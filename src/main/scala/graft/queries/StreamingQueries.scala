@@ -431,8 +431,7 @@ object StreamingQueries {
           col("event_type"), coalesce(col("value"), lit(0.0)).as("value"))
       val out = replay(s, Seq(Run(tenDayBatches(ev)))) { (stream, _, out) =>
         appendBatches(EventStreams.sessionize(s,
-            stream.as[EventStreams.Event], gapMs = 30 * 60 * 1000L,
-            watermark = "10 minutes").toDF(), "update", out)
+            stream.as[EventStreams.Event]).toDF(), "update", out)
       }
       val updates = s.read.parquet(out)
       val wLast = Window.partitionBy("user_id", "session_start")
@@ -533,8 +532,8 @@ object StreamingQueries {
         val purchases = stream.filter(col("event_type") === "purchase")
           .select(col("user_id").as("r_user"), col("ts").as("r_ts"))
         appendBatches(EventStreams.intervalJoin(clicks, purchases, "l_user",
-            "r_user", "l_ts", "r_ts", maxDelay = "6 hours",
-            watermark = "2 hours"), "append", out, tag = false)
+            "r_user", "l_ts", "r_ts", maxDelay = "6 hours"), "append", out,
+          tag = false)
       }
       s.read.parquet(out)
         .select(col("l_user").as("user_id"),

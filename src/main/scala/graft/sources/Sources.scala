@@ -1,9 +1,9 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Source operators (SURVEY §2.1): landed-file scans with the reference's
   * option quirks, filename routing, and the ingest step.
@@ -24,42 +24,35 @@ object Sources {
     * The landed file appears ATOMICALLY: bytes stream into a temp file in
     * the same directory, then one rename replaces the destination — a
     * concurrent reader (another Spark scan, the DuckDB oracle) sees the
-    * old complete file or the new complete file, never a truncated one. */
+    * old complete file or the new complete file, never a truncated one.
+    * A failed fetch, copy or move deletes the temp file and rethrows; after
+    * a successful move there is no temp file left to delete. */
   def land(url: String, landingDir: String, name: String): String = {
     Files.createDirectories(Paths.get(landingDir))
     val dest = Paths.get(landingDir, name)
     val tmp = Files.createTempFile(Paths.get(landingDir), s".$name.", ".tmp")
-    val in = java.net.URI.create(url).toURL.openStream()
-    try Files.copy(in, tmp, StandardCopyOption.REPLACE_EXISTING)
-    finally in.close()
-    try Files.move(tmp, dest, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-      Files.move(tmp, dest, StandardCopyOption.REPLACE_EXISTING)
-    }
+    try {
+      val in = java.net.URI.create(url).toURL.openStream()
+      try Files.copy(in, tmp, StandardCopyOption.REPLACE_EXISTING)
+      finally in.close()
+      try Files.move(tmp, dest, StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.ATOMIC_MOVE)
+      catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
+        Files.move(tmp, dest, StandardCopyOption.REPLACE_EXISTING)
+      }
+    } finally Files.deleteIfExists(tmp)
     dest.toString
   }
 
-  /** S3 JSON scan: multiLine (the reference lands pretty-printed arrays,
-    * ingest_bronze.py:71); scalar-or-list handled by Spark natively. */
-  def json(spark: SparkSession, path: String,
-      schema: Option[StructType] = None): DataFrame =
-    jsonAll(spark, Seq(path), schema)
+  /** S3 JSON scan, one distributed scan over all paths: multiLine (the
+    * reference lands pretty-printed arrays, ingest_bronze.py:71);
+    * scalar-or-list handled by Spark natively. */
+  def jsonAll(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.option("multiLine", "true").json(paths: _*)
 
-  /** Multi-file variant: one distributed scan over all paths. */
-  def jsonAll(spark: SparkSession, paths: Seq[String],
-      schema: Option[StructType] = None): DataFrame = {
-    val r = spark.read.option("multiLine", "true")
-    schema.fold(r)(s => r.schema(s)).json(paths: _*)
-  }
-
-  /** S2/S5 CSV scan with header + inference and latin-1 fallback
+  /** S2/S5 CSV scan over all paths with header + inference in the given
+    * encoding; [[csvLatin1Fallback]] picks the encoding
     * (load_bronze.py:329-333: UTF-8 then ISO-8859-1 retry). */
-  def csv(spark: SparkSession, path: String,
-      encoding: String = "UTF-8"): DataFrame =
-    csvAll(spark, Seq(path), encoding)
-
-  /** Multi-file variant: one distributed scan over all paths. */
   def csvAll(spark: SparkSession, paths: Seq[String],
       encoding: String = "UTF-8"): DataFrame =
     spark.read
@@ -79,12 +72,8 @@ object Sources {
     val mangled = spark.read.text(path)
       .filter(!is_valid_utf8(col("value")))
       .limit(1).count() > 0
-    csv(spark, path, if (mangled) "ISO-8859-1" else "UTF-8")
+    csvAll(spark, Seq(path), if (mangled) "ISO-8859-1" else "UTF-8")
   }
-
-  /** S4 parquet scan. */
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** ORC scan — the second columnar lake format (predicate pushdown and
     * column pruning work the same as parquet; some warehouses hand data
@@ -130,12 +119,5 @@ object Sources {
       else Some(key -> loader(matched)
         .withColumn("source_filename", input_file_name()))
     }.toMap
-  }
-
-  private implicit class IterAsScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext = it.hasNext
-      def next() = it.next()
-    }
   }
 }

@@ -51,15 +51,12 @@ object BloomIngest {
     * running). Output rows land under `outDir`: (idCol, content_hash,
     * maybe_present, batch_canonical, is_new). */
   def start(docs: DataFrame, idCol: String, textCol: String,
-      stateDir: String, outDir: String, mBits: Long = 65536L,
-      k: Int = 5): Unit =
-    EventStreams.drain(writer(docs, idCol, textCol, stateDir, outDir,
-      mBits, k))
+      stateDir: String, outDir: String): Unit =
+    EventStreams.drain(writer(docs, idCol, textCol, stateDir, outDir))
 
   /** The ingest loop as an unstarted stream writer (see [[start]]). */
   def writer(docs: DataFrame, idCol: String, textCol: String,
-      stateDir: String, outDir: String, mBits: Long = 65536L,
-      k: Int = 5): DataStreamWriter[Row] =
+      stateDir: String, outDir: String): DataStreamWriter[Row] =
     docs.writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
@@ -74,7 +71,7 @@ object BloomIngest {
         val corpus = loadHashes(spark, stateDir, idCol)
           .filter(col("batch_id") < batchId)
         val probed = Bloom.probe(b, loadWords(spark, stateDir),
-          "content_hash", mBits, k)
+          "content_hash")
         // the corpus join runs ONLY for maybe_present candidates — the
         // definitely-new majority short-circuits on the filter answer
         val seen = probed.filter(col("maybe_present"))
@@ -93,7 +90,7 @@ object BloomIngest {
         // concurrent jobs, max(write) wall instead of sum.
         write(out, outDir)
         NearDupIngest.parWrites(Seq(
-          () => write(Bloom.build(b, "content_hash", mBits, k),
+          () => write(Bloom.build(b, "content_hash"),
             s"$stateDir/words"),
           () => write(b.select(col(idCol), col("content_hash")),
             s"$stateDir/hashes")))

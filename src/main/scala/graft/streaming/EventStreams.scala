@@ -24,6 +24,15 @@ object EventStreams {
   final case class SessionUpdate(user_id: Long, events: Long,
       total_value: Double, session_start: Timestamp, last_seen: Timestamp)
 
+  /** Event-time lateness the session and window aggregates tolerate. */
+  val Watermark = "10 minutes"
+  /** Inactivity that closes a session, as a duration and in ms. */
+  val SessionGapMinutes = 30
+  val SessionGap = s"$SessionGapMinutes minutes"
+  val SessionGapMs = SessionGapMinutes * 60 * 1000L
+  val JoinWatermark = "2 hours"
+  val DedupWatermark = "1 hour"
+
   /** Windowed counts/sums per event type with a watermark for late data:
     * windows of `windowLen` starting every `slide`. The tumbling case is
     * `slide == windowLen`; a shorter slide overlaps the windows, so each
@@ -31,7 +40,7 @@ object EventStreams {
     * streams). Late rows beyond the watermark are dropped; closed windows
     * become immutable results (append-mode compatible). */
   def windowedAgg(events: DataFrame, windowLen: String, slide: String,
-      watermark: String = "10 minutes"): DataFrame =
+      watermark: String = Watermark): DataFrame =
     events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), windowLen, slide), col("event_type"))
@@ -53,11 +62,10 @@ object EventStreams {
     * terminate), and an event-time gap inside a key closes the previous
     * session and starts a new one. */
   def sessionize(spark: SparkSession, events: Dataset[Event],
-      gapMs: Long = 30 * 60 * 1000L,
-      watermark: String = "10 minutes"): Dataset[SessionUpdate] = {
+      gapMs: Long = SessionGapMs): Dataset[SessionUpdate] = {
     import spark.implicits._
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", Watermark)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionUpdate, SessionUpdate](
         OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
@@ -116,10 +124,9 @@ object EventStreams {
   def intervalJoin(left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTs: String, rightTs: String,
-      maxDelay: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame = {
-    val l = left.withWatermark(leftTs, watermark)
-    val r = right.withWatermark(rightTs, watermark)
+      maxDelay: String = "1 hour"): DataFrame = {
+    val l = left.withWatermark(leftTs, JoinWatermark)
+    val r = right.withWatermark(rightTs, JoinWatermark)
     l.join(r,
       col(leftKey) === col(rightKey) &&
         col(rightTs) >= col(leftTs) &&
@@ -130,9 +137,9 @@ object EventStreams {
     * bounding how long each key is remembered — state is O(keys inside the
     * watermark window), not O(stream). The streaming face of the batch
     * Dedup.exact operator. */
-  def streamingDedup(events: DataFrame, watermark: String = "1 hour"): DataFrame =
+  def streamingDedup(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", DedupWatermark)
       .dropDuplicatesWithinWatermark("event_id")
 
   /** Stream-static enrichment join: attach dimension attributes to a
@@ -185,11 +192,10 @@ object EventStreams {
     * drop to the explicit state API only when per-EVENT emission or
     * custom transitions are needed. Append-mode compatible (results
     * emit when the watermark passes a session's close). */
-  def sessionWindowAgg(events: DataFrame, gap: String = "30 minutes",
-      watermark: String = "10 minutes"): DataFrame =
+  def sessionWindowAgg(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
-      .groupBy(col("user_id"), session_window(col("ts"), gap))
+      .withWatermark("ts", Watermark)
+      .groupBy(col("user_id"), session_window(col("ts"), SessionGap))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value")).as("total_value"))
       .select(col("user_id"),

@@ -35,17 +35,14 @@ object NearDupIngest {
     * yield empty relations whose schemas derive from an empty slice of
     * the batch itself, so the first micro-batch bootstraps the index. */
   def loadIndex(spark: SparkSession, dir: String, like: DataFrame,
-      idCol: String, textCol: String, numHashes: Int, bands: Int,
-      shingleSize: Int): MinhashLshIndex = {
-    val empty = Dedup.minhashIndex(like.limit(0), idCol, textCol,
-      numHashes, bands, shingleSize)
+      idCol: String, textCol: String): MinhashLshIndex = {
+    val empty = Dedup.minhashIndex(like.limit(0), idCol, textCol)
     def load(name: String, fallback: DataFrame): DataFrame =
       if (Pipeline.exists(spark, s"$dir/$name"))
         spark.read.parquet(s"$dir/$name").drop("batch_id")
       else fallback
     MinhashLshIndex(load("buckets", empty.buckets),
-      load("shingles", empty.shingles), load("sizes", empty.sizes),
-      numHashes, bands, shingleSize)
+      load("shingles", empty.shingles), load("sizes", empty.sizes))
   }
 
   /** Run the ingest loop over a streaming `docs` relation until the
@@ -54,17 +51,15 @@ object NearDupIngest {
     * land under `pairsDir`, the index under
     * `indexDir/{buckets,shingles,sizes}`. */
   def start(docs: DataFrame, idCol: String, textCol: String,
-      indexDir: String, pairsDir: String, threshold: Double = 0.8,
-      numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3,
-      maxBucket: Int = 64): Unit =
+      indexDir: String, pairsDir: String,
+      threshold: Double = Dedup.JaccardThreshold): Unit =
     EventStreams.drain(writer(docs, idCol, textCol, indexDir, pairsDir,
-      threshold, numHashes, bands, shingleSize, maxBucket))
+      threshold))
 
   /** The ingest loop as an unstarted stream writer (see [[start]]). */
   def writer(docs: DataFrame, idCol: String, textCol: String,
-      indexDir: String, pairsDir: String, threshold: Double = 0.8,
-      numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3,
-      maxBucket: Int = 64): DataStreamWriter[Row] =
+      indexDir: String, pairsDir: String,
+      threshold: Double = Dedup.JaccardThreshold): DataStreamWriter[Row] =
     docs.writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
@@ -87,8 +82,7 @@ object NearDupIngest {
         // REAL size stats, so the probe's joins get honest broadcast
         // decisions instead of a stats-less staged frame's "huge"
         // default.
-        val mine0 = Dedup.minhashIndex(b, idCol, textCol,
-          numHashes, bands, shingleSize)
+        val mine0 = Dedup.minhashIndex(b, idCol, textCol)
         // the three appends are independent reads of the (already
         // materialized) staged shingle relation — submit them as
         // CONCURRENT Spark jobs so the batch pays max(write) wall, not
@@ -110,19 +104,17 @@ object NearDupIngest {
         // shingle row and corrupt the Jaccard denominators) and is the
         // right semantics for re-ingesting updated documents.
         val ids = b.select(col(idCol).as("id")).distinct()
-        val idx0 = loadIndex(spark, indexDir, b, idCol, textCol,
-          numHashes, bands, shingleSize)
+        val idx0 = loadIndex(spark, indexDir, b, idCol, textCol)
         val idx = MinhashLshIndex(
           idx0.buckets.join(broadcast(ids), Seq("id"), "left_anti"),
           idx0.shingles.join(broadcast(ids), Seq("id"), "left_anti"),
-          idx0.sizes.join(broadcast(ids), Seq("id"), "left_anti"),
-          numHashes, bands, shingleSize)
+          idx0.sizes.join(broadcast(ids), Seq("id"), "left_anti"))
         def mineBack(name: String) = spark.read
           .parquet(s"$indexDir/$name")
           .filter(col("batch_id") === batchId).drop("batch_id")
         val mine = MinhashLshIndex(mineBack("buckets"), mineBack("shingles"),
-          mineBack("sizes"), numHashes, bands, shingleSize)
-        val pairs = Dedup.minhashProbeIndexed(mine, idx, threshold, maxBucket)
+          mineBack("sizes"))
+        val pairs = Dedup.minhashProbeIndexed(mine, idx, threshold)
         write(pairs, pairsDir)
       }
 

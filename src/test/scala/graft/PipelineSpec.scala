@@ -301,7 +301,7 @@ class PipelineSpec extends AnyFunSuite {
     val tmp = java.nio.file.Paths.get(Scratch.dir("users"))
     Files.writeString(tmp.resolve("users.json"), usersJson)
     val out = SilverUsers.transform(
-      Sources.json(spark, tmp.resolve("users.json").toString))
+      Sources.jsonAll(spark, Seq(tmp.resolve("users.json").toString)))
     assert(out.count() === 2, "dedup on user_id keeps first")
     val ann = out.filter($"user_id" === 1).collect().head
     assert(ann.getAs[String]("email") === "ann@x.com")

@@ -62,6 +62,16 @@ class SourcesSpec extends AnyFunSuite {
     assert(Sources.orc(spark, s"$lake/archive/ids").count() === 100)
   }
 
+  test("a failed fetch throws and leaves no temp file in the landing dir") {
+    val landing = Paths.get(Scratch.dir("graft_land"), "landing")
+    val missing = Paths.get(Scratch.dir("graft_land_src"), "absent.json")
+    intercept[java.io.IOException] {
+      Sources.land(missing.toUri.toString, landing.toString, "users_1.json")
+    }
+    val left = landing.toFile.list().toSeq
+    assert(left.isEmpty, s"landing dir not empty: $left")
+  }
+
   test("valid UTF-8 file stays on the UTF-8 path") {
     val path = write("users_utf8.csv",
       "id,name\n1,alice\n2,café\n", "UTF-8")
