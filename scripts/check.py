@@ -94,9 +94,9 @@ def compare(name, spark_df, oracle_df):
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    # optional query names restrict the grade (verify_scale.sh passes the
-    # restricted sweep's set; Verify now always dumps the FULL oracle map,
-    # so without this filter every un-run query would FAIL "no output")
+    # optional query names restrict the grade (lakes.py verify passes a
+    # profile's set; Verify always dumps the FULL oracle map, so without
+    # this filter every un-run query would FAIL "no output")
     only = set(sys.argv[3:])
     con = duckdb.connect()
     for t in TABLES:
@@ -114,14 +114,11 @@ def main():
         # Output dirs deliberately do NOT widen the known set (ADVICE r14):
         # a stale dir left in a reused out_dir from a prior run would
         # otherwise let a renamed query pass the guard yet skip its grade,
-        # and the sweep would still print all-green. Rows-only queries
-        # (no oracle by design) are graded by the driver, not check.py —
-        # the message distinguishes that case for the reader.
+        # and the sweep would still print all-green.
         for miss in sorted(only - set(oracles)):
             has_dir = os.path.isdir(os.path.join(out_dir, miss))
             hint = ("Spark output exists but no oracle entry — renamed "
-                    "oracle query, stale output dir, or a rows-only query "
-                    "this gate cannot grade" if has_dir
+                    "oracle query or stale output dir?" if has_dir
                     else "typo or renamed query?")
             print(f"FAIL {miss}: filter name matches no oracle entry "
                   f"({hint})")
@@ -150,17 +147,6 @@ def main():
         else:
             n_pass += 1
             print(f"PASS {name} ({len(spark_df)} rows, {time.time()-t0:.1f}s)")
-    # rows-only entries: spark output exists but no oracle
-    for name in sorted(os.listdir(out_dir)):
-        p = os.path.join(out_dir, name)
-        if os.path.isdir(p) and name not in oracles \
-                and (not only or name in only):
-            try:
-                df = pd.read_parquet(p)
-                print(f"ROWS {name} ({len(df)} rows, no oracle)")
-            except Exception as e:
-                print(f"FAIL {name}: unreadable rows-only output ({e})")
-                n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     sys.exit(1 if n_fail else 0)
 

@@ -414,16 +414,17 @@ object Bench {
       s""""contaminated":$contaminated,"attempts":$attempts,""" +
       s""""attempt_totals":${attemptTotals.mkString("[", ",", "]")}"""
     // per-query result rows: vacuity evidence for the artifact build —
-    // an expected-empty or must-be-nonempty contract (bench_sf1.py
-    // EXPECT_ROWS) can only be enforced if the rows travel with the run
+    // an expected-empty or must-be-nonempty contract (the `rows` of a
+    // profile in scripts/lakes.json) can only be enforced if the rows
+    // travel with the run
     val line = s"""{"metric":"total","value":${passTotal(results)},"unit":"sec",""" +
       s""""queries":${obj(ok.map(r => r._1 -> r._2.wall))},""" +
       s""""rows":${obj(ok.map(r => r._1 -> r._2.rows))},"sf":"$sfDir"$envJson$errJson}"""
     println(line)
     // the stdout line can be lost to log truncation (the driver keeps a
     // bounded tail) and leaves the ~100 KB profile out; the file is the
-    // complete round-comparable artifact (scripts/bench_compare.py diffs
-    // two of them)
+    // complete round-comparable artifact (`scripts/lakes.py compare`
+    // diffs two of them)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "bench_out.json")
     val partialJson =

@@ -6,7 +6,7 @@ import graft.queries._
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Aggregates every implemented operator's QueryDef (Spark program +
-  * optional DuckDB oracle SQL) from the per-family modules under
+  * DuckDB oracle SQL) from the per-family modules under
   * graft.queries.
   */
 object SparkEntry {
@@ -42,7 +42,7 @@ object SparkEntry {
     allDefs.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    allDefs.flatMap(q => q.oracle.map(o => q.name -> o)).toMap
+    allDefs.map(q => q.name -> q.oracle).toMap
 }

@@ -310,8 +310,7 @@ final class Pipeline(spark: SparkSession, lakeDir: String) {
           .filter(col("validation_status") === "pending")
           .drop("ingestion_timestamp", "validation_status", "data_hash")
         val silver = SilverCovid.transform(
-          SilverCovid.fromEvents(pending),
-          SilverCovid.Thresholds(outlierConfirmed = 5000, outlierDaily = 400))
+          SilverCovid.fromEvents(pending), SilverCovid.FixtureThresholds)
         val (oSilver, silverObs) = observed(silver)
         upsertByDate(silverObs, "silver", "covid_timeseries", "record_date")
         // gold daily reads only 4 of silver's columns — parquet pruning —

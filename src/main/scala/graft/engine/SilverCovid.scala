@@ -34,6 +34,12 @@ object SilverCovid {
   final case class Thresholds(outlierConfirmed: Double = 1e7,
                               outlierDaily: Double = 1e6)
 
+  /** The thresholds the pipeline and `q_covid_silver` run with: the test
+    * lakes' cumulative counts stay far below the reference values, so these
+    * are scaled down until the outlier branch fires. */
+  val FixtureThresholds: Thresholds =
+    Thresholds(outlierConfirmed = 5000, outlierDaily = 400)
+
   /** P5 numeric coercion: to_numeric(errors='coerce').fillna(0).
     * try_cast, not cast — under Spark 4's default ANSI mode a plain cast
     * would THROW on malformed input instead of nulling it. */

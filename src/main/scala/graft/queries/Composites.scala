@@ -13,11 +13,17 @@ object Composites {
 
   private val roundN = Det.roundNSql _
 
+  /** `SilverCovid`'s outlier rule at the fixture thresholds, in SQL. */
+  private val covidOutlierSql = {
+    val t = SilverCovid.FixtureThresholds
+    s"confirmed > ${t.outlierConfirmed.toLong} OR daily_new_cases > ${t.outlierDaily.toLong}"
+  }
+
   val defs: Seq[QueryDef] = Seq(
 
     // §3.2 flagship: full silver lineage (coerce → derive → W1/W2 windows →
     // score/flag → dedup) through graft.engine.SilverCovid over the events
-    // adapter. Thresholds scaled to testdata so the outlier branch fires.
+    // adapter, at SilverCovid.FixtureThresholds.
     // Ref: transform_silver.py:274-386.
     QueryDef.sql(
       "q_covid_silver",
@@ -52,16 +58,16 @@ object Composites {
          |SELECT country, record_date, confirmed, deaths, recovered, active,
          |  mortality_rate, recovery_rate, daily_new_cases, daily_new_deaths,
          |  weekly_avg_cases,
-         |  (confirmed > 5000 OR daily_new_cases > 400) AS is_outlier,
+         |  ($covidOutlierSql) AS is_outlier,
          |  GREATEST(0, 100
          |    - CASE WHEN confirmed < 0 OR deaths < 0 OR recovered < 0 THEN 30 ELSE 0 END
          |    - CASE WHEN deaths > confirmed THEN 20 ELSE 0 END
          |    - CASE WHEN recovered > confirmed THEN 20 ELSE 0 END
-         |    - CASE WHEN confirmed > 5000 OR daily_new_cases > 400 THEN 10 ELSE 0 END) AS data_quality_score
+         |    - CASE WHEN $covidOutlierSql THEN 10 ELSE 0 END) AS data_quality_score
          |FROM win2 ORDER BY country, record_date""".stripMargin) { (s, d) =>
       SilverCovid
         .transform(SilverCovid.fromEvents(Tables.events(s, d)),
-          SilverCovid.Thresholds(outlierConfirmed = 5000, outlierDaily = 400))
+          SilverCovid.FixtureThresholds)
         .select("country", "record_date", "confirmed", "deaths", "recovered",
           "active", "mortality_rate", "recovery_rate", "daily_new_cases",
           "daily_new_deaths", "weekly_avg_cases", "is_outlier",

@@ -9,9 +9,9 @@ import graft.engine.Stage.syntax._
 
 /** Training-data-pipeline extensions (BASELINE.json north star): text
   * analysis, dedup family, similarity search, multimodal plumbing — each
-  * over the `documents` / `embeddings` fixtures. SQL oracles where DuckDB
-  * can express the same computation; the LSH/ANN operators are rows-only
-  * (covered by unit specs against brute-force ground truth).
+  * over the `documents` / `embeddings` fixtures, each with its DuckDB
+  * oracle; unit specs also check the LSH/ANN operators against
+  * brute-force ground truth.
   */
 object Extensions {
 

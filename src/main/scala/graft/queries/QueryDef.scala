@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One named engine capability: a Spark DataFrame program plus (when
-  * ANSI-SQL-expressible) an equivalent DuckDB oracle query over the same
-  * parquet tables. The driver hash-compares the two at sf0.01.
+/** One named engine capability: a Spark DataFrame program plus an
+  * equivalent DuckDB oracle query over the same parquet tables. The oracle
+  * tier hash-compares the two at sf0.01.
   *
   * Determinism contract (so hashes are stable):
   *  - every query ends in an explicit ORDER BY over a unique key, mirrored
@@ -15,9 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class QueryDef(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object QueryDef {
   def sql(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, run, Some(oracle))
+    QueryDef(name, run, oracle)
 }

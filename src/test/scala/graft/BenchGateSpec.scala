@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.QueryDef
 
@@ -45,6 +47,33 @@ class BenchGateSpec extends AnyFunSuite {
     assert(!e.getMessage.contains("q1_pricing_summary"))
   }
 
+  test("the scale table names real queries, each where its profile runs it") {
+    // a renamed query in scripts/lakes.json must fail here, not only when
+    // a scale leg that this box cannot run reaches it
+    val table = new ObjectMapper().readTree(new java.io.File("scripts/lakes.json"))
+    def keys(n: JsonNode): Set[String] = n.fieldNames.asScala.toSet
+    def list(n: JsonNode): Seq[String] = n.elements.asScala.map(_.asText).toSeq
+    val profiles = table.get("profiles")
+    val suite = SparkEntry.allDefs.map(_.name).toSet
+    var named = list(table.at("/heavy/queries")).toSet
+    for (name <- keys(profiles)) {
+      val p = profiles.get(name)
+      val like = Option(p.get("like")).map(l => profiles.get(l.asText))
+      // as lakes.py resolves it: `like` lends its sets, minus own exclusions
+      def set(leg: String) =
+        like.fold(list(p.get(leg)))(l => list(l.get(leg)).filterNot(keys(p.get("excluded"))))
+      val (verify, bench) = (set("verify").toSet, set("bench").toSet)
+      val excluded = keys(p.get("excluded")) ++ like.fold(Set.empty[String])(l => keys(l.get("excluded")))
+      val labeled = keys(p.get("triage")) ++ keys(p.get("rows"))
+      assert(labeled.subsetOf(if (bench.isEmpty) suite else bench), name)
+      for (q <- excluded) assert(!(verify(q) && (bench.isEmpty || bench(q))), s"$name: $q")
+      if (bench.nonEmpty)
+        assert(((verify -- bench) ++ (bench -- verify)).subsetOf(excluded), name)
+      named ++= verify ++ bench ++ excluded ++ labeled
+    }
+    assert(SparkEntry.select(named).size === named.size)
+  }
+
   test("the per-query step times, profiles, and records a failure") {
     val spark = SparkTestSession.spark
     val sf = "/root/testdata/sf0.001"
@@ -60,7 +89,7 @@ class BenchGateSpec extends AnyFunSuite {
     // one scan of each table per check family
     assert(step("q_quality_report").profile.toMap.apply("rescans") ===
       """{"customer":3,"orders":4,"events":3}""")
-    val boom = QueryDef("boom", (_, _) => throw new IllegalStateException("boom"), None)
+    val boom = QueryDef("boom", (_, _) => throw new IllegalStateException("boom"), "SELECT 1")
     assert(Bench.step(spark, boom, sf) === Left("IllegalStateException: boom"))
   }
 }
