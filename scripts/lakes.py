@@ -297,8 +297,12 @@ def walls(path):
     try:
         return json.loads(m)["queries"]
     except json.JSONDecodeError:
+        # only the walls map: the line's other name:number maps (rows)
+        # follow it, and a cut before the map leaves no walls
+        i = m.find('"queries":{')
+        m = m[i + len('"queries":{'):].split("}", 1)[0] if i >= 0 else ""
         pairs = re.findall(r'"([A-Za-z0-9_]+)":([0-9.]+)', m)
-        return {k: float(v) for k, v in pairs if k != "value"}
+        return {k: float(v) for k, v in pairs}
 
 
 def compare(args):

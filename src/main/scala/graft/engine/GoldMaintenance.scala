@@ -35,6 +35,21 @@ object GoldMaintenance {
         Det.roundN(count(lit(1)) / 3600.0, 2).as("records_per_second"))
   }
 
+  /** DuckDB form of [[dailyAgg]] over all of `events`, ordered by date:
+    * the oracle of the full build and of the incremental rebuild. */
+  val dailyAggOracleSql: String =
+    s"""SELECT CAST(ts AS DATE) AS summary_date,
+       |  COUNT(*) AS records_processed,
+       |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
+       |  ${Det.roundNSql("COUNT(CASE WHEN event_type = 'error' THEN 1 END) * 100.0 / COUNT(*)", 2)} AS error_rate_pct,
+       |  CASE
+       |    WHEN COUNT(CASE WHEN event_type = 'error' THEN 1 END) * 100.0 / COUNT(*) < 5 THEN 'EXCELLENT'
+       |    WHEN COUNT(CASE WHEN event_type = 'error' THEN 1 END) * 100.0 / COUNT(*) < 10 THEN 'GOOD'
+       |    WHEN COUNT(CASE WHEN event_type = 'error' THEN 1 END) * 100.0 / COUNT(*) < 15 THEN 'FAIR'
+       |    ELSE 'POOR' END AS quality_rating,
+       |  ${Det.roundNSql("COUNT(*) / 3600.0", 2)} AS records_per_second
+       |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
+
   /** Merge an existing gold table with a batch: gold rows for untouched
     * dates pass through unread from source; touched dates are recomputed
     * from `allEvents` restricted to those dates (at rest: a partition-

@@ -31,4 +31,16 @@ object Session {
     GraftFunctions.register(spark)
     spark
   }
+
+  /** Runs `f` with the session conf `settings` in force, then gives each
+    * key back its prior value, or unsets it if it had none. */
+  def withConf[T](s: SparkSession, settings: (String, String)*)(f: => T): T = {
+    val set = s.conf.getAll
+    val prior = settings.map { case (k, _) => k -> set.get(k) }
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    try f finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
 }

@@ -115,63 +115,52 @@ object Bpe {
     var words = if (small) base.coalesce(1).staged else base
     // Small-vocab rounds are pure fixed overhead: AQE's stage-by-stage
     // replanning and a 32-way exchange add ~150ms/round to a job whose
-    // data is a handful of KB. Scope both DOWN for the loop (restored in
-    // the finally): AQE off, one shuffle partition. Partition count and
+    // data is a handful of KB. Scope both DOWN for the loop (restored
+    // after it): AQE off, one shuffle partition. Partition count and
     // AQE cannot move the merges (exact long sums + total-order argmax;
     // the crosspart gate pins partition-count invariance suite-wide).
     // The flip is session-scoped for the loop's duration — callers
     // running concurrent queries on the SAME session during a learn
     // would see it; Verify/Bench run queries sequentially.
-    val sess = df.sparkSession
-    val aqeBefore = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val shufBefore = sess.conf.get("spark.sql.shuffle.partitions", "200")
-    val wscgBefore = sess.conf.get("spark.sql.codegen.wholeStage", "true")
-    if (small) {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      sess.conf.set("spark.sql.shuffle.partitions", "1")
+    val scoped = if (!small) Nil else Seq(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "1",
       // every round is a FRESH plan (the round's merge literal differs),
       // so whole-stage codegen compiles ~50ms of Janino per round to run
       // over a few KB — interpreted execution wins outright here
-      sess.conf.set("spark.sql.codegen.wholeStage", "false")
-    }
-    try {
-    val merges = Seq.newBuilder[(String, String)]
-    var r = 0
-    var done = false
-    var sinceStage = 0
-    while (r < numMerges && !done) {
-      val top = words
-        .select(col("c"), split(trim(col("s"), S), S + S).as("a"))
-        .filter(size(col("a")) >= 2)
-        .select(col("c"), explode(expr(
-          "transform(sequence(0, size(a) - 2)," +
-            " i -> struct(a[i] AS lhs, a[i + 1] AS rhs))")).as("p"))
-        .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs"))
-        .agg(sum(col("c")).as("pc"))
-        .orderBy(desc("pc"), asc("lhs"), asc("rhs"))
-        .limit(1)
-        .collect()
-      if (top.isEmpty) done = true
-      else {
-        val (a, b) = (top(0).getString(0), top(0).getString(1))
-        merges += ((a, b))
-        val rewritten = words.select(
-          replace(col("s"), lit(S + a + S + S + b + S), lit(S + a + b + S))
-            .as("s"), col("c"))
-        sinceStage += 1
-        words =
-          if (sinceStage >= 12) { sinceStage = 0; rewritten.staged }
-          else rewritten
-        r += 1
+      "spark.sql.codegen.wholeStage" -> "false")
+    graft.engine.Session.withConf(df.sparkSession, scoped: _*) {
+      val merges = Seq.newBuilder[(String, String)]
+      var r = 0
+      var done = false
+      var sinceStage = 0
+      while (r < numMerges && !done) {
+        val top = words
+          .select(col("c"), split(trim(col("s"), S), S + S).as("a"))
+          .filter(size(col("a")) >= 2)
+          .select(col("c"), explode(expr(
+            "transform(sequence(0, size(a) - 2)," +
+              " i -> struct(a[i] AS lhs, a[i + 1] AS rhs))")).as("p"))
+          .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs"))
+          .agg(sum(col("c")).as("pc"))
+          .orderBy(desc("pc"), asc("lhs"), asc("rhs"))
+          .limit(1)
+          .collect()
+        if (top.isEmpty) done = true
+        else {
+          val (a, b) = (top(0).getString(0), top(0).getString(1))
+          merges += ((a, b))
+          val rewritten = words.select(
+            replace(col("s"), lit(S + a + S + S + b + S), lit(S + a + b + S))
+              .as("s"), col("c"))
+          sinceStage += 1
+          words =
+            if (sinceStage >= 12) { sinceStage = 0; rewritten.staged }
+            else rewritten
+          r += 1
+        }
       }
-    }
-    merges.result()
-    } finally {
-      if (small) {
-        sess.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-        sess.conf.set("spark.sql.shuffle.partitions", shufBefore)
-        sess.conf.set("spark.sql.codegen.wholeStage", wscgBefore)
-      }
+      merges.result()
     }
   }
 

@@ -87,6 +87,11 @@ object TextFunctions {
   def langHitsSql(text: String): String =
     langMarkers.map { case (l, ws) => s"${hitsSql(text, ws)} AS $l" }.mkString(", ")
 
+  /** The per-language hit columns of [[tokenFeatures]], keyed as in
+    * [[langMarkers]]. */
+  def featureHits: Map[String, Column] =
+    langMarkers.map { case (l, _) => l -> col(s"hits_$l") }.toMap
+
   /** The language whose marker-hit count is highest, from the per-language
     * hit columns keyed as in [[langMarkers]]. */
   def langId(h: Map[String, Column]): Column =

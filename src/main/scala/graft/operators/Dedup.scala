@@ -776,6 +776,20 @@ object Dedup {
        |    SELECT $id, shingle, COUNT(*) OVER (PARTITION BY shingle) AS pn FROM $from)$join
        |  WHERE $cond""".stripMargin
 
+  /** The CTEs `s(id, shingle)`, each document's distinct shingles of
+    * `documents` keyed by doc_id, and `sizes(id, n)`, their counts. */
+  val shingleSizesSql: String =
+    s"""${shinglesSql("doc_id AS id", "id")},
+       |sizes AS (SELECT id, COUNT(*) AS n FROM s GROUP BY 1)""".stripMargin
+
+  /** CTE `inter(id_a, id_b, inter)`: the shingles each document pair
+    * (id_a < id_b) shares in the postings CTE `postings(id, shingle)`. */
+  def pairInterSql(postings: String): String =
+    s"""inter AS (
+       |  SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS inter
+       |  FROM $postings a JOIN $postings b USING (shingle)
+       |  WHERE a.id < b.id GROUP BY 1, 2)""".stripMargin
+
   /** DuckDB mirror of [[usefulPostings]] over the CTE `s(id, shingle)`:
     * the CTEs `nd(cap)` and `useful(id, shingle)`. */
   val usefulPostingsSql: String =

@@ -73,6 +73,38 @@ object EventAnalytics {
           .otherwise(lit(0.0)).as("pct_of_first"))
   }
 
+  /** DuckDB form of [[funnel]] over `events(user_id, event_type, ts)`,
+    * the conversion window (`maxGap`) given in hours: CTEs `s1…sn` of
+    * earliest qualifying times, then the step counts ordered by step. */
+  def funnelOracleSql(steps: Seq[String], maxGapHours: Option[Int]): String = {
+    val reached = steps.zipWithIndex.map {
+      case (t, 0) =>
+        s"""s1 AS (
+           |  SELECT user_id, MIN(ts) AS t FROM events
+           |  WHERE event_type = '$t' GROUP BY 1)""".stripMargin
+      case (t, i) =>
+        val within = maxGapHours.fold("")(h =>
+          s"\n    AND e.ts <= s$i.t + INTERVAL $h HOUR")
+        s"""s${i + 1} AS (
+           |  SELECT e.user_id, MIN(e.ts) AS t FROM events e
+           |  JOIN s$i ON s$i.user_id = e.user_id
+           |  WHERE e.event_type = '$t' AND e.ts > s$i.t$within GROUP BY 1)""".stripMargin
+    }
+    val counts = steps.zipWithIndex.map {
+      case (t, 0) => s"  SELECT 1 AS step, '$t' AS step_type, COUNT(*) AS n FROM s1"
+      case (t, i) => s"  SELECT ${i + 1}, '$t', COUNT(*) FROM s${i + 1}"
+    }.mkString("\n  UNION ALL\n")
+    s"""WITH ${reached.mkString(",\n")},
+       |c AS (
+       |$counts),
+       |f AS (SELECT n AS n1 FROM c WHERE step = 1)
+       |SELECT CAST(step AS BIGINT) AS step, step_type,
+       |  n AS n_entities,
+       |  CASE WHEN n1 > 0 THEN ${Det.roundNSql("n * 1.0 / n1", 4)}
+       |    ELSE 0.0 END AS pct_of_first
+       |FROM c, f ORDER BY step""".stripMargin
+  }
+
   /** Per-group OLS trend: slope and intercept of y over x from the
     * closed-form normal equations, in ONE map-side-combinable aggregate —
     * the quantitative companion to the ±10% trend CLASSIFIER (W5).
@@ -139,6 +171,16 @@ object EventAnalytics {
   }
 
   val TransitionScale = 6
+
+  /** DuckDB form of [[transitionMatrix]]'s first step over
+    * `events(user_id, event_type, ts, event_id)`: CTE `steps(from_type,
+    * to_type)`, each event and the next one of its user. */
+  val transitionStepsCte: String =
+    """steps AS (
+      |  SELECT event_type AS from_type,
+      |    LEAD(event_type) OVER (PARTITION BY user_id
+      |                           ORDER BY ts, event_id) AS to_type
+      |  FROM events)""".stripMargin
 
   /** First-order Markov transition matrix over per-entity event
     * sequences: for each consecutive (type → next type) step in an

@@ -12,7 +12,8 @@ import graft.engine.Stage.syntax._
   *
   * Two paths:
   *  - brute-force cosine top-k: broadcast the query vector, one map-only
-  *    pass computing cosine (double-precision fold over zip_with), then a
+  *    pass computing cosine (the native [[graft.expressions.CosineSim]],
+  *    a double-precision left-to-right fold), then a
   *    TakeOrderedAndProject top-k. Exact; the O(N) baseline.
   *  - IVF (inverted-file) top-k: the 100 TB path. Vectors are assigned to
   *    their nearest centroid once (a broadcast join against a small
@@ -36,17 +37,8 @@ object Similarity {
   /** Cast array<float> → array<double>. */
   def asDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def norm(v: Column): Column = sqrt(dot(v, v))
-
-  def cosine(a: Column, b: Column): Column = {
-    val d = norm(a) * norm(b)
-    when(d > 0, dot(a, b) / d).otherwise(0.0)
-  }
-  /** DuckDB-dialect mirror of [[cosine]] over two DOUBLE[] list
-    * expressions, zero-guarded the same way. */
+  /** DuckDB-dialect mirror of [[graft.expressions.CosineSim]] over two
+    * DOUBLE[] list expressions, zero-guarded the same way. */
   def cosineOracleSql(a: String, b: String): String =
     s"CASE WHEN sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)) > 0" +
       s" THEN list_dot_product($a,$b) / (sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)))" +
@@ -345,6 +337,26 @@ object Similarity {
       .filter(col(IdCol) < col("__k"))
       .select(col(IdCol).as("cell"), col(EmbCol).as("c_emb"))
   }
+
+  /** DuckDB form of [[seedCentroids]] over a CTE `e(vec_id, emb, …)`:
+    * the CTEs `kk(k)` and `cent(cell, ce)`. */
+  val seedCentroidsCtes: String =
+    s"""kk AS (SELECT ${ivfCellsSql("COUNT(*)")} AS k FROM e),
+       |cent AS (SELECT vec_id AS cell, emb AS ce FROM e, kk
+       |  WHERE vec_id < kk.k)""".stripMargin
+
+  /** DuckDB form of [[knnGraph]]'s probing over the CTEs `e` and `cent`,
+    * each vector's cells ranked by cosine, ties to the lower cell: `rk`,
+    * then `asg(vec_id, emb, cell)`, its own cell, and `pr(src, qe,
+    * cell)`, its `nProbe` probed cells. */
+  def knnProbeCtes(nProbe: Int): String =
+    s"""rk AS (
+       |  SELECT e.vec_id, e.emb, c.cell,
+       |    row_number() OVER (PARTITION BY e.vec_id
+       |      ORDER BY ${cosineOracleSql("e.emb", "c.ce")} DESC, c.cell) AS rn
+       |  FROM e CROSS JOIN cent c),
+       |asg AS (SELECT vec_id, emb, cell FROM rk WHERE rn = 1),
+       |pr AS (SELECT vec_id AS src, emb AS qe, cell FROM rk WHERE rn <= $nProbe)""".stripMargin
 
   def knnGraph(vectors: DataFrame, centroids: DataFrame, k: Int,
       nProbe: Int): DataFrame = {

@@ -319,21 +319,14 @@ object AlignmentOps {
     // decision.
     QueryDef.sql(
       "sim_range_search",
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-         |${Fixtures.codebookCte},
-         |${Fixtures.queryProbesCtes},
-         |${Fixtures.assignedCtes},
-         |hits AS (
-         |  SELECT p.query_id, a.vec_id, a.cell,
-         |    ${roundN(cosSql("a.emb", "p.qe"), 6)} AS cosine
-         |  FROM assigned a JOIN probes p USING (cell))
+      s"""WITH ${Fixtures.probedBatchCtes},
+         |${Fixtures.probedHitsCte}
          |SELECT query_id, vec_id, cell, cosine FROM hits
          |WHERE cosine >= 0.25 AND vec_id <> query_id
          |ORDER BY query_id, vec_id""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val centroids = Fixtures.codebook(emb)
-      val qs = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+      val qs = Fixtures.queryBatch(emb)
       Similarity.ivfRangeSearch(emb, centroids, qs, tau = 0.25, nProbe = 4)
         .orderBy("query_id", "vec_id")
     },

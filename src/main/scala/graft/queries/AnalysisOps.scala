@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.engine.{Det, Tables}
 import graft.engine.Stage.syntax._
-import graft.operators.Similarity
+import graft.operators.{EventAnalytics, Similarity}
 
 /** Analysis depth: Markov absorption probabilities over the event
   * transition matrix, hard-negative mining for retrieval training,
@@ -46,11 +46,7 @@ object AnalysisOps {
     // and DECIMAL-summed, so both engines walk identical iterates.
     QueryDef.sql(
       "q_absorption_prob",
-      s"""WITH steps AS (
-         |  SELECT event_type AS from_type,
-         |    LEAD(event_type) OVER (PARTITION BY user_id
-         |                           ORDER BY ts, event_id) AS to_type
-         |  FROM events),
+      s"""WITH ${EventAnalytics.transitionStepsCte},
          |counts AS MATERIALIZED (
          |  SELECT from_type, to_type, COUNT(*) AS n
          |  FROM steps WHERE to_type IS NOT NULL GROUP BY 1, 2),
@@ -113,10 +109,7 @@ object AnalysisOps {
     // ranking) + a per-query top-k window over the band survivors only.
     QueryDef.sql(
       "sim_hard_negatives",
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-         |${Fixtures.codebookCte},
-         |${Fixtures.queryProbesCtes},
-         |${Fixtures.assignedCtes},
+      s"""WITH ${Fixtures.probedBatchCtes},
          |band AS (
          |  SELECT p.query_id, a.vec_id, a.cell,
          |    ${roundN(cosSql("a.emb", "p.qe"), 6)} AS cosine
@@ -124,15 +117,10 @@ object AnalysisOps {
          |  WHERE ${roundN(cosSql("a.emb", "p.qe"), 6)} >= 0.2
          |    AND ${roundN(cosSql("a.emb", "p.qe"), 6)} < 0.8
          |    AND a.vec_id <> p.query_id)
-         |SELECT query_id, vec_id, cell, cosine FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, vec_id) AS rk FROM band)
-         |WHERE rk <= 5
-         |ORDER BY query_id, cosine DESC, vec_id""".stripMargin) { (s, d) =>
+         |${Fixtures.topFiveSql("band")}""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val centroids = Fixtures.codebook(emb)
-      val qs = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+      val qs = Fixtures.queryBatch(emb)
       val band = Similarity.ivfRangeSearch(emb, centroids, qs,
           tau = 0.2, nProbe = 4)
         .filter(col("cosine") < 0.8)
@@ -352,16 +340,8 @@ object AnalysisOps {
       "sim_knn_vote",
       s"""WITH e AS (
          |  SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings),
-         |kk AS (SELECT ${Similarity.ivfCellsSql("COUNT(*)")} AS k FROM e),
-         |cent AS (SELECT vec_id AS cell, emb AS ce FROM e, kk
-         |  WHERE vec_id < kk.k),
-         |rk AS (
-         |  SELECT e.vec_id, e.emb, c.cell,
-         |    row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY ${cosSql("e.emb", "c.ce")} DESC, c.cell) AS rn
-         |  FROM e CROSS JOIN cent c),
-         |asg AS (SELECT vec_id, emb, cell FROM rk WHERE rn = 1),
-         |pr AS (SELECT vec_id AS src, emb AS qe, cell FROM rk WHERE rn <= 2),
+         |${Similarity.seedCentroidsCtes},
+         |${Similarity.knnProbeCtes(2)},
          |nb AS (
          |  SELECT src, dst FROM (
          |    SELECT p.src, a.vec_id AS dst,
@@ -429,9 +409,7 @@ object AnalysisOps {
       "sim_knn_vote_sf10_probe",
       s"""WITH e AS (
          |  SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings),
-         |kk AS (SELECT ${Similarity.ivfCellsSql("COUNT(*)")} AS k FROM e),
-         |cent AS (SELECT vec_id AS cell, emb AS ce FROM e, kk
-         |  WHERE vec_id < kk.k),
+         |${Similarity.seedCentroidsCtes},
          |scored AS MATERIALIZED (
          |  SELECT e.vec_id, c.cell, ${cosSql("e.emb", "c.ce")} AS cs
          |  FROM e CROSS JOIN cent c),

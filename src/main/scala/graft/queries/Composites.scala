@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{Det, SilverCovid, Tables}
+import graft.engine.{Det, GoldMaintenance, SilverCovid, Tables}
 import graft.engine.Stage.syntax._
 
 /** Composite lineages mirroring the reference's silver/gold pipelines
@@ -93,10 +93,7 @@ object Composites {
         |ORDER BY l.user_id""".stripMargin) { (s, d) =>
       // staged once (user×day-sized): daily feeds the max-date rollup and
       // all three join sides — unstaged, the events scan ran four times
-      val daily = Tables.events(s, d)
-        .groupBy(col("user_id"), to_date(col("ts")).as("d"))
-        .agg(Det.dsum(col("value")).as("v"))
-        .staged
+      val daily = Fixtures.userDaily(Tables.events(s, d))
       val mx = daily.agg(max(col("d")).as("maxd"))
       val latest = daily.join(broadcast(mx), col("d") === col("maxd"))
         .select(col("user_id"), col("v").as("v_today"), col("maxd"))
@@ -159,18 +156,8 @@ object Composites {
     // + quality rating buckets).
     QueryDef.sql(
       "q_gold_daily_aggregates",
-      s"""SELECT CAST(ts AS DATE) AS summary_date,
-         |  COUNT(*) AS records_processed,
-         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
-         |  ${roundN("COUNT(CASE WHEN event_type = 'error' THEN 1 END) * 100.0 / COUNT(*)", 2)} AS error_rate_pct,
-         |  CASE
-         |    WHEN COUNT(CASE WHEN event_type = 'error' THEN 1 END) * 100.0 / COUNT(*) < 5 THEN 'EXCELLENT'
-         |    WHEN COUNT(CASE WHEN event_type = 'error' THEN 1 END) * 100.0 / COUNT(*) < 10 THEN 'GOOD'
-         |    WHEN COUNT(CASE WHEN event_type = 'error' THEN 1 END) * 100.0 / COUNT(*) < 15 THEN 'FAIR'
-         |    ELSE 'POOR' END AS quality_rating,
-         |  ${roundN("COUNT(*) / 3600.0", 2)} AS records_per_second
-         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      graft.engine.GoldMaintenance.dailyAgg(Tables.events(s, d))
+      GoldMaintenance.dailyAggOracleSql) { (s, d) =>
+      GoldMaintenance.dailyAgg(Tables.events(s, d))
         .orderBy("summary_date")
     },
 
@@ -183,17 +170,7 @@ object Composites {
     // loses nothing, bit-exactly (decimal sums make regrouping stable).
     QueryDef.sql(
       "q_gold_incremental",
-      s"""SELECT CAST(ts AS DATE) AS summary_date,
-         |  COUNT(*) AS records_processed,
-         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
-         |  ${roundN("COUNT(CASE WHEN event_type = 'error' THEN 1 END) * 100.0 / COUNT(*)", 2)} AS error_rate_pct,
-         |  CASE
-         |    WHEN COUNT(CASE WHEN event_type = 'error' THEN 1 END) * 100.0 / COUNT(*) < 5 THEN 'EXCELLENT'
-         |    WHEN COUNT(CASE WHEN event_type = 'error' THEN 1 END) * 100.0 / COUNT(*) < 10 THEN 'GOOD'
-         |    WHEN COUNT(CASE WHEN event_type = 'error' THEN 1 END) * 100.0 / COUNT(*) < 15 THEN 'FAIR'
-         |    ELSE 'POOR' END AS quality_rating,
-         |  ${roundN("COUNT(*) / 3600.0", 2)} AS records_per_second
-         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
+      GoldMaintenance.dailyAggOracleSql) { (s, d) =>
       val evd = Tables.events(s, d).withColumn("__d", to_date(col("ts")))
       val maxd = evd.agg(max(col("__d")).as("maxd"))
       val flagged = evd.crossJoin(broadcast(maxd))
@@ -203,9 +180,9 @@ object Composites {
               col("user_id") % 7 === 0))
       val existing = flagged.filter(!col("__is_batch")).staged
       val batch = flagged.filter(col("__is_batch")).staged
-      val oldGold = graft.engine.GoldMaintenance.dailyAgg(existing)
+      val oldGold = GoldMaintenance.dailyAgg(existing)
       val touched = batch.select(col("__d").as("touched_date")).distinct()
-      graft.engine.GoldMaintenance.incrementalDaily(oldGold, flagged, touched)
+      GoldMaintenance.incrementalDaily(oldGold, flagged, touched)
         .orderBy("summary_date")
     },
 

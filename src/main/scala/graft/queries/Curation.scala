@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.{Det, Tables}
 import graft.functions.TextFunctions
@@ -15,6 +16,117 @@ object Curation {
 
   private val roundN = Det.roundNSql _
 
+  /** The SCD2 update batch over `customer`: keys % 3, of which keys % 6
+    * change segment (suffix `_V2`) and the rest are no-ops. */
+  private def segmentUpdates(cust: DataFrame): DataFrame =
+    cust.filter(col("c_custkey") % 3 === 0)
+      .select(col("c_custkey"),
+        when(col("c_custkey") % 6 === 0, concat(col("c_mktsegment"), lit("_V2")))
+          .otherwise(col("c_mktsegment")).as("c_mktsegment"))
+
+  /** DuckDB form of [[segmentUpdates]]: CTE `upd`. */
+  private val segmentUpdatesCte =
+    """upd AS (
+      |  SELECT c_custkey,
+      |         CASE WHEN c_custkey % 6 = 0 THEN c_mktsegment || '_V2'
+      |              ELSE c_mktsegment END AS c_mktsegment
+      |  FROM customer WHERE c_custkey % 3 = 0)""".stripMargin
+
+  /** DuckDB form of `Contamination.ngramOverlap` with docs % 20 as the
+    * benchmark and the rest as the corpus: the CTEs `s` (shingles),
+    * `corp`, `bench`, `bn(bench_id, bench_n)`, `cu` (the capped corpus
+    * postings) and `ov(doc_id, bench_id, ov_n)`. */
+  private val benchOverlapCtes =
+    s"""${Dedup.shinglesSql("doc_id", "doc_id")},
+       |corp AS (SELECT doc_id, shingle FROM s WHERE doc_id % 20 <> 0),
+       |bench AS (SELECT doc_id AS bench_id, shingle FROM s WHERE doc_id % 20 = 0),
+       |bn AS (SELECT bench_id, COUNT(*) AS bench_n FROM bench GROUP BY 1),
+       |cu AS (
+       |  ${Dedup.cappedPostingsSql("doc_id", "corp", "pn <= 1000")}),
+       |ov AS (
+       |  SELECT cu.doc_id, b.bench_id, COUNT(*) AS ov_n
+       |  FROM cu JOIN bench b USING (shingle) GROUP BY 1, 2)""".stripMargin
+
+  /** The docs of `docs` at or above their language's 25th-percentile
+    * quality score: (doc_id, lang, quality_score, lang_p25). */
+  private def qualityGated(docs: DataFrame): DataFrame = {
+    // staged once: both the threshold aggregate and the gate join read
+    // this narrow (id, lang, score) relation — without the stage the
+    // whole explode→aggregate scoring lineage runs twice
+    val scored = TextFunctions.qualityFeatures(docs, "doc_id", "text")
+      .select(col("doc_id"), col("lang"), col("quality_score"))
+      .staged
+    // 4 languages → a tiny threshold table; broadcast it so the corpus
+    // side joins map-side with zero extra shuffle
+    val th = scored.groupBy("lang")
+      .agg(Det.roundN(expr("percentile(quality_score, 0.25D)"), 4)
+        .as("lang_p25"))
+    scored.join(broadcast(th), Seq("lang"))
+      .filter(col("quality_score") >= col("lang_p25"))
+  }
+
+  /** DuckDB form of [[qualityGated]]'s scores and thresholds over the
+    * features CTE `f`: the CTEs `g`, `q(doc_id, lang, quality_score)` and
+    * `th(lang, lang_p25)`. */
+  private val langP25Ctes =
+    s"""g AS (
+       |  SELECT doc_id, lang, words, stop_hits,
+       |    CASE WHEN words > 0 THEN ${roundN("chars * 1.0 / words", 2)} ELSE 0.0 END AS avg_word_len,
+       |    punct * 1.0 / GREATEST(length(text), 1) AS punct_ratio
+       |  FROM f),
+       |q AS (
+       |  SELECT doc_id, lang,
+       |    ${TextFunctions.qualityScoreSql("words", "punct_ratio", "avg_word_len", "stop_hits")} AS quality_score
+       |  FROM g),
+       |th AS (
+       |  SELECT lang, ${roundN("quantile_cont(quality_score, 0.25)", 4)} AS lang_p25
+       |  FROM q GROUP BY lang)""".stripMargin
+
+  /** DuckDB form of `Chunking.byTokens` at chunk 32, overlap 8 over a
+    * relation `src(doc_id, t)` of token arrays: CTE `st`, one row per
+    * chunk start (stride 24). */
+  private def chunkStartsCte(src: String): String =
+    s"""st AS (
+       |  SELECT doc_id, t,
+       |    unnest(generate_series(0, GREATEST(len(t) - 1, 0), 24)) AS start
+       |  FROM $src)""".stripMargin
+
+  /** The chunk columns over `st`: doc_id, chunk_id, chunk_text,
+    * n_tokens. */
+  private val chunkColsSql =
+    """doc_id, start // 24 AS chunk_id,
+      |  array_to_string(t[start + 1 : start + 32], ' ') AS chunk_text,
+      |  CAST(len(t[start + 1 : start + 32]) AS BIGINT) AS n_tokens""".stripMargin
+
+  /** `textCol` of `docs` chunked at 32/8, each chunk one JSON line with a
+    * fixed key order: (doc_id, chunk_id, line), ordered. */
+  private def jsonl(docs: DataFrame, textCol: String): DataFrame =
+    Chunking.byTokens(docs, "doc_id", textCol, chunk = 32, overlap = 8)
+      .select(col("id").as("doc_id"), col("chunk_id"),
+        to_json(struct(col("id").as("doc_id"), col("chunk_id"),
+          col("n_tokens"), col("chunk_text").as("text"))).as("line"))
+      .orderBy("doc_id", "chunk_id")
+
+  /** DuckDB form of [[jsonl]] over `st`: CTE `ch`, then the lines. */
+  private val jsonlSql =
+    s"""ch AS (
+       |  SELECT $chunkColsSql
+       |  FROM st)
+       |SELECT doc_id, chunk_id,
+       |  to_json(struct_pack(doc_id := doc_id, chunk_id := chunk_id,
+       |    n_tokens := n_tokens, text := chunk_text)) AS line
+       |FROM ch ORDER BY doc_id, chunk_id""".stripMargin
+
+  /** DuckDB form of `Mixing.temperatureWeights`' inputs: CTEs
+    * `per(source, total_weight)` and `tot(t)`. */
+  private val sourceWeightCtes =
+    s"""per AS (
+       |  SELECT source, ${Det.dsumSql("n_chars", 0)} AS total_weight
+       |  FROM documents GROUP BY source),
+       |tot AS (
+       |  SELECT CAST(SUM(CAST(total_weight AS DECIMAL(18,0))) AS DOUBLE) AS t
+       |  FROM per)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     // SCD2 merge over a customer dimension snapshot: keys % 3 arrive in the
@@ -22,15 +134,11 @@ object Curation {
     // are no-ops; keys above the current table's range are brand-new.
     QueryDef.sql(
       "scd2_merge",
-      """WITH cur AS (
+      s"""WITH cur AS (
         |  SELECT c_custkey, c_mktsegment, DATE '2020-01-01' AS valid_from,
         |         CAST(NULL AS DATE) AS valid_to, TRUE AS is_current
         |  FROM customer WHERE c_custkey <= 1200),
-        |upd AS (
-        |  SELECT c_custkey,
-        |         CASE WHEN c_custkey % 6 = 0 THEN c_mktsegment || '_V2'
-        |              ELSE c_mktsegment END AS c_mktsegment
-        |  FROM customer WHERE c_custkey % 3 = 0)
+        |$segmentUpdatesCte
         |SELECT c.c_custkey, c.c_mktsegment, c.valid_from, c.valid_to, c.is_current
         |FROM cur c LEFT JOIN upd u ON u.c_custkey = c.c_custkey
         |WHERE u.c_custkey IS NULL OR u.c_mktsegment = c.c_mktsegment
@@ -53,10 +161,7 @@ object Curation {
           lit("2020-01-01").cast("date").as("valid_from"),
           lit(null).cast("date").as("valid_to"),
           lit(true).as("is_current"))
-      val updates = cust.filter(col("c_custkey") % 3 === 0)
-        .select(col("c_custkey"),
-          when(col("c_custkey") % 6 === 0, concat(col("c_mktsegment"), lit("_V2")))
-            .otherwise(col("c_mktsegment")).as("c_mktsegment"))
+      val updates = segmentUpdates(cust)
       Scd2.merge(current, updates, "c_custkey", Seq("c_mktsegment"),
           lit("2021-06-01").cast("date"))
         .orderBy("c_custkey", "valid_from")
@@ -72,15 +177,11 @@ object Curation {
     // updated one.
     QueryDef.sql(
       "j_temporal_lookup",
-      """WITH cur AS (
+      s"""WITH cur AS (
         |  SELECT c_custkey, c_mktsegment, DATE '1990-01-01' AS valid_from,
         |         CAST(NULL AS DATE) AS valid_to, TRUE AS is_current
         |  FROM customer),
-        |upd AS (
-        |  SELECT c_custkey,
-        |         CASE WHEN c_custkey % 6 = 0 THEN c_mktsegment || '_V2'
-        |              ELSE c_mktsegment END AS c_mktsegment
-        |  FROM customer WHERE c_custkey % 3 = 0),
+        |$segmentUpdatesCte,
         |dim AS (
         |  SELECT c.c_custkey, c.c_mktsegment, c.valid_from, c.valid_to
         |  FROM cur c LEFT JOIN upd u ON u.c_custkey = c.c_custkey
@@ -105,10 +206,7 @@ object Curation {
           lit("1990-01-01").cast("date").as("valid_from"),
           lit(null).cast("date").as("valid_to"),
           lit(true).as("is_current"))
-      val updates = cust.filter(col("c_custkey") % 3 === 0)
-        .select(col("c_custkey"),
-          when(col("c_custkey") % 6 === 0, concat(col("c_mktsegment"), lit("_V2")))
-            .otherwise(col("c_mktsegment")).as("c_mktsegment"))
+      val updates = segmentUpdates(cust)
       val dim = Scd2.merge(current, updates, "c_custkey", Seq("c_mktsegment"),
         lit("1995-01-01").cast("date"))
       val facts = Tables.orders(s, d)
@@ -130,15 +228,7 @@ object Curation {
     // posting cap, overlap from co-occurrence counts).
     QueryDef.sql(
       "t_contamination",
-      raw"""WITH ${Dedup.shinglesSql("doc_id", "doc_id")},
-         |corp AS (SELECT doc_id, shingle FROM s WHERE doc_id % 20 <> 0),
-         |bench AS (SELECT doc_id AS bench_id, shingle FROM s WHERE doc_id % 20 = 0),
-         |bn AS (SELECT bench_id, COUNT(*) AS bench_n FROM bench GROUP BY 1),
-         |cu AS (
-         |  ${Dedup.cappedPostingsSql("doc_id", "corp", "pn <= 1000")}),
-         |ov AS (
-         |  SELECT cu.doc_id, b.bench_id, COUNT(*) AS ov_n
-         |  FROM cu JOIN bench b USING (shingle) GROUP BY 1, 2),
+      raw"""WITH $benchOverlapCtes,
          |f AS (
          |  SELECT doc_id, bench_id, ov_n AS overlap, bench_n,
          |    ${roundN("ov_n * 1.0 / bench_n", 4)} AS overlap_frac
@@ -161,36 +251,12 @@ object Curation {
     QueryDef.sql(
       "t_quantile_filter",
       raw"""WITH ${TextFunctions.qualityFeaturesSql(Seq("lang"))},
-         |g AS (
-         |  SELECT doc_id, lang, words, stop_hits,
-         |    CASE WHEN words > 0 THEN ${roundN("chars * 1.0 / words", 2)} ELSE 0.0 END AS avg_word_len,
-         |    punct * 1.0 / GREATEST(length(text), 1) AS punct_ratio
-         |  FROM f),
-         |q AS (
-         |  SELECT doc_id, lang,
-         |    ${TextFunctions.qualityScoreSql("words", "punct_ratio", "avg_word_len", "stop_hits")} AS quality_score
-         |  FROM g),
-         |th AS (
-         |  SELECT lang, ${roundN("quantile_cont(quality_score, 0.25)", 4)} AS lang_p25
-         |  FROM q GROUP BY lang)
+         |$langP25Ctes
          |SELECT doc_id, q.lang, CAST(quality_score AS BIGINT) AS quality_score, lang_p25
          |FROM q JOIN th ON th.lang = q.lang
          |WHERE quality_score >= lang_p25
          |ORDER BY doc_id""".stripMargin) { (s, d) =>
-      // staged once: both the threshold aggregate and the gate join read
-      // this narrow (id, lang, score) relation — without the stage the
-      // whole explode→aggregate scoring lineage runs twice
-      val scored = TextFunctions.qualityFeatures(
-          Tables.documents(s, d), "doc_id", "text")
-        .select(col("doc_id"), col("lang"), col("quality_score"))
-        .staged
-      // 4 languages → a tiny threshold table; broadcast it so the corpus
-      // side joins map-side with zero extra shuffle
-      val th = scored.groupBy("lang")
-        .agg(Det.roundN(expr("percentile(quality_score, 0.25D)"), 4)
-          .as("lang_p25"))
-      scored.join(broadcast(th), Seq("lang"))
-        .filter(col("quality_score") >= col("lang_p25"))
+      qualityGated(Tables.documents(s, d))
         .select(col("doc_id"), col("lang"),
           col("quality_score").cast("long").as("quality_score"),
           col("lang_p25"))
@@ -302,13 +368,8 @@ object Curation {
       "t_chunking",
       raw"""WITH toks AS (
          |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
-         |st AS (
-         |  SELECT doc_id, t,
-         |    unnest(generate_series(0, GREATEST(len(t) - 1, 0), 24)) AS start
-         |  FROM toks)
-         |SELECT doc_id, start // 24 AS chunk_id,
-         |  array_to_string(t[start + 1 : start + 32], ' ') AS chunk_text,
-         |  CAST(len(t[start + 1 : start + 32]) AS BIGINT) AS n_tokens
+         |${chunkStartsCte("toks")}
+         |SELECT $chunkColsSql
          |FROM st ORDER BY doc_id, chunk_id""".stripMargin) { (s, d) =>
       Chunking.byTokens(Tables.documents(s, d), "doc_id", "text",
           chunk = 32, overlap = 8)
@@ -326,25 +387,9 @@ object Curation {
       "t_jsonl_export",
       raw"""WITH toks AS (
          |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
-         |st AS (
-         |  SELECT doc_id, t,
-         |    unnest(generate_series(0, GREATEST(len(t) - 1, 0), 24)) AS start
-         |  FROM toks),
-         |ch AS (
-         |  SELECT doc_id, start // 24 AS chunk_id,
-         |    array_to_string(t[start + 1 : start + 32], ' ') AS chunk_text,
-         |    CAST(len(t[start + 1 : start + 32]) AS BIGINT) AS n_tokens
-         |  FROM st)
-         |SELECT doc_id, chunk_id,
-         |  to_json(struct_pack(doc_id := doc_id, chunk_id := chunk_id,
-         |    n_tokens := n_tokens, text := chunk_text)) AS line
-         |FROM ch ORDER BY doc_id, chunk_id""".stripMargin) { (s, d) =>
-      Chunking.byTokens(Tables.documents(s, d), "doc_id", "text",
-          chunk = 32, overlap = 8)
-        .select(col("id").as("doc_id"), col("chunk_id"),
-          to_json(struct(col("id").as("doc_id"), col("chunk_id"),
-            col("n_tokens"), col("chunk_text").as("text"))).as("line"))
-        .orderBy("doc_id", "chunk_id")
+         |${chunkStartsCte("toks")},
+         |$jsonlSql""".stripMargin) { (s, d) =>
+      jsonl(Tables.documents(s, d), "text")
     },
 
     // The round-5 composed curation chain, hash-checked end-to-end:
@@ -363,30 +408,14 @@ object Curation {
          |ct AS (
          |  SELECT doc_id, str_split_regex(clean_text, '\s+') AS t
          |  FROM rebuilt WHERE n_kept >= 20),
-         |st AS (
-         |  SELECT doc_id, t,
-         |    unnest(generate_series(0, GREATEST(len(t) - 1, 0), 24)) AS start
-         |  FROM ct),
-         |ch AS (
-         |  SELECT doc_id, start // 24 AS chunk_id,
-         |    array_to_string(t[start + 1 : start + 32], ' ') AS chunk_text,
-         |    CAST(len(t[start + 1 : start + 32]) AS BIGINT) AS n_tokens
-         |  FROM st)
-         |SELECT doc_id, chunk_id,
-         |  to_json(struct_pack(doc_id := doc_id, chunk_id := chunk_id,
-         |    n_tokens := n_tokens, text := chunk_text)) AS line
-         |FROM ch ORDER BY doc_id, chunk_id""".stripMargin) { (s, d) =>
+         |${chunkStartsCte("ct")},
+         |$jsonlSql""".stripMargin) { (s, d) =>
       val stripped = graft.operators.Dedup.stripDuplicateSpans(
         Tables.documents(s, d), "doc_id", "text", window = 8)
       val gated = stripped
         .filter(col("n_tokens") - col("n_removed") >= 20)
         .select(col("doc_id"), col("clean_text"))
-      Chunking.byTokens(gated, "doc_id", "clean_text",
-          chunk = 32, overlap = 8)
-        .select(col("id").as("doc_id"), col("chunk_id"),
-          to_json(struct(col("id").as("doc_id"), col("chunk_id"),
-            col("n_tokens"), col("chunk_text").as("text"))).as("line"))
-        .orderBy("doc_id", "chunk_id")
+      jsonl(gated, "clean_text")
     },
 
     // The sampling step that CONSUMES the mixing weights: per-source
@@ -399,12 +428,7 @@ object Curation {
     // SamplingSpec additionally proves map ≡ relation variants.
     QueryDef.sql(
       "t_temperature_sample",
-      s"""WITH per AS (
-         |  SELECT source, ${Det.dsumSql("n_chars", 0)} AS total_weight
-         |  FROM documents GROUP BY source),
-         |tot AS (
-         |  SELECT CAST(SUM(CAST(total_weight AS DECIMAL(18,0))) AS DOUBLE) AS t
-         |  FROM per),
+      s"""WITH $sourceWeightCtes,
          |sc AS (
          |  SELECT source,
          |    CASE WHEN t > 0 THEN total_weight / t ELSE 0.0 END AS share,
@@ -448,12 +472,7 @@ object Curation {
     // weights a multi-source training run feeds to stratified sampling.
     QueryDef.sql(
       "t_mix_weights",
-      s"""WITH per AS (
-         |  SELECT source, ${Det.dsumSql("n_chars", 0)} AS total_weight
-         |  FROM documents GROUP BY source),
-         |tot AS (
-         |  SELECT CAST(SUM(CAST(total_weight AS DECIMAL(18,0))) AS DOUBLE) AS t
-         |  FROM per),
+      s"""WITH $sourceWeightCtes,
          |sc AS (
          |  SELECT source, total_weight, total_weight / t AS share,
          |    sqrt(total_weight / t) AS raw
@@ -478,30 +497,11 @@ object Curation {
     QueryDef.sql(
       "t_training_export",
       raw"""WITH ${TextFunctions.qualityFeaturesSql(Seq("lang"), "documents WHERE doc_id % 20 <> 0")},
-         |g AS (
-         |  SELECT doc_id, lang, words, stop_hits,
-         |    CASE WHEN words > 0 THEN ${roundN("chars * 1.0 / words", 2)} ELSE 0.0 END AS avg_word_len,
-         |    punct * 1.0 / GREATEST(length(text), 1) AS punct_ratio
-         |  FROM f),
-         |q AS (
-         |  SELECT doc_id, lang,
-         |    ${TextFunctions.qualityScoreSql("words", "punct_ratio", "avg_word_len", "stop_hits")} AS quality_score
-         |  FROM g),
-         |th AS (
-         |  SELECT lang, ${roundN("quantile_cont(quality_score, 0.25)", 4)} AS lang_p25
-         |  FROM q GROUP BY lang),
+         |$langP25Ctes,
          |gated AS (
          |  SELECT doc_id FROM q JOIN th ON th.lang = q.lang
          |  WHERE quality_score >= lang_p25),
-         |${Dedup.shinglesSql("doc_id", "doc_id")},
-         |corp AS (SELECT doc_id, shingle FROM s WHERE doc_id % 20 <> 0),
-         |bench AS (SELECT doc_id AS bench_id, shingle FROM s WHERE doc_id % 20 = 0),
-         |bn AS (SELECT bench_id, COUNT(*) AS bench_n FROM bench GROUP BY 1),
-         |cu AS (
-         |  ${Dedup.cappedPostingsSql("doc_id", "corp", "pn <= 1000")}),
-         |ov AS (
-         |  SELECT cu.doc_id, b.bench_id, COUNT(*) AS ov_n
-         |  FROM cu JOIN bench b USING (shingle) GROUP BY 1, 2),
+         |$benchOverlapCtes,
          |contaminated AS (
          |  SELECT DISTINCT doc_id FROM ov JOIN bn USING (bench_id)
          |  WHERE ${roundN("ov_n * 1.0 / bench_n", 4)} >= 0.5),
@@ -518,16 +518,7 @@ object Curation {
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(col("doc_id") % 20 =!= 0)
       val bench = docs.filter(col("doc_id") % 20 === 0)
-      // staged once — threshold aggregate + gate join both read it
-      val scored = TextFunctions.qualityFeatures(corpus, "doc_id", "text")
-        .select(col("doc_id"), col("lang"), col("quality_score"))
-        .staged
-      val th = scored.groupBy("lang")
-        .agg(Det.roundN(expr("percentile(quality_score, 0.25D)"), 4)
-          .as("lang_p25"))
-      val gated = scored.join(broadcast(th), Seq("lang"))
-        .filter(col("quality_score") >= col("lang_p25"))
-        .select("doc_id")
+      val gated = qualityGated(corpus).select("doc_id")
       val contaminated = Contamination.ngramOverlap(corpus, bench,
           "doc_id", "text")
         .select("doc_id").distinct()

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{Det, Tables}
 import graft.engine.Stage.syntax._
@@ -20,7 +21,30 @@ import graft.functions.TextFunctions.{hitsSql, langHitsSql}
 object EvalOps {
 
   private val roundN = Det.roundNSql _
+
+  /** DuckDB form of the correctness test under [[accuracyThreshold]]:
+    * the condition `draw < threshold` over `events`. */
+  private val correctDrawSql =
+    s"""${Det.h56Sql("'c:' || CAST(event_id AS VARCHAR)")} % 1000
+       |      < CASE event_type WHEN 'click' THEN 300 WHEN 'error' THEN 150
+       |             WHEN 'purchase' THEN 500 WHEN 'signup' THEN 650
+       |             ELSE 400 END""".stripMargin
+
   private def r12s(e: String) = Det.roundNSql(e, 12)
+
+  /** The "is-English" length classifier's inputs over `documents`:
+    * score `s` = n_chars capped at 500, label `y` = 1 for English. */
+  private def lengthScores(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).select(
+      when(col("n_chars") > 500, 500).otherwise(col("n_chars")).as("s"),
+      when(col("lang") === "en", 1).otherwise(0).as("y"))
+
+  /** DuckDB form of [[lengthScores]]: CTE `f(s, y)`. */
+  private val lengthScoresCte =
+    """f AS (
+      |  SELECT CASE WHEN n_chars > 500 THEN 500 ELSE n_chars END AS s,
+      |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
+      |  FROM documents)""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -31,10 +55,7 @@ object EvalOps {
     // fixed length thresholds ride along, each from the same histogram.
     QueryDef.sql(
       "a_auc_roc",
-      s"""WITH f AS (
-         |  SELECT CASE WHEN n_chars > 500 THEN 500 ELSE n_chars END AS s,
-         |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-         |  FROM documents),
+      s"""WITH $lengthScoresCte,
          |h AS (
          |  SELECT s, COUNT(CASE WHEN y = 1 THEN 1 END) AS c1,
          |    COUNT(CASE WHEN y = 0 THEN 1 END) AS c0
@@ -59,9 +80,7 @@ object EvalOps {
          |  ${roundN("p.fp * 1.0 / n0", 6)} AS fpr,
          |  ${roundN("u2 * 1.0 / (2.0 * n1 * n0)", 6)} AS auc
          |FROM pts p, tot ORDER BY threshold""".stripMargin) { (s, d) =>
-      val f = Tables.documents(s, d).select(
-        when(col("n_chars") > 500, 500).otherwise(col("n_chars")).as("s"),
-        when(col("lang") === "en", 1).otherwise(0).as("y"))
+      val f = lengthScores(s, d)
       val h = f.groupBy("s").agg(
         count(when(col("y") === 1, 1)).as("c1"),
         count(when(col("y") === 0, 1)).as("c0"))
@@ -93,10 +112,7 @@ object EvalOps {
     // are exact rationals.
     QueryDef.sql(
       "a_pr_auc",
-      s"""WITH f AS (
-         |  SELECT CASE WHEN n_chars > 500 THEN 500 ELSE n_chars END AS s,
-         |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-         |  FROM documents),
+      s"""WITH $lengthScoresCte,
          |h AS (
          |  SELECT s, COUNT(CASE WHEN y = 1 THEN 1 END) AS c1,
          |    COUNT(*) AS c FROM f GROUP BY 1),
@@ -118,9 +134,7 @@ object EvalOps {
          |    AS pr_auc
          |FROM pr ORDER BY score DESC""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val f = Tables.documents(s, d).select(
-        when(col("n_chars") > 500, 500).otherwise(col("n_chars")).as("s"),
-        when(col("lang") === "en", 1).otherwise(0).as("y"))
+      val f = lengthScores(s, d)
       val h = f.groupBy("s").agg(
         count(when(col("y") === 1, 1)).as("c1"), count(lit(1)).as("c"))
       val tot = h.agg(sum("c1").as("n1"))
@@ -624,10 +638,7 @@ object EvalOps {
               .mkString(" * ") + " END"
         s"""WITH runs AS (
            |  SELECT event_id % 200 AS task_id, event_type AS model,
-           |    CASE WHEN ${Det.h56Sql("'c:' || CAST(event_id AS VARCHAR)")} % 1000
-           |      < CASE event_type WHEN 'click' THEN 300 WHEN 'error' THEN 150
-           |             WHEN 'purchase' THEN 500 WHEN 'signup' THEN 650
-           |             ELSE 400 END
+           |    CASE WHEN $correctDrawSql
            |    THEN 1 ELSE 0 END AS correct
            |  FROM events),
            |pt AS (
@@ -674,10 +685,7 @@ object EvalOps {
       s"""WITH runs AS (
          |  SELECT event_id % 200 AS task_id, event_type AS model,
          |    CAST(event_id % 200 AS BIGINT) % 4 AS gold,
-         |    CASE WHEN ${Det.h56Sql("'c:' || CAST(event_id AS VARCHAR)")} % 1000
-         |      < CASE event_type WHEN 'click' THEN 300 WHEN 'error' THEN 150
-         |             WHEN 'purchase' THEN 500 WHEN 'signup' THEN 650
-         |             ELSE 400 END
+         |    CASE WHEN $correctDrawSql
          |    THEN CAST(event_id % 200 AS BIGINT) % 4
          |    ELSE ${Det.h56Sql("'a:' || CAST(event_id AS VARCHAR)")} % 4
          |    END AS answer
@@ -771,10 +779,7 @@ object EvalOps {
       "e_winrate_matrix",
       s"""WITH runs AS (
          |  SELECT event_id % 200 AS task_id, event_type AS model,
-         |    CASE WHEN ${Det.h56Sql("'c:' || CAST(event_id AS VARCHAR)")} % 1000
-         |      < CASE event_type WHEN 'click' THEN 300 WHEN 'error' THEN 150
-         |             WHEN 'purchase' THEN 500 WHEN 'signup' THEN 650
-         |             ELSE 400 END
+         |    CASE WHEN $correctDrawSql
          |    THEN 1 ELSE 0 END AS correct,
          |    ${Det.h56Sql("'s:' || CAST(event_id AS VARCHAR)")} % 1000 AS draw
          |  FROM events),
@@ -889,10 +894,7 @@ object EvalOps {
       s"""WITH runs AS (
          |  SELECT event_type AS model,
          |    CASE WHEN event_id % 200 % 10 = 0 THEN 1 ELSE 0 END AS contam,
-         |    CASE WHEN ${Det.h56Sql("'c:' || CAST(event_id AS VARCHAR)")} % 1000
-         |      < CASE event_type WHEN 'click' THEN 300 WHEN 'error' THEN 150
-         |             WHEN 'purchase' THEN 500 WHEN 'signup' THEN 650
-         |             ELSE 400 END
+         |    CASE WHEN $correctDrawSql
          |        + CASE WHEN event_id % 200 % 10 = 0 THEN 250 ELSE 0 END
          |    THEN 1 ELSE 0 END AS correct
          |  FROM events)
@@ -911,16 +913,11 @@ object EvalOps {
              "CAST(SUM(CASE WHEN contam = 0 THEN correct ELSE 0 END) AS DOUBLE)" +
              " / COUNT(CASE WHEN contam = 0 THEN 1 END)", 6)} AS inflation
          |FROM runs GROUP BY 1 ORDER BY model""".stripMargin) { (s, d) =>
-      val thr = when(col("event_type") === "click", 300)
-        .when(col("event_type") === "error", 150)
-        .when(col("event_type") === "purchase", 500)
-        .when(col("event_type") === "signup", 650)
-        .otherwise(400)
       val contam = when(col("event_id") % 200 % 10 === 0, 1).otherwise(0)
       val runs = Tables.events(s, d).select(
         col("event_type").as("model"), contam.as("contam"),
         when(Det.h56(concat(lit("c:"), col("event_id").cast("string")))
-          % 1000 < thr + contam * 250, 1).otherwise(0).as("correct"))
+          % 1000 < accuracyThreshold + contam * 250, 1).otherwise(0).as("correct"))
       def accOf(c: Int) =
         sum(when(col("contam") === c, col("correct")).otherwise(0))
           .cast("double") / count(when(col("contam") === c, 1))
@@ -934,21 +931,24 @@ object EvalOps {
     },
   )
 
+  /** Per-model accuracy threshold of the synthetic eval runs: a sample
+    * is correct when its h56 'c:' draw mod 1000 falls below it. */
+  private def accuracyThreshold = when(col("event_type") === "click", 300)
+    .when(col("event_type") === "error", 150)
+    .when(col("event_type") === "purchase", 500)
+    .when(col("event_type") === "signup", 650)
+    .otherwise(400)
+
   /** Shared synthetic eval-run relation: task = event_id mod 200,
     * model = event_type, per-sample correctness from the h56 draw under
     * per-model accuracy thresholds. */
   private def evalRuns(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val thr = when(col("event_type") === "click", 300)
-      .when(col("event_type") === "error", 150)
-      .when(col("event_type") === "purchase", 500)
-      .when(col("event_type") === "signup", 650)
-      .otherwise(400)
     Tables.events(s, d).select(
       (col("event_id") % 200).as("task_id"),
       col("event_type").as("model"),
       col("event_id"),
       when(Det.h56(concat(lit("c:"), col("event_id").cast("string")))
-        % 1000 < thr, 1).otherwise(0).as("correct"))
+        % 1000 < accuracyThreshold, 1).otherwise(0).as("correct"))
   }
 }

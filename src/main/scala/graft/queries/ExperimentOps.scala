@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -59,6 +59,48 @@ object ExperimentOps {
     s"(((((1.061405429 * $t - 1.453152027) * $t + 1.421413741) * $t" +
       s" - 0.284496736) * $t + 0.254829592) * $t * exp(-($x * $x)))"
   }
+
+  /** Per nation: its orders `n` and fulfilled ('F') orders `k`. */
+  private def nationFulfilled(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d)
+      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.nation(s, d)),
+        col("c_nationkey") === col("n_nationkey"))
+      .groupBy("n_name").agg(
+        count(lit(1)).as("n"),
+        sum(when(col("o_orderstatus") === "F", 1).otherwise(0))
+          .cast("long").as("k"))
+
+  /** DuckDB form of [[nationFulfilled]]: CTE `pn(n_name, n, k)`. */
+  private val nationFulfilledCte =
+    """pn AS (
+      |  SELECT n.n_name, COUNT(*) AS n,
+      |    CAST(SUM(CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END)
+      |      AS BIGINT) AS k
+      |  FROM orders o
+      |  JOIN customer c ON o.o_custkey = c.c_custkey
+      |  JOIN nation n ON c.c_nationkey = n.n_nationkey
+      |  GROUP BY 1)""".stripMargin
+
+  /** Orders with their customer's nation as stratum `st`, the treatment
+    * flag `t` (1 for urgent or high priority) and the `outcome` column. */
+  private def treated(s: SparkSession, d: String, outcome: Column): DataFrame =
+    Tables.orders(s, d)
+      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
+      .select(col("c_nationkey").as("st"),
+        when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
+          .otherwise(0).as("t"),
+        outcome)
+
+  /** DuckDB form of [[treated]]: CTE `j(st, t, outcome)` over `orders o`
+    * and `customer c`. */
+  private def treatedCte(outcome: String): String =
+    s"""j AS (
+       |  SELECT c.c_nationkey AS st,
+       |    CASE WHEN o.o_orderpriority IN ('1-URGENT','2-HIGH')
+       |         THEN 1 ELSE 0 END AS t,
+       |    $outcome
+       |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey)""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -258,14 +300,7 @@ object ExperimentOps {
       "a_bh_fdr", {
         val zSql = "(CAST(k AS DOUBLE) / CAST(n AS DOUBLE) - p0)" +
           " / sqrt(p0 * (1.0 - p0) / CAST(n AS DOUBLE))"
-        s"""WITH pn AS (
-           |  SELECT n.n_name, COUNT(*) AS n,
-           |    CAST(SUM(CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS k
-           |  FROM orders o
-           |  JOIN customer c ON o.o_custkey = c.c_custkey
-           |  JOIN nation n ON c.c_nationkey = n.n_nationkey
-           |  GROUP BY 1),
+        s"""WITH $nationFulfilledCte,
            |pool AS (
            |  SELECT CAST(SUM(k) AS DOUBLE) / CAST(SUM(n) AS DOUBLE) AS p0
            |  FROM pn),
@@ -291,14 +326,7 @@ object ExperimentOps {
            |  CASE WHEN p_rank <= cutoff THEN 1 ELSE 0 END AS rejected
            |FROM cut ORDER BY p_rank""".stripMargin
       }) { (s, d) =>
-      val pn = Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .groupBy("n_name").agg(
-          count(lit(1)).as("n"),
-          sum(when(col("o_orderstatus") === "F", 1).otherwise(0))
-            .cast("long").as("k"))
+      val pn = nationFulfilled(s, d)
       val pool = pn.agg(
         (sum("k").cast("double") / sum("n").cast("double")).as("p0"))
       val tests = pn.crossJoin(broadcast(pool)).withColumn("z",
@@ -468,12 +496,7 @@ object ExperimentOps {
     // effect the weighting removes.
     QueryDef.sql(
       "a_ipw_estimate", {
-        s"""WITH j AS (
-           |  SELECT c.c_nationkey AS st,
-           |    CASE WHEN o.o_orderpriority IN ('1-URGENT','2-HIGH')
-           |         THEN 1 ELSE 0 END AS t,
-           |    o.o_totalprice AS y
-           |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey),
+        s"""WITH ${treatedCte("o.o_totalprice AS y")},
            |ps AS (
            |  SELECT st,
            |    CAST(SUM(t) AS BIGINT) AS n_t,
@@ -513,12 +536,7 @@ object ExperimentOps {
       }) { (s, d) =>
       val dec2 = DecimalType(18, 2)
       val zero2 = lit(0).cast(dec2)
-      val j = Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .select(col("c_nationkey").as("st"),
-          when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
-            .otherwise(0).as("t"),
-          col("o_totalprice").as("y"))
+      val j = treated(s, d, col("o_totalprice").as("y"))
       val ps = j.groupBy("st").agg(
         sum("t").cast("long").as("n_t"),
         sum(expr("1 - t")).cast("long").as("n_c"),
@@ -889,12 +907,7 @@ object ExperimentOps {
     // order-free. ln/exp/sqrt appear once, on identical reduced doubles.
     QueryDef.sql(
       "a_mantel_haenszel", {
-        s"""WITH j AS (
-           |  SELECT c.c_nationkey AS st,
-           |    CASE WHEN o.o_orderpriority IN ('1-URGENT','2-HIGH')
-           |         THEN 1 ELSE 0 END AS t,
-           |    CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END AS f
-           |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey),
+        s"""WITH ${treatedCte("CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END AS f")},
            |cells AS (
            |  SELECT st,
            |    CAST(SUM(t * f) AS BIGINT) AS a,
@@ -931,12 +944,7 @@ object ExperimentOps {
            |  ${roundN("exp(ln_or + 1.959964 * se)", 6)} AS ci_hi
            |FROM fin""".stripMargin
       }) { (s, d) =>
-      val j = Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .select(col("c_nationkey").as("st"),
-          when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
-            .otherwise(0).as("t"),
-          when(col("o_orderstatus") === "F", 1).otherwise(0).as("f"))
+      val j = treated(s, d, when(col("o_orderstatus") === "F", 1).otherwise(0).as("f"))
       val cells = j.groupBy("st").agg(
         sum(col("t") * col("f")).cast("long").as("a"),
         sum(col("t") * (lit(1) - col("f"))).cast("long").as("b"),
@@ -987,14 +995,7 @@ object ExperimentOps {
     QueryDef.sql(
       "a_power_mde", {
         val zsum = "2.801585" // z_{0.025} + z_{0.20} = 1.959964 + 0.841621
-        s"""WITH pn AS (
-           |  SELECT n.n_name, COUNT(*) AS n,
-           |    CAST(SUM(CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS k
-           |  FROM orders o
-           |  JOIN customer c ON o.o_custkey = c.c_custkey
-           |  JOIN nation n ON c.c_nationkey = n.n_nationkey
-           |  GROUP BY 1),
+        s"""WITH $nationFulfilledCte,
            |rt AS (
            |  SELECT n_name, n, CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS p
            |  FROM pn),
@@ -1010,14 +1011,7 @@ object ExperimentOps {
            |ORDER BY n_name, target_mde""".stripMargin
       }) { (s, d) =>
       val zsum = lit(2.801585)
-      val pn = Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .groupBy("n_name").agg(
-          count(lit(1)).as("n"),
-          sum(when(col("o_orderstatus") === "F", 1).otherwise(0))
-            .cast("long").as("k"))
+      val pn = nationFulfilled(s, d)
       val rt = pn.select(col("n_name"), col("n"),
         (col("k").cast("double") / col("n").cast("double")).as("p"))
       val grid = s.range(0, 3).select(

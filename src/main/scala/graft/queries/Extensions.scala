@@ -95,14 +95,37 @@ object Extensions {
     * (fine at sf0.1, but 280 s+ / a disk-filling spill on the sf1
     * lake); materialized, the closure iterates over the pair list
     * alone. */
+  /** The pairs of CTE `inter` whose Jaccard over `sizes`, pinned to 4
+    * places, is at least 0.8: (id_a, id_b, jaccard), ordered. */
+  private val jaccardPairsSql =
+    s"""j AS (
+       |  SELECT id_a, id_b,
+       |    ${roundN("inter * 1.0 / (sa.n + sb.n - inter)", 4)} AS jaccard
+       |  FROM inter JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b)
+       |SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.8
+       |ORDER BY id_a, id_b""".stripMargin
+
+  /** CTE `f(doc_id, words, chars, stop_hits)`: the document measurements
+    * the rule filters read. */
+  private val ruleFeaturesCte =
+    raw"""f AS (
+       |  SELECT doc_id,
+       |    len(${tokensSql("text")}) AS words,
+       |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
+       |    ${hitsSql("text", TextFunctions.stopwordsEn)} AS stop_hits
+       |  FROM documents)""".stripMargin
+
+  /** The tail of the BPE oracles' word CTE: each document's non-empty
+    * tokens as `words`, from `documents`. */
+  private val bpeWordsSql =
+    s"""list_filter(${tokensSql("text")},
+       |                x -> x <> '') AS words
+       |  FROM documents),""".stripMargin
+
   private val ngramClusterCte: String =
-    raw"""WITH RECURSIVE ${Dedup.shinglesSql("doc_id AS id", "id")},
-       |sizes AS (SELECT id, COUNT(*) AS n FROM s GROUP BY 1),
+    raw"""WITH RECURSIVE ${Dedup.shingleSizesSql},
        |${Dedup.usefulPostingsSql},
-       |inter AS (
-       |  SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS inter
-       |  FROM useful a JOIN useful b USING (shingle)
-       |  WHERE a.id < b.id GROUP BY 1, 2),
+       |${Dedup.pairInterSql("useful")},
        |pairs AS MATERIALIZED (
        |  SELECT id_a, id_b
        |  FROM inter JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b
@@ -130,8 +153,7 @@ object Extensions {
     * the two cannot drift apart. */
   private[queries] val minhashPairsCte: String = {
     val bandRows = Dedup.NumHashes / Dedup.Bands
-    raw"""WITH ${Dedup.shinglesSql("doc_id AS id", "id")},
-       |sizes AS (SELECT id, COUNT(*) AS n FROM s GROUP BY 1),
+    raw"""WITH ${Dedup.shingleSizesSql},
        |shh AS (
        |  SELECT id, shingle, ${Det.h56Sql("shingle")} AS h1,
        |    ${Det.h56Sql("shingle", 17)} AS h2
@@ -380,12 +402,7 @@ object Extensions {
     // the underlying measurements.
     QueryDef.sql(
       "t_rule_gate",
-      raw"""WITH f AS (
-         |  SELECT doc_id,
-         |    len(${tokensSql("text")}) AS words,
-         |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
-         |    ${hitsSql("text", TextFunctions.stopwordsEn)} AS stop_hits
-         |  FROM documents),
+      raw"""WITH $ruleFeaturesCte,
          |g AS (
          |  SELECT doc_id, words,
          |    CASE WHEN words > 0 THEN ${roundN("chars * 1.0 / words", 2)} ELSE 0.0 END AS awl,
@@ -419,12 +436,7 @@ object Extensions {
     // two rules charges the FIRST), so n_in/n_out telescope exactly.
     QueryDef.sql(
       "t_filter_funnel",
-      raw"""WITH f AS (
-         |  SELECT doc_id,
-         |    len(${tokensSql("text")}) AS words,
-         |    length(regexp_replace(text, '\s+', '', 'g')) AS chars,
-         |    ${hitsSql("text", TextFunctions.stopwordsEn)} AS stop_hits
-         |  FROM documents),
+      raw"""WITH $ruleFeaturesCte,
          |g AS (
          |  SELECT doc_id, words < 30 AS f1, words > 80 AS f2,
          |    (CASE WHEN words > 0 THEN ${roundN("chars * 1.0 / words", 2)} ELSE 0.0 END < 3.0
@@ -487,9 +499,7 @@ object Extensions {
       "t_bpe_tokenize",
       s"""WITH w AS (
          |  SELECT doc_id,
-         |    list_filter(${tokensSql("text")},
-         |                x -> x <> '') AS words
-         |  FROM documents),
+         |    $bpeWordsSql
          |t AS (
          |  SELECT doc_id, len(words) AS n_words,
          |    flatten(list_transform(words,
@@ -518,9 +528,7 @@ object Extensions {
       "t_bpe_chunking",
       s"""WITH w AS (
          |  SELECT doc_id,
-         |    list_filter(${tokensSql("text")},
-         |                x -> x <> '') AS words
-         |  FROM documents),
+         |    $bpeWordsSql
          |t AS (
          |  SELECT doc_id,
          |    len(flatten(list_transform(words,
@@ -554,9 +562,7 @@ object Extensions {
       "t_bpe_fertility",
       s"""WITH w AS (
          |  SELECT doc_id, lang,
-         |    list_filter(${tokensSql("text")},
-         |                x -> x <> '') AS words
-         |  FROM documents),
+         |    $bpeWordsSql
          |t AS (
          |  SELECT doc_id, lang, len(words) AS n_words,
          |    flatten(list_transform(words,
@@ -630,10 +636,9 @@ object Extensions {
       }) { (s, d) =>
       val docs = Tables.documents(s, d)
       val feats = TextFunctions.tokenFeatures(docs, "doc_id", "text")
-      val h = TextFunctions.langMarkers.map { case (l, _) => l -> col(s"hits_$l") }.toMap
       docs.join(feats, "doc_id")
         .select(col("doc_id"), col("lang").as("declared_lang"),
-          TextFunctions.langId(h).as("detected_lang"))
+          TextFunctions.langId(TextFunctions.featureHits).as("detected_lang"))
         .orderBy("doc_id")
     },
 
@@ -1116,19 +1121,10 @@ object Extensions {
     // Jaccard from co-occurrence counts.
     QueryDef.sql(
       "dedup_ngram_jaccard",
-      raw"""WITH ${Dedup.shinglesSql("doc_id AS id", "id")},
-         |sizes AS (SELECT id, COUNT(*) AS n FROM s GROUP BY 1),
+      raw"""WITH ${Dedup.shingleSizesSql},
          |${Dedup.usefulPostingsSql},
-         |inter AS (
-         |  SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS inter
-         |  FROM useful a JOIN useful b USING (shingle)
-         |  WHERE a.id < b.id GROUP BY 1, 2),
-         |j AS (
-         |  SELECT id_a, id_b,
-         |    ${roundN("inter * 1.0 / (sa.n + sb.n - inter)", 4)} AS jaccard
-         |  FROM inter JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b)
-         |SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.8
-         |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
+         |${Dedup.pairInterSql("useful")},
+         |$jaccardPairsSql""".stripMargin) { (s, d) =>
       Dedup.ngramJaccardDups(Tables.documents(s, d), "doc_id", "text")
         .orderBy("id_a", "id_b")
     },
@@ -1140,13 +1136,9 @@ object Extensions {
     // into its two directed containment rows.
     QueryDef.sql(
       "dedup_containment",
-      raw"""WITH ${Dedup.shinglesSql("doc_id AS id", "id")},
-         |sizes AS (SELECT id, COUNT(*) AS n FROM s GROUP BY 1),
+      raw"""WITH ${Dedup.shingleSizesSql},
          |${Dedup.usefulPostingsSql},
-         |inter AS (
-         |  SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS inter
-         |  FROM useful a JOIN useful b USING (shingle)
-         |  WHERE a.id < b.id GROUP BY 1, 2),
+         |${Dedup.pairInterSql("useful")},
          |dirs AS (
          |  SELECT id_a AS id_sub, id_b AS id_sup,
          |    ${roundN("inter * 1.0 / sa.n", 4)} AS containment
@@ -1168,18 +1160,9 @@ object Extensions {
     // zero-false-negative claim the prefix filter makes.
     QueryDef.sql(
       "dedup_prefix_join",
-      raw"""WITH ${Dedup.shinglesSql("doc_id AS id", "id")},
-         |sizes AS (SELECT id, COUNT(*) AS n FROM s GROUP BY 1),
-         |inter AS (
-         |  SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS inter
-         |  FROM s a JOIN s b USING (shingle)
-         |  WHERE a.id < b.id GROUP BY 1, 2),
-         |j AS (
-         |  SELECT id_a, id_b,
-         |    ${roundN("inter * 1.0 / (sa.n + sb.n - inter)", 4)} AS jaccard
-         |  FROM inter JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b)
-         |SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.8
-         |ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
+      raw"""WITH ${Dedup.shingleSizesSql},
+         |${Dedup.pairInterSql("s")},
+         |$jaccardPairsSql""".stripMargin) { (s, d) =>
       Dedup.prefixJaccardJoin(Tables.documents(s, d), "doc_id", "text")
         .orderBy("id_a", "id_b")
     },
@@ -1498,23 +1481,12 @@ object Extensions {
     // recall-checked.
     QueryDef.sql(
       "sim_ivf_batch",
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-         |${Fixtures.codebookCte},
-         |${Fixtures.queryProbesCtes},
-         |${Fixtures.assignedCtes},
-         |hits AS (
-         |  SELECT p.query_id, a.vec_id, a.cell,
-         |    ${roundN(cosSql("a.emb", "p.qe"), 6)} AS cosine
-         |  FROM assigned a JOIN probes p USING (cell))
-         |SELECT query_id, vec_id, cell, cosine FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, vec_id) AS rk FROM hits)
-         |WHERE rk <= 5
-         |ORDER BY query_id, cosine DESC, vec_id""".stripMargin) { (s, d) =>
+      s"""WITH ${Fixtures.probedBatchCtes},
+         |${Fixtures.probedHitsCte}
+         |${Fixtures.topFiveSql("hits")}""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val centroids = Fixtures.codebook(emb)
-      val qs = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+      val qs = Fixtures.queryBatch(emb)
       Similarity.ivfTopKBatch(emb, centroids, qs, k = 5, nProbe = 4)
         .orderBy(col("query_id"), desc("cosine"), col("vec_id"))
     },
@@ -1569,17 +1541,8 @@ object Extensions {
       "sim_knn_graph",
       s"""WITH e AS (
          |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-         |kk AS (SELECT ${graft.operators.Similarity.ivfCellsSql(
-              "COUNT(*)")} AS k FROM e),
-         |cent AS (SELECT vec_id AS cell, emb AS ce FROM e, kk
-         |  WHERE vec_id < kk.k),
-         |rk AS (
-         |  SELECT e.vec_id, e.emb, c.cell,
-         |    row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY ${cosSql("e.emb", "c.ce")} DESC, c.cell) AS rn
-         |  FROM e CROSS JOIN cent c),
-         |asg AS (SELECT vec_id, emb, cell FROM rk WHERE rn = 1),
-         |pr AS (SELECT vec_id AS src, emb AS qe, cell FROM rk WHERE rn <= 2),
+         |${Similarity.seedCentroidsCtes},
+         |${Similarity.knnProbeCtes(2)},
          |nb AS (
          |  SELECT src, dst, cosine FROM (
          |    SELECT p.src, a.vec_id AS dst,
@@ -2059,10 +2022,9 @@ object Extensions {
         Det.roundN(col("chars_nospace").cast("double") / wc, 2)).otherwise(0.0)
       val punctRatio = TextFunctions.punctCount(col("text")).cast("double") /
         greatest(length(col("text")).cast("double"), lit(1.0))
-      val h = TextFunctions.langMarkers.map { case (l, _) => l -> col(s"hits_$l") }.toMap
       val scored = docs.join(feats, "doc_id")
         .select(col("doc_id"), col("text"),
-          TextFunctions.langId(h).as("detected_lang"),
+          TextFunctions.langId(TextFunctions.featureHits).as("detected_lang"),
           TextFunctions.qualityScore(wc, punctRatio, awl, col("stop_hits"))
             .as("quality_score"))
       val kept = scored

@@ -34,6 +34,12 @@ object GoldRollups {
         Det.roundN(lit(100.0) - errPct, 2).as("quality"))
   }
 
+  /** The conversion funnel's steps, in order. */
+  private val FunnelSteps = Seq("view", "click", "purchase")
+
+  /** The conversion window of `q_funnel_windowed`. */
+  private val FunnelWindowHours = 48
+
   private val dailyBaseSql =
     s"""daily AS (
        |  SELECT CAST(ts AS DATE) AS d, COUNT(*) AS records,
@@ -257,31 +263,9 @@ object GoldRollups {
     // any log size.
     QueryDef.sql(
       "q_funnel_conversion",
-      s"""WITH s1 AS (
-         |  SELECT user_id, MIN(ts) AS t FROM events
-         |  WHERE event_type = 'view' GROUP BY 1),
-         |s2 AS (
-         |  SELECT e.user_id, MIN(e.ts) AS t FROM events e
-         |  JOIN s1 ON s1.user_id = e.user_id
-         |  WHERE e.event_type = 'click' AND e.ts > s1.t GROUP BY 1),
-         |s3 AS (
-         |  SELECT e.user_id, MIN(e.ts) AS t FROM events e
-         |  JOIN s2 ON s2.user_id = e.user_id
-         |  WHERE e.event_type = 'purchase' AND e.ts > s2.t GROUP BY 1),
-         |c AS (
-         |  SELECT 1 AS step, 'view' AS step_type, COUNT(*) AS n FROM s1
-         |  UNION ALL
-         |  SELECT 2, 'click', COUNT(*) FROM s2
-         |  UNION ALL
-         |  SELECT 3, 'purchase', COUNT(*) FROM s3),
-         |f AS (SELECT n AS n1 FROM c WHERE step = 1)
-         |SELECT CAST(step AS BIGINT) AS step, step_type,
-         |  n AS n_entities,
-         |  CASE WHEN n1 > 0 THEN ${roundN("n * 1.0 / n1", 4)}
-         |    ELSE 0.0 END AS pct_of_first
-         |FROM c, f ORDER BY step""".stripMargin) { (s, d) =>
+      EventAnalytics.funnelOracleSql(FunnelSteps, None)) { (s, d) =>
       EventAnalytics.funnel(Tables.events(s, d), "user_id", "event_type",
-          "ts", Seq("view", "click", "purchase"))
+          "ts", FunnelSteps)
         .orderBy("step")
     },
 
@@ -292,34 +276,11 @@ object GoldRollups {
     // converted-but-slowly population.
     QueryDef.sql(
       "q_funnel_windowed",
-      s"""WITH s1 AS (
-         |  SELECT user_id, MIN(ts) AS t FROM events
-         |  WHERE event_type = 'view' GROUP BY 1),
-         |s2 AS (
-         |  SELECT e.user_id, MIN(e.ts) AS t FROM events e
-         |  JOIN s1 ON s1.user_id = e.user_id
-         |  WHERE e.event_type = 'click' AND e.ts > s1.t
-         |    AND e.ts <= s1.t + INTERVAL 48 HOUR GROUP BY 1),
-         |s3 AS (
-         |  SELECT e.user_id, MIN(e.ts) AS t FROM events e
-         |  JOIN s2 ON s2.user_id = e.user_id
-         |  WHERE e.event_type = 'purchase' AND e.ts > s2.t
-         |    AND e.ts <= s2.t + INTERVAL 48 HOUR GROUP BY 1),
-         |c AS (
-         |  SELECT 1 AS step, 'view' AS step_type, COUNT(*) AS n FROM s1
-         |  UNION ALL
-         |  SELECT 2, 'click', COUNT(*) FROM s2
-         |  UNION ALL
-         |  SELECT 3, 'purchase', COUNT(*) FROM s3),
-         |f AS (SELECT n AS n1 FROM c WHERE step = 1)
-         |SELECT CAST(step AS BIGINT) AS step, step_type,
-         |  n AS n_entities,
-         |  CASE WHEN n1 > 0 THEN ${roundN("n * 1.0 / n1", 4)}
-         |    ELSE 0.0 END AS pct_of_first
-         |FROM c, f ORDER BY step""".stripMargin) { (s, d) =>
+      EventAnalytics.funnelOracleSql(FunnelSteps, Some(FunnelWindowHours))) {
+      (s, d) =>
       EventAnalytics.funnel(Tables.events(s, d), "user_id", "event_type",
-          "ts", Seq("view", "click", "purchase"),
-          maxGap = Some(expr("INTERVAL 48 HOUR")))
+          "ts", FunnelSteps,
+          maxGap = Some(expr(s"INTERVAL $FunnelWindowHours HOUR")))
         .orderBy("step")
     },
 
@@ -393,11 +354,7 @@ object GoldRollups {
     // is total.
     QueryDef.sql(
       "q_event_transitions",
-      s"""WITH steps AS (
-         |  SELECT event_type AS from_type,
-         |    LEAD(event_type) OVER (PARTITION BY user_id
-         |                           ORDER BY ts, event_id) AS to_type
-         |  FROM events),
+      s"""WITH ${EventAnalytics.transitionStepsCte},
          |counts AS (
          |  SELECT from_type, to_type, COUNT(*) AS n_transitions
          |  FROM steps WHERE to_type IS NOT NULL GROUP BY 1, 2)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.{Det, Tables}
@@ -165,6 +165,104 @@ object ScaleOps {
        |SELECT o_custkey, rec_part, score, rk FROM rk WHERE rk <= 3
        |ORDER BY o_custkey, rk""".stripMargin
 
+  /** Order counts and price totals over the grouping sets `sets`
+    * ("ROLLUP" or "CUBE") of (o_orderstatus, o_orderpriority); `grouped`
+    * is the same grouping in Spark. GROUPING() flags disambiguate subtotal
+    * rows from genuine NULL groups, keeping the ORDER BY key unique even
+    * if the data grows NULL group values. */
+  private def orderGroupingSets(name: String, sets: String,
+      grouped: DataFrame => RelationalGroupedDataset): QueryDef =
+    QueryDef.sql(
+      name,
+      s"""SELECT o_orderstatus, o_orderpriority,
+         |  CAST(GROUPING(o_orderstatus) AS INT) AS g_status,
+         |  CAST(GROUPING(o_orderpriority) AS INT) AS g_priority,
+         |  COUNT(*) AS n_orders,
+         |  ${Det.dsumSql("o_totalprice")} AS total_price
+         |FROM orders
+         |GROUP BY $sets (o_orderstatus, o_orderpriority)
+         |ORDER BY g_status, g_priority, o_orderstatus NULLS FIRST,
+         |         o_orderpriority NULLS FIRST""".stripMargin) { (s, d) =>
+      grouped(Tables.orders(s, d))
+        .agg(grouping(col("o_orderstatus")).cast("int").as("g_status"),
+          grouping(col("o_orderpriority")).cast("int").as("g_priority"),
+          count(lit(1)).as("n_orders"),
+          Det.dsum(col("o_totalprice")).as("total_price"))
+        .orderBy(col("g_status"), col("g_priority"),
+          col("o_orderstatus").asc_nulls_first,
+          col("o_orderpriority").asc_nulls_first)
+    }
+
+  /** The per-user daily value series ([[Fixtures.userDaily]]) of every
+    * user but user 1, and user 1's as the query `(d, qv)`. */
+  private def userOneSeries(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val daily = Fixtures.userDaily(Tables.events(s, d))
+    (daily.filter(col("user_id") =!= 1),
+      daily.filter(col("user_id") === 1).select(col("d"), col("v").as("qv")))
+  }
+
+  /** DuckDB form of [[userOneSeries]]: CTEs `daily(user_id, d, v)` and
+    * `q(d, qv)`. */
+  private val userOneSeriesCtes =
+    s"""daily AS (
+       |  SELECT user_id, CAST(ts AS DATE) AS d,
+       |    ${Det.dsumSql("value")} AS v
+       |  FROM events GROUP BY 1, 2),
+       |q AS (SELECT d, v AS qv FROM daily WHERE user_id = 1)""".stripMargin
+
+  /** DuckDB form of the Pearson step of `TimeSeries.correlationTopK` and
+    * `bestLagCorrelation` over a CTE `j(keys…, v, qv)`: the decimal sums
+    * `st` per key, then `r(keys…, n, corr_r)` for keys with 10 or more
+    * points, corr_r pinned to 6 places (0 when a variance is 0). */
+  private def pearsonCtes(keys: String): String = {
+    val groups = keys.split(",").indices.map(_ + 1).mkString(", ")
+    s"""st AS (
+       |  SELECT $keys, COUNT(*) AS n,
+       |    CAST(SUM(CAST(v AS DECIMAL(28,6))) AS DOUBLE) AS sx,
+       |    CAST(SUM(CAST(qv AS DECIMAL(28,6))) AS DOUBLE) AS sy,
+       |    CAST(SUM(CAST(v * qv AS DECIMAL(28,6))) AS DOUBLE) AS sxy,
+       |    CAST(SUM(CAST(v * v AS DECIMAL(28,6))) AS DOUBLE) AS sxx,
+       |    CAST(SUM(CAST(qv * qv AS DECIMAL(28,6))) AS DOUBLE) AS syy
+       |  FROM j GROUP BY $groups),
+       |r AS (
+       |  SELECT $keys, n,
+       |    CASE WHEN (n * sxx - sx * sx) > 0 AND (n * syy - sy * sy) > 0
+       |      THEN ${Det.roundNSql("(n * sxy - sx * sy) / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy))", 6)}
+       |      ELSE 0.0 END AS corr_r
+       |  FROM st WHERE n >= 10)""".stripMargin
+  }
+
+  /** Exact distinct o_custkey per o_orderpriority next to the estimate
+    * `est(o_orderpriority, est_distinct)`, with the relative error pinned
+    * to 4 places, ordered. */
+  private def kmvReport(orders: DataFrame, est: DataFrame): DataFrame = {
+    val exact = orders.groupBy("o_orderpriority")
+      .agg(countDistinct(col("o_custkey")).as("exact_distinct"))
+    est.join(exact, Seq("o_orderpriority"))
+      .withColumn("rel_err", Det.roundN(
+        abs(col("est_distinct") - col("exact_distinct"))
+          / col("exact_distinct"), 4))
+      .orderBy("o_orderpriority")
+  }
+
+  /** A rank-bound check of the 1000-accuracy percentile sketch over
+    * `values(s, d)` = (event_type, value): per type, whether the p50 and
+    * p90 estimates sit within 0.001·n ranks of their targets. The oracle
+    * is TRUE per type. */
+  private def rankBoundQuery(name: String)(
+      values: (SparkSession, String) => DataFrame): QueryDef =
+    QueryDef.sql(
+      name,
+      """SELECT event_type, TRUE AS p50_ok, TRUE AS p90_ok
+        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin) { (s, d) =>
+      percentileRanks(values(s, d), Seq(1000), _ => "")
+        .select(col("event_type"),
+          rankOk(0.5, 0.001, "50").as("p50_ok"),
+          rankOk(0.9, 0.001, "90").as("p90_ok"))
+        .orderBy("event_type")
+    }
+
   /** The KMV oracle a_kmv_distinct and a_kmv_native share: both engine
     * paths must produce the same rows. */
   private val kmvOracleSql =
@@ -220,40 +318,16 @@ object ScaleOps {
     // join, five sums, guard, ranking) is hash-checked.
     QueryDef.sql(
       "w_ts_correlation_topk",
-      s"""WITH daily AS (
-         |  SELECT user_id, CAST(ts AS DATE) AS d,
-         |    ${Det.dsumSql("value")} AS v
-         |  FROM events GROUP BY 1, 2),
-         |q AS (SELECT d, v AS qv FROM daily WHERE user_id = 1),
+      s"""WITH $userOneSeriesCtes,
          |j AS (
          |  SELECT s.user_id, s.v, q.qv
          |  FROM daily s JOIN q USING (d) WHERE s.user_id <> 1),
-         |st AS (
-         |  SELECT user_id, COUNT(*) AS n,
-         |    CAST(SUM(CAST(v AS DECIMAL(28,6))) AS DOUBLE) AS sx,
-         |    CAST(SUM(CAST(qv AS DECIMAL(28,6))) AS DOUBLE) AS sy,
-         |    CAST(SUM(CAST(v * qv AS DECIMAL(28,6))) AS DOUBLE) AS sxy,
-         |    CAST(SUM(CAST(v * v AS DECIMAL(28,6))) AS DOUBLE) AS sxx,
-         |    CAST(SUM(CAST(qv * qv AS DECIMAL(28,6))) AS DOUBLE) AS syy
-         |  FROM j GROUP BY 1),
-         |r AS (
-         |  SELECT user_id, n,
-         |    CASE WHEN (n * sxx - sx * sx) > 0 AND (n * syy - sy * sy) > 0
-         |      THEN ${Det.roundNSql("(n * sxy - sx * sy) / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy))", 6)}
-         |      ELSE 0.0 END AS corr_r
-         |  FROM st WHERE n >= 10)
+         |${pearsonCtes("user_id")}
          |SELECT user_id, n, corr_r FROM r
          |ORDER BY corr_r DESC, user_id LIMIT 10""".stripMargin) { (s, d) =>
-      // staged once (user×day-sized): feeds the query slice AND the
-      // candidate side
-      val daily = Tables.events(s, d)
-        .groupBy(col("user_id"), to_date(col("ts")).as("d"))
-        .agg(Det.dsum(col("value")).as("v"))
-        .staged
-      val q = daily.filter(col("user_id") === 1).select(col("d"),
-        col("v").as("qv"))
+      val (others, q) = userOneSeries(s, d)
       graft.operators.TimeSeries.correlationTopK(
-        daily.filter(col("user_id") =!= 1), "user_id", "d", "v", q,
+        others, "user_id", "d", "v", q,
         k = 10, minPoints = 10L)
     },
 
@@ -263,31 +337,14 @@ object ScaleOps {
     // exploded shifted query, per-user argmax; all hash-checked.
     QueryDef.sql(
       "w_ts_best_lag",
-      s"""WITH daily AS (
-         |  SELECT user_id, CAST(ts AS DATE) AS d,
-         |    ${Det.dsumSql("value")} AS v
-         |  FROM events GROUP BY 1, 2),
-         |q AS (SELECT d, v AS qv FROM daily WHERE user_id = 1),
+      s"""WITH $userOneSeriesCtes,
          |lags AS (SELECT CAST(unnest(generate_series(-3, 3)) AS INTEGER) AS lag),
          |shifted AS (SELECT q.d + lag AS d, lag, qv FROM q, lags),
          |j AS (
          |  SELECT s.user_id, shifted.lag, s.v, shifted.qv
          |  FROM daily s JOIN shifted ON s.d = shifted.d
          |  WHERE s.user_id <> 1),
-         |st AS (
-         |  SELECT user_id, lag, COUNT(*) AS n,
-         |    CAST(SUM(CAST(v AS DECIMAL(28,6))) AS DOUBLE) AS sx,
-         |    CAST(SUM(CAST(qv AS DECIMAL(28,6))) AS DOUBLE) AS sy,
-         |    CAST(SUM(CAST(v * qv AS DECIMAL(28,6))) AS DOUBLE) AS sxy,
-         |    CAST(SUM(CAST(v * v AS DECIMAL(28,6))) AS DOUBLE) AS sxx,
-         |    CAST(SUM(CAST(qv * qv AS DECIMAL(28,6))) AS DOUBLE) AS syy
-         |  FROM j GROUP BY 1, 2),
-         |r AS (
-         |  SELECT user_id, lag, n,
-         |    CASE WHEN (n * sxx - sx * sx) > 0 AND (n * syy - sy * sy) > 0
-         |      THEN ${Det.roundNSql("(n * sxy - sx * sy) / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy))", 6)}
-         |      ELSE 0.0 END AS corr_r
-         |  FROM st WHERE n >= 10),
+         |${pearsonCtes("user_id, lag")},
          |best AS (
          |  SELECT user_id, lag, n, corr_r,
          |    row_number() OVER (PARTITION BY user_id
@@ -295,14 +352,9 @@ object ScaleOps {
          |  FROM r)
          |SELECT user_id, CAST(lag AS INT) AS best_lag, n, corr_r
          |FROM best WHERE rn = 1 ORDER BY user_id""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(col("user_id"), to_date(col("ts")).as("d"))
-        .agg(Det.dsum(col("value")).as("v"))
-        .staged
-      val q = daily.filter(col("user_id") === 1).select(col("d"),
-        col("v").as("qv"))
+      val (others, q) = userOneSeries(s, d)
       graft.operators.TimeSeries.bestLagCorrelation(
-          daily.filter(col("user_id") =!= 1), "user_id", "d", "v", q,
+          others, "user_id", "d", "v", q,
           maxLag = 3, minPoints = 10L)
         .orderBy("user_id")
     },
@@ -454,20 +506,12 @@ object ScaleOps {
     // intersect [q−ε, q+ε]·n. The tail values are engine-computed only
     // (the oracle emits TRUE per group), so no cross-engine pow parity
     // is needed — the contract is checked entirely where the sketch ran.
-    QueryDef.sql(
-      "a_approx_percentiles_tol_skew",
-      """SELECT event_type, TRUE AS p50_ok, TRUE AS p90_ok
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin) { (s, d) =>
-      val ev = Tables.events(s, d)
+    rankBoundQuery("a_approx_percentiles_tol_skew") { (s, d) =>
+      Tables.events(s, d)
         .select(col("event_type"),
           when(col("event_id") % 10 =!= 0, lit(0.0))
             .otherwise(pow(lit(10.0), (col("event_id") % 13).cast("double")))
             .as("value"))
-      percentileRanks(ev, Seq(1000), _ => "")
-        .select(col("event_type"),
-          rankOk(0.5, 0.001, "50").as("p50_ok"),
-          rankOk(0.9, 0.001, "90").as("p90_ok"))
-        .orderBy("event_type")
     },
 
     // Count-min sketch frequency estimation: the heavy-hitter check when
@@ -541,31 +585,7 @@ object ScaleOps {
          |  SELECT user_id, day,
          |    (row_number() OVER (ORDER BY user_id, event_id) - 1) // 512 AS file_id
          |  FROM evs),
-         |stats AS (
-         |  SELECT 'zorder' AS layout, file_id, COUNT(*) AS n_rows,
-         |    MIN(user_id) AS min_u, MAX(user_id) AS max_u,
-         |    MIN(day) AS min_d, MAX(day) AS max_d
-         |  FROM zf GROUP BY 2
-         |  UNION ALL
-         |  SELECT 'linear', file_id, COUNT(*),
-         |    MIN(user_id), MAX(user_id), MIN(day), MAX(day)
-         |  FROM lf GROUP BY 2),
-         |boxes(query_name, a_lo, a_hi, b_lo, b_hi) AS (VALUES
-         |  ('user_only', 40, 70, 0, 1000000000),
-         |  ('day_only', 0, 1000000000, 19732, 19734),
-         |  ('both', 40, 70, 19732, 19734)),
-         |tot AS (SELECT layout, COUNT(*) AS n_files FROM stats GROUP BY 1),
-         |sc AS (
-         |  SELECT b.query_name, s.layout, COUNT(*) AS files_scanned,
-         |    CAST(SUM(s.n_rows) AS BIGINT) AS rows_scanned
-         |  FROM stats s JOIN boxes b
-         |    ON s.min_u <= b.a_hi AND s.max_u >= b.a_lo
-         |   AND s.min_d <= b.b_hi AND s.max_d >= b.b_lo
-         |  GROUP BY 1, 2)
-         |SELECT query_name, layout, n_files, files_scanned, rows_scanned
-         |FROM sc JOIN tot USING (layout)
-         |ORDER BY query_name, layout""".stripMargin) { (s, d) =>
-      import s.implicits._
+         |${Fixtures.boxScansSql("zorder" -> "zf", "linear" -> "lf")}""".stripMargin) { (s, d) =>
       val evs = Tables.events(s, d).select(col("event_id"), col("user_id"),
         Det.epochDay(col("ts")).as("day"))
       // BOTH layouts via the SCALE path (range shuffle + two-phase rank)
@@ -578,27 +598,9 @@ object ScaleOps {
         rowsPerFile = 512)
       val lin = ZOrder.fileLayoutRanged(evs,
         Seq(col("user_id"), col("event_id")), rowsPerFile = 512)
-      val stats = ZOrder.fileStats(zed, Seq("user_id", "day"))
-        .withColumn("layout", lit("zorder"))
-        .unionByName(ZOrder.fileStats(lin, Seq("user_id", "day"))
-          .withColumn("layout", lit("linear")))
+      val stats = Fixtures.layoutStats("zorder" -> zed, "linear" -> lin)
         .staged
-      val boxes = Seq(
-        ("user_only", 40L, 70L, 0L, 1000000000L),
-        ("day_only", 0L, 1000000000L, 19732L, 19734L),
-        ("both", 40L, 70L, 19732L, 19734L))
-        .toDF("query_name", "a_lo", "a_hi", "b_lo", "b_hi")
-      val totals = stats.groupBy("layout").agg(count(lit(1)).as("n_files"))
-      stats.join(broadcast(boxes),
-          col("min_user_id") <= col("a_hi") && col("max_user_id") >= col("a_lo")
-            && col("min_day") <= col("b_hi") && col("max_day") >= col("b_lo"))
-        .groupBy("query_name", "layout")
-        .agg(count(lit(1)).as("files_scanned"),
-          sum(col("n_rows")).cast("long").as("rows_scanned"))
-        .join(totals, Seq("layout"))
-        .select("query_name", "layout", "n_files", "files_scanned",
-          "rows_scanned")
-        .orderBy("query_name", "layout")
+      Fixtures.boxScans(stats)
     },
 
     // KMV distinct sketch — the DETERMINISTIC approx-distinct: unlike the
@@ -615,14 +617,7 @@ object ScaleOps {
       kmvOracleSql) { (s, d) =>
       val orders = Tables.orders(s, d)
       val sk = Kmv.sketch(orders, "o_orderpriority", "o_custkey", 64)
-      val exact = orders.groupBy("o_orderpriority")
-        .agg(countDistinct(col("o_custkey")).as("exact_distinct"))
-      Kmv.estimate(sk, "o_orderpriority", 64)
-        .join(exact, Seq("o_orderpriority"))
-        .withColumn("rel_err", Det.roundN(
-          abs(col("est_distinct") - col("exact_distinct"))
-            / col("exact_distinct"), 4))
-        .orderBy("o_orderpriority")
+      kmvReport(orders, Kmv.estimate(sk, "o_orderpriority", 64))
     },
 
     // The SAME sketch through the native one-pass aggregate
@@ -645,13 +640,7 @@ object ScaleOps {
         Det.roundN(when(size(col("sk")) < 64, size(col("sk")).cast("double"))
           .otherwise(lit(63e0) * lit(72057594037927936e0)
             / element_at(col("sk"), 64)), 2).as("est_distinct"))
-      val exact = orders.groupBy("o_orderpriority")
-        .agg(countDistinct(col("o_custkey")).as("exact_distinct"))
-      est.join(exact, Seq("o_orderpriority"))
-        .withColumn("rel_err", Det.roundN(
-          abs(col("est_distinct") - col("exact_distinct"))
-            / col("exact_distinct"), 4))
-        .orderBy("o_orderpriority")
+      kmvReport(orders, est)
     },
 
     // KMV set algebra — the question sketches exist to answer at 100 TB:
@@ -821,16 +810,8 @@ object ScaleOps {
     // 0.001, ±1 row of slack for the boundary) — no interpolated-
     // percentile comparisons, which get flaky at small n. Oracle = TRUE
     // per group; a hash mismatch means the sketch broke its rank bound.
-    QueryDef.sql(
-      "a_approx_percentiles_tol",
-      """SELECT event_type, TRUE AS p50_ok, TRUE AS p90_ok
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin) { (s, d) =>
-      val ev = Tables.events(s, d).select("event_type", "value")
-      percentileRanks(ev, Seq(1000), _ => "")
-        .select(col("event_type"),
-          rankOk(0.5, 0.001, "50").as("p50_ok"),
-          rankOk(0.9, 0.001, "90").as("p90_ok"))
-        .orderBy("event_type")
+    rankBoundQuery("a_approx_percentiles_tol") { (s, d) =>
+      Tables.events(s, d).select("event_type", "value")
     },
 
     // Batch sessionization: gap > sessionGapUs starts a new session;
@@ -874,58 +855,15 @@ object ScaleOps {
 
     // ROLLUP grouping sets — beyond the reference's flat GROUP BYs, the
     // subtotal/grand-total shape gold reporting tables want.
-    QueryDef.sql(
-      "a_rollup_sets",
-      s"""SELECT o_orderstatus, o_orderpriority,
-         |  CAST(GROUPING(o_orderstatus) AS INT) AS g_status,
-         |  CAST(GROUPING(o_orderpriority) AS INT) AS g_priority,
-         |  COUNT(*) AS n_orders,
-         |  ${Det.dsumSql("o_totalprice")} AS total_price
-         |FROM orders
-         |GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-         |ORDER BY g_status, g_priority, o_orderstatus NULLS FIRST,
-         |         o_orderpriority NULLS FIRST""".stripMargin) {
-      (s, d) =>
-        // GROUPING() flags disambiguate subtotal rows from genuine NULL
-        // groups, keeping the ORDER BY key unique even if the data grows
-        // NULL group values
-        Tables.orders(s, d)
-          .rollup("o_orderstatus", "o_orderpriority")
-          .agg(grouping(col("o_orderstatus")).cast("int").as("g_status"),
-            grouping(col("o_orderpriority")).cast("int").as("g_priority"),
-            count(lit(1)).as("n_orders"),
-            Det.dsum(col("o_totalprice")).as("total_price"))
-          .orderBy(col("g_status"), col("g_priority"),
-            col("o_orderstatus").asc_nulls_first,
-            col("o_orderpriority").asc_nulls_first)
-    },
+    orderGroupingSets("a_rollup_sets", "ROLLUP",
+      _.rollup("o_orderstatus", "o_orderpriority")),
 
     // CUBE: all four grouping sets in one pass — ROLLUP's lattice
     // completion (adds the priority-only marginals a ROLLUP skips), the
     // shape cross-tab reporting wants. Still one shuffle: Spark expands
     // the sets map-side and aggregates once.
-    QueryDef.sql(
-      "a_cube_sets",
-      s"""SELECT o_orderstatus, o_orderpriority,
-         |  CAST(GROUPING(o_orderstatus) AS INT) AS g_status,
-         |  CAST(GROUPING(o_orderpriority) AS INT) AS g_priority,
-         |  COUNT(*) AS n_orders,
-         |  ${Det.dsumSql("o_totalprice")} AS total_price
-         |FROM orders
-         |GROUP BY CUBE (o_orderstatus, o_orderpriority)
-         |ORDER BY g_status, g_priority, o_orderstatus NULLS FIRST,
-         |         o_orderpriority NULLS FIRST""".stripMargin) {
-      (s, d) =>
-        Tables.orders(s, d)
-          .cube("o_orderstatus", "o_orderpriority")
-          .agg(grouping(col("o_orderstatus")).cast("int").as("g_status"),
-            grouping(col("o_orderpriority")).cast("int").as("g_priority"),
-            count(lit(1)).as("n_orders"),
-            Det.dsum(col("o_totalprice")).as("total_price"))
-          .orderBy(col("g_status"), col("g_priority"),
-            col("o_orderstatus").asc_nulls_first,
-            col("o_orderpriority").asc_nulls_first)
-    },
+    orderGroupingSets("a_cube_sets", "CUBE",
+      _.cube("o_orderstatus", "o_orderpriority")),
 
     // As-of join (time-series enrichment Spark lacks natively): every
     // event picks the customer's most recent order at or before the event

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -28,6 +28,27 @@ object StatsOps {
   private val roundN = Det.roundNSql _
 
   private val cosSql = Similarity.cosineOracleSql _
+
+  /** The order-status × priority contingency table: cells `(x, y, n)`,
+    * row totals `(x, rn)`, column totals `(y, cn)` and the grand total
+    * `(nn)`. */
+  private def statusByPriority(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val c = Tables.orders(s, d)
+      .groupBy(col("o_orderstatus").as("x"), col("o_orderpriority").as("y"))
+      .agg(count(lit(1)).as("n"))
+    (c, c.groupBy("x").agg(sum("n").as("rn")),
+      c.groupBy("y").agg(sum("n").as("cn")), c.agg(sum("n").as("nn")))
+  }
+
+  /** DuckDB form of [[statusByPriority]]: CTEs `c`, `r`, `cc` and `t`. */
+  private val statusByPriorityCtes =
+    """c AS (
+      |  SELECT o_orderstatus AS x, o_orderpriority AS y, COUNT(*) AS n
+      |  FROM orders GROUP BY 1, 2),
+      |r AS (SELECT x, CAST(SUM(n) AS BIGINT) AS rn FROM c GROUP BY 1),
+      |cc AS (SELECT y, CAST(SUM(n) AS BIGINT) AS cn FROM c GROUP BY 1),
+      |t AS (SELECT CAST(SUM(n) AS BIGINT) AS nn FROM c)""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -216,12 +237,7 @@ object StatsOps {
     // through DECIMAL so partial-aggregation order can't perturb it.
     QueryDef.sql(
       "a_chisq_independence",
-      s"""WITH c AS (
-         |  SELECT o_orderstatus AS x, o_orderpriority AS y, COUNT(*) AS n
-         |  FROM orders GROUP BY 1, 2),
-         |r AS (SELECT x, CAST(SUM(n) AS BIGINT) AS rn FROM c GROUP BY 1),
-         |cc AS (SELECT y, CAST(SUM(n) AS BIGINT) AS cn FROM c GROUP BY 1),
-         |t AS (SELECT CAST(SUM(n) AS BIGINT) AS nn FROM c),
+      s"""WITH $statusByPriorityCtes,
          |e AS (
          |  SELECT n, rn * 1.0 * cn / nn AS expd
          |  FROM c JOIN r USING (x) JOIN cc USING (y), t),
@@ -236,12 +252,7 @@ object StatsOps {
          |  ${roundN("sqrt(chi2 / ((SELECT nn FROM t) * least((SELECT COUNT(*) FROM r) - 1, (SELECT COUNT(*) FROM cc) - 1)))", 6)}
          |    AS cramers_v
          |FROM chi""".stripMargin) { (s, d) =>
-      val c = Tables.orders(s, d)
-        .groupBy(col("o_orderstatus").as("x"), col("o_orderpriority").as("y"))
-        .agg(count(lit(1)).as("n"))
-      val r = c.groupBy("x").agg(sum("n").as("rn"))
-      val cc = c.groupBy("y").agg(sum("n").as("cn"))
-      val t = c.agg(sum("n").as("nn"))
+      val (c, r, cc, t) = statusByPriority(s, d)
       val e = c.join(broadcast(r), "x").join(broadcast(cc), "y")
         .crossJoin(broadcast(t))
         .withColumn("expd", col("rn") * lit(1.0) * col("cn") / col("nn"))
@@ -268,12 +279,7 @@ object StatsOps {
     // the rounding grid).
     QueryDef.sql(
       "a_mutual_info",
-      s"""WITH c AS (
-         |  SELECT o_orderstatus AS x, o_orderpriority AS y, COUNT(*) AS n
-         |  FROM orders GROUP BY 1, 2),
-         |r AS (SELECT x, CAST(SUM(n) AS BIGINT) AS rn FROM c GROUP BY 1),
-         |cc AS (SELECT y, CAST(SUM(n) AS BIGINT) AS cn FROM c GROUP BY 1),
-         |t AS (SELECT CAST(SUM(n) AS BIGINT) AS nn FROM c),
+      s"""WITH $statusByPriorityCtes,
          |mi AS (
          |  SELECT SUM((n * 1.0 / nn)
          |    * ln((n * 1.0 * nn) / (rn * 1.0 * cn))) AS mi
@@ -287,12 +293,7 @@ object StatsOps {
          |  ${roundN("mi / least(hx, hy)", 6)} AS nmi,
          |  (SELECT nn FROM t) AS n
          |FROM mi, hx, hy""".stripMargin) { (s, d) =>
-      val c = Tables.orders(s, d)
-        .groupBy(col("o_orderstatus").as("x"), col("o_orderpriority").as("y"))
-        .agg(count(lit(1)).as("n"))
-      val r = c.groupBy("x").agg(sum("n").as("rn"))
-      val cc = c.groupBy("y").agg(sum("n").as("cn"))
-      val t = c.agg(sum("n").as("nn"))
+      val (c, r, cc, t) = statusByPriority(s, d)
       val mi = c.join(broadcast(r), "x").join(broadcast(cc), "y")
         .crossJoin(broadcast(t))
         .agg(sum((col("n") * lit(1.0) / col("nn"))
@@ -530,30 +531,7 @@ object StatsOps {
          |      ${ZOrder.zValueSql("qx", "qy", 8)}, event_id) - 1) // 512
          |      AS file_id
          |  FROM q),
-         |stats AS (
-         |  SELECT 'hilbert' AS layout, file_id, COUNT(*) AS n_rows,
-         |    MIN(user_id) AS min_u, MAX(user_id) AS max_u,
-         |    MIN(day) AS min_d, MAX(day) AS max_d
-         |  FROM hf GROUP BY 2
-         |  UNION ALL
-         |  SELECT 'morton', file_id, COUNT(*),
-         |    MIN(user_id), MAX(user_id), MIN(day), MAX(day)
-         |  FROM mf GROUP BY 2),
-         |boxes(query_name, a_lo, a_hi, b_lo, b_hi) AS (VALUES
-         |  ('user_only', 40, 70, 0, 1000000000),
-         |  ('day_only', 0, 1000000000, 19732, 19734),
-         |  ('both', 40, 70, 19732, 19734)),
-         |tot AS (SELECT layout, COUNT(*) AS n_files FROM stats GROUP BY 1),
-         |sc AS (
-         |  SELECT b.query_name, s.layout, COUNT(*) AS files_scanned,
-         |    CAST(SUM(s.n_rows) AS BIGINT) AS rows_scanned
-         |  FROM stats s JOIN boxes b
-         |    ON s.min_u <= b.a_hi AND s.max_u >= b.a_lo
-         |   AND s.min_d <= b.b_hi AND s.max_d >= b.b_lo
-         |  GROUP BY 1, 2)
-         |SELECT query_name, layout, n_files, files_scanned, rows_scanned
-         |FROM sc JOIN tot USING (layout)
-         |ORDER BY query_name, layout""".stripMargin) { (s, d) =>
+         |${Fixtures.boxScansSql("hilbert" -> "hf", "morton" -> "mf")}""".stripMargin) { (s, d) =>
       val evs = Tables.events(s, d).select(col("event_id"), col("user_id"),
         Det.epochDay(col("ts")).as("day"))
       val b = evs.agg(min("user_id").as("umin"), max("user_id").as("umax"),
@@ -568,27 +546,7 @@ object StatsOps {
       val mf = ZOrder.fileLayoutRanged(
         q.withColumn("zv", ZOrder.zValue(col("qx"), col("qy"), 8)),
         Seq(col("zv"), col("event_id")), rowsPerFile = 512)
-      val stats = ZOrder.fileStats(hf, Seq("user_id", "day"))
-        .withColumn("layout", lit("hilbert"))
-        .unionByName(ZOrder.fileStats(mf, Seq("user_id", "day"))
-          .withColumn("layout", lit("morton")))
-      import s.implicits._
-      val boxes = Seq(
-        ("user_only", 40L, 70L, 0L, 1000000000L),
-        ("day_only", 0L, 1000000000L, 19732L, 19734L),
-        ("both", 40L, 70L, 19732L, 19734L))
-        .toDF("query_name", "a_lo", "a_hi", "b_lo", "b_hi")
-      val tot = stats.groupBy("layout").agg(count(lit(1)).as("n_files"))
-      stats.join(broadcast(boxes),
-          col("min_user_id") <= col("a_hi") && col("max_user_id") >= col("a_lo")
-            && col("min_day") <= col("b_hi") && col("max_day") >= col("b_lo"))
-        .groupBy("query_name", "layout")
-        .agg(count(lit(1)).as("files_scanned"),
-          sum("n_rows").as("rows_scanned"))
-        .join(tot, "layout")
-        .select(col("query_name"), col("layout"), col("n_files"),
-          col("files_scanned"), col("rows_scanned"))
-        .orderBy("query_name", "layout")
+      Fixtures.boxScans(Fixtures.layoutStats("hilbert" -> hf, "morton" -> mf))
     },
 
     // ---- fuzzy string similarity -------------------------------------

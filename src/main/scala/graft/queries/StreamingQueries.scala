@@ -9,7 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.DecimalType
-import graft.engine.{Det, Scratch, Tables}
+import graft.engine.{Det, Scratch, Session, Tables}
 import graft.streaming.{BloomIngest, EventStreams, NearDupIngest}
 
 /** Batch-driven, oracle-checked replays of the streaming ingest loops.
@@ -54,16 +54,9 @@ object StreamingQueries {
     * instead run at 16 — 8 measured SLOWER than 32 for them because the
     * bottleneck is shingle/probe compute parallelism, not state files. */
   private def withReplayPartitions[T](s: SparkSession, n: Int,
-      aqe: Boolean)(f: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-    s.conf.set("spark.sql.shuffle.partitions", n)
-    if (!aqe) s.conf.set("spark.sql.adaptive.enabled", "false")
-    try f finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
-  }
+      aqe: Boolean)(f: => T): T =
+    Session.withConf(s, Seq("spark.sql.shuffle.partitions" -> n.toString) ++
+      (if (aqe) Nil else Seq("spark.sql.adaptive.enabled" -> "false")): _*)(f)
 
   /** One run of a replay's stream: the frames staged as its next
     * micro-batches, and its shuffle-partition count. */
@@ -218,6 +211,22 @@ object StreamingQueries {
       .orderBy("window_start", "event_type")
   }
 
+  /** DuckDB form of [[lateWindowReplay]]'s end state: the 1-hour windowed
+    * aggregate over the non-straggler rows. */
+  private def lateWindowOracleSql(stragglerMod: Int): String =
+    s"""WITH e AS (
+       |  SELECT event_id, ts, event_type, value,
+       |    event_id % $stragglerMod = 0 AND ts < TIMESTAMP '2024-01-09'
+       |      AS is_straggler
+       |  FROM events)
+       |SELECT date_trunc('hour', ts) AS window_start,
+       |  date_trunc('hour', ts) + INTERVAL 1 HOUR AS window_end,
+       |  event_type, COUNT(*) AS n_events,
+       |  ${Det.dsumSql("value", 6)} AS total_value
+       |FROM e WHERE NOT is_straggler
+       |GROUP BY 1, 2, 3
+       |ORDER BY window_start, event_type""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     // End state of the Bloom-prefiltered exact-dedup ingest after
@@ -327,18 +336,7 @@ object StreamingQueries {
     // so stream-partial addition order can't smear the hash).
     QueryDef.sql(
       "q_stream_window_replay",
-      s"""WITH e AS (
-         |  SELECT event_id, ts, event_type, value,
-         |    event_id % 17 = 0 AND ts < TIMESTAMP '2024-01-09'
-         |      AS is_straggler
-         |  FROM events)
-         |SELECT date_trunc('hour', ts) AS window_start,
-         |  date_trunc('hour', ts) + INTERVAL 1 HOUR AS window_end,
-         |  event_type, COUNT(*) AS n_events,
-         |  ${Det.dsumSql("value", 6)} AS total_value
-         |FROM e WHERE NOT is_straggler
-         |GROUP BY 1, 2, 3
-         |ORDER BY window_start, event_type""".stripMargin) { (s, d) =>
+      lateWindowOracleSql(17)) { (s, d) =>
       lateWindowReplay(s, d, 17)(batches => Seq(Run(batches)))
     },
 
@@ -370,18 +368,7 @@ object StreamingQueries {
     // rows — identical end state to a never-interrupted run.
     QueryDef.sql(
       "q_stream_restart_replay",
-      s"""WITH e AS (
-         |  SELECT event_id, ts, event_type, value,
-         |    event_id % 13 = 0 AND ts < TIMESTAMP '2024-01-09'
-         |      AS is_straggler
-         |  FROM events)
-         |SELECT date_trunc('hour', ts) AS window_start,
-         |  date_trunc('hour', ts) + INTERVAL 1 HOUR AS window_end,
-         |  event_type, COUNT(*) AS n_events,
-         |  ${Det.dsumSql("value", 6)} AS total_value
-         |FROM e WHERE NOT is_straggler
-         |GROUP BY 1, 2, 3
-         |ORDER BY window_start, event_type""".stripMargin) { (s, d) =>
+      lateWindowOracleSql(13)) { (s, d) =>
       // phase 1: two batches, stop with open windows + watermark ~Jan 20;
       // phase 2: a NEW query instance resumes from the checkpoint, the
       // stragglers only exist from here on, and the session now asks for

@@ -46,15 +46,10 @@ object BloomIngest {
     else spark.range(0).select(col("id").as(idCol),
       lit("").as("content_hash"), col("id").as("batch_id")).limit(0)
 
-  /** Run the ingest loop until the source drains (processAllAvailable —
-    * in production attach a checkpointLocation to [[writer]] and leave it
-    * running). Output rows land under `outDir`: (idCol, content_hash,
-    * maybe_present, batch_canonical, is_new). */
-  def start(docs: DataFrame, idCol: String, textCol: String,
-      stateDir: String, outDir: String): Unit =
-    EventStreams.drain(writer(docs, idCol, textCol, stateDir, outDir))
-
-  /** The ingest loop as an unstarted stream writer (see [[start]]). */
+  /** The ingest loop as an unstarted stream writer: run it with
+    * `EventStreams.drain` (in production attach a checkpointLocation and
+    * leave it running). Output rows land under `outDir`: (idCol,
+    * content_hash, maybe_present, batch_canonical, is_new). */
   def writer(docs: DataFrame, idCol: String, textCol: String,
       stateDir: String, outDir: String): DataStreamWriter[Row] =
     docs.writeStream.outputMode(OutputMode.Append)

@@ -45,18 +45,10 @@ object NearDupIngest {
       load("shingles", empty.shingles), load("sizes", empty.sizes))
   }
 
-  /** Run the ingest loop over a streaming `docs` relation until the
-    * source drains (processAllAvailable — in production attach a
-    * checkpointLocation to [[writer]] and leave the query running). Pairs
-    * land under `pairsDir`, the index under
-    * `indexDir/{buckets,shingles,sizes}`. */
-  def start(docs: DataFrame, idCol: String, textCol: String,
-      indexDir: String, pairsDir: String,
-      threshold: Double = Dedup.JaccardThreshold): Unit =
-    EventStreams.drain(writer(docs, idCol, textCol, indexDir, pairsDir,
-      threshold))
-
-  /** The ingest loop as an unstarted stream writer (see [[start]]). */
+  /** The ingest loop over a streaming `docs` relation as an unstarted
+    * stream writer: run it with `EventStreams.drain` (in production attach
+    * a checkpointLocation and leave the query running). Pairs land under
+    * `pairsDir`, the index under `indexDir/{buckets,shingles,sizes}`. */
   def writer(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, pairsDir: String,
       threshold: Double = Dedup.JaccardThreshold): DataStreamWriter[Row] =

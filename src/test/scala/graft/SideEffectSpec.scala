@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{Pipeline, Scratch}
-import graft.streaming.{BloomIngest, NearDupIngest}
+import graft.streaming.{BloomIngest, EventStreams, NearDupIngest}
 
 /** The engine's writes change nothing beyond what they write: no session
   * setting, and no scratch directory left behind by a stream replay or
@@ -36,18 +36,29 @@ class SideEffectSpec extends AnyFunSuite {
       .option("maxFilesPerTrigger", 1).parquet(src)
     val state = Scratch.dir("side-state") + "/st"
     val out = Scratch.dir("side-out") + "/out"
-    BloomIngest.start(stream, "doc_id", "text", state, out)
-    BloomIngest.start(stream, "doc_id", "text", state, out)
-    assert(s.conf.get(modeKey) === before, "after BloomIngest.start")
+    EventStreams.drain(BloomIngest.writer(stream, "doc_id", "text", state, out))
+    EventStreams.drain(BloomIngest.writer(stream, "doc_id", "text", state, out))
+    assert(s.conf.get(modeKey) === before, "after the Bloom ingest")
     assert(s.read.parquet(s"$state/hashes").count() === 4,
       "each batch's state partition survives the other's overwrite")
     assert(s.read.parquet(out).count() === 4)
 
     val idx = Scratch.dir("side-idx") + "/idx"
     val pairs = Scratch.dir("side-pairs") + "/pairs"
-    NearDupIngest.start(stream, "doc_id", "text", idx, pairs)
-    assert(s.conf.get(modeKey) === before, "after NearDupIngest.start")
+    EventStreams.drain(NearDupIngest.writer(stream, "doc_id", "text", idx, pairs))
+    assert(s.conf.get(modeKey) === before, "after the near-dup ingest")
     assert(s.read.parquet(s"$idx/sizes").count() === 4)
+  }
+
+  test("a small-vocab BPE learn and a stream replay leave the session conf as it was") {
+    val s = SparkTestSession.spark.newSession()
+    import s.implicits._
+    val before = s.conf.getAll
+    val docs = Seq("low lower lowest", "new newer newest").toDF("text")
+    assert(graft.functions.Bpe.learnDistributed(docs, "text", 3).size === 3)
+    assert(s.conf.getAll === before, "after Bpe.learnDistributed")
+    assert(SparkEntry.queries("q_stream_window_replay")(s, sf).count() > 0)
+    assert(s.conf.getAll === before, "after q_stream_window_replay")
   }
 
   test("window and restart replays leave no directory behind but their output") {

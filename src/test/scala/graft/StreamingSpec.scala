@@ -66,8 +66,8 @@ class StreamingSpec extends AnyFunSuite {
     val pairsDir = Scratch.dir("neardup-pairs") + "/pairs"
     val stream = spark.readStream.schema(docsA.schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    NearDupIngest.start(stream, "doc_id", "text", idxDir, pairsDir,
-      threshold = 0.8)
+    EventStreams.drain(NearDupIngest.writer(stream, "doc_id", "text",
+      idxDir, pairsDir, threshold = 0.8))
     val streamed = spark.read.parquet(pairsDir)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val oneShot = graft.operators.Dedup.minhashNearDups(
@@ -81,8 +81,8 @@ class StreamingSpec extends AnyFunSuite {
     // not duplicate anything (dynamic partition overwrite per batch_id)
     val stream2 = spark.readStream.schema(docsA.schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    NearDupIngest.start(stream2, "doc_id", "text", idxDir, pairsDir,
-      threshold = 0.8)
+    EventStreams.drain(NearDupIngest.writer(stream2, "doc_id", "text",
+      idxDir, pairsDir, threshold = 0.8))
     val replayed = spark.read.parquet(pairsDir)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(replayed === oneShot, "replay is idempotent")
@@ -105,7 +105,8 @@ class StreamingSpec extends AnyFunSuite {
     val outDir = Scratch.dir("bloom-out") + "/out"
     val stream = spark.readStream.schema(docsA.schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    BloomIngest.start(stream, "doc_id", "text", stDir, outDir)
+    EventStreams.drain(
+      BloomIngest.writer(stream, "doc_id", "text", stDir, outDir))
     val out = spark.read.parquet(outDir)
       .select("doc_id", "maybe_present", "batch_canonical", "is_new")
       .as[(Long, Boolean, Boolean, Boolean)].collect()
@@ -120,7 +121,8 @@ class StreamingSpec extends AnyFunSuite {
     // replay against the same state must reproduce identical rows
     val stream2 = spark.readStream.schema(docsA.schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    BloomIngest.start(stream2, "doc_id", "text", stDir, outDir)
+    EventStreams.drain(
+      BloomIngest.writer(stream2, "doc_id", "text", stDir, outDir))
     val replayed = spark.read.parquet(outDir)
       .select("doc_id", "is_new").as[(Long, Boolean)].collect().toMap
     assert(replayed === out.map { case (k, v) => k -> v._3 },
